@@ -4,138 +4,237 @@ This is the Spark-native replacement for the reference's MPI dataflow
 (scatter -> per-rank build -> serialize -> pairwise merge -> tree
 reduce; /root/reference/mpi-implementation/src/main.c:18-65 and
 treeReduce.c:31-90, whose recursive-doubling phase was never finished).
-Here the same contract is expressed as:
+Every ungrouped call (``sketch_aggregate``, ``multi_sketch_aggregate``,
+the ``*_of`` helpers, ``cms_topk``, ``StreamingSketch``) runs the same
+core, ``fold_partials``:
 
   stage 1 (map-side partial): ``mapInPandas`` builds one sketch per
-      input partition — vectorized ``update_batch`` per Arrow batch,
-      zero per-row Python. Output: tiny rows ``(part_id, sketch
-      binary, rows)``. At 100 TB this is the only full-data pass; its
-      output is O(#partitions * sketch_size) bytes.
+      input partition and spec — vectorized ``update_batch`` per Arrow
+      batch, zero per-row Python. Output: tiny rows ``(part_id, name,
+      sketch binary, rows)``. At 100 TB this is the only full-data
+      pass; its output is O(#partitions * sketch_size) bytes.
 
-  stage 2 (intermediate tree level): partial rows are shuffled into
-      ``fanout`` groups by ``part_id % fanout`` and merged with
-      ``applyInPandas`` — the power-of-two orphan-folding tree of the
-      reference generalized to any partition count. With 10^6 input
-      partitions and fanout=64 the driver never sees more than 64 rows.
+  stage 2 (merge): ``fanout`` is the most partials merged in one place.
+      When a plan-time bound on the partition count (read off the
+      physical plan, no Spark job) is <= ``fanout``, the partials are
+      collected by the partial-build job itself and folded on the
+      driver: one Spark job per call. Otherwise, or when the plan has
+      no such bound, ``tree_merge`` shuffles the partial rows into
+      ``fanout`` groups per name by ``part_id % fanout`` and merges
+      each with ``applyInPandas`` — the reference's power-of-two
+      orphan-folding tree generalized to any partition count — and the
+      driver folds those <= fanout rows per name. With 10^6 input
+      partitions and fanout=64 the driver never sees more than 64
+      rows per sketch.
 
-  stage 3 (final): the <=fanout intermediate sketches are collected
-      and merged on the driver (equivalently: root of the tree).
-
-Associativity/commutativity of ``merge`` is what makes the tree order
-irrelevant (up to compression order — asserted within eps in tests).
+Every merge, on either path, folds its rows in ``part_id`` order, so
+the result does not depend on shuffle or collect order. Merge is
+associative and commutative up to compression order (asserted within
+eps in tests), which is what makes the tree shape irrelevant.
 
 Grouped aggregation (``grouped_sketch_rows``) does hand-built map-side
 partial aggregation: each Arrow batch groups locally in pandas and
 emits one partial sketch row per key, so the shuffle carries
 O(#batches * #keys) sketch rows instead of the raw data — this is the
 skew story for Zipf-distributed keys (a hot key costs one row per
-batch, not one row per input record).
+batch, not one row per input record). Its merges use the same
+``_merge_group`` body as the tree levels.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, Sequence
+from math import prod
+from typing import Callable, Iterable, Mapping, NamedTuple, Sequence
 
-import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, functions as F
 
 SketchFactory = Callable[[], object]
 
-PARTIAL_SCHEMA = "part_id long, sketch binary, rows long"
+PARTIAL_SCHEMA = "part_id long, name string, sketch binary, rows long"
 
 
-def _values_of(series: pd.Series) -> np.ndarray:
-    arr = series.to_numpy()
-    if arr.dtype == object:
-        return arr
-    return arr
+class SketchSpec(NamedTuple):
+    """One sketch of an aggregation: its input (column name or Column
+    expression), an empty-sketch factory, the bytes decoder, and an
+    optional weight column that turns rows into (value, weight) pairs
+    fed to ``update_batch(values, weights)`` — how the JVM-precounted
+    path hands Python a bounded histogram instead of raw rows."""
+
+    col: object
+    factory: SketchFactory
+    deserialize: Callable[[bytes], object]
+    weight_col: object = None
 
 
-def partial_sketches(
-    df: DataFrame,
-    col,
-    factory: SketchFactory,
-    *,
-    value_name: str = "v",
-    weight_col=None,
-) -> DataFrame:
-    """Stage 1: one serialized sketch per input partition.
+def _as_col(c):
+    return F.col(c) if isinstance(c, str) else c
 
-    ``col`` may be a Column expression — selecting it *first* lets
-    Catalyst prune every other column out of the scan (ReadSchema shows
-    only the needed field) and push any upstream filter down to parquet.
 
-    ``weight_col``: optional count column — rows are (value, weight)
-    histogram entries, fed to ``update_batch(values, weights)``. This
-    is how the JVM-precounted path (Catalyst hash-aggregate with
-    map-side combine does the heavy counting) hands Python a bounded
-    histogram instead of the raw rows.
+def partial_sketches(df: DataFrame, specs: Mapping[str, SketchSpec]) -> DataFrame:
+    """Stage 1: one ``mapInPandas`` pass builds every spec's sketch per
+    input partition; output rows ``(part_id, name, sketch, rows)``.
+
+    Each spec's input is selected *first*, so Catalyst prunes every
+    other column out of the scan (ReadSchema shows only the needed
+    fields) and pushes any upstream filter down to parquet. A (value,
+    weight) pair is dropped when either side is null; ``rows`` counts
+    total (signed) weight.
     """
-    cols = [F.col(col).alias(value_name) if isinstance(col, str) else col.alias(value_name)]
-    if weight_col is not None:
-        cols.append(
-            F.col(weight_col).alias("__w") if isinstance(weight_col, str) else weight_col.alias("__w")
-        )
-    sdf = df.select(*cols).withColumn("__pid", F.spark_partition_id())
+    names = list(specs)
+    cols = [F.spark_partition_id().alias("__pid")]
+    for n, s in specs.items():
+        cols.append(_as_col(s.col).alias(f"__v_{n}"))
+        if s.weight_col is not None:
+            cols.append(_as_col(s.weight_col).alias(f"__w_{n}"))
+    sdf = df.select(*cols)
+    factories = {n: specs[n].factory for n in names}
+    weighted = {n for n in names if specs[n].weight_col is not None}
 
     def build(batches: Iterable[pd.DataFrame]):
-        sk = factory()
-        rows = 0  # total (signed) weight — what merged `rows` reports
-        seen = 0  # values actually fed — the emit condition (signed
-        # weights can sum to 0 across a partition whose counters are
-        # decidedly nonzero, e.g. counting-Bloom +1/-1 streams)
+        sks = {n: f() for n, f in factories.items()}
+        rows = dict.fromkeys(names, 0)
+        # values actually fed — the emit condition (signed weights can
+        # sum to 0 across a partition whose counters are decidedly
+        # nonzero, e.g. counting-Bloom +1/-1 streams)
+        seen = dict.fromkeys(names, 0)
         pid = -1
         for pdf in batches:
-            if len(pdf) == 0:
+            if not len(pdf):
                 continue
             pid = int(pdf["__pid"].iloc[0])
-            if weight_col is not None:
-                # drop the PAIR when either side is null (same
-                # discipline as grouped_sketch_rows below)
-                ok = pdf[value_name].notna() & pdf["__w"].notna()
-                vals = pdf[value_name][ok]
-            else:
-                vals = pdf[value_name].dropna()
-            if len(vals):
-                if weight_col is not None:
-                    w = pdf["__w"][ok].to_numpy()
-                    sk.update_batch(_values_of(vals), w)
-                    rows += int(w.sum())
+            for n in names:
+                v = pdf[f"__v_{n}"]
+                if n in weighted:
+                    w = pdf[f"__w_{n}"]
+                    ok = v.notna() & w.notna()
+                    vals, w = v[ok], w[ok].to_numpy()
+                    if len(vals):
+                        sks[n].update_batch(vals.to_numpy(), w)
+                        rows[n] += int(w.sum())
                 else:
-                    sk.update_batch(_values_of(vals))
-                    rows += len(vals)
-                seen += len(vals)
-        if seen == 0:
-            return
-        yield pd.DataFrame({"part_id": [pid], "sketch": [sk.to_bytes()], "rows": [rows]})
+                    vals = v.dropna()
+                    if len(vals):
+                        sks[n].update_batch(vals.to_numpy())
+                        rows[n] += len(vals)
+                seen[n] += len(vals)
+        out_n = [n for n in names if seen[n]]
+        if out_n:
+            yield pd.DataFrame(
+                {
+                    "part_id": [pid] * len(out_n),
+                    "name": out_n,
+                    "sketch": [sks[n].to_bytes() for n in out_n],
+                    "rows": [rows[n] for n in out_n],
+                }
+            )
 
     return sdf.mapInPandas(build, PARTIAL_SCHEMA)
 
 
-def _merge_partials_fn(deserialize):
+def _fold(bufs: Iterable, deserialize):
+    """The one sketch fold: deserialize and merge, in the given order."""
+    sk = None
+    for buf in bufs:
+        cur = deserialize(bytes(buf))
+        sk = cur if sk is None else sk.merge(cur)
+    return sk
+
+
+def _decoder(deserialize, name):
+    """``deserialize`` is one decoder for every name, or a mapping
+    name -> decoder."""
+    return deserialize[name] if isinstance(deserialize, Mapping) else deserialize
+
+
+def _merge_group(keys: Sequence[str], deserialize):
+    """applyInPandas body of every sketch merge (tree levels, grouped
+    rows, rollup/cube levels): one output row with the group's
+    ``keys``, its merged sketch and summed rows. Rows that carry a
+    ``part_id`` fold in that order and report the smallest one."""
+
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = None
-        rows = 0
-        for buf, r in zip(pdf["sketch"], pdf["rows"]):
-            cur = deserialize(bytes(buf))
-            sk = cur if sk is None else sk.merge(cur)
-            rows += int(r)
-        return pd.DataFrame(
-            {"part_id": [int(pdf["part_id"].iloc[0]) if len(pdf) else 0],
-             "sketch": [sk.to_bytes()],
-             "rows": [rows]}
-        )
+        if "part_id" in pdf.columns:
+            pdf = pdf.sort_values("part_id", kind="stable")
+        dec = _decoder(deserialize, pdf["name"].iloc[0] if "name" in pdf.columns else None)
+        out = {k: [pdf[k].iloc[0]] for k in keys}
+        out["sketch"] = [_fold(pdf["sketch"], dec).to_bytes()]
+        out["rows"] = [int(pdf["rows"].sum())]
+        return pd.DataFrame(out)
 
     return merge_group
 
 
 def tree_merge(partials: DataFrame, deserialize, fanout: int = 32) -> DataFrame:
-    """Stage 2: shuffle partial rows into ``fanout`` buckets and merge
-    each bucket in one task (applyInPandas). Output <= fanout rows."""
-    bucketed = partials.withColumn("part_id", F.pmod(F.col("part_id"), F.lit(fanout)))
-    return bucketed.groupBy("part_id").applyInPandas(
-        _merge_partials_fn(deserialize), PARTIAL_SCHEMA
+    """Shuffle partial rows into ``fanout`` groups per name by
+    ``part_id % fanout`` and merge each group in one task
+    (applyInPandas). Output: <= fanout rows per name."""
+    return partials.groupBy("name", F.pmod("part_id", F.lit(fanout))).applyInPandas(
+        _merge_group(["part_id", "name"], deserialize), PARTIAL_SCHEMA
+    )
+
+
+def _plan_bound(plan) -> int | None:
+    """Upper bound on a physical plan's partition count, or None."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":  # not yet run: its initial plan
+        return _plan_bound(plan.executedPlan())
+    if name == "ShuffleExchangeExec":  # AQE may only coalesce below this
+        return plan.outputPartitioning().numPartitions()
+    if name == "BroadcastExchangeExec":
+        return 0
+    if name == "InMemoryTableScanExec":  # a cache keeps its plan's partitions
+        return _plan_bound(plan.relation().cachedPlan())
+    kids = plan.children()
+    bounds = [_plan_bound(kids.apply(i)) for i in range(kids.size())]
+    if not bounds:
+        # a leaf's RDD is built, not run (file splits come from the
+        # listing); subqueries would run jobs, so those get no bound
+        return None if plan.subqueries().nonEmpty() else plan.execute().getNumPartitions()
+    if None in bounds:
+        return None
+    if name == "UnionExec":
+        return sum(bounds)
+    if name == "CartesianProductExec":
+        return prod(bounds)
+    return max(bounds)  # narrow nodes keep, joins share, the input partitioning
+
+
+def partition_bound(df: DataFrame) -> int | None:
+    """Plan-time upper bound on ``df``'s partition count, computed
+    without launching a Spark job (unlike ``df.rdd.getNumPartitions()``,
+    which runs every exchange below it); None when the plan holds a
+    node it cannot bound. Planning is cached on the DataFrame, so a
+    later action on ``df`` does not plan again."""
+    try:
+        return _plan_bound(df._jdf.queryExecution().executedPlan())
+    except Py4JError:
+        return None
+
+
+def fold_partials(partials: DataFrame, deserialize, fanout: int = 32) -> dict[str, tuple[object, int]]:
+    """Stage 2: merge ``partial_sketches``-shaped rows into
+    ``{name: (sketch, rows)}``. Driver fold when the partition bound is
+    <= ``fanout`` (the partial-build job collects them), else
+    ``tree_merge`` first. Rows fold in ``(name, part_id)`` order."""
+    bound = partition_bound(partials)
+    if bound is None or bound > fanout:
+        partials = tree_merge(partials, deserialize, fanout)
+    pdf = partials.toPandas().sort_values(["name", "part_id"], kind="stable")
+    return {
+        name: (_fold(g["sketch"], _decoder(deserialize, name)), int(g["rows"].sum()))
+        for name, g in pdf.groupby("name", sort=False)
+    }
+
+
+def aggregate_sketches(
+    df: DataFrame, specs: Mapping[str, SketchSpec], fanout: int = 32
+) -> dict[str, tuple[object, int]]:
+    """The ungrouped core: ``{name: (merged sketch, rows)}`` from one
+    pass over ``df``; a spec whose input is all null is absent."""
+    return fold_partials(
+        partial_sketches(df, specs), {n: s.deserialize for n, s in specs.items()}, fanout
     )
 
 
@@ -147,18 +246,9 @@ def sketch_aggregate(
     fanout: int = 32,
     weight_col=None,
 ):
-    """Full pipeline; returns the final merged sketch object (driver-side).
-
-    Returns None on empty input.
-    """
-    partials = partial_sketches(df, col, factory, weight_col=weight_col)
-    merged = tree_merge(partials, deserialize, fanout=fanout)
-    rows = merged.select("sketch").collect()
-    sk = None
-    for r in rows:
-        cur = deserialize(bytes(r["sketch"]))
-        sk = cur if sk is None else sk.merge(cur)
-    return sk
+    """One sketch of ``col``, merged on the driver; None on empty input."""
+    out = aggregate_sketches(df, {"v": SketchSpec(col, factory, deserialize, weight_col)}, fanout)
+    return out["v"][0] if out else None
 
 
 def grouped_sketch_rows(
@@ -230,10 +320,10 @@ def grouped_sketch_rows(
                     nrows[kt] = 0
                 if weight_col is not None:
                     w = g["__w"][ok].to_numpy()
-                    sk.update_batch(_values_of(vals), w)
+                    sk.update_batch(vals.to_numpy(), w)
                     nrows[kt] += int(w.sum())
                 else:
-                    sk.update_batch(_values_of(vals))
+                    sk.update_batch(vals.to_numpy())
                     nrows[kt] += len(vals)
         if not acc:
             return
@@ -247,21 +337,9 @@ def grouped_sketch_rows(
             recs["rows"].append(nrows[kt])
         yield pd.DataFrame(recs)
 
-    partials = sdf.mapInPandas(build, partial_schema)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = None
-        rows = 0
-        for buf, r in zip(pdf["sketch"], pdf["rows"]):
-            cur = deserialize(bytes(buf))
-            sk = cur if sk is None else sk.merge(cur)
-            rows += int(r)
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        out["sketch"] = [sk.to_bytes()]
-        out["rows"] = [rows]
-        return pd.DataFrame(out)
-
-    return partials.groupBy(*keys).applyInPandas(merge_group, partial_schema)
+    return sdf.mapInPandas(build, partial_schema).groupBy(*keys).applyInPandas(
+        _merge_group(keys, deserialize), partial_schema
+    )
 
 
 def grouped_estimates(
@@ -379,26 +457,6 @@ def grouped_quantiles(
     return rows_df.mapInPandas(estimate, out_schema)
 
 
-def _sketch_merge_group(level_keys: list, deserialize):
-    """applyInPandas body shared by rollup/cube: merge one group's
-    sketch rows into a single row (sketches are mergeable, so this is
-    the whole re-aggregation)."""
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = None
-        rows = 0
-        for buf, r in zip(pdf["sketch"], pdf["rows"]):
-            cur = deserialize(bytes(buf))
-            sk = cur if sk is None else sk.merge(cur)
-            rows += int(r)
-        out = {k: [pdf[k].iloc[0]] for k in level_keys}
-        out["sketch"] = [sk.to_bytes()]
-        out["rows"] = [rows]
-        return pd.DataFrame(out)
-
-    return merge_group
-
-
 def cube_sketch_rows(
     df: DataFrame,
     keys: Sequence[str],
@@ -442,13 +500,9 @@ def cube_sketch_rows(
         for subset in map(list, combinations(keys, n)):
             if n == len(keys):
                 merged = finest
-            elif subset:
-                merged = finest.groupBy(*subset).applyInPandas(
-                    _sketch_merge_group(subset, deserialize), _schema(subset)
-                )
             else:
-                merged = finest.groupBy().applyInPandas(
-                    _sketch_merge_group([], deserialize), _schema([])
+                merged = finest.groupBy(*subset).applyInPandas(
+                    _merge_group(subset, deserialize), _schema(subset)
                 )
             padded = merged.withColumn("level", F.lit(len(subset)))
             for k in keys:
@@ -500,21 +554,13 @@ def rollup_sketch_rows(
         fields = ", ".join(f"`{k}` {key_fields[k]}" for k in level_keys)
         return (fields + ", " if fields else "") + "sketch binary, rows long"
 
-    def _merge_level(level_keys: list[str]):
-        return _sketch_merge_group(level_keys, deserialize)
-
     levels = [finest.withColumn("level", F.lit(len(keys)))]
     current = finest
     for n in range(len(keys) - 1, -1, -1):
         level_keys = keys[:n]
-        if level_keys:
-            coarser = current.groupBy(*level_keys).applyInPandas(
-                _merge_level(level_keys), _schema(level_keys)
-            )
-        else:
-            coarser = current.groupBy().applyInPandas(
-                _merge_level([]), _schema([])
-            )
+        coarser = current.groupBy(*level_keys).applyInPandas(
+            _merge_group(level_keys, deserialize), _schema(level_keys)
+        )
         current = coarser
         padded = coarser.withColumn("level", F.lit(n))
         for k in keys[n:]:

@@ -9,11 +9,14 @@ Exact top-k via groupBy().count().orderBy() shuffles one row per
 DISTINCT key — at 10^12 web pages that is billions of (domain, count)
 rows through one sort. The sketch path shuffles almost nothing:
 
-1. one mapInPandas pass builds, per input partition, BOTH a Count-Min
-   partial AND that partition's local top-m candidate keys
-   (pandas value_counts — vectorized);
-2. candidates are unioned + deduped (tiny: n_partitions * m keys);
-3. the merged CMS scores every candidate; global top-k by estimate.
+1. one mapInPandas pass over ``(key, xxhash64(key))`` builds, per
+   input partition, a Count-Min partial AND the partition's local
+   top-m candidates ``(hash, key, count)`` (pandas groupby);
+2. the shared ungrouped core (``aggregate.fold_partials``) merges
+   both: candidate counts sum to each key's lower bound;
+3. the driver scores the m best lower bounds with the merged CMS and
+   returns the top-k as an already-sorted local DataFrame. Keys travel
+   with the candidates: no second scan, ``distinct`` or key join.
 
 Correctness contract — this is a HEAVY-HITTER operator, not an exact
 top-k: a key appears in the candidate set iff it is a local top-m key
@@ -32,15 +35,96 @@ the Zipf-skewed domains fixture (multi-partition), and exhaustively
 
 from __future__ import annotations
 
+import pickle
 from typing import Iterable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .aggregate import PARTIAL_SCHEMA, _as_col, fold_partials
 from .quantiles import HashedCMS, hashed_cms_from_bytes
 
-_PARTIAL_SCHEMA = "kind string, key long, cnt long, sketch binary"
+_CAND_MAGIC = b"CND1"
+
+
+class Candidates:
+    """Exact counts of a candidate key set: a frame (h = the key's
+    int64 hash, cnt, key). Merge sums the counts of shared hashes, so
+    folding every partition's top-m gives each key's lower bound.
+    Wire format: magic + pickled frame (keys of any Spark type)."""
+
+    def __init__(self, table: pd.DataFrame):
+        self.table = table
+
+    def merge(self, other: "Candidates") -> "Candidates":
+        both = pd.concat([self.table, other.table], ignore_index=True)
+        self.table = both.groupby("h", sort=False, as_index=False).agg(
+            cnt=("cnt", "sum"), key=("key", "first")
+        )
+        return self
+
+    def top(self, m: int) -> pd.DataFrame:
+        """The m largest counts, ties by hash."""
+        return self.table.sort_values(["cnt", "h"], ascending=[False, True]).head(m)
+
+    def to_bytes(self) -> bytes:
+        return _CAND_MAGIC + pickle.dumps(self.table, protocol=5)
+
+    @staticmethod
+    def from_bytes(buf: bytes) -> "Candidates":
+        if buf[:4] != _CAND_MAGIC:
+            raise ValueError("bad Candidates buffer")
+        return Candidates(pickle.loads(buf[4:]))
+
+
+def candidates_from_bytes(buf: bytes) -> Candidates:
+    return Candidates.from_bytes(buf)
+
+
+def _top_k(df: DataFrame, col, k: int, keys: bool, candidates_per_partition: int = 64,
+           depth: int = 5, width: int = 16384, fanout: int = 32) -> pd.DataFrame:
+    """(key_hash, key, est_cnt) of the top k by est_cnt desc, key_hash
+    asc; ``key`` is None unless ``keys``."""
+    m = max(candidates_per_partition, 4 * k)
+    c = _as_col(col)
+    sdf = df.select(
+        F.spark_partition_id().alias("__pid"),
+        F.xxhash64(c).alias("h"),
+        (c if keys else F.lit(None).cast("string")).alias("key"),
+    )
+
+    def build(batches: Iterable[pd.DataFrame]):
+        sk, cand, rows, pid = HashedCMS(depth, width), None, 0, -1
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            pid = int(pdf["__pid"].iloc[0])
+            sk.update_batch(pdf["h"].to_numpy(dtype=np.int64))
+            rows += len(pdf)
+            cur = Candidates(pdf.groupby("h", sort=False, as_index=False).agg(
+                cnt=("key", "size"), key=("key", "first")
+            ))
+            cand = cur if cand is None else cand.merge(cur)
+        if cand is not None:
+            yield pd.DataFrame({
+                "part_id": [pid, pid],
+                "name": ["cms", "cand"],
+                "sketch": [sk.to_bytes(), Candidates(cand.top(m)).to_bytes()],
+                "rows": [rows, rows],
+            })
+
+    merged = fold_partials(
+        sdf.mapInPandas(build, PARTIAL_SCHEMA),
+        {"cms": hashed_cms_from_bytes, "cand": candidates_from_bytes},
+        fanout,
+    )
+    if not merged:
+        return pd.DataFrame({"key_hash": [], "key": [], "est_cnt": []})
+    cand = merged["cand"][0].top(m)
+    est = merged["cms"][0].sketch.estimate_hashes(cand["h"].to_numpy(np.int64).view(np.uint64))
+    out = cand.assign(key_hash=cand["h"], est_cnt=est.astype(np.int64))
+    return out.sort_values(["est_cnt", "key_hash"], ascending=[False, True]).head(k)
 
 
 def cms_topk(
@@ -54,81 +138,26 @@ def cms_topk(
 ) -> DataFrame:
     """Top-k keys of ``col`` by Count-Min estimated frequency.
 
-    Returns a DataFrame (key_hash long, est_cnt long) ordered by
-    est_cnt desc — key_hash is xxhash64(col), join back to a
-    dimension/sample to recover readable keys. One full-data pass;
-    shuffle volume is O(n_partitions * (candidates + sketch bytes)).
+    Returns a local DataFrame (key_hash long, est_cnt long) ordered by
+    est_cnt desc, key_hash asc — key_hash is xxhash64(col). One
+    full-data pass; at <= ``fanout`` input partitions the whole call
+    is one Spark job, above that the partials tree-merge in groups of
+    ``fanout`` first. Shuffle volume is O(n_partitions * (candidates +
+    sketch bytes)).
     """
-    m = max(candidates_per_partition, 4 * k)
-    sdf = df.select(F.xxhash64(col if not isinstance(col, str) else F.col(col)).alias("h"))
+    out = _top_k(df, col, k, False, candidates_per_partition, depth, width, fanout)
+    return df.sparkSession.createDataFrame(out[["key_hash", "est_cnt"]], "key_hash long, est_cnt long")
 
-    def build(batches: Iterable[pd.DataFrame]):
-        sk = HashedCMS(depth, width)
-        counts: pd.Series | None = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            h = pdf["h"].dropna()
-            sk.update_batch(h.to_numpy(dtype=np.int64))
-            vc = h.value_counts()
-            counts = vc if counts is None else counts.add(vc, fill_value=0)
-        if counts is None:
-            return
-        top = counts.nlargest(m)
-        yield pd.DataFrame(
-            {
-                "kind": ["cand"] * len(top) + ["cms"],
-                "key": np.concatenate([top.index.to_numpy(dtype=np.int64), [0]]),
-                "cnt": np.concatenate([top.to_numpy(dtype=np.int64), [0]]),
-                "sketch": [None] * len(top) + [sk.to_bytes()],
-            }
-        )
 
-    partials = sdf.mapInPandas(build, _PARTIAL_SCHEMA)
-    partials.persist()
-    try:
-        cand = (
-            partials.where(F.col("kind") == "cand")
-            .groupBy("key")
-            .agg(F.sum("cnt").alias("lb"))
-            .orderBy(F.desc("lb"), F.asc("key"))  # deterministic cut
-            .limit(max(4 * k, m))
-            .toPandas()
-        )
-        sk_rows = partials.where(F.col("kind") == "cms").select("sketch").collect()
-    finally:
-        partials.unpersist()
-    merged: HashedCMS | None = None
-    for r in sk_rows:
-        cur = hashed_cms_from_bytes(bytes(r["sketch"]))
-        merged = cur if merged is None else merged.merge(cur)
-    if merged is None or not len(cand):
-        spark = df.sparkSession
-        return spark.createDataFrame([], "key_hash long, est_cnt long")
-    ests = merged.sketch.estimate_hashes(
-        cand["key"].to_numpy(dtype=np.int64).view(np.uint64)
+def cms_topk_with_keys(df: DataFrame, col, k: int = 10, **kwargs) -> DataFrame:
+    """``cms_topk`` with the key values instead of their hashes, at the
+    same cost: a local DataFrame (key, est_cnt) ordered by est_cnt
+    desc, key asc (nulls first, as Spark orders them)."""
+    out = _top_k(df, col, k, True, **kwargs).sort_values(
+        ["est_cnt", "key"], ascending=[False, True], na_position="first"
     )
-    out = pd.DataFrame({"key_hash": cand["key"], "est_cnt": ests.astype(np.int64)})
-    out = out.sort_values(
-        ["est_cnt", "key_hash"], ascending=[False, True]
-    ).head(k).reset_index(drop=True)
-    return df.sparkSession.createDataFrame(out.astype({"key_hash": "int64", "est_cnt": "int64"}))
-
-
-def cms_topk_with_keys(
-    df: DataFrame, col, k: int = 10, **kwargs
-) -> DataFrame:
-    """cms_topk joined back to the (distinct) key values — convenience
-    for columns whose distinct set is broadcast-able (e.g. domains).
-    The join is broadcast on the tiny top-k side."""
-    top = cms_topk(df, col, k=k, **kwargs)
-    c = F.col(col) if isinstance(col, str) else col
-    keys = df.select(c.alias("key"), F.xxhash64(c).alias("key_hash")).distinct()
-    return (
-        keys.join(F.broadcast(top), "key_hash")
-        .select("key", "est_cnt")
-        .orderBy(F.desc("est_cnt"), F.asc("key"))
-    )
+    key_type = df.select(_as_col(col).alias("key")).schema["key"].dataType.simpleString()
+    return df.sparkSession.createDataFrame(out[["key", "est_cnt"]], f"key {key_type}, est_cnt long")
 
 
 def guaranteed_heavy(df: DataFrame, col, k: int) -> DataFrame:

@@ -4,14 +4,16 @@ A reporting job typically wants several sketches of the same table
 (text-length quantiles + distinct urls + heavy-hitter domains + ...).
 Running them as separate aggregations re-scans the table once per
 sketch — at the 100 TB design point that multiplies the dominant cost
-(the scan) by the number of sketches. This operator fuses them:
+(the scan) by the number of sketches. This operator fuses them into
+the ungrouped core of ``aggregate.py``:
 
   stage 1: one ``mapInPandas`` pass; each Arrow batch updates EVERY
            sketch (each spec names its own input column, all projected
            in the same scan);
-  stage 2: partial rows (part_id, sketch_name, bytes) shuffle by
-           (name, part_id % fanout) and merge per name;
-  stage 3: driver folds <= n_sketches * fanout rows.
+  stage 2: the driver folds the partial rows per name when the
+           partition count is <= ``fanout`` (one Spark job), else
+           they shuffle by (name, part_id % fanout) and merge per
+           group first (``tree_merge``).
 
 Scan cost: 1x regardless of sketch count. Column pruning still holds —
 the scan reads exactly the union of the specs' columns.
@@ -19,83 +21,19 @@ the scan reads exactly the union of the specs' columns.
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, Mapping, NamedTuple
+from typing import Mapping
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
+from .aggregate import PARTIAL_SCHEMA, SketchSpec, aggregate_sketches
 
-class SketchSpec(NamedTuple):
-    col: object  # str or Column expression
-    factory: Callable[[], object]
-    deserialize: Callable[[bytes], object]
+MULTI_PARTIAL_SCHEMA = PARTIAL_SCHEMA
 
-
-MULTI_PARTIAL_SCHEMA = "part_id long, name string, sketch binary, rows long"
+__all__ = ["MULTI_PARTIAL_SCHEMA", "SketchSpec", "multi_sketch_aggregate"]
 
 
 def multi_sketch_aggregate(
     df: DataFrame, specs: Mapping[str, SketchSpec], fanout: int = 32
 ) -> dict[str, object]:
     """Returns {name: merged sketch} from a single pass over df."""
-    names = list(specs)
-    cols = [
-        (F.col(s.col) if isinstance(s.col, str) else s.col).alias(f"__v_{n}")
-        for n, s in specs.items()
-    ]
-    sdf = df.select(*cols).withColumn("__pid", F.spark_partition_id())
-    factories = {n: specs[n].factory for n in names}
-
-    def build(batches: Iterable[pd.DataFrame]):
-        sks = {n: f() for n, f in factories.items()}
-        rows = {n: 0 for n in names}
-        pid = -1
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pid = int(pdf["__pid"].iloc[0])
-            for n in names:
-                vals = pdf[f"__v_{n}"].dropna()
-                if len(vals):
-                    sks[n].update_batch(vals.to_numpy())
-                    rows[n] += len(vals)
-        out_n = [n for n in names if rows[n] > 0]
-        if not out_n:
-            return
-        yield pd.DataFrame(
-            {
-                "part_id": [pid] * len(out_n),
-                "name": out_n,
-                "sketch": [sks[n].to_bytes() for n in out_n],
-                "rows": [rows[n] for n in out_n],
-            }
-        )
-
-    partials = sdf.mapInPandas(build, MULTI_PARTIAL_SCHEMA)
-    deserializers = {n: specs[n].deserialize for n in names}
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        name = pdf["name"].iloc[0]
-        deser = deserializers[name]
-        sk = None
-        rows = 0
-        for buf, r in zip(pdf["sketch"], pdf["rows"]):
-            cur = deser(bytes(buf))
-            sk = cur if sk is None else sk.merge(cur)
-            rows += int(r)
-        return pd.DataFrame(
-            {"part_id": [0], "name": [name], "sketch": [sk.to_bytes()], "rows": [rows]}
-        )
-
-    bucketed = partials.withColumn("part_id", F.pmod(F.col("part_id"), F.lit(fanout)))
-    merged = bucketed.groupBy("name", "part_id").applyInPandas(
-        merge_group, MULTI_PARTIAL_SCHEMA
-    )
-    out: dict[str, object] = {}
-    for r in merged.collect():
-        cur = deserializers[r["name"]](bytes(r["sketch"]))
-        if r["name"] in out:
-            out[r["name"]].merge(cur)
-        else:
-            out[r["name"]] = cur
-    return out
+    return {n: sk for n, (sk, _) in aggregate_sketches(df, specs, fanout).items()}

@@ -1,14 +1,16 @@
 """High-level distributed sketch queries over DataFrames.
 
-Each helper is a thin composition of the two-level pipeline in
+Each helper is a thin composition of the ungrouped core in
 ``aggregate.py`` with one sketch family, returning either the final
 sketch (driver-side, O(sketch) bytes) or a small result DataFrame.
 
 Scale notes (the 100 TB design point):
 - every helper makes exactly ONE full pass over the data (the
   ``mapInPandas`` partial-build stage); everything after it moves only
-  O(#partitions * sketch_size) bytes through one shuffle of `fanout`
-  groups plus a <=fanout-row collect;
+  O(#partitions * sketch_size) bytes. ``fanout`` is the most partials
+  merged in one place: at <= ``fanout`` input partitions the driver
+  folds the partials collected by the build job itself (one Spark
+  job), above it they first shuffle into ``fanout`` merge groups;
 - the value column is projected *before* the UDF so parquet scans read
   a single column (check: ReadSchema in .explain());
 - for hash sketches (HLL/Bloom/CMS) the 64-bit hashing of strings is
@@ -22,11 +24,15 @@ from __future__ import annotations
 from functools import partial
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from ..sketches import (HLL, KLL, Bloom, CountMin, QDigest, TDigest,
+from ..sketches import (HLL, KLL, Bloom, CountMin, CuckooFilter, QDigest, TDigest,
                         gk_from_bytes, kll_from_bytes, qdigest_from_bytes,
                         tdigest_from_bytes)
+from ..sketches.ams import AMS
+from ..sketches.cbloom import CountingBloom
+from ..sketches.theta import ThetaSketch
 from .aggregate import sketch_aggregate
 
 
@@ -139,17 +145,22 @@ def _maybe_prehash(df: DataFrame, col, prehash: bool):
     return (F.xxhash64(c), True) if prehash else (c, False)
 
 
-class HashedHLL:
-    """HLL fed by JVM-side xxhash64 int64 values (adapter with the
-    sketch UDAF contract; module-level so it cloudpickles by ref)."""
+class _Prehashed:
+    """Sketch UDAF adapter for a hash sketch fed JVM-side xxhash64
+    int64 values: ``update_batch`` hands the hashes (and any weights)
+    to the inner sketch's batch-of-hashes method, and the adapter
+    serializes as the inner sketch. Subclasses are module-level in the
+    shipped package, so closures pickle them by reference."""
 
-    def __init__(self, p: int = 14):
-        self.sketch = HLL(p)
+    inner: type  # the wrapped sketch class
+    add = "update_hashes"  # its batch-of-hashes method
 
-    def update_batch(self, values):
-        import numpy as np
+    def __init__(self, *args):
+        self.sketch = self.inner(*args)
 
-        self.sketch.update_hashes(np.asarray(values, dtype=np.int64).view(np.uint64))
+    def update_batch(self, values, weights=None):
+        h = np.asarray(values, dtype=np.int64).view(np.uint64)
+        getattr(self.sketch, self.add)(*((h,) if weights is None else (h, weights)))
 
     def merge(self, other):
         self.sketch.merge(other.sketch)
@@ -158,159 +169,55 @@ class HashedHLL:
     def to_bytes(self):
         return self.sketch.to_bytes()
 
-    @staticmethod
-    def from_bytes(buf: bytes) -> "HashedHLL":
-        a = HashedHLL.__new__(HashedHLL)
-        a.sketch = HLL.from_bytes(buf)
+    @classmethod
+    def from_bytes(cls, buf: bytes):
+        a = cls.__new__(cls)
+        a.sketch = cls.inner.from_bytes(buf)
         return a
 
 
-class HashedCMS:
+class HashedHLL(_Prehashed):
+    inner = HLL
+
+
+class HashedCMS(_Prehashed):
+    inner = CountMin
+
     def __init__(self, depth: int = 5, width: int = 8192):
-        self.sketch = CountMin(depth, width)
-
-    def update_batch(self, values):
-        import numpy as np
-
-        self.sketch.update_hashes(np.asarray(values, dtype=np.int64).view(np.uint64))
-
-    def merge(self, other):
-        self.sketch.merge(other.sketch)
-        return self
-
-    def to_bytes(self):
-        return self.sketch.to_bytes()
-
-    @staticmethod
-    def from_bytes(buf: bytes) -> "HashedCMS":
-        a = HashedCMS.__new__(HashedCMS)
-        a.sketch = CountMin.from_bytes(buf)
-        return a
+        super().__init__(depth, width)
 
 
-class HashedAMS:
-    """AMS tug-of-war sketch fed by JVM-side xxhash64 int64 values
-    (same adapter shape as HashedCMS; module-level so it cloudpickles
-    by reference)."""
+class HashedAMS(_Prehashed):
+    """AMS tug-of-war sketch; signed weights ride the weight_col
+    contract."""
 
-    def __init__(self, depth: int = 7, width: int = 8192):
-        from q_digest_spark.sketches.ams import AMS
-
-        self.sketch = AMS(depth, width)
-
-    def update_batch(self, values, weights=None):
-        import numpy as np
-
-        self.sketch.update_hashes(
-            np.asarray(values, dtype=np.int64).view(np.uint64),
-            None if weights is None else np.asarray(weights, dtype=np.int64),
-        )
-
-    def merge(self, other):
-        self.sketch.merge(other.sketch)
-        return self
-
-    def to_bytes(self):
-        return self.sketch.to_bytes()
-
-    @staticmethod
-    def from_bytes(buf: bytes) -> "HashedAMS":
-        from q_digest_spark.sketches.ams import AMS
-
-        a = HashedAMS.__new__(HashedAMS)
-        a.sketch = AMS.from_bytes(buf)
-        return a
+    inner = AMS
 
 
-def hashed_ams_from_bytes(buf: bytes) -> HashedAMS:
-    return HashedAMS.from_bytes(buf)
+class HashedCuckoo(_Prehashed):
+    """CuckooFilter; merge is fingerprint re-placement — associative,
+    key-free."""
+
+    inner, add = CuckooFilter, "add_hashes"
 
 
-class HashedCuckoo:
-    """CuckooFilter fed by JVM-side xxhash64 int64 values (sketch
-    UDAF contract; module-level so it cloudpickles by ref). Merge is
-    fingerprint re-placement — associative, key-free."""
+class HashedBloom(_Prehashed):
+    inner, add = Bloom, "add_hashes"
 
-    def __init__(self, m_buckets: int = 1 << 16):
-        from ..sketches import CuckooFilter
-
-        self.sketch = CuckooFilter(m_buckets)
-
-    def update_batch(self, values):
-        import numpy as np
-
-        self.sketch.add_hashes(np.asarray(values, dtype=np.int64).view(np.uint64))
-
-    def merge(self, other):
-        self.sketch.merge(other.sketch)
-        return self
-
-    def to_bytes(self):
-        return self.sketch.to_bytes()
-
-    @staticmethod
-    def from_bytes(buf: bytes) -> "HashedCuckoo":
-        from ..sketches import CuckooFilter
-
-        a = HashedCuckoo.__new__(HashedCuckoo)
-        a.sketch = CuckooFilter.from_bytes(buf)
-        return a
-
-
-class HashedBloom:
     def __init__(self, m_bits: int = 1 << 22, k: int = 7):
-        self.sketch = Bloom(m_bits, k)
-
-    def update_batch(self, values):
-        import numpy as np
-
-        self.sketch.add_hashes(np.asarray(values, dtype=np.int64).view(np.uint64))
-
-    def merge(self, other):
-        self.sketch.merge(other.sketch)
-        return self
-
-    def to_bytes(self):
-        return self.sketch.to_bytes()
-
-    @staticmethod
-    def from_bytes(buf: bytes) -> "HashedBloom":
-        a = HashedBloom.__new__(HashedBloom)
-        a.sketch = Bloom.from_bytes(buf)
-        return a
+        super().__init__(m_bits, k)
 
 
-class HashedCountingBloom:
-    """Counting (deletable) Bloom fed by JVM xxhash64 int64 values;
-    signed weights ride the standard weight_col contract, so the
-    delete stream is just rows with weight -1."""
+class HashedCountingBloom(_Prehashed):
+    """Counting (deletable) Bloom; signed weights ride the standard
+    weight_col contract, so the delete stream is just rows with
+    weight -1."""
 
-    def __init__(self, m_slots: int = 1 << 17, k: int = 7):
-        from q_digest_spark.sketches.cbloom import CountingBloom
+    inner, add = CountingBloom, "add_hashes"
 
-        self.sketch = CountingBloom(m_slots, k)
 
-    def update_batch(self, values, weights=None):
-        import numpy as np
-
-        self.sketch.add_hashes(
-            np.asarray(values, dtype=np.int64).view(np.uint64), weights
-        )
-
-    def merge(self, other):
-        self.sketch.merge(other.sketch)
-        return self
-
-    def to_bytes(self):
-        return self.sketch.to_bytes()
-
-    @staticmethod
-    def from_bytes(buf: bytes) -> "HashedCountingBloom":
-        from q_digest_spark.sketches.cbloom import CountingBloom
-
-        a = HashedCountingBloom.__new__(HashedCountingBloom)
-        a.sketch = CountingBloom.from_bytes(buf)
-        return a
+class HashedTheta(_Prehashed):
+    inner = ThetaSketch
 
 
 class RawHLL:
@@ -322,8 +229,6 @@ class RawHLL:
         self.h = HLL(p)
 
     def update_batch(self, values):
-        import numpy as np
-
         self.h.update_batch(np.asarray(values))
 
     def merge(self, other):
@@ -341,40 +246,6 @@ class RawHLL:
         a = RawHLL.__new__(RawHLL)
         a.h = HLL.from_bytes(buf)
         return a
-
-
-class HashedTheta:
-    """Theta/KMV sketch fed by JVM-side xxhash64 int64 values (same
-    prehash contract as HashedHLL; module-level for cloudpickle)."""
-
-    def __init__(self, k: int = 4096):
-        from ..sketches.theta import ThetaSketch
-
-        self.sketch = ThetaSketch(k)
-
-    def update_batch(self, values):
-        import numpy as np
-
-        self.sketch.update_hashes(np.asarray(values, dtype=np.int64).view(np.uint64))
-
-    def merge(self, other):
-        self.sketch.merge(other.sketch)
-        return self
-
-    def to_bytes(self):
-        return self.sketch.to_bytes()
-
-    @staticmethod
-    def from_bytes(buf: bytes) -> "HashedTheta":
-        from ..sketches.theta import ThetaSketch
-
-        a = HashedTheta.__new__(HashedTheta)
-        a.sketch = ThetaSketch.from_bytes(buf)
-        return a
-
-
-def hashed_theta_from_bytes(buf: bytes) -> HashedTheta:
-    return HashedTheta.from_bytes(buf)
 
 
 def theta_of(df: DataFrame, col, k: int = 4096, fanout: int = 32):
@@ -399,16 +270,24 @@ def hashed_cms_from_bytes(buf: bytes) -> HashedCMS:
     return HashedCMS.from_bytes(buf)
 
 
+def hashed_ams_from_bytes(buf: bytes) -> HashedAMS:
+    return HashedAMS.from_bytes(buf)
+
+
 def hashed_bloom_from_bytes(buf: bytes) -> HashedBloom:
     return HashedBloom.from_bytes(buf)
 
 
-def hashed_cuckoo_from_bytes(buf: bytes) -> "HashedCuckoo":
+def hashed_cuckoo_from_bytes(buf: bytes) -> HashedCuckoo:
     return HashedCuckoo.from_bytes(buf)
 
 
 def hashed_counting_bloom_from_bytes(buf: bytes) -> HashedCountingBloom:
     return HashedCountingBloom.from_bytes(buf)
+
+
+def hashed_theta_from_bytes(buf: bytes) -> HashedTheta:
+    return HashedTheta.from_bytes(buf)
 
 
 def hll_of(df: DataFrame, col, p: int = 14, fanout: int = 32) -> HLL:

@@ -40,7 +40,12 @@ def get_spark(
     # oversubscribes real clusters identically).
     for v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(v, "1")
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    # Half the host's RAM, at most 48g: local mode runs every task in
+    # this one JVM, and a heap cap above physical memory lets a
+    # long-lived session grow until the OOM killer ends it.
+    ram_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or f"{max(1, min(48, ram_gib // 2))}g"
     master = master or f"local[{cores}]"
     b = (
         SparkSession.builder.master(master)
@@ -52,7 +57,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")

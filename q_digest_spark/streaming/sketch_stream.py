@@ -2,9 +2,10 @@
 
 The reference is batch-only (SURVEY.md §2.3: streaming absent); this
 module exists because mergeable sketches make streaming aggregation
-natural: each micro-batch produces partial sketches (the SAME
-stage-1/stage-2 code as batch), which fold into a running sketch in
-``foreachBatch``. Exactly-once-ish semantics come from Spark's
+natural: each micro-batch runs the SAME ungrouped core as batch
+(``aggregate.aggregate_sketches``: one Spark job per micro-batch
+whenever it has <= 8 partitions), and the result folds into a running
+sketch in ``foreachBatch``. Exactly-once-ish semantics come from Spark's
 micro-batch replay + the merge being idempotent per batch id (we track
 the last folded batch id).
 
@@ -19,7 +20,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
-from ..operators.aggregate import partial_sketches, tree_merge
+from ..operators.aggregate import SketchSpec, aggregate_sketches
 
 
 class StreamingSketch:
@@ -43,12 +44,10 @@ class StreamingSketch:
     def _fold_batch(self, batch_df: DataFrame, batch_id: int, col) -> None:
         if batch_id <= self._last_batch:
             return  # replayed micro-batch: already folded (idempotence)
-        partials = partial_sketches(batch_df, col, self.factory)
-        merged = tree_merge(partials, self.deserialize, fanout=8).collect()
-        for r in merged:
-            cur = self.deserialize(bytes(r["sketch"]))
+        spec = SketchSpec(col, self.factory, self.deserialize)
+        for cur, rows in aggregate_sketches(batch_df, {"v": spec}, fanout=8).values():
             self.sketch = cur if self.sketch is None else self.sketch.merge(cur)
-            self.rows += int(r["rows"])
+            self.rows += rows
         self._last_batch = batch_id
 
     def attach(self, stream_df: DataFrame, col, trigger_seconds: float | None = None):

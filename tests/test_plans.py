@@ -7,7 +7,7 @@ from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
-from q_digest_spark.operators.aggregate import partial_sketches
+from q_digest_spark.operators.aggregate import SketchSpec, partial_sketches
 from q_digest_spark.sketches import QDigest
 
 
@@ -18,12 +18,17 @@ def _plan_of(df) -> str:
     return buf.getvalue()
 
 
+def _n_chars_partials(docs):
+    spec = SketchSpec(F.col("n_chars").cast("long"), lambda: QDigest(0, 20), None)
+    return partial_sketches(docs, {"v": spec})
+
+
 def test_sketch_scan_prunes_columns(spark, sf_test):
     """The partial-build stage over documents must read ONLY n_chars —
     never text/lang/source. A scan that reads all columns for a
     1-column sketch would move ~100x the bytes at corpus scale."""
     docs = spark.read.parquet(f"{sf_test}/documents.parquet")
-    partials = partial_sketches(docs, F.col("n_chars").cast("long"), lambda: QDigest(0, 20))
+    partials = _n_chars_partials(docs)
     plan = _plan_of(partials)
     scan = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert scan, plan
@@ -36,7 +41,7 @@ def test_filter_pushdown_reaches_scan(spark, sf_test):
     """A lang filter upstream of the sketch build must appear in
     PushedFilters (partition/row-group pruning at the source)."""
     docs = spark.read.parquet(f"{sf_test}/documents.parquet").where(F.col("lang") == "en")
-    partials = partial_sketches(docs, F.col("n_chars").cast("long"), lambda: QDigest(0, 20))
+    partials = _n_chars_partials(docs)
     plan = _plan_of(partials)
     pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
     assert pushed, plan
@@ -51,7 +56,7 @@ def test_two_level_merge_shuffles_only_sketch_rows(spark, sf_test):
     from q_digest_spark.sketches import qdigest_from_bytes
 
     docs = spark.read.parquet(f"{sf_test}/documents.parquet")
-    partials = partial_sketches(docs, F.col("n_chars").cast("long"), lambda: QDigest(0, 20))
+    partials = _n_chars_partials(docs)
     merged = tree_merge(partials, qdigest_from_bytes, fanout=8)
     plan = _plan_of(merged)
     n_exchanges = plan.count("Exchange")
@@ -84,15 +89,27 @@ def test_hash_sample_plan_is_jvm_only(spark, sf_test):
 
 
 def test_cms_topk_partials_single_pass(spark, sf_test):
-    """Heavy-hitter candidates + CMS partials come from ONE scan
-    (one mapInPandas over the hashed column), and the key join back
-    is broadcast on the tiny top-k side."""
+    """Heavy-hitter candidates (keys included) and CMS partials come
+    from ONE scan, and with <= fanout input partitions the whole call —
+    build, driver scoring and the collect of the returned DataFrame —
+    is ONE Spark job: no persist, second scan, distinct or key join."""
     from q_digest_spark.operators.heavy_hitters import cms_topk_with_keys
 
-    events = spark.read.parquet(f"{sf_test}/events.parquet")
-    top = cms_topk_with_keys(events, "user_id", k=5)
-    plan = _plan_of(top)
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
+    events = spark.read.parquet(f"{sf_test}/events.parquet").select("user_id")
+    scanned = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            scanned.add(len(pdf))
+            yield pdf
+
+    counted = events.mapInPandas(count_rows, "user_id long")
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    before = jobs()
+    top = cms_topk_with_keys(counted, "user_id", k=5).collect()
+    assert jobs() - before == 1
+    assert len(top) == 5
+    assert scanned.value == events.count()
 
 
 def test_theta_scan_prunes_columns(spark, sf_test):
@@ -100,12 +117,11 @@ def test_theta_scan_prunes_columns(spark, sf_test):
     happens JVM-side on the pruned column)."""
     from functools import partial
 
-    from q_digest_spark.operators.aggregate import partial_sketches
     from q_digest_spark.operators.quantiles import HashedTheta
 
     events = spark.read.parquet(f"{sf_test}/events.parquet")
     partials = partial_sketches(
-        events, F.xxhash64("user_id"), partial(HashedTheta, 1024)
+        events, {"v": SketchSpec(F.xxhash64("user_id"), partial(HashedTheta, 1024), None)}
     )
     plan = _plan_of(partials)
     scan = [l for l in plan.splitlines() if "ReadSchema" in l]
@@ -256,7 +272,7 @@ def test_split_label_plan_is_jvm_only_no_shuffle(spark, sf_test):
 def test_counting_bloom_pipeline_shuffles_only_sketch_rows(spark, sf_test):
     """The signed insert/delete union must aggregate with ONE exchange
     above the partial build — raw keys never shuffle."""
-    from q_digest_spark.operators.aggregate import partial_sketches, tree_merge
+    from q_digest_spark.operators.aggregate import tree_merge
     from q_digest_spark.operators.quantiles import (
         HashedCountingBloom,
         hashed_counting_bloom_from_bytes,
@@ -268,8 +284,8 @@ def test_counting_bloom_pipeline_shuffles_only_sketch_rows(spark, sf_test):
         F.xxhash64("o_custkey").alias("key"), F.lit(-1).alias("w")
     )
     partials = partial_sketches(
-        ins.unionByName(dels), "key",
-        lambda: HashedCountingBloom(1 << 12, 5), weight_col="w",
+        ins.unionByName(dels),
+        {"v": SketchSpec("key", lambda: HashedCountingBloom(1 << 12, 5), None, "w")},
     )
     merged = tree_merge(partials, hashed_counting_bloom_from_bytes, fanout=8)
     plan = _plan_of(merged)
