@@ -27,18 +27,22 @@ core, ``fold_partials``:
       partitions and fanout=64 the driver never sees more than 64
       rows per sketch.
 
-Every merge, on either path, folds its rows in ``part_id`` order, so
-the result does not depend on shuffle or collect order. Merge is
+Grouped aggregation (``grouped_sketch_rows``, and through it the
+grouped quantiles, rollup/cube and daily tables) uses the same
+builder: ``partial_sketches(df, specs, keys)`` groups each Arrow batch
+locally in pandas and emits one partial row per (partition, key
+tuple), so the shuffle carries O(#partitions * #keys) sketch rows
+instead of the raw data — the skew story for Zipf-distributed keys (a
+hot key costs one row per partition, not one row per input record).
+One shuffle by key then merges each group with ``_merge_group``.
+
+There is one fold, ``_fold``, and every merge feeds it in a fixed
+order: partials in ``part_id`` order (driver fold, tree levels,
+grouped rows), rollup/cube levels by the keys they roll up, daily
+sketch rows in day order, checkpointed partials in file order. So the
+result does not depend on shuffle or collect order. Merge is
 associative and commutative up to compression order (asserted within
 eps in tests), which is what makes the tree shape irrelevant.
-
-Grouped aggregation (``grouped_sketch_rows``) does hand-built map-side
-partial aggregation: each Arrow batch groups locally in pandas and
-emits one partial sketch row per key, so the shuffle carries
-O(#batches * #keys) sketch rows instead of the raw data — this is the
-skew story for Zipf-distributed keys (a hot key costs one row per
-batch, not one row per input record). Its merges use the same
-``_merge_group`` body as the tree levels.
 """
 
 from __future__ import annotations
@@ -72,9 +76,21 @@ def _as_col(c):
     return F.col(c) if isinstance(c, str) else c
 
 
-def partial_sketches(df: DataFrame, specs: Mapping[str, SketchSpec]) -> DataFrame:
-    """Stage 1: one ``mapInPandas`` pass builds every spec's sketch per
-    input partition; output rows ``(part_id, name, sketch, rows)``.
+def _rows_schema(schema, keys: Sequence[str], tail: str = "sketch binary, rows long") -> str:
+    """DDL of a rows schema: the ``keys`` typed as in ``schema``, then
+    ``tail``."""
+    types = {f.name: f.dataType.simpleString() for f in schema.fields}
+    return "".join(f"`{k}` {types[k]}, " for k in keys) + tail
+
+
+def partial_sketches(
+    df: DataFrame, specs: Mapping[str, SketchSpec], keys: Sequence[str] = ()
+) -> DataFrame:
+    """Stage 1, the only map-side builder: one ``mapInPandas`` pass
+    builds every spec's sketch per input partition and, with ``keys``,
+    per key tuple (each Arrow batch groups locally in pandas); output
+    rows ``(part_id, name, keys..., sketch, rows)``, one per partition,
+    spec and key with any value fed.
 
     Each spec's input is selected *first*, so Catalyst prunes every
     other column out of the scan (ReadSchema shows only the needed
@@ -82,55 +98,61 @@ def partial_sketches(df: DataFrame, specs: Mapping[str, SketchSpec]) -> DataFram
     weight) pair is dropped when either side is null; ``rows`` counts
     total (signed) weight.
     """
-    names = list(specs)
-    cols = [F.spark_partition_id().alias("__pid")]
+    names, keys = list(specs), list(keys)
+    clash = set(keys) & {"part_id", "name", "sketch", "rows"}
+    if clash:
+        raise ValueError(f"group keys {sorted(clash)} clash with the partial-row columns")
+    cols = [F.spark_partition_id().alias("__pid"), *map(F.col, keys)]
     for n, s in specs.items():
         cols.append(_as_col(s.col).alias(f"__v_{n}"))
         if s.weight_col is not None:
             cols.append(_as_col(s.weight_col).alias(f"__w_{n}"))
     sdf = df.select(*cols)
+    schema = "part_id long, name string, " + _rows_schema(sdf.schema, keys)
     factories = {n: specs[n].factory for n in names}
     weighted = {n for n in names if specs[n].weight_col is not None}
 
     def build(batches: Iterable[pd.DataFrame]):
-        sks = {n: f() for n, f in factories.items()}
-        rows = dict.fromkeys(names, 0)
-        # values actually fed — the emit condition (signed weights can
-        # sum to 0 across a partition whose counters are decidedly
-        # nonzero, e.g. counting-Bloom +1/-1 streams)
-        seen = dict.fromkeys(names, 0)
+        # one sketch per (name, key tuple) across ALL batches of the
+        # partition, created on its first fed value — the emit
+        # condition (signed weights can sum to 0 across a partition
+        # whose counters are decidedly nonzero, e.g. counting-Bloom
+        # +1/-1 streams)
+        sks: dict[tuple, object] = {}
+        rows: dict[tuple, int] = {}
         pid = -1
         for pdf in batches:
             if not len(pdf):
                 continue
             pid = int(pdf["__pid"].iloc[0])
-            for n in names:
-                v = pdf[f"__v_{n}"]
-                if n in weighted:
-                    w = pdf[f"__w_{n}"]
-                    ok = v.notna() & w.notna()
-                    vals, w = v[ok], w[ok].to_numpy()
-                    if len(vals):
-                        sks[n].update_batch(vals.to_numpy(), w)
-                        rows[n] += int(w.sum())
-                else:
-                    vals = v.dropna()
-                    if len(vals):
-                        sks[n].update_batch(vals.to_numpy())
-                        rows[n] += len(vals)
-                seen[n] += len(vals)
-        out_n = [n for n in names if seen[n]]
-        if out_n:
-            yield pd.DataFrame(
-                {
-                    "part_id": [pid] * len(out_n),
-                    "name": out_n,
-                    "sketch": [sks[n].to_bytes() for n in out_n],
-                    "rows": [rows[n] for n in out_n],
-                }
-            )
+            groups = pdf.groupby(keys, sort=False, dropna=False) if keys else [((), pdf)]
+            for kt, g in groups:
+                kt = kt if isinstance(kt, tuple) else (kt,)
+                for n in names:
+                    v = g[f"__v_{n}"]
+                    w = g[f"__w_{n}"] if n in weighted else None
+                    ok = v.notna() if w is None else v.notna() & w.notna()
+                    if not ok.any():
+                        continue
+                    at = (n, kt)
+                    if at not in sks:
+                        sks[at], rows[at] = factories[n](), 0
+                    if w is None:
+                        sks[at].update_batch(v[ok].to_numpy())
+                        rows[at] += int(ok.sum())
+                    else:
+                        w = w[ok].to_numpy()
+                        sks[at].update_batch(v[ok].to_numpy(), w)
+                        rows[at] += int(w.sum())
+        if sks:
+            out = {"part_id": [pid] * len(sks), "name": [n for n, _ in sks]}
+            for i, k in enumerate(keys):
+                out[k] = [kt[i] for _, kt in sks]
+            out["sketch"] = [sk.to_bytes() for sk in sks.values()]
+            out["rows"] = list(rows.values())
+            yield pd.DataFrame(out)
 
-    return sdf.mapInPandas(build, PARTIAL_SCHEMA)
+    return sdf.mapInPandas(build, schema)
 
 
 def _fold(bufs: Iterable, deserialize):
@@ -148,15 +170,17 @@ def _decoder(deserialize, name):
     return deserialize[name] if isinstance(deserialize, Mapping) else deserialize
 
 
-def _merge_group(keys: Sequence[str], deserialize):
+def _merge_group(keys: Sequence[str], deserialize, order: Sequence[str] = ("part_id",)):
     """applyInPandas body of every sketch merge (tree levels, grouped
-    rows, rollup/cube levels): one output row with the group's
-    ``keys``, its merged sketch and summed rows. Rows that carry a
-    ``part_id`` fold in that order and report the smallest one."""
+    rows, rollup/cube levels, sliding windows): one output row with the
+    group's ``keys``, its merged sketch and summed rows. Rows fold
+    sorted by the ``order`` columns they carry, so a key in ``order``
+    reports its smallest value."""
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        if "part_id" in pdf.columns:
-            pdf = pdf.sort_values("part_id", kind="stable")
+        by = [c for c in order if c in pdf.columns]
+        if by:
+            pdf = pdf.sort_values(by, kind="stable")
         dec = _decoder(deserialize, pdf["name"].iloc[0] if "name" in pdf.columns else None)
         out = {k: [pdf[k].iloc[0]] for k in keys}
         out["sketch"] = [_fold(pdf["sketch"], dec).to_bytes()]
@@ -258,17 +282,15 @@ def grouped_sketch_rows(
     factory: SketchFactory,
     deserialize,
     *,
-    value_name: str = "v",
     weight_col=None,
 ) -> DataFrame:
-    """Grouped aggregation with hand-built map-side partials.
-
-    Stage 1 groups *inside each Arrow batch* (pandas groupby) and emits
-    one partial sketch row per (key-tuple, batch); stage 2 shuffles
-    only those tiny rows by key and merges. The raw data is never
-    shuffled — the Zipf/skew-safe plan demanded by BASELINE.json
-    ("explicit salting/repartitioning for domain skew": a hot key here
-    contributes one partial row per batch regardless of its row count).
+    """Grouped aggregation: ``partial_sketches`` with ``keys`` emits one
+    partial row per (partition, key tuple), then one shuffle of those
+    tiny rows by key merges each group in ``part_id`` order. The raw
+    data is never shuffled — the Zipf/skew-safe plan demanded by
+    BASELINE.json ("explicit salting/repartitioning for domain skew":
+    a hot key here contributes one partial row per partition
+    regardless of its row count).
 
     ``weight_col``: optional weight expression — rows become
     (value, weight) pairs fed to ``update_batch(values, weights)``
@@ -278,67 +300,9 @@ def grouped_sketch_rows(
     Returns a DataFrame ``keys..., sketch binary, rows long``.
     """
     keys = list(keys)
-    cols = [F.col(k) for k in keys] + [
-        F.col(col).alias(value_name) if isinstance(col, str) else col.alias(value_name)
-    ]
-    if weight_col is not None:
-        cols.append(
-            F.col(weight_col).alias("__w")
-            if isinstance(weight_col, str)
-            else weight_col.alias("__w")
-        )
-    sdf = df.select(*cols)
-    n_key_fields = len(keys)
-    key_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in sdf.schema.fields[:n_key_fields]
-    )
-    partial_schema = f"{key_fields}, sketch binary, rows long"
-
-    def build(batches: Iterable[pd.DataFrame]):
-        # accumulate one sketch per key across ALL batches of the
-        # partition (partial agg), emit once at the end
-        acc: dict[tuple, object] = {}
-        nrows: dict[tuple, int] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            for kt, g in pdf.groupby(keys, sort=False, dropna=False):
-                kt = kt if isinstance(kt, tuple) else (kt,)
-                if weight_col is not None:
-                    # drop the PAIR when either side is null — a NaN
-                    # weight would crash the int cast (QDigest) or
-                    # silently poison centroid weights (t-digest)
-                    ok = g[value_name].notna() & g["__w"].notna()
-                    vals = g[value_name][ok]
-                else:
-                    vals = g[value_name].dropna()
-                if not len(vals):
-                    continue
-                sk = acc.get(kt)
-                if sk is None:
-                    sk = acc[kt] = factory()
-                    nrows[kt] = 0
-                if weight_col is not None:
-                    w = g["__w"][ok].to_numpy()
-                    sk.update_batch(vals.to_numpy(), w)
-                    nrows[kt] += int(w.sum())
-                else:
-                    sk.update_batch(vals.to_numpy())
-                    nrows[kt] += len(vals)
-        if not acc:
-            return
-        recs = {k: [] for k in keys}
-        recs["sketch"] = []
-        recs["rows"] = []
-        for kt, sk in acc.items():
-            for kname, kval in zip(keys, kt):
-                recs[kname].append(kval)
-            recs["sketch"].append(sk.to_bytes())
-            recs["rows"].append(nrows[kt])
-        yield pd.DataFrame(recs)
-
-    return sdf.mapInPandas(build, partial_schema).groupBy(*keys).applyInPandas(
-        _merge_group(keys, deserialize), partial_schema
+    partials = partial_sketches(df, {"v": SketchSpec(col, factory, deserialize, weight_col)}, keys)
+    return partials.groupBy(*keys).applyInPandas(
+        _merge_group(keys, deserialize), _rows_schema(partials.schema, keys)
     )
 
 
@@ -364,12 +328,7 @@ def grouped_estimates(
     count through."""
     keys = list(keys)
     est = estimator if estimator is not None else (lambda sk: sk.estimate())
-    key_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in rows_df.schema.fields
-        if f.name in keys
-    )
-    out_schema = f"{key_fields}, `{out_name}` {out_type}"
+    out_schema = _rows_schema(rows_df.schema, keys, f"`{out_name}` {out_type}")
     if keep_rows:
         out_schema += ", `rows` long"
 
@@ -403,12 +362,7 @@ def grouped_items(
     onto every emitted row. Output size is bounded by
     groups x summary-capacity, never by the data."""
     keys = list(keys)
-    key_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in rows_df.schema.fields
-        if f.name in keys
-    )
-    out_schema = f"{key_fields}, {item_schema}"
+    out_schema = _rows_schema(rows_df.schema, keys, item_schema)
 
     def decode(batches: Iterable[pd.DataFrame]):
         for pdf in batches:
@@ -437,12 +391,7 @@ def grouped_quantiles(
     keys = list(keys)
     out_names = list(out_names) if out_names else [f"p{int(p * 100)}" for p in ps]
     rows_df = grouped_sketch_rows(df, keys, col, factory, deserialize)
-    key_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in rows_df.schema.fields
-        if f.name in keys
-    )
-    out_schema = key_fields + ", " + ", ".join(f"`{n}` long" for n in out_names)
+    out_schema = _rows_schema(rows_df.schema, keys, ", ".join(f"`{n}` long" for n in out_names))
 
     def estimate(batches: Iterable[pd.DataFrame]):
         for pdf in batches:
@@ -485,29 +434,20 @@ def cube_sketch_rows(
     finest = spill_parquet(
         grouped_sketch_rows(df, keys, col, factory, deserialize), "qds_cube_"
     )
-    key_fields = {
-        f.name: f.dataType.simpleString()
-        for f in finest.schema.fields
-        if f.name in keys
-    }
-
-    def _schema(level_keys: list[str]) -> str:
-        fields = ", ".join(f"`{k}` {key_fields[k]}" for k in level_keys)
-        return (fields + ", " if fields else "") + "sketch binary, rows long"
-
     outs = []
     for n in range(len(keys), -1, -1):
         for subset in map(list, combinations(keys, n)):
             if n == len(keys):
                 merged = finest
             else:
+                rolled = [k for k in keys if k not in subset]
                 merged = finest.groupBy(*subset).applyInPandas(
-                    _merge_group(subset, deserialize), _schema(subset)
+                    _merge_group(subset, deserialize, rolled), _rows_schema(finest.schema, subset)
                 )
             padded = merged.withColumn("level", F.lit(len(subset)))
             for k in keys:
                 if k not in subset:
-                    padded = padded.withColumn(k, F.lit(None).cast(key_fields[k]))
+                    padded = padded.withColumn(k, F.lit(None).cast(finest.schema[k].dataType))
             outs.append(padded.select(*keys, "level", "sketch", "rows"))
     out = outs[0]
     for o in outs[1:]:
@@ -544,27 +484,18 @@ def rollup_sketch_rows(
     finest = spill_parquet(
         grouped_sketch_rows(df, keys, col, factory, deserialize), "qds_rollup_"
     )
-    key_fields = {
-        f.name: f.dataType.simpleString()
-        for f in finest.schema.fields
-        if f.name in keys
-    }
-
-    def _schema(level_keys: list[str]) -> str:
-        fields = ", ".join(f"`{k}` {key_fields[k]}" for k in level_keys)
-        return (fields + ", " if fields else "") + "sketch binary, rows long"
-
     levels = [finest.withColumn("level", F.lit(len(keys)))]
     current = finest
     for n in range(len(keys) - 1, -1, -1):
         level_keys = keys[:n]
         coarser = current.groupBy(*level_keys).applyInPandas(
-            _merge_group(level_keys, deserialize), _schema(level_keys)
+            _merge_group(level_keys, deserialize, keys[n:n + 1]),
+            _rows_schema(finest.schema, level_keys),
         )
         current = coarser
         padded = coarser.withColumn("level", F.lit(n))
         for k in keys[n:]:
-            padded = padded.withColumn(k, F.lit(None).cast(key_fields[k]))
+            padded = padded.withColumn(k, F.lit(None).cast(finest.schema[k].dataType))
         levels.append(padded.select(*keys, "level", "sketch", "rows"))
     out = levels[0].select(*keys, "level", "sketch", "rows")
     for l in levels[1:]:

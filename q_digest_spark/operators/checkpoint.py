@@ -34,17 +34,17 @@ from typing import Iterable
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .aggregate import _as_col, _fold
+
 STATE_SCHEMA = (
     "job_id string, file string, sketch binary, rows long, build_sec double, ts double"
 )
 
 
-def _build_partials_by_file(df: DataFrame, col, factory, value_name="v") -> DataFrame:
-    """Stage-1 partials keyed by input file (lineage unit)."""
-    sdf = df.select(
-        (F.col(col) if isinstance(col, str) else col).alias(value_name),
-        F.input_file_name().alias("file"),
-    )
+def _build_partials_by_file(df: DataFrame, col, factory) -> DataFrame:
+    """Stage-1 partials keyed by input file (lineage unit); its own
+    loop, because each row also records its task's ``build_sec``."""
+    sdf = df.select(_as_col(col).alias("__v"), F.input_file_name().alias("file"))
 
     def build(batches: Iterable[pd.DataFrame]):
         acc: dict[str, object] = {}
@@ -54,7 +54,7 @@ def _build_partials_by_file(df: DataFrame, col, factory, value_name="v") -> Data
             if not len(pdf):
                 continue
             for fname, g in pdf.groupby("file", sort=False):
-                vals = g[value_name].dropna()
+                vals = g["__v"].dropna()
                 if not len(vals):
                     continue
                 sk = acc.get(fname)
@@ -91,7 +91,7 @@ def checkpointed_sketch_aggregate(
     First run: builds all partials, checkpoints them, merges.
     Resume (same state_dir + job_id): loads checkpointed partials,
     builds ONLY files absent from the state table, appends them,
-    merges everything.
+    merges everything. Partials fold in file order.
     """
     job_id = job_id or uuid.uuid4().hex[:12]
     state_path = os.path.join(state_dir, "partials")
@@ -121,20 +121,15 @@ def checkpointed_sketch_aggregate(
             .parquet(state_path)
         )
 
-    rows = (
+    pdf = (
         spark.read.parquet(state_path)
         .where(F.col("job_id") == job_id)
-        .select("sketch", "rows")
-        .collect()
+        .select("file", "sketch", "rows")
+        .toPandas()
+        .sort_values("file", kind="stable")
     )
-    sk = None
-    total_rows = 0
-    for r in rows:
-        cur = deserialize(bytes(r["sketch"]))
-        sk = cur if sk is None else sk.merge(cur)
-        total_rows += r["rows"]
-    metrics["rows_aggregated"] = total_rows
-    return sk, metrics
+    metrics["rows_aggregated"] = int(pdf["rows"].sum())
+    return _fold(pdf["sketch"], deserialize), metrics
 
 
 def lineage_report(spark: SparkSession, state_dir: str, job_id: str) -> DataFrame:

@@ -17,10 +17,9 @@ a day overwrites it idempotently (dynamic partition overwrite).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .aggregate import grouped_sketch_rows
+from .aggregate import _fold, _merge_group, grouped_sketch_rows
 
 
 def write_daily_sketches(
@@ -59,18 +58,16 @@ def merge_sketch_range(
     """Merge the stored daily sketches for day in [day_lo, day_hi]
     (inclusive; None = unbounded). The scan prunes to the requested
     day partitions (day is the partition column); only O(days) sketch
-    rows are read and merged — the raw data is never touched.
-    Returns the merged sketch object, or None if the range is empty."""
+    rows are read and folded in day order — the raw data is never
+    touched. Returns the merged sketch object, or None if the range is
+    empty."""
     rows = spark.read.parquet(path)
     if day_lo is not None:
         rows = rows.where(F.col("day") >= F.lit(day_lo).cast("date"))
     if day_hi is not None:
         rows = rows.where(F.col("day") <= F.lit(day_hi).cast("date"))
-    sk = None
-    for r in rows.select("sketch").collect():
-        cur = deserialize(bytes(r["sketch"]))
-        sk = cur if sk is None else sk.merge(cur)
-    return sk
+    pdf = rows.select("day", "sketch").toPandas().sort_values("day", kind="stable")
+    return _fold(pdf["sketch"], deserialize)
 
 
 def sliding_window_rows(
@@ -90,10 +87,9 @@ def sliding_window_rows(
     Scale shape: the input is the O(days) sketch table, never the raw
     data; the explode carries O(days * W) sketch-sized rows through
     ONE shuffle and each window merge touches <= W sketches. A year of
-    trailing-30-day distinct curves costs ~11k tiny rows. Merge-order
-    independence within a window comes from the sketch's merge law
-    (bit-identical for element-wise-state sketches like HLL/Theta,
-    bound-preserving for the compressing families)."""
+    trailing-30-day distinct curves costs ~11k tiny rows. Each window
+    folds its days in day order, so the compressing families give the
+    same bytes on every call."""
     rows = spark.read.parquet(path).select("day", "sketch", "rows")
     contrib = rows.withColumn(
         "win_end",
@@ -103,22 +99,6 @@ def sliding_window_rows(
     )
     ends = rows.select(F.col("day").alias("win_end")).distinct()
     contrib = contrib.join(F.broadcast(ends), "win_end")
-
-    def merge_win(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = None
-        n = 0
-        for buf, r in zip(pdf["sketch"], pdf["rows"]):
-            cur = deserialize(bytes(buf))
-            sk = cur if sk is None else sk.merge(cur)
-            n += int(r)
-        return pd.DataFrame(
-            {
-                "win_end": [pdf["win_end"].iloc[0]],
-                "sketch": [sk.to_bytes()],
-                "rows": [n],
-            }
-        )
-
     return contrib.groupBy("win_end").applyInPandas(
-        merge_win, "win_end date, sketch binary, rows long"
+        _merge_group(["win_end"], deserialize, ["day"]), "win_end date, sketch binary, rows long"
     )

@@ -26,6 +26,7 @@ same ``STATE_SCHEMA``) is mechanical when the dependency exists.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Callable, Iterable, Tuple
 
 import pandas as pd
@@ -35,6 +36,24 @@ OUTPUT_SCHEMA = "key string, n long, p50 double, p95 double, p99 double"
 STATE_SCHEMA = "sketch binary, n long"
 
 
+def update_state(state: GroupState, batches: Iterable[pd.DataFrame], factory, deserialize):
+    """The one per-key state step: decode the stored sketch (or start
+    ``factory()``), feed every batch's non-null ``v``, count them, and
+    store the bytes back as ``STATE_SCHEMA``. Returns (sketch, n)."""
+    if state.exists:
+        buf, n = state.get
+        sk = deserialize(bytes(buf))
+    else:
+        sk, n = factory(), 0
+    for pdf in batches:
+        vals = pdf["v"].dropna()
+        if len(vals):
+            sk.update_batch(vals.to_numpy())
+            n += len(vals)
+    state.update((sk.to_bytes(), n))
+    return sk, n
+
+
 def make_stateful_quantiles(factory: Callable[[], object], deserialize):
     """Returns the (key, pdf_iter, state) -> pdf_iter function for
     df.groupBy(key).applyInPandasWithState(...)."""
@@ -42,17 +61,7 @@ def make_stateful_quantiles(factory: Callable[[], object], deserialize):
     def update(
         key: Tuple[str], batches: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            buf, n = state.get
-            sk = deserialize(bytes(buf))
-        else:
-            sk, n = factory(), 0
-        for pdf in batches:
-            vals = pdf["v"].dropna()
-            if len(vals):
-                sk.update_batch(vals.to_numpy())
-                n += len(vals)
-        state.update((sk.to_bytes(), n))
+        sk, n = update_state(state, batches, factory, deserialize)
         est = sk.quantiles([0.5, 0.95, 0.99])
         yield pd.DataFrame(
             {
@@ -97,17 +106,7 @@ def make_stateful_quantiles_ttl(factory, deserialize, ttl_ms: int):
             state.remove()
             yield row(sk, n, True)
             return
-        if state.exists:
-            buf, n = state.get
-            sk = deserialize(bytes(buf))
-        else:
-            sk, n = factory(), 0
-        for pdf in batches:
-            vals = pdf["v"].dropna()
-            if len(vals):
-                sk.update_batch(vals.to_numpy())
-                n += len(vals)
-        state.update((sk.to_bytes(), n))
+        sk, n = update_state(state, batches, factory, deserialize)
         state.setTimeoutDuration(ttl_ms)
         yield row(sk, n, False)
 
@@ -171,7 +170,6 @@ def grouped_streaming_quantiles(
 
 
 MG_OUTPUT_SCHEMA = "key string, item string, est long, n long"
-MG_STATE_SCHEMA = "sketch binary, n long"
 
 
 def make_stateful_heavy(k: int):
@@ -183,22 +181,13 @@ def make_stateful_heavy(k: int):
     arbitrary batching: stored count <= true count <= stored +
     n/(k+1), so every item with true count > n/(k+1) is in the final
     candidate set regardless of how the stream was chopped."""
+    from ..sketches import misragries_from_bytes
     from ..sketches.misragries import MisraGries
 
     def update(
         key: Tuple[str], batches: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            buf, n = state.get
-            sk = MisraGries.from_bytes(bytes(buf))
-        else:
-            sk, n = MisraGries(k), 0
-        for pdf in batches:
-            vals = pdf["v"].dropna()
-            if len(vals):
-                sk.update_batch(vals.to_numpy())
-                n += len(vals)
-        state.update((sk.to_bytes(), n))
+        sk, n = update_state(state, batches, partial(MisraGries, k), misragries_from_bytes)
         items = sk.items()
         yield pd.DataFrame(
             {
@@ -228,7 +217,7 @@ def grouped_streaming_heavy(
     return keyed.groupBy("key").applyInPandasWithState(
         make_stateful_heavy(k),
         outputStructType=MG_OUTPUT_SCHEMA,
-        stateStructType=MG_STATE_SCHEMA,
+        stateStructType=STATE_SCHEMA,
         outputMode=output_mode,
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -24,10 +24,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .stateful import STATE_SCHEMA, update_state
+
 OUTPUT_SCHEMA = (
     "win_start timestamp, win_end timestamp, n long, p50 double, p95 double, p99 double"
 )
-STATE_SCHEMA = "sketch binary, n long"
 
 
 def make_windowed_update(
@@ -61,17 +62,7 @@ def make_windowed_update(
                 }
             )
             return
-        if state.exists:
-            buf, n = state.get
-            sk = deserialize(bytes(buf))
-        else:
-            sk, n = factory(), 0
-        for pdf in batches:
-            vals = pdf["v"].dropna()
-            if len(vals):
-                sk.update_batch(vals.to_numpy())
-                n += len(vals)
-        state.update((sk.to_bytes(), n))
+        update_state(state, batches, factory, deserialize)
         # fire once the watermark clears win_end + delay; never set a
         # timeout at/behind the current watermark (Spark rejects it)
         end_ms = int(pd.Timestamp(win_end).value // 1_000_000)

@@ -49,8 +49,7 @@ def test_checkpoint_and_resume(spark, tmpdir):
     )
     assert m2["n_files_built"] == 0
     assert m2["n_files_resumed"] == m1["n_files_total"]
-    assert sk2.n == sk1.n
-    assert sk2.quantiles([0.5, 0.9]) == sk1.quantiles([0.5, 0.9])
+    assert sk2.to_bytes() == sk1.to_bytes()  # same partials, folded in file order
 
     # partial-failure resume: drop some checkpointed files' rows
     part_path = os.path.join(state, "partials")

@@ -2,7 +2,8 @@
 input: fanout=8 folds the partials on the driver in the partial-build
 job, fanout=2 tree-merges them first. State sketches (HLL/CMS/Bloom)
 must come out byte-identical, quantile sketches within their bounds,
-and the partition-bound probe must never launch a job."""
+and the partition-bound probe must never launch a job. The grouped
+path (same builder, one shuffle by key) is checked on the same input."""
 
 from functools import partial
 
@@ -10,7 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from q_digest_spark.operators.aggregate import partition_bound, sketch_aggregate
+from q_digest_spark.operators.aggregate import grouped_sketch_rows, partition_bound, sketch_aggregate
 from q_digest_spark.operators.multi import SketchSpec, multi_sketch_aggregate
 from q_digest_spark.operators.quantiles import (
     HashedBloom,
@@ -38,6 +39,7 @@ def data(spark):
         F.pmod(F.xxhash64("id"), F.lit(1 << BITS)).alias("v"),
         (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(1 << 20)) / 7.0).alias("x"),
         (F.col("id") % 3 + 1).alias("w"),
+        F.pmod(F.xxhash64("id", F.lit(2)), F.lit(5)).alias("k"),
     )
     pdf = df.toPandas()
     return df, pdf
@@ -131,3 +133,51 @@ def test_driver_fold_is_deterministic(spark, data):
             for _ in range(2)
         )
         assert a == b, fanout
+
+
+def _grouped(df, keys, col, factory, deserialize):
+    rows = grouped_sketch_rows(df, keys, col, factory, deserialize).collect()
+    return {r[keys[0]]: (bytes(r["sketch"]), r["rows"]) for r in rows}
+
+
+def test_grouped_hll_matches_per_key_aggregate(spark, data):
+    """A grouped HLL row is byte-identical to an ungrouped aggregate of
+    that key's rows (HLL state is an element-wise max)."""
+    df, pdf = data
+    got = _grouped(df, ["k"], F.xxhash64("v"), partial(HashedHLL, 12), hashed_hll_from_bytes)
+    assert sorted(got) == sorted(pdf["k"].unique())
+    for k, (buf, rows) in got.items():
+        alone = sketch_aggregate(
+            df.where(F.col("k") == int(k)), F.xxhash64("v"), partial(HashedHLL, 12), hashed_hll_from_bytes
+        )
+        assert buf == alone.to_bytes(), k
+        assert rows == int((pdf["k"] == k).sum())
+
+
+def test_grouped_qdigest_deterministic_and_within_bound(spark, data):
+    """Grouped merges fold in part_id order: two calls give the same
+    bytes, and every key's quantiles are within eps*n of its exact
+    ranks."""
+    df, pdf = data
+    args = (df, ["k"], "v", partial(QDigest, 256, BITS), qdigest_from_bytes)
+    got = _grouped(*args)
+    assert got == _grouped(*args)
+    for k, (buf, rows) in got.items():
+        s = np.sort(pdf.loc[pdf["k"] == k, "v"].to_numpy())
+        sk = qdigest_from_bytes(buf)
+        assert sk.n == rows == len(s)
+        for p, q in zip(PS, sk.quantiles(PS)):
+            assert _rank_err(s, q, p) <= BITS / 256, (k, p)
+
+
+def test_grouped_key_named_v(spark, data):
+    """A group key may be named like the value alias of the old grouped
+    builder ("v"); only the partial-row columns are reserved."""
+    df, pdf = data
+    keyed = df.select(F.col("k").alias("v"), F.col("v").alias("x"))
+    got = _grouped(keyed, ["v"], "x", partial(QDigest, 32, BITS), qdigest_from_bytes)
+    assert {k: rows for k, (_, rows) in got.items()} == pdf["k"].value_counts().to_dict()
+    with pytest.raises(ValueError, match="name"):
+        grouped_sketch_rows(
+            df.withColumnRenamed("k", "name"), ["name"], "v", partial(QDigest, 32, BITS), qdigest_from_bytes
+        )

@@ -81,16 +81,14 @@ def test_window_of_one_day_equals_daily(spark, daily_path):
 def test_sliding_qdigest_exact_mode_windowed_median(spark, tmp_path):
     """Exact-mode (k=0) Q-Digest through the sliding machinery: each
     3-day window's merged percentile must equal the exact median of
-    that window's raw values (the sliding_p50_cents contract)."""
+    that window's raw values (the sliding_p50_cents contract). A
+    compressed (k>0) table of the same rows must fold the same way on
+    every call."""
     import math
 
     import pandas as pd
     from functools import partial
 
-    from q_digest_spark.operators.incremental import (
-        sliding_window_rows,
-        write_daily_sketches,
-    )
     from q_digest_spark.sketches import QDigest, qdigest_from_bytes
 
     rng = __import__("numpy").random.RandomState(7)
@@ -122,3 +120,27 @@ def test_sliding_qdigest_exact_mode_windowed_median(spark, tmp_path):
         got = qdigest_from_bytes(bytes(r["sketch"])).percentile(0.5)
         assert got == vals[rank - 1], (r["win_end"], got, vals[rank - 1])
         assert r["rows"] == len(vals)
+
+    # compressed (k>0): every fold runs in day order, so two calls give
+    # the same bytes and a window equals the direct merge of its days
+    cpath = str(tmp_path / "daily_qd_k8")
+    write_daily_sketches(
+        sdf, "ts", "v", partial(QDigest, 8, 13), qdigest_from_bytes, cpath
+    )
+    a, b = (
+        {
+            r["win_end"]: bytes(r["sketch"])
+            for r in sliding_window_rows(
+                spark, cpath, qdigest_from_bytes, window_days=3
+            ).collect()
+        }
+        for _ in range(2)
+    )
+    assert a == b and set(a) == set(days)
+    for end in days:
+        lo = (end - datetime.timedelta(days=2)).isoformat()
+        direct = [
+            merge_sketch_range(spark, cpath, qdigest_from_bytes, lo, end.isoformat())
+            for _ in range(2)
+        ]
+        assert direct[0].to_bytes() == direct[1].to_bytes() == a[end], end
