@@ -18,14 +18,21 @@ core, ``fold_partials``:
       When a plan-time bound on the partition count (read off the
       physical plan, no Spark job) is <= ``fanout``, the partials are
       collected by the partial-build job itself and folded on the
-      driver: one Spark job per call. Otherwise, or when the plan has
-      no such bound, ``tree_merge`` shuffles the partial rows into
-      ``fanout`` groups per name by ``part_id % fanout`` and merges
-      each with ``applyInPandas`` — the reference's power-of-two
-      orphan-folding tree generalized to any partition count — and the
-      driver folds those <= fanout rows per name. With 10^6 input
-      partitions and fanout=64 the driver never sees more than 64
-      rows per sketch.
+      driver: one Spark job per call. Above that bound, or when the
+      plan has none, and ``fanout`` is at least the default
+      parallelism, stage 1 runs on ``df.coalesce(fanout)`` instead:
+      still one job, with ``fanout`` tasks that keep every core busy,
+      and no second round of Python workers or shuffle. The price is
+      granularity: a coalesced task reads ``partitions / fanout``
+      input partitions, so it retries and balances as one unit, which
+      is why the rule stops at the default parallelism. Below it
+      (the 10^6-partition design point, ``fanout`` ~ executors),
+      ``tree_merge`` shuffles the partial rows into ``fanout`` groups
+      per name by ``part_id % fanout`` and merges each with
+      ``applyInPandas`` — the reference's power-of-two orphan-folding
+      tree generalized to any partition count — and the driver folds
+      those <= fanout rows per name. With 10^6 input partitions and
+      fanout=64 the driver never sees more than 64 rows per sketch.
 
 Grouped aggregation (``grouped_sketch_rows``, and through it the
 grouped quantiles, rollup/cube and daily tables) uses the same
@@ -47,6 +54,7 @@ eps in tests), which is what makes the tree shape irrelevant.
 
 from __future__ import annotations
 
+import logging
 from math import prod
 from typing import Callable, Iterable, Mapping, NamedTuple, Sequence
 
@@ -57,6 +65,8 @@ from pyspark.sql import DataFrame, functions as F
 SketchFactory = Callable[[], object]
 
 PARTIAL_SCHEMA = "part_id long, name string, sketch binary, rows long"
+
+log = logging.getLogger(__name__)
 
 
 class SketchSpec(NamedTuple):
@@ -212,6 +222,9 @@ def _plan_bound(plan) -> int | None:
         return _plan_bound(plan.relation().cachedPlan())
     kids = plan.children()
     bounds = [_plan_bound(kids.apply(i)) for i in range(kids.size())]
+    if name == "CoalesceExec":  # at most what it asks for, and what it has
+        n = plan.numPartitions()
+        return n if bounds[0] is None else min(n, bounds[0])
     if not bounds:
         # a leaf's RDD is built, not run (file splits come from the
         # listing); subqueries would run jobs, so those get no bound
@@ -237,15 +250,38 @@ def partition_bound(df: DataFrame) -> int | None:
         return None
 
 
-def fold_partials(partials: DataFrame, deserialize, fanout: int = 32) -> dict[str, tuple[object, int]]:
-    """Stage 2: merge ``partial_sketches``-shaped rows into
-    ``{name: (sketch, rows)}``. Driver fold when the partition bound is
-    <= ``fanout`` (the partial-build job collects them), else
-    ``tree_merge`` first. Rows fold in ``(name, part_id)`` order."""
+def fold_partials(
+    df: DataFrame, build: Callable[[DataFrame], DataFrame], deserialize, fanout: int = 32
+) -> dict[str, tuple[object, int]]:
+    """The ungrouped core: ``build`` maps ``df`` narrowly to
+    ``partial_sketches``-shaped rows, which merge into ``{name: (sketch,
+    rows)}`` by one of three paths, chosen from the job-free partition
+    bound of ``build(df)`` (that of ``df``, as ``build`` is narrow):
+
+    - bound <= ``fanout``: the partial-build job collects the partials
+      and the driver folds them (one Spark job);
+    - bound unknown or > ``fanout``, and ``fanout`` >= the default
+      parallelism: the partials are built on ``df.coalesce(fanout)``
+      and folded on the driver (still one job of ``fanout`` tasks,
+      which keeps every core busy; a task then retries and balances
+      at the granularity of ``input partitions / fanout``);
+    - otherwise ``tree_merge`` first (a build task is one input
+      partition, so a retry re-reads one split), and the driver folds
+      its <= ``fanout`` rows per name.
+
+    Rows fold in ``(name, part_id)`` order. One DEBUG line per call
+    names the path, the bound and the number of rows folded."""
+    # probe the plan the driver fold runs, so its action plans once
+    partials = build(df)
     bound = partition_bound(partials)
+    path = "driver fold"
     if bound is None or bound > fanout:
-        partials = tree_merge(partials, deserialize, fanout)
+        if fanout >= df.sparkSession.sparkContext.defaultParallelism:
+            partials, path = build(df.coalesce(fanout)), "coalesced driver fold"
+        else:
+            partials, path = tree_merge(partials, deserialize, fanout), "tree merge"
     pdf = partials.toPandas().sort_values(["name", "part_id"], kind="stable")
+    log.debug("fold_partials: %s, partition bound %s, fanout %d, %d partials", path, bound, fanout, len(pdf))
     return {
         name: (_fold(g["sketch"], _decoder(deserialize, name)), int(g["rows"].sum()))
         for name, g in pdf.groupby("name", sort=False)
@@ -255,10 +291,10 @@ def fold_partials(partials: DataFrame, deserialize, fanout: int = 32) -> dict[st
 def aggregate_sketches(
     df: DataFrame, specs: Mapping[str, SketchSpec], fanout: int = 32
 ) -> dict[str, tuple[object, int]]:
-    """The ungrouped core: ``{name: (merged sketch, rows)}`` from one
-    pass over ``df``; a spec whose input is all null is absent."""
+    """``{name: (merged sketch, rows)}`` of every spec from one pass
+    over ``df``; a spec whose input is all null is absent."""
     return fold_partials(
-        partial_sketches(df, specs), {n: s.deserialize for n, s in specs.items()}, fanout
+        df, lambda d: partial_sketches(d, specs), {n: s.deserialize for n, s in specs.items()}, fanout
     )
 
 

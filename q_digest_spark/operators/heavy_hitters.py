@@ -10,8 +10,10 @@ DISTINCT key — at 10^12 web pages that is billions of (domain, count)
 rows through one sort. The sketch path shuffles almost nothing:
 
 1. one mapInPandas pass over ``(key, xxhash64(key))`` builds, per
-   input partition, a Count-Min partial AND the partition's local
-   top-m candidates ``(hash, key, count)`` (pandas groupby);
+   partition, a Count-Min partial AND the partition's local top-m
+   candidates ``(hash, key, count)`` (pandas groupby); a partition is
+   one of the input's, or of ``input.coalesce(fanout)`` when the core
+   coalesces (see ``aggregate.fold_partials``);
 2. the shared ungrouped core (``aggregate.fold_partials``) merges
    both: candidate counts sum to each key's lower bound;
 3. the driver scores the m best lower bounds with the merged CMS and
@@ -88,11 +90,6 @@ def _top_k(df: DataFrame, col, k: int, keys: bool, candidates_per_partition: int
     asc; ``key`` is None unless ``keys``."""
     m = max(candidates_per_partition, 4 * k)
     c = _as_col(col)
-    sdf = df.select(
-        F.spark_partition_id().alias("__pid"),
-        F.xxhash64(c).alias("h"),
-        (c if keys else F.lit(None).cast("string")).alias("key"),
-    )
 
     def build(batches: Iterable[pd.DataFrame]):
         sk, cand, rows, pid = HashedCMS(depth, width), None, 0, -1
@@ -114,10 +111,15 @@ def _top_k(df: DataFrame, col, k: int, keys: bool, candidates_per_partition: int
                 "rows": [rows, rows],
             })
 
+    def partials(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.spark_partition_id().alias("__pid"),
+            F.xxhash64(c).alias("h"),
+            (c if keys else F.lit(None).cast("string")).alias("key"),
+        ).mapInPandas(build, PARTIAL_SCHEMA)
+
     merged = fold_partials(
-        sdf.mapInPandas(build, PARTIAL_SCHEMA),
-        {"cms": hashed_cms_from_bytes, "cand": candidates_from_bytes},
-        fanout,
+        df, partials, {"cms": hashed_cms_from_bytes, "cand": candidates_from_bytes}, fanout
     )
     if not merged:
         return pd.DataFrame({"key_hash": [], "key": [], "est_cnt": []})
@@ -140,10 +142,11 @@ def cms_topk(
 
     Returns a local DataFrame (key_hash long, est_cnt long) ordered by
     est_cnt desc, key_hash asc — key_hash is xxhash64(col). One
-    full-data pass; at <= ``fanout`` input partitions the whole call
-    is one Spark job, above that the partials tree-merge in groups of
-    ``fanout`` first. Shuffle volume is O(n_partitions * (candidates +
-    sketch bytes)).
+    full-data pass, merged as ``aggregate.fold_partials`` chooses: one
+    Spark job unless ``fanout`` is below the default parallelism and
+    the input has more than ``fanout`` partitions, when the partials
+    tree-merge in groups of ``fanout`` first (shuffle volume
+    O(n_partitions * (candidates + sketch bytes))).
     """
     out = _top_k(df, col, k, False, candidates_per_partition, depth, width, fanout)
     return df.sparkSession.createDataFrame(out[["key_hash", "est_cnt"]], "key_hash long, est_cnt long")

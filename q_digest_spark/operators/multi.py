@@ -11,9 +11,12 @@ the ungrouped core of ``aggregate.py``:
            sketch (each spec names its own input column, all projected
            in the same scan);
   stage 2: the driver folds the partial rows per name when the
-           partition count is <= ``fanout`` (one Spark job), else
+           partition count is <= ``fanout``, or when ``fanout`` >=
+           the default parallelism, after stage 1 ran on
+           ``df.coalesce(fanout)`` (one Spark job either way); else
            they shuffle by (name, part_id % fanout) and merge per
-           group first (``tree_merge``).
+           group first (``tree_merge``), so the merge level keeps
+           every executor busy and retries per input partition.
 
 Scan cost: 1x regardless of sketch count. Column pruning still holds —
 the scan reads exactly the union of the specs' columns.

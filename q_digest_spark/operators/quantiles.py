@@ -10,7 +10,9 @@ Scale notes (the 100 TB design point):
   O(#partitions * sketch_size) bytes. ``fanout`` is the most partials
   merged in one place: at <= ``fanout`` input partitions the driver
   folds the partials collected by the build job itself (one Spark
-  job), above it they first shuffle into ``fanout`` merge groups;
+  job); above it the build runs on ``fanout`` coalesced tasks when
+  ``fanout`` >= the default parallelism (still one job), else the
+  partials first shuffle into ``fanout`` merge groups;
 - the value column is projected *before* the UDF so parquet scans read
   a single column (check: ReadSchema in .explain());
 - for hash sketches (HLL/Bloom/CMS) the 64-bit hashing of strings is

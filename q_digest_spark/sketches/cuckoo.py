@@ -194,24 +194,25 @@ class CuckooFilter:
         )
 
     def remove_hashes(self, hashes: np.ndarray) -> None:
-        """Delete one copy per input (multiset discipline). Raises
-        KeyError if any input is not present. Conflict-free rounds:
-        duplicate targets re-resolve against the updated filter."""
+        """Delete one copy per input (multiset discipline), all or
+        nothing: if any input is not present, raise KeyError and leave
+        the filter as it was. Conflict-free rounds: duplicate targets
+        re-resolve against the updated filter. A round that resolves
+        no delete proves the rest absent, so the rounds end."""
         if len(hashes) == 0:
             return
         fp, b1 = self._fp_and_b1(np.asarray(hashes, dtype=np.uint64))
-        pending_fp, pending_b1 = fp, b1
-        for _ in range(64):
-            if len(pending_fp) == 0:
-                break
-            done = self._remove_round(pending_fp, pending_b1)
-            pending_fp, pending_b1 = pending_fp[~done], pending_b1[~done]
-            if done.sum() == 0:
+        # _remove_round edits storage and fill in place, stash by copy
+        saved = self.storage.copy(), self.fill.copy(), self.stash
+        while len(fp):
+            done = self._remove_round(fp, b1)
+            if not done.any():
+                self.storage, self.fill, self.stash = saved
                 raise KeyError(
-                    f"{len(pending_fp)} delete(s) not present in filter"
+                    f"{len(fp)} of {len(hashes)} delete(s) not present in "
+                    "filter; no delete applied"
                 )
-        else:
-            raise KeyError(f"{len(pending_fp)} delete(s) not present")
+            fp, b1 = fp[~done], b1[~done]
         self.n -= len(hashes)
 
     def _remove_round(self, fps: np.ndarray, b1: np.ndarray) -> np.ndarray:

@@ -4,10 +4,11 @@ The reference is batch-only (SURVEY.md §2.3: streaming absent); this
 module exists because mergeable sketches make streaming aggregation
 natural: each micro-batch runs the SAME ungrouped core as batch
 (``aggregate.aggregate_sketches``: one Spark job per micro-batch
-whenever it has <= 8 partitions), and the result folds into a running
-sketch in ``foreachBatch``. Exactly-once-ish semantics come from Spark's
-micro-batch replay + the merge being idempotent per batch id (we track
-the last folded batch id).
+whenever it has <= 8 partitions or the default parallelism is <= 8),
+and the result folds into a running sketch in ``foreachBatch``.
+Exactly-once-ish semantics come from Spark's micro-batch replay + the
+merge being idempotent per batch id (we track the last folded batch
+id).
 
 At scale the same pattern runs with a real sink: per-batch partial
 sketches appended to a state table (see operators/checkpoint.py), the

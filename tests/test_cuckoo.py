@@ -163,3 +163,19 @@ def test_cuckoo_of_spark(spark, sf_test):
     ).collect()[0]
     assert row["fn"] == 0
     assert row["fp"] <= max(10, 2 * ck.fpr_bound() * row["n"])
+
+
+def test_delete_batch_is_atomic():
+    """A batch mixing present and absent hashes raises and applies no
+    delete: the serialized filter (storage, fill, stash, n) is
+    unchanged, and the present keys can still be deleted."""
+    ck = CuckooFilter(1 << 8)
+    present = np.arange(1, 200, dtype=np.int64)
+    ck.update_batch(present)
+    before = ck.to_bytes()
+    with pytest.raises(KeyError, match="not present"):
+        ck.remove_batch(np.concatenate([present[:50], [10**12]]))
+    assert ck.to_bytes() == before
+    assert ck.n == len(present)
+    ck.remove_batch(present[:50])
+    assert ck.n == len(present) - 50

@@ -1,10 +1,18 @@
-"""Both merge paths of the ungrouped core, forced on one 8-partition
-input: fanout=8 folds the partials on the driver in the partial-build
-job, fanout=2 tree-merges them first. State sketches (HLL/CMS/Bloom)
-must come out byte-identical, quantile sketches within their bounds,
-and the partition-bound probe must never launch a job. The grouped
-path (same builder, one shuffle by key) is checked on the same input."""
+"""Every merge path of the ungrouped core, forced on the same rows: on
+8 partitions fanout=8 folds the partials on the driver in the
+partial-build job and fanout=2 tree-merges them first; on 16
+partitions fanout=8 (the default parallelism of local[8]) builds them
+on 8 coalesced tasks and folds on the driver. State sketches
+(HLL/CMS/Bloom) must come out byte-identical, quantile sketches within
+their bounds, the partition-bound probe must never launch a job, and a
+retried task must not change a sketch. The grouped path (same
+builder, one shuffle by key) is checked on the same input."""
 
+import json
+import logging
+import os
+import subprocess
+import sys
 from functools import partial
 
 import numpy as np
@@ -27,22 +35,35 @@ N = 40_000
 PARTS = 8
 BITS = 16
 PS = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
+LOGGER = "q_digest_spark.operators.aggregate"
 
 
 def _jobs(spark):
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
 
-@pytest.fixture(scope="module")
-def data(spark):
-    df = spark.range(0, N, 1, PARTS).select(
+def _frame(spark, parts):
+    return spark.range(0, N, 1, parts).select(
         F.pmod(F.xxhash64("id"), F.lit(1 << BITS)).alias("v"),
         (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(1 << 20)) / 7.0).alias("x"),
         (F.col("id") % 3 + 1).alias("w"),
         F.pmod(F.xxhash64("id", F.lit(2)), F.lit(5)).alias("k"),
     )
+
+
+@pytest.fixture(scope="module")
+def data(spark):
+    df = _frame(spark, PARTS)
     pdf = df.toPandas()
     return df, pdf
+
+
+@pytest.fixture(scope="module")
+def wide(spark):
+    """The same rows on 2 * PARTS partitions: above fanout=PARTS, which
+    is at least the default parallelism, so the core coalesces."""
+    assert spark.sparkContext.defaultParallelism <= PARTS
+    return _frame(spark, 2 * PARTS)
 
 
 def _specs():
@@ -84,6 +105,9 @@ def test_partition_bound_launches_no_job(spark, data):
     # a precount histogram: the exchange's partition count, unexecuted
     hist = df.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
     assert partition_bound(hist) == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # a coalesce is bounded by what it asks for, and by what it has
+    assert partition_bound(df.coalesce(3)) == 3
+    assert partition_bound(df.coalesce(4 * PARTS)) == PARTS
     assert _jobs(spark) == before
 
 
@@ -123,16 +147,114 @@ def test_sketch_aggregate_both_paths_weighted(spark, data):
     assert out[PARTS]["qdw"].n == int(pdf["w"].sum())
 
 
-def test_driver_fold_is_deterministic(spark, data):
+def test_coalesced_driver_fold(spark, data, wide, caplog):
+    """More partitions than fanout, fanout >= the default parallelism:
+    one job per call, on fanout coalesced tasks; HLL/CMS/Bloom match
+    the tree path's bytes and every quantile answer is within bound."""
+    _, pdf = data
+    caplog.set_level(logging.DEBUG, logger=LOGGER)
+    before = _jobs(spark)
+    folded = multi_sketch_aggregate(wide, _specs(), fanout=PARTS)
+    assert _jobs(spark) - before == 1
+    tree = multi_sketch_aggregate(wide, _specs(), fanout=2)
+    assert _jobs(spark) - before > 2  # fanout < parallelism: still tree_merge
+    paths = [r.getMessage().split(",")[0] for r in caplog.records if r.name == LOGGER]
+    assert paths == ["fold_partials: coalesced driver fold", "fold_partials: tree merge"]
+    for name in ("hll", "cms", "bloom"):
+        assert folded[name].to_bytes() == tree[name].to_bytes(), name
+    _within_bounds(folded, pdf)
+    _within_bounds(tree, pdf)
+    before = _jobs(spark)
+    qdw = sketch_aggregate(wide, "v", partial(QDigest, 64, BITS), qdigest_from_bytes, PARTS, weight_col="w")
+    assert _jobs(spark) - before == 1
+    assert qdw.n == int(pdf["w"].sum())
+    _within_bounds({"qdw": qdw}, pdf)
+
+
+def test_driver_fold_is_deterministic(spark, data, wide):
     """Partials fold in part_id order, not collect order: two calls on
-    the same input give byte-identical Q-Digests on either path."""
+    the same input give byte-identical Q-Digests on every path."""
     df, _ = data
-    for fanout in (PARTS, 2):
+    for frame, fanout in ((df, PARTS), (df, 2), (wide, PARTS)):
         a, b = (
-            sketch_aggregate(df, "v", partial(QDigest, 32, BITS), qdigest_from_bytes, fanout).to_bytes()
+            sketch_aggregate(frame, "v", partial(QDigest, 32, BITS), qdigest_from_bytes, fanout).to_bytes()
             for _ in range(2)
         )
         assert a == b, fanout
+
+
+_RETRY_SCRIPT = r"""
+import json, logging, os, sys, tempfile
+from functools import partial
+
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+
+from q_digest_spark.operators.aggregate import sketch_aggregate
+from q_digest_spark.operators.quantiles import HashedHLL, hashed_hll_from_bytes
+from q_digest_spark.plans.session import get_spark
+from q_digest_spark.sketches import QDigest, qdigest_from_bytes
+
+paths = []
+handler = logging.Handler()
+handler.emit = lambda r: paths.append(r.getMessage().split(",")[0])
+log = logging.getLogger("q_digest_spark.operators.aggregate")
+log.addHandler(handler)
+log.setLevel(logging.DEBUG)
+
+spark = get_spark("retry-determinism", master="local[2,3]", cores=2, shuffle_partitions=2)
+marks = tempfile.mkdtemp(prefix="qds_retry_")
+df = spark.range(0, 6000, 1, 6).select(
+    "id", F.pmod(F.xxhash64("id"), F.lit(1 << 16)).alias("v")
+)
+
+
+def flaky(fail):
+    def run(batches):
+        for pdf in batches:
+            ctx = TaskContext.get()
+            if fail and ctx.attemptNumber() == 0 and (pdf["id"] == 2500).any():
+                open(os.path.join(marks, f"{ctx.taskAttemptId()}"), "w").close()
+                raise RuntimeError("injected first-attempt failure")
+            yield pdf
+
+    return df.mapInPandas(run, df.schema)
+
+
+out = {}
+for fanout in (2, 1):
+    for fail in (False, True):
+        src = flaky(fail)
+        qd = sketch_aggregate(src, "v", partial(QDigest, 32, 16), qdigest_from_bytes, fanout)
+        hll = sketch_aggregate(
+            src, F.xxhash64("v"), partial(HashedHLL, 12), hashed_hll_from_bytes, fanout
+        )
+        out[f"{fanout}-{fail}"] = [qd.to_bytes().hex(), hll.to_bytes().hex(), qd.n]
+out["failures"] = len(os.listdir(marks))
+out["paths"] = paths
+print(json.dumps(out))
+"""
+
+
+def test_retry_is_deterministic():
+    """A task that fails its first attempt and is retried gives the
+    same Q-Digest and HLL bytes as a clean run, on the coalesced path
+    (fanout=2 at local[2,3]) and the tree path (fanout=1): a coalesced
+    task re-reads the same input partitions."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g", PYTHONPATH=repo)
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT], cwd=repo, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["failures"] == 4  # each flaky run failed once, both calls
+    coalesced, tree = "fold_partials: coalesced driver fold", "fold_partials: tree merge"
+    assert out["paths"] == [coalesced] * 4 + [tree] * 4
+    for fanout in (2, 1):
+        assert out[f"{fanout}-True"] == out[f"{fanout}-False"], fanout
+        assert out[f"{fanout}-True"][2] == 6000
 
 
 def _grouped(df, keys, col, factory, deserialize):
