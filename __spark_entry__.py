@@ -1029,12 +1029,12 @@ def q_hll_distinct_by_lang(spark, sf_dir) -> DataFrame:
         grouped_estimates,
         grouped_sketch_rows,
     )
-    from q_digest_spark.operators.quantiles import RawHLL, raw_hll_from_bytes
+    from q_digest_spark.sketches import HLL, hll_from_bytes
 
     df = _docs(spark, sf_dir)
 
-    rows = grouped_sketch_rows(df, ["lang"], "doc_id", RawHLL, raw_hll_from_bytes)
-    ests = grouped_estimates(rows, ["lang"], raw_hll_from_bytes)
+    rows = grouped_sketch_rows(df, ["lang"], "doc_id", HLL, hll_from_bytes)
+    ests = grouped_estimates(rows, ["lang"], hll_from_bytes)
     exact = df.groupBy("lang").agg(F.countDistinct("doc_id").alias("exact_distinct"))
     rel = 3 * 1.04 / (16384**0.5)
     return (
@@ -1202,20 +1202,19 @@ def q_hll_union_langs(spark, sf_dir) -> DataFrame:
     stay within the published relative-error bound of the exact
     distinct count."""
     from q_digest_spark.operators.aggregate import grouped_sketch_rows
-    from q_digest_spark.operators.quantiles import RawHLL, raw_hll_from_bytes
     from q_digest_spark.sketches import HLL, hll_from_bytes
 
     df = _docs(spark, sf_dir)
 
     from q_digest_spark.operators.aggregate import sketch_aggregate
 
-    per_lang = grouped_sketch_rows(df, ["lang"], "doc_id", RawHLL, raw_hll_from_bytes).collect()
+    per_lang = grouped_sketch_rows(df, ["lang"], "doc_id", HLL, hll_from_bytes).collect()
     merged = HLL(14)
     for r in per_lang:
         merged.merge(hll_from_bytes(bytes(r["sketch"])))
     # direct sketch through the same two-level distributed pipeline —
     # only the final O(sketch) bytes reach the driver
-    direct = sketch_aggregate(df.select("doc_id"), "doc_id", RawHLL, raw_hll_from_bytes).h
+    direct = sketch_aggregate(df.select("doc_id"), "doc_id", HLL, hll_from_bytes)
     exact = df.select(F.countDistinct("doc_id")).collect()[0][0]
     rel = 3 * 1.04 / (16384**0.5)
     est_m, est_d = merged.estimate(), direct.estimate()
@@ -1365,7 +1364,7 @@ def q_vocab_growth_curve(spark, sf_dir) -> DataFrame:
     (1.04/sqrt(2^14)) with the small-group absolute floor of 3."""
     from q_digest_spark.functions.text import norm_ws
     from q_digest_spark.operators.aggregate import grouped_sketch_rows
-    from q_digest_spark.operators.quantiles import RawHLL, raw_hll_from_bytes
+    from q_digest_spark.sketches import HLL, hll_from_bytes
 
     docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     tok_arr = F.split(norm_ws("text"), " ")
@@ -1378,9 +1377,9 @@ def q_vocab_growth_curve(spark, sf_dir) -> DataFrame:
         F.pmod(F.col("doc_id"), F.lit(10)).cast("int").alias("bucket"),
         F.explode(bigrams).alias("term"),
     )
-    rows = grouped_sketch_rows(toks, ["bucket"], "term", RawHLL, raw_hll_from_bytes)
+    rows = grouped_sketch_rows(toks, ["bucket"], "term", HLL, hll_from_bytes)
     sk_by_b = {
-        int(r["bucket"]): raw_hll_from_bytes(bytes(r["sketch"]))
+        int(r["bucket"]): hll_from_bytes(bytes(r["sketch"]))
         for r in rows.collect()
     }
     first = toks.groupBy("term").agg(F.min("bucket").alias("minb"))
@@ -2011,19 +2010,19 @@ def q_sliding_distinct_users(spark, sf_dir) -> DataFrame:
         sliding_window_rows,
         write_daily_sketches,
     )
-    from q_digest_spark.operators.quantiles import RawHLL, raw_hll_from_bytes
+    from q_digest_spark.sketches import HLL, hll_from_bytes
 
     df = _tbl(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     d = tempfile.mkdtemp(prefix="qds_sliding_")
     atexit.register(shutil.rmtree, d, True)
     path = d + "/daily_hll"
-    write_daily_sketches(df, "ts", "user_id", RawHLL, raw_hll_from_bytes, path)
-    wins = sliding_window_rows(spark, path, raw_hll_from_bytes, window_days=3)
+    write_daily_sketches(df, "ts", "user_id", HLL, hll_from_bytes, path)
+    wins = sliding_window_rows(spark, path, hll_from_bytes, window_days=3)
     from q_digest_spark.operators.aggregate import grouped_estimates
 
     # distributed bound flags: windows decode in-executor, flag is a
     # JVM column over a keyed join against the exact windowed count
-    ests = grouped_estimates(wins, ["win_end"], raw_hll_from_bytes)
+    ests = grouped_estimates(wins, ["win_end"], hll_from_bytes)
     e = df.select(F.to_date("ts").alias("d"), "user_id")
     ends = e.select(F.col("d").alias("win_end")).distinct()
     exact = (
@@ -2182,17 +2181,17 @@ def q_hll_distinct_users_by_day(spark, sf_dir) -> DataFrame:
         grouped_estimates,
         grouped_sketch_rows,
     )
-    from q_digest_spark.operators.quantiles import RawHLL, raw_hll_from_bytes
+    from q_digest_spark.sketches import HLL, hll_from_bytes
 
     df = _tbl(spark, sf_dir, "events").withColumn(
         "day", F.date_trunc("day", F.col("ts"))
     )
 
-    rows = grouped_sketch_rows(df, ["day", "event_type"], "user_id", RawHLL, raw_hll_from_bytes)
+    rows = grouped_sketch_rows(df, ["day", "event_type"], "user_id", HLL, hll_from_bytes)
     # distributed bound flags: decode estimates in-executor, join to
     # the exact aggregate on the group keys, flag in the JVM — no
     # O(groups) driver dict zip (scale-shape per r03 verdict)
-    ests = grouped_estimates(rows, ["day", "event_type"], raw_hll_from_bytes)
+    ests = grouped_estimates(rows, ["day", "event_type"], hll_from_bytes)
     exact = df.groupBy("day", "event_type").agg(
         F.countDistinct("user_id").alias("exact_distinct")
     )
@@ -2293,16 +2292,16 @@ def q_hll_intersection_halves(spark, sf_dir) -> DataFrame:
     three HLLs (|A| + |B| - |A ∪ B|, union = lossless register max).
     Returns the exact intersection plus a bound flag sized to the
     compounded absolute errors of the three estimates."""
-    from q_digest_spark.operators.quantiles import RawHLL, raw_hll_from_bytes
+    from q_digest_spark.sketches import HLL, hll_from_bytes
     from q_digest_spark.operators.aggregate import sketch_aggregate
 
     df = _tbl(spark, sf_dir, "events")
     cut = F.lit("2024-01-16 00:00:00").cast("timestamp")
     a_df = df.where(F.col("ts") < cut).select("user_id")
     b_df = df.where(F.col("ts") >= cut).select("user_id")
-    ha = sketch_aggregate(a_df, "user_id", RawHLL, raw_hll_from_bytes)
-    hb = sketch_aggregate(b_df, "user_id", RawHLL, raw_hll_from_bytes)
-    hu = RawHLL.from_bytes(ha.to_bytes()).merge(hb)
+    ha = sketch_aggregate(a_df, "user_id", HLL, hll_from_bytes)
+    hb = sketch_aggregate(b_df, "user_id", HLL, hll_from_bytes)
+    hu = HLL.from_bytes(ha.to_bytes()).merge(hb)
     est_a, est_b, est_u = ha.estimate(), hb.estimate(), hu.estimate()
     est_i = est_a + est_b - est_u
     exact = (
@@ -2454,14 +2453,14 @@ def q_rollup_distinct_docs(spark, sf_dir) -> DataFrame:
         grouped_estimates,
         rollup_sketch_rows,
     )
-    from q_digest_spark.operators.quantiles import RawHLL, raw_hll_from_bytes
+    from q_digest_spark.sketches import HLL, hll_from_bytes
 
     df = _docs(spark, sf_dir)
-    rolled = rollup_sketch_rows(df, ["lang", "source"], "doc_id", RawHLL, raw_hll_from_bytes)
+    rolled = rollup_sketch_rows(df, ["lang", "source"], "doc_id", HLL, hll_from_bytes)
     # distributed shape: sketches decode in-executor, flags come from a
     # null-safe keyed join against Spark's own rollup (level
     # disambiguates grouping-set NULLs from genuine NULL keys)
-    ests = grouped_estimates(rolled, ["lang", "source", "level"], raw_hll_from_bytes)
+    ests = grouped_estimates(rolled, ["lang", "source", "level"], hll_from_bytes)
     exact = df.rollup("lang", "source").agg(
         F.countDistinct("doc_id").alias("d"),
         (F.lit(2) - F.grouping("lang") - F.grouping("source"))
@@ -2505,14 +2504,14 @@ def q_cube_distinct_docs(spark, sf_dir) -> DataFrame:
         cube_sketch_rows,
         grouped_estimates,
     )
-    from q_digest_spark.operators.quantiles import RawHLL, raw_hll_from_bytes
+    from q_digest_spark.sketches import HLL, hll_from_bytes
 
     df = _docs(spark, sf_dir)
-    cubed = cube_sketch_rows(df, ["lang", "source"], "doc_id", RawHLL, raw_hll_from_bytes)
+    cubed = cube_sketch_rows(df, ["lang", "source"], "doc_id", HLL, hll_from_bytes)
     # join by (lang, source, LEVEL), null-safe: a genuine NULL key
     # value in the data would otherwise collide with a rolled-up NULL
     # marker and rows from different grouping sets would cross-match
-    ests = grouped_estimates(cubed, ["lang", "source", "level"], raw_hll_from_bytes)
+    ests = grouped_estimates(cubed, ["lang", "source", "level"], hll_from_bytes)
     exact = df.cube("lang", "source").agg(
         F.countDistinct("doc_id").alias("d"),
         F.grouping("lang").cast("int").alias("g_lang"),
@@ -11091,9 +11090,7 @@ FROM s
 """,
         "oov_rate_by_lang": """
 WITH d AS (SELECT doc_id, lang, text FROM documents WHERE text IS NOT NULL),
-t AS (SELECT doc_id, lang, string_split(trim(regexp_replace(lower(text), '[ 	
-
-]+', ' ', 'g')), ' ') AS toks FROM d),
+t AS (SELECT doc_id, lang, string_split(trim(regexp_replace(lower(text), '[ \t\n\r\f]+', ' ', 'g')), ' ') AS toks FROM d),
 x AS (SELECT doc_id, lang, unnest(toks) AS term FROM t),
 tf AS (SELECT doc_id, lang, term, count(*) AS tf
        FROM x WHERE term <> '' GROUP BY 1, 2, 3),
@@ -11111,9 +11108,7 @@ FROM st GROUP BY lang
 """,
         "tfidf_top_terms": """
 WITH t AS (SELECT doc_id,
-                  string_split(trim(regexp_replace(lower(text), '[ 	
-
-]+', ' ', 'g')), ' ') AS toks
+                  string_split(trim(regexp_replace(lower(text), '[ \t\n\r\f]+', ' ', 'g')), ' ') AS toks
            FROM documents),
 x AS (SELECT doc_id, unnest(toks) AS term FROM t),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM x WHERE term <> '' GROUP BY 1, 2),
@@ -12263,9 +12258,7 @@ survivors AS (
 ),
 surv_docs AS (SELECT b.doc_id, b.lang, b.text FROM survivors s JOIN base b USING (doc_id)),
 toks AS (SELECT doc_id,
-                string_split(trim(regexp_replace(lower(text), '[ 	
-
-]+', ' ', 'g')), ' ') AS t
+                string_split(trim(regexp_replace(lower(text), '[ \t\n\r\f]+', ' ', 'g')), ' ') AS t
          FROM surv_docs),
 g AS (SELECT DISTINCT doc_id, array_to_string(t[k:k+3], ' ') AS ng
       FROM toks, unnest(range(1, greatest(len(t) - 2, 1))) AS u(k)),
@@ -12283,16 +12276,12 @@ comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
 losers AS (SELECT node AS doc_id FROM comp WHERE node <> component),
 clustered AS (SELECT * FROM surv_docs WHERE doc_id NOT IN (SELECT doc_id FROM losers)),
 bench_toks AS (SELECT doc_id,
-                      string_split(trim(regexp_replace(lower(text), '[ 	
-
-]+', ' ', 'g')), ' ') AS t
+                      string_split(trim(regexp_replace(lower(text), '[ \t\n\r\f]+', ' ', 'g')), ' ') AS t
                FROM base WHERE doc_id % 13 = 0),
 bench_ng AS (SELECT DISTINCT array_to_string(t[k:k+3], ' ') AS ng
              FROM bench_toks, unnest(range(1, greatest(len(t) - 2, 1))) AS u(k)),
 cl_toks AS (SELECT doc_id,
-                   string_split(trim(regexp_replace(lower(text), '[ 	
-
-]+', ' ', 'g')), ' ') AS t
+                   string_split(trim(regexp_replace(lower(text), '[ \t\n\r\f]+', ' ', 'g')), ' ') AS t
             FROM clustered),
 cl_ng AS (SELECT DISTINCT doc_id, array_to_string(t[k:k+3], ' ') AS ng
           FROM cl_toks, unnest(range(1, greatest(len(t) - 2, 1))) AS u(k)),
@@ -12535,9 +12524,7 @@ SELECT CAST(ks.k AS BIGINT) AS lag_days,
 FROM ks LEFT JOIN num ON num.k = ks.k
 """,
         "cooccur_top_pairs": """
-WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '[ 	
-
-]+', ' ', 'g')), ' ') AS toks
+WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '[ \t\n\r\f]+', ' ', 'g')), ' ') AS toks
            FROM documents WHERE text IS NOT NULL),
 x AS (SELECT DISTINCT doc_id, unnest(toks) AS term FROM t),
 x2 AS (SELECT doc_id, term FROM x WHERE term <> ''),
@@ -12551,9 +12538,7 @@ SELECT term_a, term_b, n_docs FROM p
 ORDER BY n_docs DESC, term_a ASC, term_b ASC LIMIT 20
 """,
         "lang_vocab_jaccard": """
-WITH t AS (SELECT lang, string_split(trim(regexp_replace(lower(text), '[ 	
-
-]+', ' ', 'g')), ' ') AS toks
+WITH t AS (SELECT lang, string_split(trim(regexp_replace(lower(text), '[ \t\n\r\f]+', ' ', 'g')), ' ') AS toks
            FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
 x AS (SELECT DISTINCT lang, unnest(toks) AS term FROM t),
 x2 AS (SELECT lang, term FROM x WHERE term <> ''),
@@ -14538,9 +14523,7 @@ GROUP BY lang
 """,
         "phrase_search_hits": r"""
 WITH t AS (SELECT doc_id,
-    string_split(trim(regexp_replace(lower(text), '[ 	
-
-]+', ' ', 'g')),
+    string_split(trim(regexp_replace(lower(text), '[ \t\n\r\f]+', ' ', 'g')),
                  ' ') AS toks
   FROM documents WHERE text IS NOT NULL),
 m AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches

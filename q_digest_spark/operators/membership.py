@@ -22,10 +22,11 @@ from pyspark.sql import DataFrame, functions as F
 from ..sketches import Bloom, bloom_from_bytes
 
 
-def bloom_probe_column(df: DataFrame, col, bloom: Bloom, flag_name: str = "is_member") -> DataFrame:
-    """Adds a boolean column: does `col` (hashed JVM-side with
-    xxhash64, matching bloom_of) hit the filter?"""
-    buf = bloom.to_bytes()
+def _probe_column(df: DataFrame, col, buf: bytes, decode, flag_name: str) -> DataFrame:
+    """The one probe body: hash `col` JVM-side with xxhash64 (as the
+    ``*_of`` builders do), decode the filter bytes once per task with
+    the filter's module-level decoder (pickled by reference) and add
+    ``flag_name`` = ``contains_hashes`` per Arrow batch."""
     c = F.col(col) if isinstance(col, str) else col
     hdf = df.withColumn("__h", F.xxhash64(c))
     out_schema = ", ".join(
@@ -33,16 +34,22 @@ def bloom_probe_column(df: DataFrame, col, bloom: Bloom, flag_name: str = "is_me
     ) + f", `{flag_name}` boolean"
 
     def probe(batches: Iterable[pd.DataFrame]):
-        bl = bloom_from_bytes(buf)
+        fl = decode(buf)
         for pdf in batches:
             if not len(pdf):
                 continue
             h = pdf["__h"].to_numpy().astype(np.int64).view(np.uint64)
             res = pdf.drop(columns=["__h"])
-            res[flag_name] = bl.contains_hashes(h)
+            res[flag_name] = fl.contains_hashes(h)
             yield res
 
     return hdf.mapInPandas(probe, out_schema)
+
+
+def bloom_probe_column(df: DataFrame, col, bloom: Bloom, flag_name: str = "is_member") -> DataFrame:
+    """Adds a boolean column: does `col` (hashed JVM-side with
+    xxhash64, matching bloom_of) hit the filter?"""
+    return _probe_column(df, col, bloom.to_bytes(), bloom_from_bytes, flag_name)
 
 
 def bloom_filter_rows(
@@ -68,24 +75,7 @@ def counting_bloom_probe_column(
     Arrow batch."""
     from ..sketches import counting_bloom_from_bytes
 
-    buf = cbf.to_bytes()
-    c = F.col(col) if isinstance(col, str) else col
-    hdf = df.withColumn("__h", F.xxhash64(c))
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", `{flag_name}` boolean"
-
-    def probe(batches: Iterable[pd.DataFrame]):
-        bl = counting_bloom_from_bytes(buf)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            h = pdf["__h"].to_numpy().astype(np.int64).view(np.uint64)
-            res = pdf.drop(columns=["__h"])
-            res[flag_name] = bl.contains_hashes(h)
-            yield res
-
-    return hdf.mapInPandas(probe, out_schema)
+    return _probe_column(df, col, cbf.to_bytes(), counting_bloom_from_bytes, flag_name)
 
 
 def referential_orphans(
@@ -156,21 +146,4 @@ def cuckoo_probe_column(
     closure and is probed vectorized per Arrow batch."""
     from ..sketches import cuckoo_from_bytes
 
-    buf = ck.to_bytes()
-    c = F.col(col) if isinstance(col, str) else col
-    hdf = df.withColumn("__h", F.xxhash64(c))
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", `{flag_name}` boolean"
-
-    def probe(batches: Iterable[pd.DataFrame]):
-        fl = cuckoo_from_bytes(buf)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            h = pdf["__h"].to_numpy().astype(np.int64).view(np.uint64)
-            res = pdf.drop(columns=["__h"])
-            res[flag_name] = fl.contains_hashes(h)
-            yield res
-
-    return hdf.mapInPandas(probe, out_schema)
+    return _probe_column(df, col, ck.to_bytes(), cuckoo_from_bytes, flag_name)

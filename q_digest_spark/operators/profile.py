@@ -18,7 +18,7 @@ from .multi import SketchSpec, multi_sketch_aggregate
 
 
 class CountingHLL:
-    """HLL plus an exact consumed-value counter (RawHLL lacks n);
+    """HLL plus an exact consumed-value counter (HLL lacks n);
     module-level for cloudpickle-by-reference."""
 
     def __init__(self, p: int = 14):

@@ -15,10 +15,11 @@ Scale notes (the 100 TB design point):
   partials first shuffle into ``fanout`` merge groups;
 - the value column is projected *before* the UDF so parquet scans read
   a single column (check: ReadSchema in .explain());
-- for hash sketches (HLL/Bloom/CMS) the 64-bit hashing of strings is
-  done with ``xxhash64`` **JVM-side** when ``prehash=True`` — the
-  Python worker then only sees int64 hashes, halving Arrow transfer
-  for long urls and keeping string work in whole-stage codegen.
+- for hash sketches (HLL/Bloom/CMS/AMS/Theta/cuckoo/counting Bloom)
+  the 64-bit hashing of strings is done with ``xxhash64`` **JVM-side**
+  (``_hashed_of``) — the Python worker then only sees int64 hashes,
+  halving Arrow transfer for long urls and keeping string work in
+  whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -48,9 +49,9 @@ def qdigest_of(
     k: int = 256,
     universe_bits: int | None = None,
     fanout: int = 32,
-    precount: bool | None = None,
-) -> QDigest:
-    """Build a Q-Digest over a non-negative integer column.
+) -> QDigest | None:
+    """Build a Q-Digest over a non-negative integer column; None when
+    the column is empty or all null.
 
     ``universe_bits=None`` runs a cheap max() first (parquet-footer
     aggregate pushdown makes this a metadata-only scan for plain
@@ -58,22 +59,22 @@ def qdigest_of(
     the reference's expand_tree (qcore.c:300-349); a tight universe is
     what makes eps = log2(sigma)/k meaningful.
 
-    ``precount`` (default: auto, on when universe_bits <= 24): first
-    reduce the rows to a (value, count) histogram with Catalyst's
-    whole-stage-codegen hash aggregate — map-side combine means each
-    task emits at most min(rows, 2^universe_bits) pairs — and feed
-    Python the histogram instead of raw rows. At 10^12 rows over a
-    bounded universe this turns the Python-side work from O(rows) into
-    O(universe): the JVM does the counting, the sketch only shapes it.
+    Precount (on when universe_bits <= 24): first reduce the rows to a
+    (value, count) histogram with Catalyst's whole-stage-codegen hash
+    aggregate — map-side combine means each task emits at most
+    min(rows, 2^universe_bits) pairs — and feed Python the histogram
+    instead of raw rows. At 10^12 rows over a bounded universe this
+    turns the Python-side work from O(rows) into O(universe): the JVM
+    does the counting, the sketch only shapes it.
     """
     c = _col(col).cast("long")
     if universe_bits is None:
         mx = df.agg(F.max(c).alias("mx")).collect()[0]["mx"]
+        if mx is None:
+            return None
         universe_bits = max(1, int(mx).bit_length())
-    if precount is None:
-        precount = universe_bits <= 24
     factory = partial(QDigest, k, universe_bits)
-    if precount:
+    if universe_bits <= 24:
         hist = df.select(c.alias("v")).where(F.col("v").isNotNull()).groupBy("v").agg(
             F.count(F.lit(1)).alias("cnt")
         )
@@ -139,12 +140,6 @@ def tdigest_of(df: DataFrame, col, delta: int = 200, fanout: int = 32) -> TDiges
     return sketch_aggregate(
         df, _col(col).cast("double"), partial(TDigest, delta), tdigest_from_bytes, fanout
     )
-
-
-def _maybe_prehash(df: DataFrame, col, prehash: bool):
-    """xxhash64 JVM-side so Python sees fixed-width int64, not strings."""
-    c = _col(col)
-    return (F.xxhash64(c), True) if prehash else (c, False)
 
 
 class _Prehashed:
@@ -222,48 +217,6 @@ class HashedTheta(_Prehashed):
     inner = ThetaSketch
 
 
-class RawHLL:
-    """HLL fed raw (unhashed) values — the sketch hashes internally.
-    Same UDAF contract as HashedHLL; module-level in the shipped
-    package so closures pickle it by reference."""
-
-    def __init__(self, p: int = 14):
-        self.h = HLL(p)
-
-    def update_batch(self, values):
-        self.h.update_batch(np.asarray(values))
-
-    def merge(self, other):
-        self.h.merge(other.h)
-        return self
-
-    def to_bytes(self):
-        return self.h.to_bytes()
-
-    def estimate(self) -> float:
-        return self.h.estimate()
-
-    @staticmethod
-    def from_bytes(buf: bytes) -> "RawHLL":
-        a = RawHLL.__new__(RawHLL)
-        a.h = HLL.from_bytes(buf)
-        return a
-
-
-def theta_of(df: DataFrame, col, k: int = 4096, fanout: int = 32):
-    """Distributed theta-sketch build (one pass, two-level merge);
-    returns the ThetaSketch — feed pairs of these to the set-algebra
-    estimators (intersection/difference), which HLL cannot answer
-    without compounding inclusion-exclusion errors."""
-    expr, _ = _maybe_prehash(df, col, True)
-    res = sketch_aggregate(df, expr, partial(HashedTheta, k), hashed_theta_from_bytes, fanout)
-    return res.sketch if res is not None else None
-
-
-def raw_hll_from_bytes(buf: bytes) -> RawHLL:
-    return RawHLL.from_bytes(buf)
-
-
 def hashed_hll_from_bytes(buf: bytes) -> HashedHLL:
     return HashedHLL.from_bytes(buf)
 
@@ -292,18 +245,30 @@ def hashed_theta_from_bytes(buf: bytes) -> HashedTheta:
     return HashedTheta.from_bytes(buf)
 
 
-def hll_of(df: DataFrame, col, p: int = 14, fanout: int = 32) -> HLL:
-    expr, _ = _maybe_prehash(df, col, True)
-    res = sketch_aggregate(df, expr, partial(HashedHLL, p), hashed_hll_from_bytes, fanout)
+def _hashed_of(df: DataFrame, col, factory, deserialize, fanout: int, weight_col=None):
+    """The one body of the hashed ``*_of`` helpers: xxhash64 ``col``
+    JVM-side, aggregate ``factory``'s ``_Prehashed`` adapter and return
+    its inner sketch; None on empty input."""
+    res = sketch_aggregate(
+        df, F.xxhash64(_col(col)), factory, deserialize, fanout, weight_col=weight_col
+    )
     return res.sketch if res is not None else None
+
+
+def theta_of(df: DataFrame, col, k: int = 4096, fanout: int = 32):
+    """Distributed theta-sketch build (one pass, two-level merge);
+    returns the ThetaSketch — feed pairs of these to the set-algebra
+    estimators (intersection/difference), which HLL cannot answer
+    without compounding inclusion-exclusion errors."""
+    return _hashed_of(df, col, partial(HashedTheta, k), hashed_theta_from_bytes, fanout)
+
+
+def hll_of(df: DataFrame, col, p: int = 14, fanout: int = 32) -> HLL:
+    return _hashed_of(df, col, partial(HashedHLL, p), hashed_hll_from_bytes, fanout)
 
 
 def countmin_of(df: DataFrame, col, depth: int = 5, width: int = 8192, fanout: int = 32) -> CountMin:
-    expr, _ = _maybe_prehash(df, col, True)
-    res = sketch_aggregate(
-        df, expr, partial(HashedCMS, depth, width), hashed_cms_from_bytes, fanout
-    )
-    return res.sketch if res is not None else None
+    return _hashed_of(df, col, partial(HashedCMS, depth, width), hashed_cms_from_bytes, fanout)
 
 
 def ams_of(
@@ -322,26 +287,19 @@ def ams_of(
     frequencies. ``weight_col`` carries signed multiplicities —
     delete streams are rows with weight -1 (turnstile model), same
     contract as counting_bloom_of."""
-    expr, _ = _maybe_prehash(df, col, True)
-    res = sketch_aggregate(
-        df, expr, partial(HashedAMS, depth, width), hashed_ams_from_bytes,
-        fanout, weight_col=weight_col,
+    return _hashed_of(
+        df, col, partial(HashedAMS, depth, width), hashed_ams_from_bytes, fanout, weight_col
     )
-    return res.sketch if res is not None else None
 
 
 def bloom_of(df: DataFrame, col, m_bits: int = 1 << 22, k: int = 7, fanout: int = 32) -> Bloom:
-    expr, _ = _maybe_prehash(df, col, True)
-    res = sketch_aggregate(
-        df, expr, partial(HashedBloom, m_bits, k), hashed_bloom_from_bytes, fanout
-    )
-    return res.sketch if res is not None else None
+    return _hashed_of(df, col, partial(HashedBloom, m_bits, k), hashed_bloom_from_bytes, fanout)
 
 
 def cuckoo_of(
     df: DataFrame, col, m_buckets: int = 1 << 16, fanout: int = 32
 ):
-    """Cuckoo filter of a column in ONE pass (sketches/cuckoo.py):
+    """Cuckoo filter of the column's DISTINCT keys (sketches/cuckoo.py):
     space-efficient deletable membership — 16 bits/key at load ~0.95
     vs the counting Bloom's 64 bits/slot. Merge re-places stored
     fingerprints (the partial-key XOR trick), so the standard
@@ -350,13 +308,15 @@ def cuckoo_of(
     remove_hashes with a bounded key set): unlike the SIGNED counting
     Bloom, a cuckoo partial cannot carry an unmatched delete, so
     delete streams either stay bounded (collected after a limit) or
-    belong in counting_bloom_of."""
-    expr, _ = _maybe_prehash(df, col, True)
-    res = sketch_aggregate(
-        df, expr, partial(HashedCuckoo, m_buckets), hashed_cuckoo_from_bytes,
-        fanout,
-    )
-    return res.sketch if res is not None else None
+    belong in counting_bloom_of.
+
+    The column is made distinct first (one shuffle of the keys): a
+    cuckoo filter holds at most 2 x 4 copies of a fingerprint plus its
+    stash, so repeated keys would overflow it. Each key is therefore
+    stored once however often it occurs, and ``n`` counts distinct
+    keys; one ``remove_hashes`` of a key removes it."""
+    keys = df.select(_col(col).alias("__k")).distinct()
+    return _hashed_of(keys, "__k", partial(HashedCuckoo, m_buckets), hashed_cuckoo_from_bytes, fanout)
 
 
 def counting_bloom_of(
@@ -377,16 +337,10 @@ def counting_bloom_of(
     every key whose net multiplicity is positive, provided deletes
     never exceed prior inserts per key (multiset discipline, the
     standard counting-Bloom contract)."""
-    expr, _ = _maybe_prehash(df, col, True)
-    res = sketch_aggregate(
-        df,
-        expr,
-        partial(HashedCountingBloom, m_slots, k),
-        hashed_counting_bloom_from_bytes,
-        fanout,
-        weight_col=weight_col,
+    return _hashed_of(
+        df, col, partial(HashedCountingBloom, m_slots, k), hashed_counting_bloom_from_bytes,
+        fanout, weight_col,
     )
-    return res.sketch if res is not None else None
 
 
 def misragries_of(df: DataFrame, col, k: int = 256, fanout: int = 32,

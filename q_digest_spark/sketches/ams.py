@@ -25,18 +25,19 @@ compounds. Merge = elementwise signed addition (same hash family by
 construction), associative and commutative exactly — the same
 mergeable-UDAF contract as every family here (reference merge
 semantics: qcore.c:254-306).
+
+Shared body: the counter table, ``update_batch``, shape-checked merge,
+``<4sBBIq>`` wire format (magic ``AMS1``) and repr are countmin.py's
+private ``_CounterTable``; this module holds the signed update and the
+F2, inner-product and point queries.
 """
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
-from .hashing import rehash
-
-_HDR = struct.Struct("<4sBBIq")  # magic, ver, depth, width, n
-_MAGIC = b"AMS1"
+from .countmin import _CounterTable
+from .hashing import hash_any, rehash
 
 _BUCKET_SALT = 0xA11CE
 _SIGN_SALT = 0x5EED5
@@ -78,14 +79,12 @@ def _exact_dot(a: np.ndarray, b: np.ndarray) -> int:
     return total
 
 
-class AMS:
-    __slots__ = ("depth", "width", "table", "n")
+class AMS(_CounterTable):
+    __slots__ = ()
+    MAGIC = b"AMS1"
 
     def __init__(self, depth: int = 7, width: int = 8192):
-        self.depth = int(depth)
-        self.width = int(width)
-        self.table = np.zeros((self.depth, self.width), dtype=np.int64)
-        self.n = 0
+        super().__init__(depth, width)
 
     # -- update ----------------------------------------------------------
 
@@ -109,11 +108,6 @@ class AMS:
             bucket = (rehash(h, _BUCKET_SALT + i) % w).astype(np.int64)
             sign = 1 - 2 * (rehash(h, _SIGN_SALT + i) & one).astype(np.int64)
             np.add.at(self.table[i], bucket, sign * counts)
-
-    def update_batch(self, values) -> None:
-        from .hashing import hash_any
-
-        self.update_hashes(hash_any(values))
 
     # -- query -----------------------------------------------------------
 
@@ -162,8 +156,6 @@ class AMS:
         return np.sign(s) * (np.abs(s) // 2)
 
     def point_estimate(self, values) -> np.ndarray:
-        from .hashing import hash_any
-
         return self.point_estimates(hash_any(values))
 
     def inner_product(self, other: "AMS") -> int:
@@ -172,8 +164,7 @@ class AMS:
         products (Cormode & Garofalakis 2005). Two-sided error
         sqrt(2 * F2(A) * F2(B) / width) per row. Both sketches must
         share (depth, width) — same hash family by construction."""
-        if (other.depth, other.width) != (self.depth, self.width):
-            raise ValueError("AMS shape mismatch")
+        self._check_shape(other)
         dots = sorted(_exact_dot(self.table[i], other.table[i])
                       for i in range(self.depth))
         mid = len(dots) // 2
@@ -183,34 +174,3 @@ class AMS:
         # toward-zero mean: join-size estimates can be negative on
         # adversarial inputs; keep rounding sign-symmetric
         return s // 2 if s >= 0 else -((-s) // 2)
-
-    # -- merge -----------------------------------------------------------
-
-    def merge(self, other: "AMS") -> "AMS":
-        if (other.depth, other.width) != (self.depth, self.width):
-            raise ValueError("AMS shape mismatch")
-        self.table += other.table
-        self.n += other.n
-        return self
-
-    # -- serialization ----------------------------------------------------
-
-    def to_bytes(self) -> bytes:
-        return _HDR.pack(_MAGIC, 1, self.depth, self.width, self.n) + self.table.tobytes()
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "AMS":
-        magic, ver, depth, width, n = _HDR.unpack_from(buf, 0)
-        if magic != _MAGIC or ver != 1:
-            raise ValueError("bad AMS buffer")
-        sk = cls(depth, width)
-        sk.n = n
-        sk.table = (
-            np.frombuffer(buf, dtype=np.int64, count=depth * width, offset=_HDR.size)
-            .reshape(depth, width)
-            .copy()
-        )
-        return sk
-
-    def __repr__(self) -> str:
-        return f"AMS(d={self.depth}, w={self.width}, n={self.n})"

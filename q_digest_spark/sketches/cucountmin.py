@@ -38,39 +38,27 @@ distributed contract grades.
 Merge = elementwise add (associative, commutative) — the same
 mergeable-UDAF contract as every sketch here (reference parity:
 qcore.c:254-306 merge discipline, re-expressed for counter tables).
+
+Shared body: the counter table, merge, ``<4sBBIq>`` wire format
+(magic ``CUS1``), row-hash family and min-of-rows queries come from
+countmin.py's private bases; this module holds only the conservative
+``update_hashes``.
 """
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
-from .hashing import rehash
-
-_HDR = struct.Struct("<4sBBIq")  # magic, ver, depth, width, n
-_MAGIC = b"CUS1"
+from .countmin import _CountMinRows
 
 
-class CUCountMin:
+class CUCountMin(_CountMinRows):
     """Conservative-update CM sketch; hash-family-compatible with
     :class:`q_digest_spark.sketches.countmin.CountMin` (same rehash
     salts), so the elementwise dominance (2) is checkable in tests."""
 
-    __slots__ = ("depth", "width", "table", "n")
-
-    def __init__(self, depth: int = 5, width: int = 4096):
-        self.depth = int(depth)
-        self.width = int(width)
-        self.table = np.zeros((self.depth, self.width), dtype=np.int64)
-        self.n = 0
-
-    def _indices(self, hashes: np.ndarray) -> np.ndarray:
-        h = np.asarray(hashes, dtype=np.uint64)
-        return np.stack(
-            [(rehash(h, 0xC0FFEE + i) % np.uint64(self.width)).astype(np.int64)
-             for i in range(self.depth)]
-        )
+    __slots__ = ()
+    MAGIC = b"CUS1"
 
     def update_hashes(self, hashes: np.ndarray, counts: np.ndarray | None = None) -> None:
         if len(hashes) == 0:
@@ -91,51 +79,3 @@ class CUCountMin:
         target = cur.min(axis=0) + uc  # min_est + batch count, per key
         for i in range(self.depth):
             np.maximum.at(self.table[i], idx[i], target)
-
-    def update_batch(self, values) -> None:
-        from .hashing import hash_any
-
-        self.update_hashes(hash_any(values))
-
-    def estimate_hashes(self, hashes: np.ndarray) -> np.ndarray:
-        idx = self._indices(np.asarray(hashes, dtype=np.uint64))
-        ests = np.stack([self.table[i, idx[i]] for i in range(self.depth)])
-        return ests.min(axis=0)
-
-    def estimate(self, values) -> np.ndarray:
-        from .hashing import hash_any
-
-        return self.estimate_hashes(hash_any(values))
-
-    def merge(self, other: "CUCountMin") -> "CUCountMin":
-        if (other.depth, other.width) != (self.depth, self.width):
-            raise ValueError("CUCountMin shape mismatch")
-        self.table += other.table
-        self.n += other.n
-        return self
-
-    def eps(self) -> float:
-        return float(np.e) / self.width
-
-    def delta(self) -> float:
-        return float(np.exp(-self.depth))
-
-    def to_bytes(self) -> bytes:
-        return _HDR.pack(_MAGIC, 1, self.depth, self.width, self.n) + self.table.tobytes()
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "CUCountMin":
-        magic, ver, depth, width, n = _HDR.unpack_from(buf, 0)
-        if magic != _MAGIC or ver != 1:
-            raise ValueError("bad CUCountMin buffer")
-        sk = cls(depth, width)
-        sk.n = n
-        sk.table = (
-            np.frombuffer(buf, dtype=np.int64, count=depth * width, offset=_HDR.size)
-            .reshape(depth, width)
-            .copy()
-        )
-        return sk
-
-    def __repr__(self) -> str:
-        return f"CUCountMin(d={self.depth}, w={self.width}, n={self.n})"

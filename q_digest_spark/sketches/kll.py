@@ -17,6 +17,12 @@ normalized rank error ~= 2.296 / k**0.9 at 99% confidence — asserted
 with margin in tests. Merge = levelwise concat + recompaction, which is
 associative up to compaction randomness (same contract as the
 reference's Q-Digest merge, /root/reference/src/qcore.c:390-417).
+
+This class is also the one body of the level structure that
+sketches/req.py reuses: REQ subclasses it and replaces only the
+compaction policy (protect the top ``k`` of every level), ``rank_of``
+and the bounds; buffers, coin, merge, update, quantile queries and the
+``<4sBHqqI>`` wire format (magic from ``MAGIC``) are written here once.
 """
 
 from __future__ import annotations
@@ -26,12 +32,12 @@ import struct
 import numpy as np
 
 _HDR = struct.Struct("<4sBHqqI")  # magic, ver, k, n, seed_counter, n_levels
-_MAGIC = b"KLL1"
 _C = 2.0 / 3.0
 
 
 class KLL:
     __slots__ = ("k", "n", "levels", "_coin")
+    MAGIC = b"KLL1"
 
     def __init__(self, k: int = 200):
         self.k = int(k)
@@ -131,7 +137,7 @@ class KLL:
 
     # ----------------------------------------------------------- serialize
     def to_bytes(self) -> bytes:
-        hdr = _HDR.pack(_MAGIC, 1, self.k, self.n, self._coin, len(self.levels))
+        hdr = _HDR.pack(self.MAGIC, 1, self.k, self.n, self._coin, len(self.levels))
         parts = [hdr]
         for b in self.levels:
             parts.append(struct.pack("<q", len(b)))
@@ -141,8 +147,8 @@ class KLL:
     @classmethod
     def from_bytes(cls, buf: bytes) -> "KLL":
         magic, ver, k, n, coin, nlev = _HDR.unpack_from(buf, 0)
-        if magic != _MAGIC or ver != 1:
-            raise ValueError("bad KLL buffer")
+        if magic != cls.MAGIC or ver != 1:
+            raise ValueError(f"bad {cls.__name__} buffer")
         sk = cls(k)
         sk.n = n
         sk._coin = coin
@@ -156,4 +162,7 @@ class KLL:
         return sk
 
     def __repr__(self) -> str:
-        return f"KLL(k={self.k}, n={self.n}, retained={self._size()}, levels={len(self.levels)})"
+        return (
+            f"{type(self).__name__}(k={self.k}, n={self.n}, "
+            f"retained={self._size()}, levels={len(self.levels)})"
+        )

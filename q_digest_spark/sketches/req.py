@@ -40,59 +40,42 @@ error_bound_at(r) returns exactly this asserted bound.
 Merge = levelwise concat + recompaction (associative up to compaction
 coin order, same contract as the reference's Q-Digest merge,
 /root/reference/serial-implementation/src/qcore.c merge loop).
+
+Shared body: REQ subclasses sketches/kll.py's KLL and reuses its level
+buffers, coin, merge, update_batch, quantile(s) and wire format (same
+``<4sBHqqI>`` header, magic ``REQ1``). It overrides only the ``k``
+check, the capacity and compaction policy above, ``rank_of`` (an
+un-normalized count here) and the bounds.
 """
 
 from __future__ import annotations
 
-import struct
+import math
 
 import numpy as np
 
-_HDR = struct.Struct("<4sBHqqI")  # magic, ver, k, n, coin, n_levels
-_MAGIC = b"REQ1"
+from .kll import KLL
 
 
-class REQ:
-    __slots__ = ("k", "n", "levels", "_coin")
+class REQ(KLL):
+    __slots__ = ()
+    MAGIC = b"REQ1"
 
     def __init__(self, k: int = 64):
         if k < 4 or k % 2:
             raise ValueError("k must be an even integer >= 4")
-        self.k = int(k)
-        self.n = 0
-        self.levels: list[np.ndarray] = [np.empty(0, dtype=np.float64)]
-        self._coin = 0
+        super().__init__(k)
 
-    # ---------------------------------------------------------- capacities
-    def _cap(self) -> int:
+    # ------------------------------------------------- capacity/compaction
+    def _cap(self, h: int) -> int:
         # every level holds up to 3k items: k protected at the top,
         # up to 2k of compactable prefix
         return 3 * self.k
 
-    def _size(self) -> int:
-        return sum(len(b) for b in self.levels)
-
-    # -------------------------------------------------------------- update
-    def update_batch(self, values: np.ndarray) -> None:
-        values = np.asarray(values, dtype=np.float64)
-        values = values[~np.isnan(values)]
-        if len(values) == 0:
-            return
-        self.levels[0] = np.concatenate([self.levels[0], values])
-        self.n += len(values)
-        self._compact_while_full()
-
-    def _flip(self) -> int:
-        self._coin += 1
-        with np.errstate(over="ignore"):
-            z = np.uint64(self._coin) * np.uint64(0x9E3779B97F4A7C15)
-            z = (z ^ (z >> np.uint64(31))) * np.uint64(0xBF58476D1CE4E5B9)
-        return int(z >> np.uint64(63))
-
     def _compact_while_full(self) -> None:
         h = 0
         while h < len(self.levels):
-            if len(self.levels[h]) > self._cap():
+            if len(self.levels[h]) > self._cap(h):
                 self._compact_level(h)
             h += 1
 
@@ -111,43 +94,7 @@ class REQ:
             self.levels.append(np.empty(0, dtype=np.float64))
         self.levels[h + 1] = np.concatenate([self.levels[h + 1], promoted])
 
-    # --------------------------------------------------------------- merge
-    def merge(self, other: "REQ") -> "REQ":
-        self.k = max(self.k, other.k)
-        while len(self.levels) < len(other.levels):
-            self.levels.append(np.empty(0, dtype=np.float64))
-        for h, buf in enumerate(other.levels):
-            if len(buf):
-                self.levels[h] = np.concatenate([self.levels[h], buf])
-        self.n += other.n
-        self._coin = max(self._coin, other._coin)
-        self._compact_while_full()
-        return self
-
     # --------------------------------------------------------------- query
-    def _weighted(self):
-        vals = np.concatenate([b for b in self.levels if len(b)])
-        wts = np.concatenate(
-            [
-                np.full(len(b), 1 << h, dtype=np.int64)
-                for h, b in enumerate(self.levels)
-                if len(b)
-            ]
-        )
-        order = np.argsort(vals, kind="stable")
-        return vals[order], np.cumsum(wts[order])
-
-    def quantile(self, p: float) -> float:
-        if self.n == 0:
-            raise ValueError("empty sketch")
-        vals, cum = self._weighted()
-        rank = min(max(1, int(np.ceil(p * cum[-1]))), int(cum[-1]))
-        i = min(int(np.searchsorted(cum, rank, side="left")), len(vals) - 1)
-        return float(vals[i])
-
-    def quantiles(self, ps) -> list[float]:
-        return [self.quantile(p) for p in ps]
-
     def rank_of(self, value: float) -> int:
         """Estimated rank (#items <= value), un-normalized."""
         vals, cum = self._weighted()
@@ -157,41 +104,10 @@ class REQ:
     def error_bound_at(self, rank: int) -> float:
         """The asserted (empirically calibrated — module docstring)
         absolute rank-error bound at true rank ``rank``."""
-        import math
-
         lvl = math.log2(max(self.n / (3.0 * self.k), 2.0))
         return (lvl / self.k) * (self.n - rank) + 2.0 * self.k
 
-    # ----------------------------------------------------------- serialize
-    def to_bytes(self) -> bytes:
-        hdr = _HDR.pack(_MAGIC, 1, self.k, self.n, self._coin, len(self.levels))
-        parts = [hdr]
-        for b in self.levels:
-            parts.append(struct.pack("<q", len(b)))
-            parts.append(np.ascontiguousarray(b, dtype=np.float64).tobytes())
-        return b"".join(parts)
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "REQ":
-        magic, ver, k, n, coin, nlev = _HDR.unpack_from(buf, 0)
-        if magic != _MAGIC or ver != 1:
-            raise ValueError("bad REQ buffer")
-        sk = cls(k)
-        sk.n = n
-        sk._coin = coin
-        o = _HDR.size
-        sk.levels = []
-        for _ in range(nlev):
-            (m,) = struct.unpack_from("<q", buf, o)
-            o += 8
-            sk.levels.append(
-                np.frombuffer(buf, dtype=np.float64, count=m, offset=o).copy()
-            )
-            o += 8 * m
-        return sk
-
-    def __repr__(self) -> str:
-        return (
-            f"REQ(k={self.k}, n={self.n}, retained={self._size()}, "
-            f"levels={len(self.levels)})"
-        )
+    def error_bound(self) -> float:
+        """Normalized rank error over all ranks: ``error_bound_at`` at
+        its widest (rank 0) divided by n — not KLL's uniform bound."""
+        return self.error_bound_at(0) / max(self.n, 1)

@@ -92,7 +92,7 @@ def main() -> None:
         pages = read_pages_jsonl(spark, args.pages)
     else:
         pages = spark.read.parquet(args.pages)
-    # warmup (excluded from stage timings, same as bench.py): touch the
+    # warmup (excluded from stage timings): touch the
     # input footer and spin up the Python worker pool once, so stage 1
     # is not charged JVM scan init + worker startup
     pages.select(F.lit(1)).limit(1).count()

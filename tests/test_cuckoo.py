@@ -165,6 +165,22 @@ def test_cuckoo_of_spark(spark, sf_test):
     assert row["fp"] <= max(10, 2 * ck.fpr_bound() * row["n"])
 
 
+def test_cuckoo_of_repeated_key(spark):
+    """cuckoo_of holds the column's distinct keys: one key repeated 500
+    times (past the 2 x 4 slots and the stash of one fingerprint) is
+    stored once, and one delete removes it."""
+    from pyspark.sql import functions as F
+
+    from q_digest_spark.operators.quantiles import cuckoo_of
+
+    df = spark.range(0, 500, 1, 4).select(F.lit("same-key").alias("k"))
+    ck = cuckoo_of(df, "k", m_buckets=1 << 8)
+    h = df.limit(1).select(F.xxhash64("k").alias("h")).collect()[0]["h"]
+    hashes = np.array([h], dtype=np.int64).view(np.uint64)
+    assert ck.n == 1 and ck.contains_hashes(hashes).all()
+    ck.remove_hashes(hashes)
+    assert not ck.contains_hashes(hashes).any()
+
 def test_delete_batch_is_atomic():
     """A batch mixing present and absent hashes raises and applies no
     delete: the serialized filter (storage, fill, stash, n) is

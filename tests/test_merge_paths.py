@@ -190,7 +190,8 @@ from functools import partial
 from pyspark import TaskContext
 from pyspark.sql import functions as F
 
-from q_digest_spark.operators.aggregate import sketch_aggregate
+from q_digest_spark.operators.aggregate import grouped_sketch_rows, sketch_aggregate
+from q_digest_spark.operators.heavy_hitters import cms_topk_with_keys
 from q_digest_spark.operators.quantiles import HashedHLL, hashed_hll_from_bytes
 from q_digest_spark.plans.session import get_spark
 from q_digest_spark.sketches import QDigest, qdigest_from_bytes
@@ -205,7 +206,9 @@ log.setLevel(logging.DEBUG)
 spark = get_spark("retry-determinism", master="local[2,3]", cores=2, shuffle_partitions=2)
 marks = tempfile.mkdtemp(prefix="qds_retry_")
 df = spark.range(0, 6000, 1, 6).select(
-    "id", F.pmod(F.xxhash64("id"), F.lit(1 << 16)).alias("v")
+    "id",
+    F.pmod(F.xxhash64("id"), F.lit(1 << 16)).alias("v"),
+    F.floor(F.log2(F.col("id") + 1)).cast("long").alias("k"),
 )
 
 
@@ -229,7 +232,13 @@ for fanout in (2, 1):
         hll = sketch_aggregate(
             src, F.xxhash64("v"), partial(HashedHLL, 12), hashed_hll_from_bytes, fanout
         )
-        out[f"{fanout}-{fail}"] = [qd.to_bytes().hex(), hll.to_bytes().hex(), qd.n]
+        top = [list(r) for r in cms_topk_with_keys(src, "k", k=5, fanout=fanout).collect()]
+        out[f"{fanout}-{fail}"] = [qd.to_bytes().hex(), hll.to_bytes().hex(), qd.n, top]
+for fail in (False, True):
+    rows = grouped_sketch_rows(flaky(fail), ["k"], "v", partial(QDigest, 32, 16), qdigest_from_bytes)
+    out[f"grouped-{fail}"] = sorted(
+        [r["k"], bytes(r["sketch"]).hex(), r["rows"]] for r in rows.collect()
+    )
 out["failures"] = len(os.listdir(marks))
 out["paths"] = paths
 print(json.dumps(out))
@@ -238,9 +247,11 @@ print(json.dumps(out))
 
 def test_retry_is_deterministic():
     """A task that fails its first attempt and is retried gives the
-    same Q-Digest and HLL bytes as a clean run, on the coalesced path
-    (fanout=2 at local[2,3]) and the tree path (fanout=1): a coalesced
-    task re-reads the same input partitions."""
+    same Q-Digest and HLL bytes and the same ``cms_topk_with_keys``
+    rows as a clean run, on the coalesced path (fanout=2 at
+    local[2,3]) and the tree path (fanout=1): a coalesced task re-reads
+    the same input partitions. Grouped Q-Digest rows (one shuffle by
+    key) come out byte-identical too."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, SPARK_DRIVER_MEM="1g", PYTHONPATH=repo)
     proc = subprocess.run(
@@ -249,12 +260,16 @@ def test_retry_is_deterministic():
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert out["failures"] == 4  # each flaky run failed once, both calls
+    assert out["failures"] == 7  # each flaky call failed once: 2 x 3 ungrouped, 1 grouped
     coalesced, tree = "fold_partials: coalesced driver fold", "fold_partials: tree merge"
-    assert out["paths"] == [coalesced] * 4 + [tree] * 4
+    assert out["paths"] == [coalesced] * 6 + [tree] * 6
     for fanout in (2, 1):
         assert out[f"{fanout}-True"] == out[f"{fanout}-False"], fanout
         assert out[f"{fanout}-True"][2] == 6000
+        assert out[f"{fanout}-True"][3][:2] == [[11, 2048], [12, 1905]]  # exact counts
+    assert out["grouped-True"] == out["grouped-False"]
+    assert [r[0] for r in out["grouped-True"]] == list(range(13))
+    assert sum(r[2] for r in out["grouped-True"]) == 6000
 
 
 def _grouped(df, keys, col, factory, deserialize):

@@ -139,3 +139,18 @@ def test_req_of_spark(spark, sf_test):
     vals = np.array([r["v"] for r in df.collect()])
     assert sk.n == len(vals)
     _assert_within(sk, vals, [0, 9, 99, 999])
+
+
+def test_req_normalized_bound_is_its_own():
+    """REQ subclasses KLL but reports its own normalized bound: the
+    relative envelope at its widest (rank 0) over n, which covers the
+    measured normalized rank error at every rank."""
+    rng = np.random.default_rng(5)
+    v = rng.uniform(0, 1e6, 100_000)
+    sk = REQ(32)
+    sk.update_batch(v)
+    sv = np.sort(v)
+    n = len(sv)
+    assert sk.error_bound() == sk.error_bound_at(0) / n
+    worst = max(abs(sk.rank_of(x) - (i + 1)) for i, x in zip(range(0, n, 997), sv[::997]))
+    assert worst / n <= sk.error_bound()

@@ -12,7 +12,7 @@ from q_digest_spark.operators.incremental import (
     sliding_window_rows,
     write_daily_sketches,
 )
-from q_digest_spark.operators.quantiles import RawHLL, raw_hll_from_bytes
+from q_digest_spark.sketches import HLL, hll_from_bytes
 
 
 @pytest.fixture(scope="module")
@@ -21,7 +21,7 @@ def daily_path(spark, sf_test, tmp_path_factory):
     df = spark.read.parquet(f"{sf_test}/events.parquet").where(
         F.col("ts").isNotNull()
     )
-    write_daily_sketches(df, "ts", "user_id", RawHLL, raw_hll_from_bytes, path)
+    write_daily_sketches(df, "ts", "user_id", HLL, hll_from_bytes, path)
     return path
 
 
@@ -29,7 +29,7 @@ def test_windows_match_direct_range_merges(spark, daily_path):
     wins = {
         r["win_end"]: bytes(r["sketch"])
         for r in sliding_window_rows(
-            spark, daily_path, raw_hll_from_bytes, window_days=3
+            spark, daily_path, hll_from_bytes, window_days=3
         ).collect()
     }
     days = sorted(
@@ -39,12 +39,12 @@ def test_windows_match_direct_range_merges(spark, daily_path):
     for end in days:
         lo = (end - datetime.timedelta(days=2)).isoformat()
         direct = merge_sketch_range(
-            spark, daily_path, raw_hll_from_bytes, lo, end.isoformat()
+            spark, daily_path, hll_from_bytes, lo, end.isoformat()
         )
         # HLL state is element-wise max: merge order is irrelevant and
         # the distributed window merge is bit-identical to the direct one
         assert (
-            raw_hll_from_bytes(wins[end]).estimate() == direct.estimate()
+            hll_from_bytes(wins[end]).estimate() == direct.estimate()
         ), end
 
 
@@ -54,7 +54,7 @@ def test_window_rows_counts(spark, daily_path):
         for r in spark.read.parquet(daily_path).select("day", "rows").collect()
     }
     wins = sliding_window_rows(
-        spark, daily_path, raw_hll_from_bytes, window_days=3
+        spark, daily_path, hll_from_bytes, window_days=3
     ).collect()
     for r in wins:
         expect = sum(
@@ -68,13 +68,13 @@ def test_window_of_one_day_equals_daily(spark, daily_path):
     wins = {
         r["win_end"]: bytes(r["sketch"])
         for r in sliding_window_rows(
-            spark, daily_path, raw_hll_from_bytes, window_days=1
+            spark, daily_path, hll_from_bytes, window_days=1
         ).collect()
     }
     for r in spark.read.parquet(daily_path).collect():
         assert (
-            raw_hll_from_bytes(wins[r["day"]]).estimate()
-            == raw_hll_from_bytes(bytes(r["sketch"])).estimate()
+            hll_from_bytes(wins[r["day"]]).estimate()
+            == hll_from_bytes(bytes(r["sketch"])).estimate()
         )
 
 

@@ -48,6 +48,17 @@ def test_qdigest_vs_spark_percentile_baselines(spark, sf_test):
         df.unpersist()
 
 
+def test_qdigest_of_empty_and_all_null_return_none(spark):
+    """No value to size the universe from: qdigest_of returns None, as
+    kll_of does, for an empty and for an all-null column."""
+    from q_digest_spark.operators.quantiles import kll_of, qdigest_of
+
+    empty = spark.range(0, 10).select(F.col("id").alias("v")).where(F.col("v") < 0)
+    nulls = spark.range(0, 10).select(F.lit(None).cast("long").alias("v"))
+    for df in (empty, nulls):
+        assert qdigest_of(df, "v") is None
+        assert kll_of(df, "v") is None
+
 def test_hll_vs_spark_approx_count_distinct(spark, sf_test):
     from q_digest_spark.operators.quantiles import hll_of
 
