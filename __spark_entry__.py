@@ -2354,7 +2354,7 @@ def q_weighted_sample_docs(spark, sf_dir) -> DataFrame:
 
 def q_priority_sample_subsetsum(spark, sf_dir) -> DataFrame:
     """Priority sampling (Duffield-Lund-Thorup JACM'07,
-    sketches/prioritysample.py + operators/sampling.priority_sample):
+    operators/sampling.priority_sample):
     ONE 64-row sample over documents weighted by n_chars answers the
     per-lang total-chars subset-sum with the unbiased
     Sum(max(w, tau)) estimator. Priorities are integer-exact
@@ -9763,7 +9763,9 @@ def q_varopt_subset_sums(spark, sf_dir) -> DataFrame:
     from q_digest_spark.operators.sampling import varopt_of
 
     df = _docs(spark, sf_dir).where(
-        F.col("n_chars").isNotNull() & (F.col("n_chars") > 0)
+        F.col("lang").isNotNull()
+        & F.col("n_chars").isNotNull()
+        & (F.col("n_chars") > 0)
     )
     sk = varopt_of(df, "doc_id", "n_chars", k=64)
     sample = spark.createDataFrame(
@@ -14518,7 +14520,8 @@ WHERE cnt.exact_count * 33 > tot.n
         "varopt_subset_sums": """
 SELECT lang, CAST(sum(n_chars) AS BIGINT) AS exact_chars,
        true AS within_bound
-FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0
+FROM documents
+WHERE lang IS NOT NULL AND n_chars IS NOT NULL AND n_chars > 0
 GROUP BY lang
 """,
         "phrase_search_hits": r"""

@@ -74,7 +74,13 @@ class SketchSpec(NamedTuple):
     expression), an empty-sketch factory, the bytes decoder, and an
     optional weight column that turns rows into (value, weight) pairs
     fed to ``update_batch(values, weights)`` — how the JVM-precounted
-    path hands Python a bounded histogram instead of raw rows."""
+    path hands Python a bounded histogram instead of raw rows.
+
+    Null inputs are skipped, but ``F.xxhash64(c)`` of a NULL is 42, not
+    NULL: filter NULL rows (``df.where(c.isNotNull())``) before a spec
+    over a JVM hash, as the hashed ``*_of`` helpers do. Do not make the
+    hash nullable instead: Arrow hands pandas a nullable bigint as
+    float64 in any batch holding a NULL, which rounds every hash in it."""
 
     col: object
     factory: SketchFactory
@@ -180,21 +186,29 @@ def _decoder(deserialize, name):
     return deserialize[name] if isinstance(deserialize, Mapping) else deserialize
 
 
-def _merge_group(keys: Sequence[str], deserialize, order: Sequence[str] = ("part_id",)):
+def _merge_group(
+    keys: Sequence[str], deserialize, order: Sequence[str] = ("part_id",), finish=None
+):
     """applyInPandas body of every sketch merge (tree levels, grouped
-    rows, rollup/cube levels, sliding windows): one output row with the
-    group's ``keys``, its merged sketch and summed rows. Rows fold
-    sorted by the ``order`` columns they carry, so a key in ``order``
-    reports its smallest value."""
+    rows, grouped quantiles, rollup/cube levels, sliding windows): one
+    output row with the group's ``keys``, then its merged sketch and
+    summed rows, or with ``finish`` the ``{column: value}`` that
+    ``finish(sketch)`` returns. Rows fold sorted by the ``order``
+    columns they carry, so a key in ``order`` reports its smallest
+    value."""
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         by = [c for c in order if c in pdf.columns]
         if by:
             pdf = pdf.sort_values(by, kind="stable")
         dec = _decoder(deserialize, pdf["name"].iloc[0] if "name" in pdf.columns else None)
+        sk = _fold(pdf["sketch"], dec)
         out = {k: [pdf[k].iloc[0]] for k in keys}
-        out["sketch"] = [_fold(pdf["sketch"], dec).to_bytes()]
-        out["rows"] = [int(pdf["rows"].sum())]
+        if finish is None:
+            out["sketch"] = [sk.to_bytes()]
+            out["rows"] = [int(pdf["rows"].sum())]
+        else:
+            out.update({c: [v] for c, v in finish(sk).items()})
         return pd.DataFrame(out)
 
     return merge_group
@@ -422,24 +436,21 @@ def grouped_quantiles(
     ps: Sequence[float],
     out_names: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Grouped quantiles, fully distributed: grouped_sketch_rows then a
-    per-row estimate pass. Output: keys..., one long column per p."""
+    """Grouped quantiles, fully distributed: the partials of
+    grouped_sketch_rows, then one shuffle by key whose merge of each
+    group also answers its quantiles. Output: keys..., one long column
+    per p."""
     keys = list(keys)
     out_names = list(out_names) if out_names else [f"p{int(p * 100)}" for p in ps]
-    rows_df = grouped_sketch_rows(df, keys, col, factory, deserialize)
-    out_schema = _rows_schema(rows_df.schema, keys, ", ".join(f"`{n}` long" for n in out_names))
+    partials = partial_sketches(df, {"v": SketchSpec(col, factory, deserialize)}, keys)
+    out_schema = _rows_schema(partials.schema, keys, ", ".join(f"`{n}` long" for n in out_names))
 
-    def estimate(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cols = {k: pdf[k] for k in keys}
-            ests = [deserialize(bytes(b)).quantiles(ps) for b in pdf["sketch"]]
-            for j, name in enumerate(out_names):
-                cols[name] = [e[j] for e in ests]
-            yield pd.DataFrame(cols)
+    def finish(sk):
+        return dict(zip(out_names, sk.quantiles(ps)))
 
-    return rows_df.mapInPandas(estimate, out_schema)
+    return partials.groupBy(*keys).applyInPandas(
+        _merge_group(keys, deserialize, finish=finish), out_schema
+    )
 
 
 def cube_sketch_rows(

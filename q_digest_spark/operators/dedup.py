@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..functions.text import content_fingerprint
 from ..sketches.minhash import (
     band_hashes,
-    exact_jaccard,
     exact_jaccard_pairs,
     hamming64,
     minhash_batch,
@@ -430,30 +429,6 @@ def corpus_line_survivors(
     )
     w = Window.partitionBy("line_hash").orderBy("id", "line_no")
     return lines.withColumn("keep", F.row_number().over(w) == F.lit(1))
-
-
-def corpus_line_dedup_text(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Reassemble cleaned documents after corpus_line_survivors:
-    surviving lines, original order, joined with newlines. Documents
-    whose every line was deduplicated away come back with '' (they'd
-    normally be dropped by a downstream min-length quality gate).
-    Returns (id, text). Carries line text through the shuffle —
-    that's inherent to rewriting the corpus; the stats path above
-    stays narrow."""
-    surv = corpus_line_survivors(df, text_col, id_col, keep_line_text=True)
-    return (
-        surv.where("keep")
-        .groupBy("id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("line_no", "line"))),
-                    lambda s: s["line"],
-                ),
-                "\n",
-            ).alias(text_col)
-        )
-    )
 
 
 # ------------------------------------------------- incremental (day-over-day)

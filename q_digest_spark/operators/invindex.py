@@ -136,8 +136,6 @@ def bm25_topk(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    n_docs: int | None = None,
-    sum_dl: int | None = None,
 ) -> DataFrame:
     """(doc, bm25_q): top-``k`` documents for a bag-of-terms query by
     BM25 (Robertson & Zaragoza, "The Probabilistic Relevance
@@ -158,10 +156,7 @@ def bm25_topk(
 
     if not terms:
         raise ValueError("bm25_topk needs at least one term")
-    if n_docs is None:
-        n_docs = doc_len.count()
-    if sum_dl is None:
-        sum_dl = doc_len.agg(F.sum("dl")).collect()[0][0]
+    n_docs, sum_dl = doc_len.agg(F.count(F.lit(1)), F.sum("dl")).collect()[0]
     avgdl = float(sum_dl) / float(n_docs)
     hits = (
         segments.where(F.col("term").isin(list(terms)))

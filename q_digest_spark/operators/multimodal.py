@@ -195,65 +195,3 @@ def extract_features(
 
     return sdf.mapInPandas(feats, FEATURE_SCHEMA)
 
-
-def frame_sample_stub(df: DataFrame, blob_col: str, id_col: str, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: one input blob -> many output
-    rows (id, frame_no, frame binary). The splitter is a stub that
-    slices the blob; a real implementation would demux containers."""
-    sdf = df.select(F.col(id_col).alias("id"), F.col(blob_col).alias("blob"))
-
-    def frames(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            ids, fnos, fblobs = [], [], []
-            for i, b in zip(pdf["id"], pdf["blob"]):
-                if b is None:
-                    continue
-                b = bytes(b)
-                step = max(1, len(b) // every_n)
-                for j, off in enumerate(range(0, len(b), step)):
-                    ids.append(i)
-                    fnos.append(j)
-                    fblobs.append(b[off : off + step])
-            if ids:
-                yield pd.DataFrame({"id": ids, "frame_no": fnos, "frame": fblobs})
-
-    return sdf.mapInPandas(frames, "id long, frame_no int, frame binary")
-
-
-def resize_stub(
-    df: DataFrame, blob_col: str, id_col: str, target_w: int = 224, target_h: int = 224
-) -> DataFrame:
-    """Image-resize plumbing: blob -> (id, width, height, resized
-    binary). The resampler is a STUB (no PIL/cv2 in this container): it
-    deterministically re-buckets the byte stream to target_w*target_h
-    samples, preserving the real pipeline shape — a decode-transform-
-    reencode pass whose output blob size is bounded by the target
-    dims, not the input. Swap the body for PIL's Image.resize to go
-    production."""
-    sdf = df.select(F.col(id_col).alias("id"), F.col(blob_col).alias("blob"))
-    n_out = target_w * target_h
-
-    def resize(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for b in pdf["blob"]:
-                if b is None or len(b) == 0:
-                    out.append(b"")
-                    continue
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                idx = np.linspace(0, len(arr) - 1, num=min(n_out, len(arr))).astype(
-                    np.int64
-                )
-                out.append(arr[idx].tobytes())
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(),
-                    "width": np.full(len(pdf), target_w, dtype=np.int32),
-                    "height": np.full(len(pdf), target_h, dtype=np.int32),
-                    "resized": out,
-                }
-            )
-
-    return sdf.mapInPandas(resize, "id long, width int, height int, resized binary")

@@ -25,7 +25,7 @@ No reference counterpart (qcore.c has no text layer).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def pack_documents(

@@ -248,9 +248,15 @@ def hashed_theta_from_bytes(buf: bytes) -> HashedTheta:
 def _hashed_of(df: DataFrame, col, factory, deserialize, fanout: int, weight_col=None):
     """The one body of the hashed ``*_of`` helpers: xxhash64 ``col``
     JVM-side, aggregate ``factory``'s ``_Prehashed`` adapter and return
-    its inner sketch; None on empty input."""
+    its inner sketch; None on empty or all-null input. NULL rows are
+    filtered out first: ``xxhash64(NULL)`` is the seed, 42, which would
+    count every null as one key, and a nullable hash column reaches
+    pandas as float64 in any Arrow batch holding a NULL, rounding every
+    hash in that batch."""
+    c = _col(col)
     res = sketch_aggregate(
-        df, F.xxhash64(_col(col)), factory, deserialize, fanout, weight_col=weight_col
+        df.where(c.isNotNull()), F.xxhash64(c), factory, deserialize, fanout,
+        weight_col=weight_col,
     )
     return res.sketch if res is not None else None
 
@@ -578,18 +584,6 @@ def ddsketch_of(df: DataFrame, col, alpha: float = 0.01,
     return sketch_aggregate(
         df, _col(col).cast("double"), partial(DDSketch, alpha, max_bins),
         ddsketch_from_bytes, fanout
-    )
-
-
-def moments_of(df: DataFrame, col, exact: bool = True, fanout: int = 32):
-    """Raw-moment summary (sketches/moments.py): n/Σv/Σv²/Σv³/Σv⁴ +
-    min/max; integer mode keeps Σv, Σv² exact at arbitrary scale."""
-    from q_digest_spark.sketches import moments_from_bytes
-    from q_digest_spark.sketches.moments import Moments
-
-    c = _col(col).cast("long") if exact else _col(col).cast("double")
-    return sketch_aggregate(
-        df, c, partial(Moments, exact), moments_from_bytes, fanout
     )
 
 

@@ -271,9 +271,8 @@ def priority_sample(
 ) -> DataFrame:
     """Priority sample (Duffield-Lund-Thorup, JACM 2007) of the k+1
     top-priority rows — the k-row sample plus the threshold witness
-    whose priority is tau. See sketches/prioritysample.py for the
-    estimator contract; this is the distributed, engine-portable
-    variant.
+    whose priority is tau; priority_subset_sums applies the
+    estimator.
 
     Integer DLT priority floor(w / u) = (w * 2^32) div (h32 + 1),
     with u = (h32+1)/2^32 derived from md5(key||':'||salt). All-bigint:

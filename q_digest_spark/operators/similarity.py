@@ -28,8 +28,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..sketches.hashing import splitmix64
-
 
 def _normalize(m: np.ndarray) -> np.ndarray:
     m = m.astype(np.float64)
@@ -306,7 +304,6 @@ def write_embeddings_ivf(
     vec_col: str,
     path: str,
     n_clusters: int = 16,
-    centroids: np.ndarray | None = None,
     cap_rows: int | None = None,
 ) -> np.ndarray:
     """The storage half of IVF: write the embeddings table PARTITIONED
@@ -335,9 +332,9 @@ def write_embeddings_ivf(
     cell gets the column — s_c >= 1 — keeping the directory tree
     uniform). Recall is unaffected: splitting is storage-only.
     """
-    if centroids is None:
-        centroids = ivf_train_centroids(df, vec_col, n_clusters)
-    cents = np.ascontiguousarray(centroids, dtype=np.float64)
+    cents = np.ascontiguousarray(
+        ivf_train_centroids(df, vec_col, n_clusters), dtype=np.float64
+    )
     sdf = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
 
     def assign(batches: Iterable[pd.DataFrame]):
@@ -705,23 +702,6 @@ def centroid_cosine_scores(
         F.floor(cos * 1_000_000 + F.lit(0.5)).cast("long"),
     )
     return j.withColumn(out_col, score).drop("__qv", "__cent")
-
-
-def _cos_expr(a, b):
-    """JVM cosine between two array columns (cast to double), computed
-    with zip_with + aggregate folds — whole-stage codegen, no Python."""
-    da = F.transform(a, lambda x: x.cast("double"))
-    db = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(da, db, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    na = F.aggregate(
-        F.transform(da, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-    )
-    nb = F.aggregate(
-        F.transform(db, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-    )
-    return dot / F.sqrt(na * nb)
 
 
 def semantic_dedup(

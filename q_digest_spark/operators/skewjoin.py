@@ -48,7 +48,6 @@ def salted_join(
     key: str,
     salt: int = 16,
     hot_threshold: int | None = None,
-    hot: list | None = None,
 ) -> DataFrame:
     """Inner equi-join of ``fact`` ⋈ ``dim`` on ``key``, row-identical
     to ``fact.join(dim, key)`` but with hot fact keys spread across
@@ -61,16 +60,14 @@ def salted_join(
       are EXPLODED across all ``salt`` values, so every salted
       reducer finds its match.
 
-    ``hot`` short-circuits detection (pass the known hot list);
-    otherwise ``hot_threshold`` drives ``hot_keys`` (default: 5x the
-    mean rows/key, floor 1000). Output columns = fact columns + dim
-    non-key columns, like a plain join."""
-    if hot is None:
-        if hot_threshold is None:
-            n = fact.count()
-            k = max(1, fact.select(key).distinct().count())
-            hot_threshold = max(1000, 5 * n // k)
-        hot = hot_keys(fact, key, hot_threshold)
+    ``hot_threshold`` drives ``hot_keys`` (default: 5x the mean
+    rows/key, floor 1000). Output columns = fact columns + dim non-key
+    columns, like a plain join."""
+    if hot_threshold is None:
+        n = fact.count()
+        k = max(1, fact.select(key).distinct().count())
+        hot_threshold = max(1000, 5 * n // k)
+    hot = hot_keys(fact, key, hot_threshold)
     if not hot:
         return fact.join(dim, key)
 

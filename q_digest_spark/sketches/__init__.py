@@ -129,9 +129,3 @@ def counting_bloom_from_bytes(buf: bytes):
     from .cbloom import CountingBloom
 
     return CountingBloom.from_bytes(buf)
-
-
-def prioritysample_from_bytes(buf: bytes):
-    from .prioritysample import PrioritySample
-
-    return PrioritySample.from_bytes(buf)

@@ -9,10 +9,11 @@ eps * n with probability 1 - delta. Merge = elementwise add.
 
 Shared body: ``_CounterTable`` here is the one depth x width int64
 counter table behind CountMin, CUCountMin (cucountmin.py) and AMS
-(ams.py): constructor, ``update_batch``, shape-checked elementwise-add
-``merge``, the ``<4sBBIq>`` header (magic, ver, depth, width, n) plus
-the row-major table, and repr. ``_CountMinRows`` adds the Count-Min
-row-hash family and its min-of-rows queries, shared with CUCountMin.
+(ams.py): constructor, ``update_batch``, type- and shape-checked
+elementwise-add ``merge``, the ``<4sBBIq>`` header (magic, ver,
+depth, width, n) plus the row-major table, and repr.
+``_CountMinRows`` adds the Count-Min row-hash family and its
+min-of-rows queries, shared with CUCountMin.
 Each class names its own ``MAGIC`` and ``update_hashes``.
 """
 
@@ -48,6 +49,8 @@ class _CounterTable:
             raise ValueError(f"{type(self).__name__} shape mismatch")
 
     def merge(self, other):
+        if type(other) is not type(self):
+            raise TypeError(f"cannot merge {type(other).__name__} into {type(self).__name__}")
         self._check_shape(other)
         self.table += other.table
         self.n += other.n

@@ -108,8 +108,3 @@ class EHSum(DGIM):
             raise ValueError("values must be positive")
         for _ in range(int(v)):
             self.insert(int(t))
-
-
-def ehsum_from_sorted(ts, vals, r: int = 2) -> EHSum:
-    """Module-level wrapper (safe to close over in Spark tasks)."""
-    return EHSum.from_sorted_values(ts, vals, r=r)

@@ -69,13 +69,6 @@ def rehash(hashes: np.ndarray, seed: int) -> np.ndarray:
     return splitmix64(hashes ^ splitmix64(np.full(1, seed, dtype=U64)))
 
 
-def seeded_rehash_matrix(hashes: np.ndarray, n_seeds: int, base_seed: int = 0x51A2) -> np.ndarray:
-    """(len(hashes), n_seeds) matrix of independent re-hashes; used by
-    MinHash signatures. Vectorized via broadcasting."""
-    seeds = splitmix64(np.arange(n_seeds, dtype=np.int64).view(U64) + U64(base_seed))
-    return splitmix64(hashes[:, None] ^ seeds[None, :])
-
-
 def bit_length_u64(x: np.ndarray) -> np.ndarray:
     """Vectorized bit_length for uint64 values < 2**53 (exact via frexp)."""
     x = np.asarray(x, dtype=np.float64)

@@ -94,6 +94,8 @@ class KLL:
 
     # --------------------------------------------------------------- merge
     def merge(self, other: "KLL") -> "KLL":
+        if type(other) is not type(self):
+            raise TypeError(f"cannot merge {type(other).__name__} into {type(self).__name__}")
         self.k = max(self.k, other.k)
         while len(self.levels) < len(other.levels):
             self.levels.append(np.empty(0, dtype=np.float64))

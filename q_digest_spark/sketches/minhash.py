@@ -27,7 +27,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from .hashing import hash_strings, seeded_rehash_matrix, splitmix64
+from .hashing import hash_strings, splitmix64
 
 U64 = np.uint64
 
@@ -51,15 +51,6 @@ def char_shingle_hashes(text: str, k: int = 5) -> np.ndarray:
         idx = np.arange(k)[None, :] + np.arange(n_win)[:, None]
         h = (b[idx] * powers[None, ::-1]).sum(axis=1)
     return np.unique(splitmix64(h))
-
-
-def word_token_hashes(text: str) -> np.ndarray:
-    if not text:
-        return np.empty(0, dtype=U64)
-    toks = pd.Series(text.lower().split())
-    if toks.empty:
-        return np.empty(0, dtype=U64)
-    return hash_strings(toks)
 
 
 _UMAX = np.uint64(np.iinfo(np.uint64).max)
@@ -175,10 +166,6 @@ def band_hashes(sig: np.ndarray, bands: int) -> np.ndarray:
         # mix the band index in so band i buckets never collide with band j
         acc ^= splitmix64(np.arange(bands, dtype=np.int64).view(U64))[None, :]
     return acc
-
-
-def signature_jaccard(a: np.ndarray, b: np.ndarray) -> float:
-    return float((a == b).mean())
 
 
 def exact_jaccard(text_a: str, text_b: str, shingle_k: int = 5) -> float:

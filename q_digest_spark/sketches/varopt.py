@@ -48,8 +48,8 @@ of an internal counter, so runs and merges are reproducible.
 
 No counterpart in the reference repo; north_rule sampling family —
 the variance-optimal complement to priority sampling
-(sketches/prioritysample.py, whose estimator is near-optimal but not
-optimal; VarOpt additionally keeps the sample EXACTLY k items).
+(operators/sampling.priority_sample, whose estimator is near-optimal
+but not optimal; VarOpt additionally keeps the sample EXACTLY k items).
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
-"""Sinks: write pages / sketch / metrics tables with the Iceberg
-partition layout, emulated on plain Parquet.
+"""Sinks: write the pages table with the Iceberg partition layout,
+emulated on plain Parquet, and Z-ordered Parquet files.
 
 BASELINE.json input_hint targets an Iceberg table; no Iceberg runtime
 jar ships in this container (checked: /opt/spark/jars), so per
@@ -81,47 +81,6 @@ def write_pages_partitioned(
     )
 
 
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def write_sketch_table(df: DataFrame, path: str, mode: str = "append") -> None:
-    """Sketch/metrics rows (e.g. grouped_sketch_rows output or the
-    checkpoint state table) — small, append-friendly."""
-    df.write.mode(mode).parquet(path)
-
-
-def write_metrics(spark: SparkSession, path: str, rows: list[dict]) -> None:
-    """One metrics row per job/stage: plain dicts -> parquet append."""
-    if not rows:
-        return
-    spark.createDataFrame(rows).write.mode("append").parquet(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Hash-bucketed, optionally sorted table (Spark's bucketBy — the
-    session-catalog equivalent of Iceberg's bucket transform for JOIN
-    co-location rather than scan pruning): two tables bucketed on the
-    join key with the same bucket count join WITHOUT a shuffle — at
-    100 TB the win is an entire Exchange of the fact table removed
-    from every keyed join/aggregation that follows. Asserted in
-    tests/test_sinks_skew.py: the bucketed join plan contains no
-    Exchange over the bucketed sides."""
-    w = df.write.mode(mode).format("parquet")
-    if sort_col:
-        w = w.bucketBy(n_buckets, bucket_col).sortBy(sort_col)
-    else:
-        w = w.bucketBy(n_buckets, bucket_col)
-    w.saveAsTable(table_name)
-
-
 # ----------------------------------------------------------- z-order
 def zorder_value(x, y, bits: int = 16):
     """Morton (Z-order) interleave of two rank-normalized ints as a
@@ -163,7 +122,6 @@ def write_zordered(
     col_y: str,
     n_files: int = 16,
     bits: int = 16,
-    bounds: dict | None = None,
 ) -> None:
     """Write ``df`` as parquet clustered by the Z-order curve over
     (col_x, col_y): range-partition + sort on the interleaved Morton
@@ -172,19 +130,14 @@ def write_zordered(
     columns — selective predicates on either column (or both) skip
     most files, where a single-column sort helps only its own column.
     File-level range tightness is asserted in tests/test_zorder.py
-    via DuckDB's parquet_metadata.
-
-    ``bounds``: optional {col: (lo, hi)} to skip the min/max scan
-    (at 100 TB pass known domain bounds; otherwise ONE aggregate
-    computes them)."""
-    if bounds is None:
-        row = df.agg(
-            F.min(col_x), F.max(col_x), F.min(col_y), F.max(col_y)
-        ).collect()[0]
-        bounds = {col_x: (row[0], row[1]), col_y: (row[2], row[3])}
+    via DuckDB's parquet_metadata. ONE aggregate computes the min/max
+    bounds of both columns."""
+    x_lo, x_hi, y_lo, y_hi = df.agg(
+        F.min(col_x), F.max(col_x), F.min(col_y), F.max(col_y)
+    ).collect()[0]
     z = zorder_value(
-        zorder_rank(col_x, *bounds[col_x], bits=bits),
-        zorder_rank(col_y, *bounds[col_y], bits=bits),
+        zorder_rank(col_x, x_lo, x_hi, bits=bits),
+        zorder_rank(col_y, y_lo, y_hi, bits=bits),
         bits=bits,
     )
     (

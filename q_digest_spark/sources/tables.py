@@ -15,8 +15,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(name)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_all(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -30,7 +30,6 @@ from __future__ import annotations
 
 from typing import Iterable
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 

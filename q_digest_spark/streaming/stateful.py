@@ -27,123 +27,71 @@ same ``STATE_SCHEMA``) is mechanical when the dependency exists.
 from __future__ import annotations
 
 from functools import partial
-from typing import Callable, Iterable, Tuple
+from typing import Iterable, Tuple
 
 import pandas as pd
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 OUTPUT_SCHEMA = "key string, n long, p50 double, p95 double, p99 double"
+MG_OUTPUT_SCHEMA = "key string, item string, est long, n long"
 STATE_SCHEMA = "sketch binary, n long"
 
 
-def update_state(state: GroupState, batches: Iterable[pd.DataFrame], factory, deserialize):
-    """The one per-key state step: decode the stored sketch (or start
-    ``factory()``), feed every batch's non-null ``v``, count them, and
-    store the bytes back as ``STATE_SCHEMA``. Returns (sketch, n)."""
-    if state.exists:
-        buf, n = state.get
-        sk = deserialize(bytes(buf))
-    else:
-        sk, n = factory(), 0
-    for pdf in batches:
-        vals = pdf["v"].dropna()
-        if len(vals):
-            sk.update_batch(vals.to_numpy())
-            n += len(vals)
-    state.update((sk.to_bytes(), n))
-    return sk, n
-
-
-def make_stateful_quantiles(factory: Callable[[], object], deserialize):
-    """Returns the (key, pdf_iter, state) -> pdf_iter function for
-    df.groupBy(key).applyInPandasWithState(...)."""
+def _keyed_state(
+    stream_df, key_col: str, value_col: str, value_type: str,
+    factory, deserialize, emit, output_schema: str,
+):
+    """The one keyed-state stream: (key, v) rows grouped by key through
+    ``applyInPandasWithState`` in update mode. Each micro-batch decodes
+    the key's stored sketch (or starts ``factory()``), feeds every
+    batch's non-null ``v``, counts them, stores the bytes back as
+    ``STATE_SCHEMA`` and yields ``emit(key, sketch, n)``."""
+    from pyspark.sql import functions as F
 
     def update(
         key: Tuple[str], batches: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
-        sk, n = update_state(state, batches, factory, deserialize)
-        est = sk.quantiles([0.5, 0.95, 0.99])
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n": [n],
-                "p50": [float(est[0])],
-                "p95": [float(est[1])],
-                "p99": [float(est[2])],
-            }
-        )
-
-    return update
-
-
-def make_stateful_quantiles_ttl(factory, deserialize, ttl_ms: int):
-    """TTL variant: idle keys are EVICTED — on processing-time timeout
-    the key's final estimates are emitted (final=true) and its state
-    removed. Without eviction an unbounded key space (urls!) grows
-    state forever; with it, state size is bounded by (arrival rate x
-    ttl). A key seen again after eviction restarts from an empty
-    sketch."""
-
-    def update(
-        key: Tuple[str], batches: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        def row(sk, n, final):
-            est = sk.quantiles([0.5, 0.95, 0.99])
-            return pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "n": [n],
-                    "p50": [float(est[0])],
-                    "p95": [float(est[1])],
-                    "p99": [float(est[2])],
-                    "final": [final],
-                }
-            )
-
-        if state.hasTimedOut:
+        if state.exists:
             buf, n = state.get
             sk = deserialize(bytes(buf))
-            state.remove()
-            yield row(sk, n, True)
-            return
-        sk, n = update_state(state, batches, factory, deserialize)
-        state.setTimeoutDuration(ttl_ms)
-        yield row(sk, n, False)
-
-    return update
-
-
-def grouped_streaming_quantiles_ttl(
-    stream_df, key_col: str, value_col: str, factory, deserialize,
-    ttl_ms: int = 3_600_000, output_mode: str = "update",
-):
-    """Per-key running quantiles with state TTL (processing-time
-    timeout eviction). Output adds a `final` flag: true on the
-    eviction row. See make_stateful_quantiles_ttl for semantics.
-
-    CAVEAT (observed in this Spark build): do NOT drive a query that
-    uses ProcessingTimeTimeout with ``processAllAvailable()`` — the
-    engine keeps scheduling timeout work and the call never returns.
-    Poll the sink for expected rows instead (the pattern in
-    tests/test_stateful_streaming.py)."""
-    from pyspark.sql import functions as F
+        else:
+            sk, n = factory(), 0
+        for pdf in batches:
+            vals = pdf["v"].dropna()
+            if len(vals):
+                sk.update_batch(vals.to_numpy())
+                n += len(vals)
+        state.update((sk.to_bytes(), n))
+        yield emit(key[0], sk, n)
 
     keyed = stream_df.select(
         F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("long").alias("v"),
+        F.col(value_col).cast(value_type).alias("v"),
     )
     return keyed.groupBy("key").applyInPandasWithState(
-        make_stateful_quantiles_ttl(factory, deserialize, ttl_ms),
-        outputStructType=OUTPUT_SCHEMA + ", final boolean",
+        update,
+        outputStructType=output_schema,
         stateStructType=STATE_SCHEMA,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _quantile_row(key, sk, n) -> pd.DataFrame:
+    est = sk.quantiles([0.5, 0.95, 0.99])
+    return pd.DataFrame(
+        {
+            "key": [key],
+            "n": [n],
+            "p50": [float(est[0])],
+            "p95": [float(est[1])],
+            "p99": [float(est[2])],
+        }
     )
 
 
 def grouped_streaming_quantiles(
-    stream_df, key_col: str, value_col: str, factory, deserialize,
-    output_mode: str = "update",
+    stream_df, key_col: str, value_col: str, factory, deserialize
 ):
     """stream_df -> streaming DataFrame of per-key running quantiles.
 
@@ -154,70 +102,38 @@ def grouped_streaming_quantiles(
         q = out.writeStream.format("memory").queryName("t") \
                .outputMode("update").start()
     """
-    from pyspark.sql import functions as F
-
-    keyed = stream_df.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("long").alias("v"),
-    )
-    return keyed.groupBy("key").applyInPandasWithState(
-        make_stateful_quantiles(factory, deserialize),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        stream_df, key_col, value_col, "long", factory, deserialize,
+        _quantile_row, OUTPUT_SCHEMA,
     )
 
 
-MG_OUTPUT_SCHEMA = "key string, item string, est long, n long"
+def _heavy_rows(key, sk, n) -> pd.DataFrame:
+    items = sk.items()
+    return pd.DataFrame(
+        {
+            "key": [key] * len(items),
+            "item": list(items.keys()),
+            "est": [int(v) for v in items.values()],
+            "n": [n] * len(items),
+        }
+    )
 
 
-def make_stateful_heavy(k: int):
-    """(key, pdf_iter, state) -> pdf_iter for per-key streaming
-    Misra-Gries heavy hitters: state is the MG summary's own bytes,
-    each micro-batch emits the key's CURRENT candidate set tagged
-    with the running n (the final batch's rows — max n per key — are
-    the drained summary). MG's deterministic guarantee survives
+def grouped_streaming_heavy(stream_df, key_col: str, value_col: str, k: int = 256):
+    """stream_df -> streaming DataFrame of per-key Misra-Gries
+    candidate sets (key, item, est, n). State is the MG summary's own
+    bytes, O(k) per key, sharded across executors by the stream's
+    groupBy. Each micro-batch emits the key's CURRENT candidate set
+    tagged with the running n (the final batch's rows — max n per key
+    — are the drained summary). MG's deterministic guarantee survives
     arbitrary batching: stored count <= true count <= stored +
     n/(k+1), so every item with true count > n/(k+1) is in the final
     candidate set regardless of how the stream was chopped."""
     from ..sketches import misragries_from_bytes
     from ..sketches.misragries import MisraGries
 
-    def update(
-        key: Tuple[str], batches: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        sk, n = update_state(state, batches, partial(MisraGries, k), misragries_from_bytes)
-        items = sk.items()
-        yield pd.DataFrame(
-            {
-                "key": [key[0]] * len(items),
-                "item": list(items.keys()),
-                "est": [int(v) for v in items.values()],
-                "n": [n] * len(items),
-            }
-        )
-
-    return update
-
-
-def grouped_streaming_heavy(
-    stream_df, key_col: str, value_col: str, k: int = 256,
-    output_mode: str = "update",
-):
-    """stream_df -> streaming DataFrame of per-key Misra-Gries
-    candidate sets (key, item, est, n). State size is O(k) per key,
-    sharded across executors by the stream's groupBy."""
-    from pyspark.sql import functions as F
-
-    keyed = stream_df.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("string").alias("v"),
-    )
-    return keyed.groupBy("key").applyInPandasWithState(
-        make_stateful_heavy(k),
-        outputStructType=MG_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        stream_df, key_col, value_col, "string", partial(MisraGries, k),
+        misragries_from_bytes, _heavy_rows, MG_OUTPUT_SCHEMA,
     )

@@ -16,7 +16,6 @@ from q_digest_spark.operators.dedup import (
 from q_digest_spark.operators.multimodal import (
     blob_metadata,
     extract_features,
-    frame_sample_stub,
 )
 from q_digest_spark.operators.similarity import (
     brute_force_topk,
@@ -203,25 +202,6 @@ def test_multimodal_plumbing(spark):
     feats = {r["id"]: r for r in extract_features(df, "blob", "id", feature_dim=4).collect()}
     assert len(feats[8]["feature"]) == 4
     assert feats[20]["feature"] == [0.0, 0.0, 0.0, 0.0]
-    frames = frame_sample_stub(df, "blob", "id", every_n=5).collect()
-    assert len(frames) > 20  # blobs exploded into multiple frames
-    got = b"".join(bytes(r["frame"]) for r in sorted(frames, key=lambda r: (r["id"], r["frame_no"])) if r["id"] == 10)
-    assert got == rows[10][1]  # lossless frame split
-
-
-def test_multimodal_resize_plumbing(spark):
-    from pyspark.sql import functions as F
-
-    from q_digest_spark.operators.multimodal import resize_stub
-
-    df = spark.range(0, 50).select(
-        F.col("id"), F.encode(F.concat(F.lit("blobdata" * 400), F.col("id")), "UTF-8").alias("blob")
-    )
-    out = resize_stub(df, "blob", "id", target_w=16, target_h=16).collect()
-    assert len(out) == 50
-    for r in out:
-        assert r["width"] == 16 and r["height"] == 16
-        assert len(r["resized"]) == 16 * 16  # bounded by target dims
 
 
 # ------------------------------------------------------ LSH bucket caps

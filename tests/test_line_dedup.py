@@ -1,15 +1,11 @@
-"""corpus_line_survivors / corpus_line_dedup_text: CCNet-style
-cross-document line dedup — first-occurrence-wins semantics against a
-pure-Python oracle, and reconstruction round-trip."""
+"""corpus_line_survivors: CCNet-style cross-document line dedup —
+first-occurrence-wins semantics against a pure-Python oracle."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from q_digest_spark.operators.dedup import (
-    corpus_line_dedup_text,
-    corpus_line_survivors,
-)
+from q_digest_spark.operators.dedup import corpus_line_survivors
 
 DOCS = [
     (1, "alpha beta\nshared line\ngamma"),
@@ -52,28 +48,6 @@ def test_narrow_shuffle_schema(spark, docs_df):
     surv = corpus_line_survivors(docs_df, "text", "doc_id")
     assert "line" not in surv.columns
     assert set(surv.columns) == {"id", "line_no", "line_hash", "n_chars", "keep"}
-
-
-def test_reconstruction(spark, docs_df):
-    got = {
-        r["id"]: r["text"]
-        for r in corpus_line_dedup_text(docs_df, "text", "doc_id").collect()
-    }
-    oracle = python_oracle()
-    expect = {}
-    for doc_id, text in sorted(DOCS):
-        kept = [
-            raw.strip()
-            for line_no, raw in enumerate(text.split("\n"))
-            if raw.strip() and oracle[(doc_id, line_no)]
-        ]
-        if kept or any(raw.strip() for raw in text.split("\n")):
-            pass
-        expect[doc_id] = "\n".join(kept)
-    # doc 4 has no non-empty lines at all -> absent from the grouped result
-    assert 4 not in got
-    expect.pop(4)
-    assert got == expect
 
 
 def test_chars_removed_accounting(spark, docs_df):

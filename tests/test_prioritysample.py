@@ -1,88 +1,14 @@
-"""Priority sampling (Duffield-Lund-Thorup JACM'07): the sketch class
-(sketches/prioritysample.py) and the distributed engine-portable
-operator (operators/sampling.priority_sample / priority_subset_sums).
-
-The class and the operator share the integer-priority contract
-(p = floor(w * 2^32 / (h+1))) but derive h differently (splitmix64
-vs md5); each is tested against its own invariants, and the operator
-additionally against a numpy re-implementation of the md5 contract.
-"""
+"""Priority sampling (Duffield-Lund-Thorup JACM'07): the distributed
+operator (operators/sampling.priority_sample / priority_subset_sums),
+tested against a numpy re-implementation of its md5 integer-priority
+contract (p = floor(w * 2^32 / (h+1)))."""
 
 import hashlib
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
-from q_digest_spark.sketches.prioritysample import PrioritySample
-
-KEYS = [f"k{i}" for i in range(4000)]
-RNG = np.random.default_rng(7)
-W = RNG.integers(1, 2000, 4000)
-TRUTH = int(W.sum())
-
-
-def test_exact_regime_below_k():
-    s = PrioritySample(k=16)
-    s.update_batch(KEYS[:10], W[:10])
-    assert s.tau == 0
-    assert s.estimate_total() == int(W[:10].sum())
-    assert s.subset_sum(KEYS[:3]) == int(W[:3].sum())
-
-
-def test_merge_equals_oneshot_and_idempotent():
-    a = PrioritySample(k=48)
-    a.update_batch(KEYS, W)
-    parts = []
-    for lo in range(0, 4000, 700):
-        t = PrioritySample(k=48)
-        t.update_batch(KEYS[lo : lo + 700], W[lo : lo + 700])
-        parts.append(t)
-    m = parts[3]
-    for t in parts[:3] + parts[4:]:
-        m.merge(t)
-    assert list(m.keys) == list(a.keys)
-    assert list(m.prio) == list(a.prio)
-    # idempotent: re-merging the full sketch changes nothing
-    m.merge(a)
-    assert list(m.keys) == list(a.keys)
-    assert m.tau == a.tau
-
-
-def test_serialization_roundtrip():
-    a = PrioritySample(k=32, seed=5)
-    a.update_batch(KEYS, W)
-    b = PrioritySample.from_bytes(a.to_bytes())
-    assert list(b.keys) == list(a.keys)
-    assert list(b.weights) == list(a.weights)
-    assert b.tau == a.tau and b.k == a.k and b.seed == a.seed
-    assert b.estimate_total() == a.estimate_total()
-
-
-def test_unbiased_over_seeds():
-    """Mean estimate over 200 hash seeds within 3% of the true total
-    (rel std of the mean ~ 1/sqrt(63*200) ~ 0.9%)."""
-    ests = []
-    sub = set(KEYS[::4])
-    subt = int(W[::4].sum())
-    sub_ests = []
-    for seed in range(200):
-        s = PrioritySample(k=64, seed=seed)
-        s.update_batch(KEYS, W)
-        ests.append(s.estimate_total())
-        sub_ests.append(s.subset_sum(sub))
-    assert abs(np.mean(ests) - TRUTH) / TRUTH < 0.03
-    assert abs(np.mean(sub_ests) - subt) / subt < 0.05
-
-
-def test_weight_domain_validation():
-    s = PrioritySample(k=8)
-    with pytest.raises(ValueError):
-        s.update_batch(["a"], [0])
-    with pytest.raises(ValueError):
-        s.update_batch(["a"], [1 << 31])
-    with pytest.raises(ValueError):
-        PrioritySample(k=8, seed=1).merge(PrioritySample(k=8, seed=2))
+W = np.random.default_rng(7).integers(1, 2000, 4000)
 
 
 def _md5_priorities(keys, weights, salt):

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from q_digest_spark.operators.aggregate import grouped_sketch_rows
 from q_digest_spark.sketches import QDigest, qdigest_from_bytes
-from q_digest_spark.sources.sinks import read_pages, write_pages_partitioned
+from q_digest_spark.sources.sinks import write_pages_partitioned
 from q_digest_spark.sources.webpages import generate_webpages
 
 
@@ -32,7 +32,7 @@ def test_partition_layout_on_disk(pages_path):
 def test_day_filter_prunes_partitions(spark, pages_path):
     """A warc_ts range predicate must prune day directories: the
     pruned scan reads far fewer files than the full scan."""
-    df = read_pages(spark, pages_path)
+    df = spark.read.parquet(pages_path)
     full_files = df.select(F.input_file_name().alias("f")).distinct().count()
     one_day = df.where(F.col("warc_day") == "2025-01-03")
     day_files = one_day.select(F.input_file_name().alias("f")).distinct().count()
@@ -41,7 +41,7 @@ def test_day_filter_prunes_partitions(spark, pages_path):
 
 
 def test_bucket_filter_prunes(spark, pages_path):
-    df = read_pages(spark, pages_path)
+    df = spark.read.parquet(pages_path)
     one_bucket = df.where(F.col("url_bucket") == 3)
     files = one_bucket.select(F.input_file_name().alias("f")).distinct().count()
     full = df.select(F.input_file_name().alias("f")).distinct().count()
@@ -49,7 +49,7 @@ def test_bucket_filter_prunes(spark, pages_path):
 
 
 def test_roundtrip_preserves_rows(spark, pages_path):
-    df = read_pages(spark, pages_path)
+    df = spark.read.parquet(pages_path)
     src = generate_webpages(spark, 2000, n_partitions=8)
     assert df.count() == src.count()
     assert df.agg(F.countDistinct("url")).collect()[0][0] == src.agg(
@@ -107,43 +107,3 @@ def test_iceberg_probe_and_gated_writer(spark):
     )
     with pytest.raises(RuntimeError, match="Iceberg"):
         write_pages_iceberg(df, "local.pages")
-
-
-def test_bucketed_join_has_no_shuffle(spark, sf_test):
-    """Two tables bucketed on the join key with equal bucket counts
-    must join with ZERO Exchange operators over the bucketed sides —
-    the co-located-join contract that removes the fact-table shuffle
-    at 10^12 rows."""
-    import io
-    from contextlib import redirect_stdout
-
-    from q_digest_spark.sources.sinks import write_bucketed_table
-
-    orders = spark.read.parquet(f"{sf_test}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_test}/customer.parquet")
-    write_bucketed_table(orders, "b_orders", "o_custkey", n_buckets=8)
-    write_bucketed_table(
-        cust.withColumnRenamed("c_custkey", "o_custkey"), "b_cust", "o_custkey", n_buckets=8
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the sort-merge path: with broadcast on, Spark would
-        # (correctly) broadcast the small side — at 10^12-row scale
-        # BOTH sides are big and bucketing is what kills the shuffle
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = (
-            spark.table("b_orders")
-            .join(spark.table("b_cust"), "o_custkey")
-            .groupBy("o_custkey")
-            .count()
-        )
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan}"
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_cust")

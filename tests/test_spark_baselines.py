@@ -59,6 +59,38 @@ def test_qdigest_of_empty_and_all_null_return_none(spark):
         assert qdigest_of(df, "v") is None
         assert kll_of(df, "v") is None
 
+
+def test_hashed_of_skips_nulls(spark):
+    """xxhash64(NULL) is 42, not NULL: the hashed *_of helpers drop
+    NULL rows, so an all-null column gives None and a partly-null one
+    counts only its non-null rows. A NULL in one partition must not
+    change how the other rows hash either (Arrow hands pandas a nullable
+    bigint as float64 in a batch holding a NULL, rounding every hash in
+    it): key 'x' sits in a partition without NULLs and in one with a
+    NULL, and the probes use the exact JVM hash."""
+    from q_digest_spark.operators.membership import bloom_probe_column
+    from q_digest_spark.operators.quantiles import bloom_of, countmin_of, hll_of
+
+    nulls = spark.range(0, 100).select(F.lit(None).cast("string").alias("k"))
+    assert hll_of(nulls, "k") is None
+    assert countmin_of(nulls, "k") is None
+    mixed = spark.range(0, 100).select(
+        F.when(F.col("id") % 4 == 0, F.lit(None)).otherwise(F.col("id") % 5).cast("string").alias("k")
+    )
+    cms = countmin_of(mixed, "k")
+    assert cms.n == 75
+    assert round(hll_of(mixed, "k").estimate()) == 5
+
+    rows = F.array(*[F.lit(k).cast("string") for k in ["x", "x", "y", "x", None, "z", "x"]])
+    df = spark.range(0, 7, numPartitions=2).select(rows[F.col("id").cast("int")].alias("k"))
+    assert [[r.k for r in p] for p in df.rdd.glom().collect()] == [["x", "x", "y"], ["x", None, "z", "x"]]
+    keys = spark.createDataFrame([("x",), ("y",), ("z",)], "k string")
+    hits = bloom_probe_column(keys, "k", bloom_of(df, "k")).collect()
+    assert all(r.is_member for r in hits)
+    h = np.array([r.h for r in keys.select(F.xxhash64("k").alias("h")).collect()], dtype=np.int64)
+    assert list(countmin_of(df, "k").estimate_hashes(h.view(np.uint64))) == [4, 1, 1]
+
+
 def test_hll_vs_spark_approx_count_distinct(spark, sf_test):
     from q_digest_spark.operators.quantiles import hll_of
 

@@ -72,69 +72,3 @@ def test_stateful_per_key_quantiles(spark):
             q.stop()
     finally:
         shutil.rmtree(d, ignore_errors=True)
-
-
-def test_grouped_streaming_quantiles_ttl_evicts_idle_keys(spark):
-    """TTL state: an idle key is evicted (final=true emitted, state
-    removed) and a later re-arrival restarts from an empty sketch —
-    the bounded-state contract for unbounded key spaces. The sink is
-    POLLED rather than processAllAvailable'd (which never returns
-    under ProcessingTimeTimeout — documented in stateful.py)."""
-    import os
-    import shutil
-    import tempfile
-    import time
-    from functools import partial
-
-    from q_digest_spark.sketches import QDigest, qdigest_from_bytes
-    from q_digest_spark.streaming.stateful import grouped_streaming_quantiles_ttl
-
-    d = tempfile.mkdtemp(prefix="qds_ttl_")
-    src = os.path.join(d, "in")
-    os.makedirs(src)
-    ckpt = os.path.join(d, "ckpt")
-
-    def write_file(name, rows):
-        spark.createDataFrame(rows, "key string, v long").coalesce(1).write.parquet(
-            os.path.join(src, name)
-        )
-
-    def wait_rows(pred, timeout=90):
-        t0 = time.time()
-        while time.time() - t0 < timeout:
-            rows = spark.sql("select * from ttlq").collect()
-            if pred(rows):
-                return rows
-            time.sleep(0.5)
-        raise AssertionError(
-            f"condition not reached; rows={spark.sql('select * from ttlq').collect()}"
-        )
-
-    write_file("f0", [("a", 10), ("a", 20), ("b", 5)])
-    stream = spark.readStream.schema("key string, v long").parquet(src + "/*")
-    out = grouped_streaming_quantiles_ttl(
-        stream, "key", "v", partial(QDigest, 0, 8), qdigest_from_bytes, ttl_ms=1
-    )
-    q = (
-        out.writeStream.format("memory").queryName("ttlq")
-        .outputMode("update").option("checkpointLocation", ckpt).start()
-    )
-    try:
-        wait_rows(lambda rs: len({r["key"] for r in rs}) >= 2)
-        time.sleep(0.1)
-        write_file("f1", [("a", 30)])  # b stays idle -> its timeout fires
-        wait_rows(lambda rs: any(r["key"] == "b" and r["final"] for r in rs))
-        write_file("f2", [("b", 99)])  # b re-arrives AFTER eviction
-        rows = wait_rows(
-            lambda rs: any(
-                r["key"] == "b" and not r["final"] and r["p50"] == 99.0 for r in rs
-            )
-        )
-        # the restart row proves prior state was really removed
-        assert any(
-            r["key"] == "b" and not r["final"] and r["n"] == 1 and r["p50"] == 99.0
-            for r in rows
-        )
-    finally:
-        q.stop()
-        shutil.rmtree(d, ignore_errors=True)

@@ -102,67 +102,6 @@ def test_bloom_stream_dedup_failed_sink_retry_reemits(spark):
     assert dd.emitted == 2
 
 
-def test_chained_dedup_then_windowed_quantiles(spark):
-    """Two stateful operators composed in ONE streaming query: url
-    dedup -> windowed quantiles (watermark set once upstream,
-    assume_watermarked=True downstream). The duplicate url's value
-    must never reach the window's sketch."""
-    import os
-    import tempfile
-    from datetime import datetime
-    from functools import partial
-
-    from q_digest_spark.sketches import QDigest, qdigest_from_bytes
-    from q_digest_spark.streaming.windowed import windowed_streaming_quantiles
-
-    def ts(m):
-        return datetime(2025, 1, 1, 10, m, 0)
-
-    d = tempfile.mkdtemp(prefix="qds_chain_")
-    src = os.path.join(d, "in")
-    os.makedirs(src)
-    try:
-        rows = [(ts(1), "u1", 100), (ts(2), "u1", 999), (ts(3), "u2", 200)]
-        spark.createDataFrame(rows, "ts timestamp, url string, v long").coalesce(
-            1
-        ).write.parquet(os.path.join(src, "f0"))
-        stream = spark.readStream.schema("ts timestamp, url string, v long").parquet(
-            src + "/*"
-        )
-        dd = dedup_stream_by_key(stream, "url", "ts", watermark="5 minutes")
-        out = windowed_streaming_quantiles(
-            dd, "ts", "v", partial(QDigest, 0, 14), qdigest_from_bytes,
-            window="10 minutes", watermark="5 minutes", assume_watermarked=True,
-        )
-        q = (
-            out.writeStream.format("memory").queryName("chain2")
-            .outputMode("append").option("checkpointLocation", os.path.join(d, "ck"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            spark.createDataFrame(
-                [(ts(40), "u9", 1)], "ts timestamp, url string, v long"
-            ).coalesce(1).write.parquet(os.path.join(src, "f1"))
-            q.processAllAvailable()
-            spark.createDataFrame(
-                [(ts(55), "u8", 1)], "ts timestamp, url string, v long"
-            ).coalesce(1).write.parquet(os.path.join(src, "f2"))
-            q.processAllAvailable()
-            rows_out = [
-                r for r in spark.sql("select * from chain2").collect()
-                if r["win_start"] == ts(0)
-            ]
-            assert len(rows_out) == 1
-            r = rows_out[0]
-            assert r["n"] == 2  # u1's duplicate (999) was deduped away
-            assert r["p50"] == 100.0 and r["p99"] == 200.0
-        finally:
-            q.stop()
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_bloom_dedup_partitioned_across_batches_and_restart(spark):
     """Executor-sharded forever-dedup: dedups across micro-batches,
     and — the property the driver-held filter lacks — across a QUERY

@@ -1,6 +1,7 @@
 """Pinned wire bytes: sha256 of ``to_bytes()`` for seeded KLL, REQ,
-Count-Min, conservative-update Count-Min, AMS and HLL sketches, each
-built from two seeded halves, merged, and round-tripped through its
+Q-Digest (16- and 32-bit universes), t-digest, Count-Min,
+conservative-update Count-Min, AMS, HLL and Bloom sketches, each built
+from two seeded halves, merged, and round-tripped through its
 module-level decoder. The sketches persist in checkpoint files and
 daily tables, so a refactor of their shared bodies must not move a
 byte."""
@@ -14,13 +15,19 @@ from q_digest_spark.sketches import (
     HLL,
     KLL,
     REQ,
+    Bloom,
     CountMin,
+    QDigest,
+    TDigest,
     ams_from_bytes,
+    bloom_from_bytes,
     countmin_from_bytes,
     cucountmin_from_bytes,
     hll_from_bytes,
     kll_from_bytes,
+    qdigest_from_bytes,
     req_from_bytes,
+    tdigest_from_bytes,
 )
 from q_digest_spark.sketches.ams import AMS
 from q_digest_spark.sketches.cucountmin import CUCountMin
@@ -57,8 +64,27 @@ def _table(factory):
     return build
 
 
+def _qdigest(bits):
+    def build(seed):
+        rng = np.random.default_rng(seed)
+        vals = np.minimum(rng.pareto(1.2, 40_000) * 64, (1 << bits) - 1).astype(np.int64)
+        sk = QDigest(64, bits)
+        for chunk in np.array_split(vals[:20_000], 5):
+            sk.update_batch(chunk)
+        sk.update_batch(vals[20_000:], rng.integers(1, 50, 20_000))
+        return sk
+
+    return build
+
+
 def _hll(seed):
     sk = HLL(12)
+    sk.update_batch(_keys(seed))
+    return sk
+
+
+def _bloom(seed):
+    sk = Bloom(1 << 16, 7)
     sk.update_batch(_keys(seed))
     return sk
 
@@ -70,12 +96,20 @@ CASES = {
     "cucms": (_table(lambda: CUCountMin(4, 1024)), cucountmin_from_bytes),
     "ams": (_table(lambda: AMS(5, 1024)), ams_from_bytes),
     "hll": (_hll, hll_from_bytes),
+    "qdigest16": (_qdigest(16), qdigest_from_bytes),
+    "qdigest32": (_qdigest(32), qdigest_from_bytes),
+    "tdigest": (_quantile(lambda: TDigest(100)), tdigest_from_bytes),
+    "bloom": (_bloom, bloom_from_bytes),
 }
 
 PINS = {
     "ams": (
         "a7bfb0237700d6043118bea083ed61a1149afda2925a7a120cdf5f053c22df87",
         "473487962e48fff218c6b98364656ea35a24f4f7ee65cf41d466f56beb927063",
+    ),
+    "bloom": (
+        "714774c8d104b0da2dbecd3e86399c105a9e14d3ed74f8491cc3ff26bfeb95ad",
+        "05190a408398119d0c92614656cc34af31278e00755539d8c1bb45980786bbdf",
     ),
     "cms": (
         "1f834ffdf1ed5897d3e871bee8787d971b9c035152acbb49de792c8bafad9a7d",
@@ -93,9 +127,21 @@ PINS = {
         "10ef65e3ed4ae169d5b7ab3a95607de00556b5809363b2f6ac7d9ed1a3b9ee19",
         "4385d18898426d6b7b8cefb888fc8862e206a0412881202693b989bf932598f5",
     ),
+    "qdigest16": (
+        "8146e8e7845418bd625026372f2f14a09e72fe5620d691c3b8bd13095eb19b67",
+        "0659e679f25a042d0761cc3a503f81aee5c3a192e509f839688a0a6553f5a7e0",
+    ),
+    "qdigest32": (
+        "e781c6aa789e46cd3fec2ea7a3271c6045de0990aa90a7463199ffc71d8062f9",
+        "d8af1dd0921d3dcf2270ca12ae84ef79e327ff607561cf4242c002be3b260770",
+    ),
     "req": (
         "97205f64363eb875ca01d51bf35699e8c66faa0be9eb631fc43dcc1c25b4473b",
         "a551e97c802ddefa1bd059e7ae41869b50631862525e951107cfc09d643d3fe3",
+    ),
+    "tdigest": (
+        "5b91b9e2d22ac16d846e8a1db1c86a58c47f4dcdcceb30952702a55d421a1997",
+        "5acdc7f96837ddfc4789759cccda330f292768963d78bd236854d3647e89f64e",
     ),
 }
 
