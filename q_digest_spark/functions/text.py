@@ -10,7 +10,7 @@ Design split:
 - anything expressible with built-in pyspark.sql.functions stays
   JVM-side (whole-stage codegen): domain_of, token_count,
   content_fingerprint (md5), quality counters;
-- extract_text / lang_id / fingerprint64 are Arrow-batched pandas UDFs
+- extract_text / lang_id are Arrow-batched pandas UDFs
   operating on whole Series with vectorized pandas .str ops — no
   per-row Python loops.
 """
@@ -110,8 +110,7 @@ def token_count(text) -> Column:
 
 def content_fingerprint(text) -> Column:
     """Deterministic content fingerprint both engines can compute:
-    md5 of whitespace-normalized, lower-cased text. (The rolling-hash
-    fingerprint64 below is the engine-native variant.)"""
+    md5 of whitespace-normalized, lower-cased text."""
     c = F.col(text) if isinstance(text, str) else text
     norm = F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
     return F.md5(norm)
@@ -241,82 +240,6 @@ def norm_ws(col):
     trim(regexp_replace(lower(x), '[ \t\n\r\f]+', ' ', 'g'))."""
     c = F.col(col) if isinstance(col, str) else col
     return F.trim(F.regexp_replace(F.lower(c), r"[ \t\n\r\f]+", " "))
-
-
-# --------------------------------------------------------- fingerprint64
-def _fingerprint64_np(strings) -> np.ndarray:
-    """Vectorized ACROSS documents Karp-Rabin 64-bit polynomial hash
-    (base 257, mod 2^64): all normalized texts are concatenated into
-    ONE byte buffer, weighted by the GLOBAL power sequence 257^j, and
-    per-document sums are recovered from a single cumsum via offsets;
-    each sum is then re-based to its own origin by multiplying with
-    inv(257)^start (257 is odd, hence invertible mod 2^64). No
-    per-row Python dispatch — the same concatenated-buffer technique
-    as sketches/minhash.py. Bit-identical to the per-string
-    sum(byte_i * 257^i) mod 2^64 definition (property-tested in
-    tests/test_text_and_webpages.py)."""
-    bs = strings if strings and isinstance(strings[0], bytes) else [
-        s.encode("utf-8") for s in strings
-    ]
-    n = len(bs)
-    lens = np.fromiter((len(b) for b in bs), dtype=np.int64, count=n)
-    total = int(lens.sum())
-    if total == 0:
-        return np.zeros(n, dtype=np.int64)
-    buf = np.frombuffer(b"".join(bs), dtype=np.uint8).astype(np.uint64)
-    base = np.uint64(257)
-    inv = np.uint64(pow(257, -1, 1 << 64))
-    with np.errstate(over="ignore"):
-        mults = np.full(total, base, dtype=np.uint64)
-        mults[0] = np.uint64(1)
-        powers = np.cumprod(mults)  # 257^j mod 2^64, global position j
-        csum = np.zeros(total + 1, dtype=np.uint64)
-        np.cumsum(buf * powers, out=csum[1:])
-        offsets = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(lens)])
-        seg = csum[offsets[1:]] - csum[offsets[:-1]]  # 257^start * hash
-        invmults = np.full(total, inv, dtype=np.uint64)
-        invmults[0] = np.uint64(1)
-        invpowers = np.cumprod(invmults)  # inv^j mod 2^64
-        starts = np.minimum(offsets[:-1], total - 1)
-        h = seg * invpowers[starts]
-    h[lens == 0] = np.uint64(0)
-    return h.view(np.int64)
-
-
-_FP64_CHUNK_BYTES = 8 << 20  # bound transient numpy (~5 arrays of buf size)
-
-
-def _fingerprint64_chunked(vals) -> np.ndarray:
-    """Apply _fingerprint64_np in sub-chunks whose concatenated text
-    stays under _FP64_CHUNK_BYTES: the vectorized path allocates ~5
-    total-length uint64 arrays (~40 B per text byte), so an unchunked
-    10k-row Arrow batch of ~100 KB documents would transiently need
-    tens of GB. Chunking keeps peak memory ~constant with no change
-    in output (each document is hashed independently). Inputs are
-    encoded ONCE here and the chunk bound counts utf-8 BYTES (len of
-    the Python string undercounts CJK/emoji text up to 4x)."""
-    encoded = [s.encode("utf-8") for s in vals]
-    n = len(encoded)
-    out = np.empty(n, dtype=np.int64)
-    i = 0
-    while i < n:
-        j, acc = i, 0
-        while j < n and (acc == 0 or acc + len(encoded[j]) <= _FP64_CHUNK_BYTES):
-            acc += len(encoded[j])
-            j += 1
-        out[i:j] = _fingerprint64_np(encoded[i:j])
-        i = j
-    return out
-
-
-@F.pandas_udf(T.LongType())
-def fingerprint64(text: pd.Series) -> pd.Series:
-    """Engine-native 64-bit rolling (polynomial) hash of the
-    normalized text — fully vectorized per batch, memory-bounded by
-    chunking the concatenated buffer (see _fingerprint64_chunked)."""
-    t = text.astype("string").str.lower().str.replace(r"\s+", " ", regex=True).str.strip()
-    vals = t.fillna("").to_numpy(dtype=object)
-    return pd.Series(_fingerprint64_chunked(vals))
 
 
 # ------------------------------------------------------ repetition stats

@@ -5,8 +5,8 @@ This is the Spark-native replacement for the reference's MPI dataflow
 reduce; /root/reference/mpi-implementation/src/main.c:18-65 and
 treeReduce.c:31-90, whose recursive-doubling phase was never finished).
 Every ungrouped call (``sketch_aggregate``, ``multi_sketch_aggregate``,
-the ``*_of`` helpers, ``cms_topk``, ``StreamingSketch``) runs the same
-core, ``fold_partials``:
+the ``*_of`` helpers, ``cms_topk_with_keys``, ``StreamingSketch``) runs
+the same core, ``fold_partials``:
 
   stage 1 (map-side partial): ``mapInPandas`` builds one sketch per
       input partition and spec — vectorized ``update_batch`` per Arrow

@@ -15,9 +15,9 @@ semantics are standard (e.g. summary caches that halve counters every
 half-life tick, Metwally et al.'s decayed Space-Saving).
 
 Scale shape: ``decayed_scores`` is ONE groupBy over (key, weight) with
-map-side partial sums — identical cost to an unweighted count.
-``decayed_topk`` adds a TakeOrderedAndProject (per-partition k-heaps,
-O(partitions*k) shipped, no global sort). At 10^9 keys, feed the same
+map-side partial sums — identical cost to an unweighted count. A
+top-k is an ``orderBy(...).limit(k)`` over it (TakeOrderedAndProject:
+per-partition k-heaps, no global sort). At 10^9 keys, feed the same
 weight column into ``sketches.misragries.MisraGries`` via
 ``operators.quantiles.misragries_of`` for a bounded-memory candidate
 set instead of materializing every key's score.
@@ -85,25 +85,6 @@ def decayed_scores(
         base.groupBy(*key_cols)
         .agg(F.sum(w).cast("bigint").alias("decayed_score"))
     )
-
-
-def decayed_topk(
-    df: DataFrame,
-    key_cols,
-    ts_col,
-    k: int,
-    half_life_days: int = 7,
-    horizon_days: int = 28,
-    ref_day: Column | None = None,
-) -> DataFrame:
-    """Top-k keys by decayed score (desc), deterministic tie-break on
-    the key columns ascending. TakeOrderedAndProject after the one
-    scoring shuffle."""
-    if isinstance(key_cols, str):
-        key_cols = [key_cols]
-    s = decayed_scores(df, key_cols, ts_col, half_life_days, horizon_days, ref_day)
-    order = [F.col("decayed_score").desc()] + [F.col(c).asc() for c in key_cols]
-    return s.orderBy(*order).limit(k)
 
 
 def dgim_window_counts(

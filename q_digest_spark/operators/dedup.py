@@ -129,8 +129,7 @@ def cap_buckets(
     buckets are by nature few) and applied as a BROADCAST anti-join
     so the bucket rows themselves are never reshuffled. Fully LAZY:
     no collect, no driver data — the aggregate runs inside the
-    returned plan (as the broadcast build side), so wrapping a lazy
-    pipeline (minhash_near_dups eager=False) stays lazy.
+    returned plan (as the broadcast build side).
     """
     over = (
         b.groupBy(bucket_col)
@@ -186,7 +185,6 @@ def minhash_near_dups(
     shingle_k: int = 5,
     spill_dir: str | None = None,
     max_bucket: int | None = None,
-    eager: bool | None = None,
 ) -> DataFrame:
     """End-to-end near-dup pairs with exact-Jaccard verification:
     returns (id_a, id_b) with exact shingle Jaccard >= threshold.
@@ -201,15 +199,13 @@ def minhash_near_dups(
         computed signatures) at threshold - 0.2;
     (4) exact shingle Jaccard on the survivors only.
 
-    ``eager`` (default True) = persist signatures, run the candidate
-    job NOW, spill survivors to parquet, unpersist — signatures are
-    computed ONCE and candidates survive executor loss. This wins at
-    every measured scale: shingling+hashing dominates the spill I/O,
-    so the lazy path (nothing materialized; signatures recomputed in
-    each of the 3 plan branches) is ~1.5x slower even on a 5k-doc
-    corpus. Keep ``eager=False`` only when the returned plan may
-    never be executed (the eager path runs the candidate job at call
-    time regardless).
+    The call is EAGER through the prefilter: it persists the
+    signatures, runs the candidate job NOW, spills the survivors to
+    parquet and unpersists — signatures are computed ONCE and
+    candidates survive executor loss. Shingling+hashing dominates the
+    spill I/O, so a lazy plan (signatures recomputed in each of the 3
+    plan branches) measured ~1.5x slower even on a 5k-doc corpus. Only
+    the verify step stays lazy in the returned plan.
 
     The signature stage is Python-heavy (Arrow-batched shingling);
     when the input has fewer partitions than the cluster has slots
@@ -219,14 +215,10 @@ def minhash_near_dups(
     """
     if bands is None:
         bands = optimal_bands(n_perm, threshold)
-    if eager is None:
-        eager = True
     slots = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < slots:
         df = df.repartition(slots)
-    sigs = minhash_signatures(df, text_col, id_col, n_perm, shingle_k)
-    if eager:
-        sigs.persist()
+    sigs = minhash_signatures(df, text_col, id_col, n_perm, shingle_k).persist()
     cands = lsh_candidate_pairs(sigs, bands, max_bucket)
     # (2) prefilter on signature agreement
     sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
@@ -246,24 +238,19 @@ def minhash_near_dups(
                 yield pdf.loc[keep, ["id_a", "id_b"]]
 
     pref = with_sigs.mapInPandas(prefilter, "id_a long, id_b long")
-    if eager:
-        # Spill the (small) surviving candidate pairs to parquet and
-        # drop the signature cache NOW — without this the persisted
-        # signatures leak for the whole session (the returned plan is
-        # lazy, so a plain unpersist-after-return never fires;
-        # localCheckpoint would itself register a persisted RDD). A
-        # durable spill is also the 100 TB-shape answer: candidates
-        # survive executor loss without recomputing signatures over
-        # the corpus. NOTE this makes the call EAGER through the
-        # prefilter stage — the candidate job runs even if the
-        # returned verify plan is never executed. Temp spills are
-        # removed at interpreter exit; pass `spill_dir` to own them.
-        from ._spill import spill_parquet
+    # Spill the (small) surviving candidate pairs to parquet and drop
+    # the signature cache NOW — without this the persisted signatures
+    # leak for the whole session (the returned plan is lazy, so a
+    # plain unpersist-after-return never fires; localCheckpoint would
+    # itself register a persisted RDD). A durable spill is also the
+    # 100 TB-shape answer: candidates survive executor loss without
+    # recomputing signatures over the corpus. The candidate job runs
+    # even if the returned verify plan is never executed. Temp spills
+    # are removed at interpreter exit; pass `spill_dir` to own them.
+    from ._spill import spill_parquet
 
-        survivors = spill_parquet(pref, "qds_minhash_cands_", spill_dir)
-        sigs.unpersist()
-    else:
-        survivors = pref
+    survivors = spill_parquet(pref, "qds_minhash_cands_", spill_dir)
+    sigs.unpersist()
     docs = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     joined = (
         survivors.join(docs.withColumnRenamed("doc_id", "id_a").withColumnRenamed("text", "text_a"), "id_a")
@@ -391,7 +378,6 @@ def corpus_line_survivors(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    keep_line_text: bool = False,
 ) -> DataFrame:
     """Cross-document line-level dedup (the CCNet / RefinedWeb
     paragraph-dedup step, public methodology: Wenzek et al. 2019 §3.1):
@@ -401,23 +387,15 @@ def corpus_line_survivors(
     is deterministic and engine-independent.
 
     Scale shape: one posexplode, then ONE shuffle keyed on
-    xxhash64(line) — an 8-byte key; unless ``keep_line_text`` the
-    shuffle payload is (hash, id, line_no, n_chars) only, never the
-    line text, so a 100 TB corpus moves ~32 B per line. First-wins is
-    a row_number window inside each hash partition (line hashes are
-    near-unique, so no skew; a 64-bit collision merging two distinct
-    lines is ~1e-8 probability at 1e5 M lines — CCNet itself dedups
-    on a 64-bit sha1 prefix the same way).
+    xxhash64(line) — an 8-byte key; the shuffle payload is (hash, id,
+    line_no, n_chars) only, never the line text, so a 100 TB corpus
+    moves ~32 B per line. First-wins is a row_number window inside
+    each hash partition (line hashes are near-unique, so no skew; a
+    64-bit collision merging two distinct lines is ~1e-8 probability
+    at 1e5 M lines — CCNet itself dedups on a 64-bit sha1 prefix the
+    same way).
 
-    Returns (id, line_no, line_hash, n_chars[, line], keep)."""
-    cols = [
-        F.col("id"),
-        F.col("line_no"),
-        F.xxhash64("line").alias("line_hash"),
-        F.length("line").alias("n_chars"),
-    ]
-    if keep_line_text:
-        cols.append(F.col("line"))
+    Returns (id, line_no, line_hash, n_chars, keep)."""
     lines = (
         df.select(
             F.col(id_col).alias("id"),
@@ -425,7 +403,12 @@ def corpus_line_survivors(
         )
         .select("id", "line_no", F.trim(F.col("line")).alias("line"))
         .where(F.col("line") != "")
-        .select(*cols)
+        .select(
+            "id",
+            "line_no",
+            F.xxhash64("line").alias("line_hash"),
+            F.length("line").alias("n_chars"),
+        )
     )
     w = Window.partitionBy("line_hash").orderBy("id", "line_no")
     return lines.withColumn("keep", F.row_number().over(w) == F.lit(1))
@@ -458,8 +441,8 @@ def incremental_dedup(
 
     Size ``m_bits`` for the HISTORICAL corpus cardinality (fpr ≈
     (1 - e^(-k n/m))^k); at 10^12 historical docs shard the filter by
-    fingerprint prefix (the streaming/dedup.py salted-bank pattern)
-    rather than growing one monolithic bitmap.
+    fingerprint prefix (a salted bank of filters) rather than growing
+    one monolithic bitmap.
     """
     from .membership import bloom_probe_column
     from .quantiles import bloom_of

@@ -84,10 +84,10 @@ def candidates_from_bytes(buf: bytes) -> Candidates:
     return Candidates.from_bytes(buf)
 
 
-def _top_k(df: DataFrame, col, k: int, keys: bool, candidates_per_partition: int = 64,
-           depth: int = 5, width: int = 16384, fanout: int = 32) -> pd.DataFrame:
+def _top_k(df: DataFrame, col, k: int, candidates_per_partition: int,
+           depth: int, width: int, fanout: int) -> pd.DataFrame:
     """(key_hash, key, est_cnt) of the top k by est_cnt desc, key_hash
-    asc; ``key`` is None unless ``keys``."""
+    asc."""
     m = max(candidates_per_partition, 4 * k)
     c = _as_col(col)
 
@@ -115,7 +115,7 @@ def _top_k(df: DataFrame, col, k: int, keys: bool, candidates_per_partition: int
         return df.select(
             F.spark_partition_id().alias("__pid"),
             F.xxhash64(c).alias("h"),
-            (c if keys else F.lit(None).cast("string")).alias("key"),
+            c.alias("key"),
         ).mapInPandas(build, PARTIAL_SCHEMA)
 
     merged = fold_partials(
@@ -129,7 +129,7 @@ def _top_k(df: DataFrame, col, k: int, keys: bool, candidates_per_partition: int
     return out.sort_values(["est_cnt", "key_hash"], ascending=[False, True]).head(k)
 
 
-def cms_topk(
+def cms_topk_with_keys(
     df: DataFrame,
     col,
     k: int = 10,
@@ -140,23 +140,14 @@ def cms_topk(
 ) -> DataFrame:
     """Top-k keys of ``col`` by Count-Min estimated frequency.
 
-    Returns a local DataFrame (key_hash long, est_cnt long) ordered by
-    est_cnt desc, key_hash asc — key_hash is xxhash64(col). One
-    full-data pass, merged as ``aggregate.fold_partials`` chooses: one
-    Spark job unless ``fanout`` is below the default parallelism and
-    the input has more than ``fanout`` partitions, when the partials
-    tree-merge in groups of ``fanout`` first (shuffle volume
+    Returns a local DataFrame (key, est_cnt) ordered by est_cnt desc,
+    key asc (nulls first, as Spark orders them). One full-data pass, merged as ``aggregate.fold_partials`` chooses:
+    one Spark job unless ``fanout`` is below the default parallelism
+    and the input has more than ``fanout`` partitions, when the
+    partials tree-merge in groups of ``fanout`` first (shuffle volume
     O(n_partitions * (candidates + sketch bytes))).
     """
-    out = _top_k(df, col, k, False, candidates_per_partition, depth, width, fanout)
-    return df.sparkSession.createDataFrame(out[["key_hash", "est_cnt"]], "key_hash long, est_cnt long")
-
-
-def cms_topk_with_keys(df: DataFrame, col, k: int = 10, **kwargs) -> DataFrame:
-    """``cms_topk`` with the key values instead of their hashes, at the
-    same cost: a local DataFrame (key, est_cnt) ordered by est_cnt
-    desc, key asc (nulls first, as Spark orders them)."""
-    out = _top_k(df, col, k, True, **kwargs).sort_values(
+    out = _top_k(df, col, k, candidates_per_partition, depth, width, fanout).sort_values(
         ["est_cnt", "key"], ascending=[False, True], na_position="first"
     )
     key_type = df.select(_as_col(col).alias("key")).schema["key"].dataType.simpleString()

@@ -2,12 +2,11 @@
 embedding compression (JL'84; Achlioptas 2003 database-friendly
 variant: dense Rademacher +-1 signs).
 
-``jl_project`` maps an ``array<float>`` column of dimension ``d`` to
-``array<double>`` of dimension ``d_out`` via one Arrow-vectorized
-numpy matmul per batch — the projection matrix is regenerated from a
-fixed PCG64 seed inside every task (d * d_out int8, microseconds to
-build), so nothing is broadcast and the operator is embarrassingly
-parallel: zero shuffles, zero driver state, linear scan at any scale.
+``jl_pair_distortion`` projects ``array<float>`` vectors of dimension
+``d`` to dimension ``d_out`` via one Arrow-vectorized numpy matmul per
+batch — the projection matrix is regenerated from a fixed PCG64 seed
+inside every task (d * d_out signs, microseconds to build), so nothing
+is broadcast: zero driver state, linear scan at any scale.
 
 Scaling E[||R x||^2 / d_out] = ||x||^2 holds exactly for Rademacher
 rows, so squared Euclidean distances are preserved in expectation and
@@ -38,33 +37,6 @@ def _sign_matrix(d_in: int, d_out: int) -> np.ndarray:
     identical matrix."""
     rng = np.random.default_rng(_JL_SEED)
     return (rng.integers(0, 2, size=(d_out, d_in)) * 2 - 1).astype(np.float64)
-
-
-def jl_project(
-    df: DataFrame, vec_col: str, d_in: int, d_out: int, out_col: str = "jl_vec"
-) -> DataFrame:
-    """Append ``out_col``: the d_out-dim Rademacher projection of
-    ``vec_col`` (unscaled — divide squared norms by d_out at query
-    time; keeping raw sums exact in float64 avoids a per-element
-    division)."""
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} array<double>"
-
-    def run(it):
-        r = _sign_matrix(d_in, d_out)
-        for pdf in it:
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            if len(mat) == 0:
-                pdf[out_col] = pd.Series([], dtype=object)
-            else:
-                proj = mat @ r.T
-                pdf[out_col] = list(proj)
-            yield pdf
-
-    return df.mapInPandas(run, out_schema)
 
 
 def jl_pair_distortion(

@@ -7,9 +7,10 @@ The codec step is tiered: PNG and PCM WAV decode for REAL via the
 stdlib codecs in ``functions/codecs.py`` (zlib/struct PNG with full
 filter support; manual RIFF/PCM parse); every other format (JPEG,
 MP3, MP4 — whose decode libraries are not in this container) falls
-back to ``decode_stub``, a deterministic fake that derives
-pseudo-"features" from the bytes, clearly marked. ``decode_blob`` is
-the dispatcher and the single swap point for adding codecs.
+back to a labeled ``stub`` row. ``extract_media_stats`` is the
+magic-byte dispatcher and the single swap point for adding codecs;
+``extract_features`` runs ``decode_stub``, a deterministic fake that
+derives pseudo-"features" from the bytes, clearly marked.
 
 Pattern at scale: keep blobs in their own column so Parquet column
 pruning skips them unless the query touches them; run codecs in
@@ -52,56 +53,14 @@ def blob_metadata(df: DataFrame, blob_col: str, id_col: str) -> DataFrame:
     )
 
 
-def decode_blob(blob: bytes, feature_dim: int = 8):
-    """Dispatching codec: returns ``(modality, features)``.
-
-    * PNG magic → REAL decode (``functions/codecs.py``): features are
-      ``[width, height, channels, pixel_sum, pixel_min, pixel_max,
-      mean, 0-pad...]`` — integer-exact image facts.
-    * RIFF/WAVE magic → REAL PCM parse: ``[rate, channels, n_frames,
-      sum(|sample|), min, max, zero_crossings, 0-pad...]``.
-    * anything else (or a PNG/WAV variant outside the supported
-      subset) → ``('stub', decode_stub(blob))``.
-    """
-    from q_digest_spark.functions.codecs import (
-        UnsupportedBlobError,
-        decode_png,
-        decode_wav,
-    )
-
-    b = bytes(blob) if blob else b""
-    try:
-        if b[:8] == b"\x89PNG\r\n\x1a\n":
-            w, h, ch, px = decode_png(b)
-            p64 = px.astype(np.int64)
-            feats = [w, h, ch, int(p64.sum()), int(p64.min()),
-                     int(p64.max()), float(p64.mean())]
-            return "png", np.asarray(
-                (feats + [0.0] * feature_dim)[:feature_dim], dtype=np.float32
-            )
-        if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-            rate, ch, samples = decode_wav(b)
-            s64 = samples.astype(np.int64)
-            zc = int(np.count_nonzero(np.diff(np.sign(s64[:, 0])) != 0))
-            feats = [rate, ch, samples.shape[0], int(np.abs(s64).sum()),
-                     int(s64.min()) if s64.size else 0,
-                     int(s64.max()) if s64.size else 0, zc]
-            return "wav", np.asarray(
-                (feats + [0.0] * feature_dim)[:feature_dim], dtype=np.float32
-            )
-    except UnsupportedBlobError:
-        pass  # labeled fallback: exotic variant of a known magic
-    return "stub", decode_stub(b, feature_dim)
-
-
 def decode_stub(blob: bytes, feature_dim: int = 8) -> np.ndarray:
     """STUB codec — the decode libraries for JPEG/MP3/MP4/... are not
-    in this container (PNG and PCM WAV decode for real via
-    ``decode_blob`` above). Deterministic fake features derived from
-    the bytes so the end-to-end plumbing (schema, batching,
+    in this container (PNG and PCM WAV decode for real in
+    ``extract_media_stats`` below). Deterministic fake features derived
+    from the bytes so the end-to-end plumbing (schema, batching,
     downstream aggregation) is fully exercised for the formats we
     cannot decode. Swap in a real decoder (PIL / torchaudio / pyav)
-    by extending the ``decode_blob`` dispatcher."""
+    by extending the ``extract_media_stats`` dispatch."""
     if blob is None or len(blob) == 0:
         return np.zeros(feature_dim, dtype=np.float32)
     arr = np.frombuffer(bytes(blob), dtype=np.uint8)
@@ -118,7 +77,8 @@ MEDIA_STATS_SCHEMA = (
 
 def extract_media_stats(df: DataFrame, blob_col: str, id_col: str) -> DataFrame:
     """Blob → one typed row of integer-exact media facts through the
-    REAL codecs (``decode_blob``): PNG rows carry (width, height,
+    REAL codecs of ``functions/codecs.py``, dispatched on the magic
+    bytes: PNG rows carry (width, height,
     channels, pixel sum/min/max over all channels, n_frames=1); WAV
     rows carry (sample_rate, channels, n_frames, sum(|sample|),
     min, max). Unknown formats land as modality='stub' with byte

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..sketches import (HLL, KLL, Bloom, CountMin, CuckooFilter, QDigest, TDigest,
                         gk_from_bytes, kll_from_bytes, qdigest_from_bytes,
-                        tdigest_from_bytes)
+                        tdigest_from_bytes, universe_bits_for)
 from ..sketches.ams import AMS
 from ..sketches.cbloom import CountingBloom
 from ..sketches.theta import ThetaSketch
@@ -72,7 +72,7 @@ def qdigest_of(
         mx = df.agg(F.max(c).alias("mx")).collect()[0]["mx"]
         if mx is None:
             return None
-        universe_bits = max(1, int(mx).bit_length())
+        universe_bits = universe_bits_for(mx)
     factory = partial(QDigest, k, universe_bits)
     if universe_bits <= 24:
         hist = df.select(c.alias("v")).where(F.col("v").isNotNull()).groupBy("v").agg(
@@ -94,8 +94,6 @@ def qdigest_signed_of(
     min() is a metadata/footer-cheap aggregate. Returns (sketch,
     offset): query results unmap with value = estimate + offset —
     exact mode stays exact because the shift is a bijection."""
-    from ..sketches import universe_bits_for
-
     c = _col(col).cast("long")
     # ONE scan for both bounds (min alone is not footer-cheap for a
     # computed expression), and the span sizes the universe so
@@ -349,27 +347,16 @@ def counting_bloom_of(
     )
 
 
-def misragries_of(df: DataFrame, col, k: int = 256, fanout: int = 32,
-                  precount: bool = False):
+def misragries_of(df: DataFrame, col, k: int = 256, fanout: int = 32):
     """Misra-Gries frequent-items summary of a string column — one
     scan, O(partitions * k) shuffled bytes, deterministic guarantee
-    est <= true <= est + err with err <= n/(k+1).
-
-    ``precount=True`` routes through a JVM hash-aggregate histogram
-    (groupBy count) and feeds MG weighted entries — cheaper when the
-    column's cardinality is modest (the group-by's map-side combine
-    collapses duplicates before any Python runs), but at open-vocab
-    crawl scale the direct path is the right one: it never
-    materializes the full key set anywhere."""
+    est <= true <= est + err with err <= n/(k+1). It never materializes
+    the full key set anywhere. Where the column's cardinality is
+    modest, a JVM ``groupBy(col).count()`` fed to ``sketch_aggregate``
+    with ``weight_col=`` collapses duplicates before any Python runs."""
     from q_digest_spark.sketches import misragries_from_bytes
     from q_digest_spark.sketches.misragries import MisraGries
 
-    if precount:
-        expr = F.col(col) if isinstance(col, str) else col
-        hist = df.select(expr.alias("v")).where(F.col("v").isNotNull()) \
-                 .groupBy("v").agg(F.count("*").alias("c"))
-        return sketch_aggregate(hist, "v", partial(MisraGries, k),
-                                misragries_from_bytes, fanout, weight_col="c")
     return sketch_aggregate(df, col, partial(MisraGries, k),
                             misragries_from_bytes, fanout)
 
@@ -431,7 +418,16 @@ def exact_order_statistics(
     for r in ranks:
         if not 1 <= r <= n:
             raise ValueError(f"rank {r} out of range 1..{n}")
-    ranks = [int(r) for r in ranks]
+    return _order_stats(base, [int(r) for r in ranks], n, accuracy, collect_limit, 0)
+
+
+def _order_stats(base: DataFrame, ranks: list, n: int, accuracy: int,
+                 collect_limit: int, depth: int) -> list:
+    """One batched bracket round of exact_order_statistics over the
+    non-null ``__v`` column of ``base``; ``_resolve_bracket`` recurses
+    here one rank at a time with ``depth + 1``."""
+    if depth > 6:  # accuracy/6 shrink per round: unreachable for real n
+        raise RuntimeError("exact_order_statistics failed to converge")
     d = 2 * n // accuracy + 1
     ps = []
     for r in ranks:
@@ -457,34 +453,10 @@ def exact_order_statistics(
         c_lt, c_in = int(row[f"lt{i}"] or 0), int(row[f"in{i}"] or 0)
         out.append(
             _resolve_bracket(
-                base, r, n, blo, bhi, c_lt, c_in, accuracy, collect_limit, 0
+                base, r, n, blo, bhi, c_lt, c_in, accuracy, collect_limit, depth
             )
         )
     return out
-
-
-def _order_stat(base: DataFrame, r: int, n: int, accuracy: int,
-                collect_limit: int, depth: int):
-    """Single-rank bracket round (the recursion path of
-    exact_order_statistics; the first round is batched there)."""
-    if depth > 6:  # accuracy/6 shrink per round: unreachable for real n
-        raise RuntimeError("exact_order_statistics failed to converge")
-    d = 2 * n // accuracy + 1
-    plo, phi = max(0.0, (r - d) / n), min(1.0, (r + d) / n)
-    brk = base.agg(
-        F.percentile_approx("__v", F.array(F.lit(plo), F.lit(phi)), F.lit(accuracy)).alias("b")
-    ).collect()[0]["b"]
-    blo, bhi = brk[0], brk[1]
-    row = base.agg(
-        F.sum((F.col("__v") < F.lit(blo)).cast("long")).alias("c_lt"),
-        F.sum(
-            ((F.col("__v") >= F.lit(blo)) & (F.col("__v") <= F.lit(bhi))).cast("long")
-        ).alias("c_in"),
-    ).collect()[0]
-    c_lt, c_in = int(row["c_lt"] or 0), int(row["c_in"] or 0)
-    return _resolve_bracket(
-        base, r, n, blo, bhi, c_lt, c_in, accuracy, collect_limit, depth
-    )
 
 
 def _resolve_bracket(base: DataFrame, r: int, n: int, blo, bhi,
@@ -517,7 +489,7 @@ def _resolve_bracket(base: DataFrame, r: int, n: int, blo, bhi,
             if cum >= r:
                 return v["__v"]
         raise RuntimeError("rank walk overran bracket")  # unreachable
-    return _order_stat(inside, r - c_lt, c_in, accuracy, collect_limit, depth + 1)
+    return _order_stats(inside, [r - c_lt], c_in, accuracy, collect_limit, depth + 1)[0]
 
 
 def trimmed_mean_exact(
@@ -618,8 +590,6 @@ def percentile_transform(
     (long: the raw one-sided rank estimate) and ``out_col + "_n"``
     (long: the group row count the rank was divided by).
     """
-    from q_digest_spark.sketches import (QDigest, qdigest_from_bytes,
-                                         universe_bits_for)
     from .aggregate import grouped_sketch_rows
 
     group_cols = list(group_cols)

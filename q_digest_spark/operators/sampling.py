@@ -49,7 +49,12 @@ def hash_split(
     df: DataFrame, key_col, weights: list[float], salt: str = "split"
 ) -> list[DataFrame]:
     """Disjoint, exhaustive train/val/test-style splits: weights must
-    sum to 1; row membership is a pure function of (key, salt)."""
+    sum to 1; row membership is a pure function of (key, salt).
+
+    Key on the GROUP (site, domain, source) rather than the row for
+    leakage-safe splits of a web corpus: every row of a group lands in
+    the same split, so one site's near-duplicates never straddle the
+    train/test boundary. Weights then apportion groups, not rows."""
     if abs(sum(weights) - 1.0) > 1e-9:
         raise ValueError(f"weights must sum to 1, got {sum(weights)}")
     bounds = []
@@ -209,36 +214,11 @@ def mixture_sample(
     return df.where(pred), rates
 
 
-def grouped_split(
-    df: DataFrame, group_col, weights: list[float], salt: str = "gsplit"
-) -> list[DataFrame]:
-    """Leakage-safe train/val/test splits: hash on the GROUP key (site,
-    domain, source, author...) instead of the row key, so every row of
-    a group lands in the same split by construction.
-
-    Row-keyed splitting (hash_split on doc_id) is wrong for web
-    corpora: near-duplicates of one site's boilerplate template land
-    on both sides of the train/test boundary and the held-out metric
-    measures memorization, not generalization. The standard fix
-    (group-aware splitting; same reason GroupKFold exists) is to make
-    split membership a pure function of the group key.
-
-    Costs nothing at 100 TB: membership is one md5 of the group
-    column evaluated map-side in whole-stage codegen — zero shuffle,
-    zero Python, and any SQL engine reproduces the exact partition
-    for auditing. Split SIZE fidelity degrades with group-count
-    (weights apportion groups, not rows; a skew-heavy group moves its
-    whole mass as one unit) — that is the unavoidable price of the
-    no-leakage guarantee, not an implementation artifact.
-    """
-    return hash_split(df, group_col, weights, salt=salt)
-
-
 def split_label(
     key_col, weights: list[float], names: list[str], salt: str = "split"
 ) -> Column:
     """Split membership as a labeling COLUMN — identical membership to
-    ``hash_split``/``grouped_split`` with the same key/weights/salt,
+    ``hash_split`` with the same key/weights/salt,
     but usable in one pass (``withColumn('split', ...)`` + groupBy)
     instead of materializing one DataFrame per split. Pure codegen'd
     expression: md5 + chained CASE, zero shuffle, zero Python.

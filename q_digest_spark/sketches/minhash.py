@@ -103,22 +103,16 @@ def _densify(out: np.ndarray) -> np.ndarray:
     return out
 
 
-def minhash_signature(shingles: np.ndarray, n_perm: int = 128) -> np.ndarray:
-    """(n_perm,) uint64 signature of one shingle-hash set; all-max
-    sentinel for empty docs. Same OPH scheme as minhash_batch."""
-    return _oph_from_pairs(
-        np.zeros(len(shingles), dtype=np.int64), np.asarray(shingles, dtype=U64), 1, n_perm
-    )[0]
-
-
 def minhash_batch(texts: pd.Series, n_perm: int = 128, shingle_k: int = 5) -> np.ndarray:
     """(len(texts), n_perm) signature matrix for a batch — fully
     vectorized ACROSS documents: all texts are concatenated once, the
     k-gram rolling hash runs over the whole byte stream in one pass,
     boundary-straddling windows are dropped, and the one-permutation
     scheme turns the (doc, shingle) pairs into signatures with a
-    single sort+reduceat. Bit-identical to
-    minhash_signature(char_shingle_hashes(t)) per document."""
+    single sort+reduceat. A document's row is the one-permutation
+    signature of its ``char_shingle_hashes(t, shingle_k)`` set (all-max
+    sentinel for an empty or null document), independent of the rest
+    of the batch."""
     k = shingle_k
     D = len(texts)
     bs = [(t.encode("utf-8") if isinstance(t, str) else b"") for t in texts]

@@ -23,7 +23,7 @@ from q_digest_spark.operators.similarity import (
     lsh_near_dup_pairs,
     lsh_topk,
 )
-from q_digest_spark.sketches.minhash import exact_jaccard, minhash_signature, char_shingle_hashes
+from q_digest_spark.sketches.minhash import exact_jaccard, minhash_batch, char_shingle_hashes
 
 
 BASE = (
@@ -84,11 +84,11 @@ def test_minhash_signature_similarity_tracks_jaccard():
     a = char_shingle_hashes(ta, 5)
     b = char_shingle_hashes(tb, 5)
     true_j = len(np.intersect1d(a, b)) / len(np.union1d(a, b))
-    sa, sb = minhash_signature(a, 256), minhash_signature(b, 256)
+    sa, sb = minhash_batch(pd.Series([ta, tb]), 256)
     est = (sa == sb).mean()
     assert abs(est - true_j) < 0.1, (est, true_j)
-    # identical inputs -> identical signatures, always
-    assert np.array_equal(minhash_signature(a, 128), minhash_signature(a.copy(), 128))
+    # a document's signature does not depend on the rest of its batch
+    assert np.array_equal(minhash_batch(pd.Series([ta]), 128)[0], minhash_batch(pd.Series([tb, ta]), 128)[1])
 
 
 def test_simhash_near_dups(spark, docs_df):
@@ -246,24 +246,6 @@ def test_lsh_bucket_cap_bounds_pathological_candidates(spark):
     # recall on the normal corpus is unchanged
     assert (3, 100) in pairs and (7, 101) in pairs
     assert (11, 102) in pairs and (20, 103) in pairs
-
-
-def test_minhash_eager_and_lazy_paths_agree(spark, docs_df):
-    """eager=True (persist + parquet-spill, the 100 TB shape) and
-    eager=False (nothing materialized — the small-corpus fast path)
-    must return identical pairs, and neither may leak persisted RDDs."""
-    kw = dict(threshold=0.8)
-    lazy = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_near_dups(docs_df, "text", "doc_id", eager=False, **kw).collect()
-    }
-    eager = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_near_dups(docs_df, "text", "doc_id", eager=True, **kw).collect()
-    }
-    assert lazy == eager and (3, 100) in lazy
-    persisted = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    assert persisted.isEmpty(), f"leaked persisted RDDs: {persisted}"
 
 
 def test_embedding_lsh_bucket_cap(spark, vec_df):

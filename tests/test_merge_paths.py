@@ -190,7 +190,9 @@ from functools import partial
 from pyspark import TaskContext
 from pyspark.sql import functions as F
 
-from q_digest_spark.operators.aggregate import grouped_sketch_rows, sketch_aggregate
+from q_digest_spark.operators.aggregate import (
+    cube_sketch_rows, grouped_sketch_rows, rollup_sketch_rows, sketch_aggregate,
+)
 from q_digest_spark.operators.heavy_hitters import cms_topk_with_keys
 from q_digest_spark.operators.quantiles import HashedHLL, hashed_hll_from_bytes
 from q_digest_spark.plans.session import get_spark
@@ -209,6 +211,7 @@ df = spark.range(0, 6000, 1, 6).select(
     "id",
     F.pmod(F.xxhash64("id"), F.lit(1 << 16)).alias("v"),
     F.floor(F.log2(F.col("id") + 1)).cast("long").alias("k"),
+    F.pmod(F.col("id"), F.lit(3)).alias("j"),
 )
 
 
@@ -239,6 +242,12 @@ for fail in (False, True):
     out[f"grouped-{fail}"] = sorted(
         [r["k"], bytes(r["sketch"]).hex(), r["rows"]] for r in rows.collect()
     )
+    for name, multi in (("rollup", rollup_sketch_rows), ("cube", cube_sketch_rows)):
+        rows = multi(flaky(fail), ["k", "j"], "v", partial(QDigest, 32, 16), qdigest_from_bytes)
+        out[f"{name}-{fail}"] = sorted(
+            (json.dumps([r["k"], r["j"], r["level"]]), bytes(r["sketch"]).hex(), r["rows"])
+            for r in rows.collect()
+        )
 out["failures"] = len(os.listdir(marks))
 out["paths"] = paths
 print(json.dumps(out))
@@ -251,7 +260,8 @@ def test_retry_is_deterministic():
     rows as a clean run, on the coalesced path (fanout=2 at
     local[2,3]) and the tree path (fanout=1): a coalesced task re-reads
     the same input partitions. Grouped Q-Digest rows (one shuffle by
-    key) come out byte-identical too."""
+    key) and the ROLLUP and CUBE rows merged from them come out
+    byte-identical too."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, SPARK_DRIVER_MEM="1g", PYTHONPATH=repo)
     proc = subprocess.run(
@@ -260,7 +270,8 @@ def test_retry_is_deterministic():
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert out["failures"] == 7  # each flaky call failed once: 2 x 3 ungrouped, 1 grouped
+    # each flaky call failed once: 2 x 3 ungrouped, 1 grouped, 1 rollup, 1 cube
+    assert out["failures"] == 9
     coalesced, tree = "fold_partials: coalesced driver fold", "fold_partials: tree merge"
     assert out["paths"] == [coalesced] * 6 + [tree] * 6
     for fanout in (2, 1):
@@ -270,6 +281,10 @@ def test_retry_is_deterministic():
     assert out["grouped-True"] == out["grouped-False"]
     assert [r[0] for r in out["grouped-True"]] == list(range(13))
     assert sum(r[2] for r in out["grouped-True"]) == 6000
+    for name, n_levels in (("rollup", 3), ("cube", 4)):
+        assert out[f"{name}-True"] == out[f"{name}-False"], name
+        # every grouping set's rows add up to all 6000 input rows
+        assert sum(r[2] for r in out[f"{name}-True"]) == n_levels * 6000, name
 
 
 def _grouped(df, keys, col, factory, deserialize):

@@ -210,20 +210,6 @@ def test_wav_rejects_nonpcm():
 
 # --------------------------------------------------- dispatcher + Spark
 
-def test_decode_blob_dispatch():
-    from q_digest_spark.operators.multimodal import decode_blob
-
-    px = np.full((3, 4, 1), 17, dtype=np.uint8)
-    mod, feats = decode_blob(encode_png(px))
-    assert mod == "png"
-    assert feats[:4].tolist() == [4.0, 3.0, 1.0, 17.0 * 12]
-    mod, feats = decode_blob(encode_wav(np.array([5, -5, 5], np.int16), 9000))
-    assert mod == "wav"
-    assert feats[:4].tolist() == [9000.0, 1.0, 3.0, 15.0]
-    mod, _ = decode_blob(b"\xff\xd8\xff\xe0 fake jpeg")
-    assert mod == "stub"
-
-
 def test_extract_media_stats_spark(spark):
     from q_digest_spark.operators.multimodal import extract_media_stats
 

@@ -137,11 +137,11 @@ def test_weighted_sample_excludes_nonpositive_weights(spark):
 
 
 def test_grouped_split_no_group_leakage(spark):
-    from q_digest_spark.operators.sampling import grouped_split, split_label
+    from q_digest_spark.operators.sampling import hash_split, split_label
 
     rows = [(i, f"site{i % 13}") for i in range(400)]
     df = spark.createDataFrame(rows, "doc_id long, source string").repartition(8)
-    parts = grouped_split(df, "source", [0.7, 0.2, 0.1])
+    parts = hash_split(df, "source", [0.7, 0.2, 0.1], salt="gsplit")
     seen = {}
     total = 0
     for si, p in enumerate(parts):

@@ -24,18 +24,11 @@ ALLOWED = {
     "dgim_from_bytes": "module-level decoder of the DGIM sketch, still in use",
     "iceberg_available": "capability probe of the native Iceberg writer (README)",
     "write_pages_iceberg": "native Iceberg writer, taken where the runtime jar exists",
+    "write_pages_partitioned": "Parquet emulation of the Iceberg layout (README); write_pages_iceberg's error names it",
+    "with_partition_columns": "partition columns of the Parquet emulation of the Iceberg layout",
+    "cosine_near_dup_pairs": "exact all-pairs reference the lsh_near_dup_pairs tests compare against",
+    "icws_signature": "per-document reference the batch ICWS tests compare against",
 }
-# Test-only code whose names appear outside tests/ only in docstrings and
-# comments. Each is kept until it gets a caller or is deleted with its
-# tests (ROADMAP, "Smaller items").
-_UNDECIDED = "test-only, pending a caller or deletion (ROADMAP smaller items)"
-ALLOWED.update(dict.fromkeys([
-    "fingerprint64", "_fingerprint64_np", "_fingerprint64_chunked",
-    "decayed_topk", "cms_topk", "jl_project", "decode_blob", "grouped_split",
-    "cosine_near_dup_pairs", "minhash_signature", "icws_signature",
-    "write_pages_partitioned", "with_partition_columns",
-    "BloomStreamDedup", "bloom_dedup_stream_partitioned", "dedup_stream_by_key",
-], _UNDECIDED))
 
 _DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 

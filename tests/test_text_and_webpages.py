@@ -185,48 +185,3 @@ def test_lang_id_duckdb_oracle_parity_on_punctuated_text(spark):
     assert {k: int(v) for k, v in got.items()} == {
         k: int(v) for k, v in duck.items()
     }
-
-
-def test_fingerprint64_vectorized_matches_scalar_definition():
-    """The batched concatenated-buffer path (global 257^j powers
-    re-based by inv(257)^start mod 2^64) must be bit-identical to the
-    per-string definition sum(byte_i * 257^i) mod 2^64."""
-    import numpy as np
-
-    from q_digest_spark.functions.text import _fingerprint64_np
-
-    def scalar(s: str) -> int:
-        h, p = 0, 1
-        for byte in s.encode("utf-8"):
-            h = (h + byte * p) % (1 << 64)
-            p = (p * 257) % (1 << 64)
-        return h - (1 << 64) if h >= (1 << 63) else h
-
-    strs = [
-        "",
-        "a",
-        "hello world",
-        "ünïcødé ✓ tex†",
-        "x" * 10000,
-        "the quick brown fox",
-        " ",
-        "\n\t mixed   whitespace",
-        "",  # empty between non-empty: offsets must not slip
-        "trailing",
-    ]
-    got = _fingerprint64_np(strs)
-    assert got.dtype == np.int64
-    assert [int(g) for g in got] == [scalar(s) for s in strs]
-
-
-def test_fingerprint64_udf_nulls_and_batching(spark):
-    """End-to-end through the pandas UDF: NULL and empty normalize to
-    0; values equal the scalar definition applied to the normalized
-    (lower + whitespace-fused + stripped) text."""
-    from q_digest_spark.functions.text import fingerprint64
-
-    rows = [(0, None), (1, ""), (2, "  Hello   WORLD  "), (3, "hello world")]
-    df = spark.createDataFrame(rows, "id long, text string").repartition(2)
-    got = {r["id"]: r["fp"] for r in df.select("id", fingerprint64("text").alias("fp")).collect()}
-    assert got[0] == 0 and got[1] == 0
-    assert got[2] == got[3] != 0  # normalization folds case + whitespace
