@@ -73,8 +73,9 @@ class SketchSpec(NamedTuple):
     """One sketch of an aggregation: its input (column name or Column
     expression), an empty-sketch factory, the bytes decoder, and an
     optional weight column that turns rows into (value, weight) pairs
-    fed to ``update_batch(values, weights)`` — how the JVM-precounted
-    path hands Python a bounded histogram instead of raw rows.
+    fed to ``update_batch(values, weights)`` — how a JVM precount
+    (``df.groupBy(v).count()``, weight ``count``) hands Python a bounded
+    histogram instead of raw rows.
 
     Null inputs are skipped, but ``F.xxhash64(c)`` of a NULL is 42, not
     NULL: filter NULL rows (``df.where(c.isNotNull())``) before a spec

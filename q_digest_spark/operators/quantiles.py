@@ -51,37 +51,28 @@ def qdigest_of(
     fanout: int = 32,
 ) -> QDigest | None:
     """Build a Q-Digest over a non-negative integer column; None when
-    the column is empty or all null.
+    the column is empty or all null. One Spark job with one stage.
 
-    ``universe_bits=None`` runs a cheap max() first (parquet-footer
-    aggregate pushdown makes this a metadata-only scan for plain
-    columns) and sizes the universe to the data — the replacement for
-    the reference's expand_tree (qcore.c:300-349); a tight universe is
-    what makes eps = log2(sigma)/k meaningful.
+    ``universe_bits=None`` grows like ``create_tmp_q(K,1)``: each
+    partial starts at a 1-bit universe and rebases to its batch
+    maximum's width (the reference's expand_tree, qcore.c:300-349), and
+    the merge rebases the narrower side, so the result's universe is
+    the global maximum's width with no pre-pass over the data; a tight
+    universe is what makes eps = log2(sigma)/k meaningful. An explicit
+    ``universe_bits`` is a contract: a value outside it raises.
 
-    Precount (on when universe_bits <= 24): first reduce the rows to a
-    (value, count) histogram with Catalyst's whole-stage-codegen hash
-    aggregate — map-side combine means each task emits at most
-    min(rows, 2^universe_bits) pairs — and feed Python the histogram
-    instead of raw rows. At 10^12 rows over a bounded universe this
-    turns the Python-side work from O(rows) into O(universe): the JVM
-    does the counting, the sketch only shapes it.
+    The folded digest is compressed once more at its final n, which
+    keeps it near the paper's 3k-node space bound (merged partials
+    only compress at 6k nodes). Every row goes to Python: for a huge
+    input over a narrow universe, a JVM precount is
+    ``sketch_aggregate(df.groupBy(v).count(), v, factory, qdigest_from_bytes,
+    weight_col="count")``.
     """
     c = _col(col).cast("long")
-    if universe_bits is None:
-        mx = df.agg(F.max(c).alias("mx")).collect()[0]["mx"]
-        if mx is None:
-            return None
-        universe_bits = universe_bits_for(mx)
-    factory = partial(QDigest, k, universe_bits)
-    if universe_bits <= 24:
-        hist = df.select(c.alias("v")).where(F.col("v").isNotNull()).groupBy("v").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        return sketch_aggregate(
-            hist, "v", factory, qdigest_from_bytes, fanout, weight_col="cnt"
-        )
-    return sketch_aggregate(df, c, factory, qdigest_from_bytes, fanout)
+    sk = sketch_aggregate(df, c, partial(QDigest, k, universe_bits), qdigest_from_bytes, fanout)
+    if sk is not None:
+        sk.compress()
+    return sk
 
 
 def qdigest_signed_of(
@@ -96,9 +87,8 @@ def qdigest_signed_of(
     exact mode stays exact because the shift is a bijection."""
     c = _col(col).cast("long")
     # ONE scan for both bounds (min alone is not footer-cheap for a
-    # computed expression), and the span sizes the universe so
-    # qdigest_of skips its internal max() pass — two scans total
-    # (bounds + build), not three
+    # computed expression): min is the offset, and the span fixes the
+    # universe — two scans total (bounds + build)
     row = df.agg(F.min(c).alias("mn"), F.max(c).alias("mx")).collect()[0]
     if row["mn"] is None:
         return None, 0
@@ -585,6 +575,9 @@ def percentile_transform(
     cume_dist * n); ``k>0`` = compressed, rank error <= (log2 U / k)·n
     per group (qcore.c:379-384 percentile semantics). At 10^12 rows
     use k>0: the broadcast payload is O(groups · k · log U) bytes.
+    ``universe_bits=None`` grows each group's digest to that group's
+    maximum (so U is per group, and no max() job runs first); an
+    explicit ``universe_bits`` raises on a value outside it.
 
     Returns df + ``out_col`` (double in [0, 1]), ``out_col + "_rank"``
     (long: the raw one-sided rank estimate) and ``out_col + "_n"``
@@ -594,9 +587,6 @@ def percentile_transform(
 
     group_cols = list(group_cols)
     c = _col(col)
-    if universe_bits is None:
-        mx = df.agg(F.max(c.cast("long"))).collect()[0][0]
-        universe_bits = universe_bits_for(int(mx or 1))
     rows = grouped_sketch_rows(
         df.select(*group_cols, c.cast("long").alias("__v")),
         group_cols, "__v", partial(QDigest, k, universe_bits),

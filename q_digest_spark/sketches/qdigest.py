@@ -16,12 +16,14 @@ Suri, "Medians and Beyond" (SenSys 2004), but the representation is a
 With canonical ids, the reference's operators collapse to array ops:
 
 - ``insert``  (qcore.c:201-248)  -> ``np.unique`` + sorted-merge add
+  (stable sort of two sorted runs + ``np.add.reduceat``)
 - ``merge``   (qcore.c:390-417)  -> concat + groupby(id).sum, then
   compress; associative/commutative up to compression order, which is
   exactly Spark's partial-aggregation contract
 - ``compress`` (qcore.c:130-154, trigger 6*k at qcore.c:183-189) ->
   bottom-up per-level sweep: family (parent + both children) with total
-  count < floor(n/k) folds into the parent
+  count < floor(n/k) folds into the parent; sorted ids keep each level
+  in one contiguous slice, so the sweep is one pass over the levels
 - ``percentile`` (qcore.c:356-384) -> sort nodes in post-order
   (ascending upper_bound, deeper-first on ties), cumsum counts,
   searchsorted; returns the node's upper bound (one-sided high
@@ -30,9 +32,12 @@ With canonical ids, the reference's operators collapse to array ops:
   little-endian binary (Arrow/shuffle-friendly) instead of text
 
 Divergences from the reference, on purpose:
-- ``expand_tree`` (qcore.c:300-349) is replaced by a fixed
-  ``universe_bits`` per sketch plus :meth:`rebase` for merging sketches
-  built over different universes.
+- ``expand_tree`` (qcore.c:300-349) is replaced by :meth:`rebase`,
+  once per batch rather than once per doubling: ``universe_bits=None``
+  grows like ``create_tmp_q(K,1)``, starting at 1 bit and rebasing to
+  each batch maximum's width, and merge rebases the narrower of two
+  sketches. An explicit ``universe_bits`` is fixed, and a value
+  outside it raises.
 - the rank for ``percentile(p)`` is ``max(1, ceil(p*n))`` rather than
   the C truncation ``(size_t)(p*n)`` (qcore.c:382) — a <=1-rank
   difference, well inside the eps*n bound, and it makes the
@@ -61,29 +66,52 @@ def _level_of(ids: np.ndarray) -> np.ndarray:
 
 
 def _merge_sorted(ids_a, cnt_a, ids_b, cnt_b):
-    """Union two sorted (id, count) arrays, summing counts on collisions."""
+    """Union two sorted (id, count) arrays, summing counts on collisions.
+    A stable sort of the concatenation merges the two sorted runs in one
+    linear pass (timsort finds the runs), and one ``reduceat`` sums each
+    run of equal ids."""
     if len(ids_a) == 0:
         return ids_b.copy(), cnt_b.copy()
     if len(ids_b) == 0:
         return ids_a.copy(), cnt_a.copy()
-    all_ids = np.concatenate([ids_a, ids_b])
-    all_cnt = np.concatenate([cnt_a, cnt_b])
-    uniq, inv = np.unique(all_ids, return_inverse=True)
-    out = np.zeros(len(uniq), dtype=np.int64)
-    np.add.at(out, inv, all_cnt)
-    return uniq, out
+    ids = np.concatenate([ids_a, ids_b])
+    order = np.argsort(ids, kind="stable")
+    return _sum_runs(ids[order], np.concatenate([cnt_a, cnt_b])[order])
+
+
+def _run_starts(ids):
+    """Index of the first element of each run of equal values in sorted ``ids``."""
+    return np.flatnonzero(np.concatenate(([True], ids[1:] != ids[:-1])))
+
+
+def _sum_runs(ids, counts):
+    """Collapse runs of equal ids in sorted ``ids``, summing their counts."""
+    start = _run_starts(ids)
+    return ids[start], np.add.reduceat(counts, start)
 
 
 class QDigest:
-    """Mergeable Q-Digest. ``k <= 0`` disables compression (exact mode)."""
+    """Mergeable Q-Digest. ``k <= 0`` disables compression (exact mode).
 
-    __slots__ = ("k", "universe_bits", "ids", "counts", "n")
+    ``universe_bits=None`` starts at a 1-bit universe and grows it to
+    each batch maximum's width (the reference's ``create_tmp_q(K, 1)``
+    plus ``expand_tree``); an explicit ``universe_bits`` is a contract:
+    a value outside it raises. Either way a negative value, or one at
+    or past 2**48, raises. A decoded sketch is fixed at its wire
+    universe (the wire format has no flag for growth); merge still
+    rebases it."""
+
+    __slots__ = ("k", "universe_bits", "grows", "ids", "counts", "n")
 
     COMPRESS_TRIGGER = 6  # compress when num_nodes >= 6*k (qcore.c:184)
+    MAX_BITS = 48
 
-    def __init__(self, k: int = 256, universe_bits: int = 32):
-        if not (1 <= universe_bits <= 48):
-            raise ValueError("universe_bits must be in [1, 48]")
+    def __init__(self, k: int = 256, universe_bits: int | None = 32):
+        self.grows = universe_bits is None
+        if self.grows:
+            universe_bits = 1
+        if not (1 <= universe_bits <= self.MAX_BITS):
+            raise ValueError(f"universe_bits must be in [1, {self.MAX_BITS}]")
         self.k = int(k)
         self.universe_bits = int(universe_bits)
         self.ids = np.empty(0, dtype=U64)
@@ -94,17 +122,21 @@ class QDigest:
     def update_batch(self, values: np.ndarray, weights: np.ndarray | None = None) -> None:
         """Vectorized bulk insert (replaces per-row insert, qcore.c:201-248):
         map values to leaf ids, collapse duplicates, sorted-merge into
-        state, compress at most once per batch."""
+        state, compress at most once per batch. A growing sketch first
+        rebases to the batch maximum's width (qcore.c:203-210)."""
         values = np.asarray(values)
         values = values[~np.isnan(values)] if values.dtype.kind == "f" else values
         if len(values) == 0:
             return
         values = values.astype(np.int64)
         lo, hi = values.min(), values.max()
-        if lo < 0 or hi >= (1 << self.universe_bits):
+        bits = self.MAX_BITS if self.grows else self.universe_bits
+        if lo < 0 or hi >= (1 << bits):
             raise ValueError(
-                f"values outside universe [0, 2^{self.universe_bits}): min={lo} max={hi}"
+                f"values outside universe [0, 2^{bits}): min={lo} max={hi}"
             )
+        if hi >= (1 << self.universe_bits):
+            self.rebase(universe_bits_for(hi))
         leaf = values.view(U64) + (U64(1) << U64(self.universe_bits))
         if weights is None:
             uniq, cnt = np.unique(leaf, return_counts=True)
@@ -112,9 +144,8 @@ class QDigest:
             self.n += len(values)
         else:
             weights = np.asarray(weights, dtype=np.int64)
-            uniq, inv = np.unique(leaf, return_inverse=True)
-            cnt = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(cnt, inv, weights)
+            order = np.argsort(leaf, kind="stable")
+            uniq, cnt = _sum_runs(leaf[order], weights[order])
             self.n += int(weights.sum())
         self.ids, self.counts = _merge_sorted(self.ids, self.counts, uniq, cnt)
         self._compress_if_needed()
@@ -128,53 +159,45 @@ class QDigest:
         """One bottom-up sweep. A family (parent + two children) whose
         total count < floor(n/k) folds into the parent (qcore.c:130-154).
         Visiting deepest level first reproduces the reference's
-        post-order traversal (children before parents)."""
+        post-order traversal (children before parents).
+
+        Level d holds the heap ids in [2**d, 2**(d+1)), so the sorted
+        ids keep each level in one contiguous slice: the state is cut
+        into levels once, and each step touches only its level and the
+        one above it."""
         if self.k <= 0 or self.n == 0 or len(self.ids) == 0:
             return
         thr = self.n // self.k
         if thr <= 1:
             return
-        ids, counts = self.ids, self.counts
-        levels = _level_of(ids)
-        for d in range(int(levels.max()), 0, -1):
-            at = levels == d
-            if not at.any():
+        top = int(_level_of(self.ids[-1:])[0])
+        cuts = np.searchsorted(self.ids, U64(1) << np.arange(1, top + 1, dtype=U64))
+        ids, counts = np.split(self.ids, cuts), np.split(self.counts, cuts)
+        for d in range(top, 0, -1):
+            cids, ccnt = ids[d], counts[d]
+            if len(cids) == 0:
                 continue
-            cids = ids[at]
-            ccnt = counts[at]
             parents = cids >> U64(1)  # sorted because cids is sorted
-            up, start = np.unique(parents, return_index=True)
-            csum = np.add.reduceat(ccnt, start)
-            pos = np.searchsorted(ids, up)
-            safe = np.minimum(pos, len(ids) - 1)
-            pexists = ids[safe] == up
-            pcnt = np.where(pexists, counts[safe], 0)
-            absorb = (pcnt + csum) < thr
+            start = _run_starts(parents)
+            up = parents[start]
+            total = np.add.reduceat(ccnt, start)
+            pids, pcnt = ids[d - 1], counts[d - 1]
+            pos = np.searchsorted(pids, up)
+            pexists = np.zeros(len(up), dtype=bool)
+            if len(pids):
+                pexists = pids[np.minimum(pos, len(pids) - 1)] == up
+                total[pexists] += pcnt[pos[pexists]]
+            absorb = total < thr
             if not absorb.any():
                 continue
-            absorbed = up[absorb]  # sorted
-            # drop children of absorbed parents
-            child_drop_local = np.searchsorted(absorbed, parents)
-            child_drop_local = (child_drop_local < len(absorbed)) & (
-                absorbed[np.minimum(child_drop_local, len(absorbed) - 1)] == parents
-            )
-            keep = np.ones(len(ids), dtype=bool)
-            keep_idx = np.flatnonzero(at)
-            keep[keep_idx[child_drop_local]] = False
-            # fold counts into (possibly new) parents
-            new_p_ids = absorbed
-            new_p_cnt = (pcnt + csum)[absorb]
-            # remove stale parent rows (their count is replaced)
-            stale = pos[absorb][pexists[absorb]]
-            keep[stale] = False
-            ids_kept = ids[keep]
-            cnt_kept = counts[keep]
-            order_ids = np.concatenate([ids_kept, new_p_ids])
-            order_cnt = np.concatenate([cnt_kept, new_p_cnt])
-            srt = np.argsort(order_ids, kind="stable")
-            ids = order_ids[srt]
-            counts = order_cnt[srt]
-            levels = _level_of(ids)
+            # absorbed families: drop the children, set or add the parent
+            keep = np.repeat(~absorb, np.diff(start, append=len(cids)))
+            ids[d], counts[d] = cids[keep], ccnt[keep]
+            pcnt = pcnt.copy()
+            pcnt[pos[absorb & pexists]] = total[absorb & pexists]
+            new = absorb & ~pexists
+            ids[d - 1], counts[d - 1] = _merge_sorted(pids, pcnt, up[new], total[new])
+        ids, counts = np.concatenate(ids), np.concatenate(counts)
         nz = counts > 0
         self.ids = ids[nz]
         self.counts = counts[nz]
@@ -222,6 +245,7 @@ class QDigest:
 
     def copy(self) -> "QDigest":
         c = QDigest(self.k, self.universe_bits)
+        c.grows = self.grows
         c.ids = self.ids.copy()
         c.counts = self.counts.copy()
         c.n = self.n
