@@ -161,19 +161,15 @@ def q_qdigest_p50_by_lang(spark, sf_dir) -> DataFrame:
     """Grouped (per-lang) exact-mode Q-Digest median of n_chars —
     exercises the map-side-partial grouped pipeline end-to-end."""
     from q_digest_spark.operators.aggregate import grouped_quantiles
-    from q_digest_spark.sketches import QDigest, qdigest_from_bytes
+    from q_digest_spark.sketches import QDigest, from_bytes
 
     df = _docs(spark, sf_dir)
-    from q_digest_spark.sketches import universe_bits_for
-
-    mx = df.agg(F.max("n_chars")).collect()[0][0]
-    bits = universe_bits_for(int(mx))
     return grouped_quantiles(
         df,
         ["lang"],
         F.col("n_chars").cast("long"),
-        partial(QDigest, 0, bits),
-        qdigest_from_bytes,
+        partial(QDigest, 0, None),
+        from_bytes,
         [0.5],
         ["p50"],
     )
@@ -183,20 +179,16 @@ def q_events_p50_by_type(spark, sf_dir) -> DataFrame:
     """Per-event-type exact median of value (quantized to cents so the
     integer-universe Q-Digest applies; same quantization in the oracle)."""
     from q_digest_spark.operators.aggregate import grouped_quantiles
-    from q_digest_spark.sketches import QDigest, qdigest_from_bytes
+    from q_digest_spark.sketches import QDigest, from_bytes
 
     df = _tbl(spark, sf_dir, "events").where(F.col("value").isNotNull())
     q = F.round(F.col("value") * 100).cast("long")
-    from q_digest_spark.sketches import universe_bits_for
-
-    mx = df.agg(F.max(q)).collect()[0][0]
-    bits = universe_bits_for(int(mx))
     return grouped_quantiles(
         df,
         ["event_type"],
         q,
-        partial(QDigest, 0, bits),
-        qdigest_from_bytes,
+        partial(QDigest, 0, None),
+        from_bytes,
         [0.5],
         ["p50_cents"],
     )
@@ -292,7 +284,7 @@ def q_moments_price_by_flag(spark, sf_dir) -> DataFrame:
     import math as _math
 
     from q_digest_spark.operators.aggregate import grouped_sketch_rows
-    from q_digest_spark.sketches import moments_from_bytes
+    from q_digest_spark.sketches import from_bytes
     from q_digest_spark.sketches.moments import Moments
 
     li = _tbl(spark, sf_dir, "lineitem").select(
@@ -300,11 +292,11 @@ def q_moments_price_by_flag(spark, sf_dir) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("v"),
     )
     rows = grouped_sketch_rows(
-        li, ["l_returnflag"], "v", Moments, moments_from_bytes
+        li, ["l_returnflag"], "v", Moments
     )
     out = []
     for r in rows.collect():
-        sk = moments_from_bytes(bytes(r["sketch"]))
+        sk = from_bytes(bytes(r["sketch"]))
         out.append(
             (
                 r["l_returnflag"],
@@ -1003,15 +995,15 @@ def q_kll_p50_by_type_bound(spark, sf_dir) -> DataFrame:
         grouped_estimates,
         grouped_sketch_rows,
     )
-    from q_digest_spark.sketches import KLL, kll_from_bytes
+    from q_digest_spark.sketches import KLL
 
     df = _tbl(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    rows = grouped_sketch_rows(df, ["event_type"], "value", _p(KLL, 200), kll_from_bytes)
+    rows = grouped_sketch_rows(df, ["event_type"], "value", _p(KLL, 200))
     # per-group medians decoded in-executor (grouped_estimates), then
     # rank intervals via broadcast join + conditional aggregates —
     # neither group values nor estimates ever reach the driver.
     ests = grouped_estimates(
-        rows, ["event_type"], kll_from_bytes, lambda sk: float(sk.quantile(0.5))
+        rows, ["event_type"], estimator=lambda sk: float(sk.quantile(0.5))
     )
     bound = (2.296 / 200**0.9) * 1.5
     return _grouped_rank_bound_flags(
@@ -1029,12 +1021,12 @@ def q_hll_distinct_by_lang(spark, sf_dir) -> DataFrame:
         grouped_estimates,
         grouped_sketch_rows,
     )
-    from q_digest_spark.sketches import HLL, hll_from_bytes
+    from q_digest_spark.sketches import HLL
 
     df = _docs(spark, sf_dir)
 
-    rows = grouped_sketch_rows(df, ["lang"], "doc_id", HLL, hll_from_bytes)
-    ests = grouped_estimates(rows, ["lang"], hll_from_bytes)
+    rows = grouped_sketch_rows(df, ["lang"], "doc_id", HLL)
+    ests = grouped_estimates(rows, ["lang"])
     exact = df.groupBy("lang").agg(F.countDistinct("doc_id").alias("exact_distinct"))
     rel = 3 * 1.04 / (16384**0.5)
     return (
@@ -1202,19 +1194,19 @@ def q_hll_union_langs(spark, sf_dir) -> DataFrame:
     stay within the published relative-error bound of the exact
     distinct count."""
     from q_digest_spark.operators.aggregate import grouped_sketch_rows
-    from q_digest_spark.sketches import HLL, hll_from_bytes
+    from q_digest_spark.sketches import HLL, from_bytes
 
     df = _docs(spark, sf_dir)
 
     from q_digest_spark.operators.aggregate import sketch_aggregate
 
-    per_lang = grouped_sketch_rows(df, ["lang"], "doc_id", HLL, hll_from_bytes).collect()
+    per_lang = grouped_sketch_rows(df, ["lang"], "doc_id", HLL).collect()
     merged = HLL(14)
     for r in per_lang:
-        merged.merge(hll_from_bytes(bytes(r["sketch"])))
+        merged.merge(from_bytes(bytes(r["sketch"])))
     # direct sketch through the same two-level distributed pipeline —
     # only the final O(sketch) bytes reach the driver
-    direct = sketch_aggregate(df.select("doc_id"), "doc_id", HLL, hll_from_bytes)
+    direct = sketch_aggregate(df.select("doc_id"), "doc_id", HLL)
     exact = df.select(F.countDistinct("doc_id")).collect()[0][0]
     rel = 3 * 1.04 / (16384**0.5)
     est_m, est_d = merged.estimate(), direct.estimate()
@@ -1316,11 +1308,7 @@ def q_sliding_p50_cents(spark, sf_dir) -> DataFrame:
         sliding_window_rows,
         write_daily_sketches,
     )
-    from q_digest_spark.sketches import (
-        QDigest,
-        qdigest_from_bytes,
-        universe_bits_for,
-    )
+    from q_digest_spark.sketches import QDigest, universe_bits_for
 
     df = _tbl(spark, sf_dir, "events").where(
         F.col("ts").isNotNull() & F.col("value").isNotNull()
@@ -1331,9 +1319,9 @@ def q_sliding_p50_cents(spark, sf_dir) -> DataFrame:
     atexit.register(shutil.rmtree, d, True)
     path = d + "/daily_qd"
     write_daily_sketches(
-        df, "ts", q, partial(QDigest, 0, bits), qdigest_from_bytes, path
+        df, "ts", q, partial(QDigest, 0, bits), path
     )
-    wins = sliding_window_rows(spark, path, qdigest_from_bytes, window_days=3)
+    wins = sliding_window_rows(spark, path, window_days=3)
     # windows decode in-executor (grouped_estimates) — nothing but the
     # final graded rows ever leaves the executors
     from q_digest_spark.operators.aggregate import grouped_estimates
@@ -1341,8 +1329,7 @@ def q_sliding_p50_cents(spark, sf_dir) -> DataFrame:
     return grouped_estimates(
         wins,
         ["win_end"],
-        qdigest_from_bytes,
-        lambda sk: int(sk.percentile(0.5)),
+        estimator=lambda sk: int(sk.percentile(0.5)),
         out_name="p50_cents",
         out_type="long",
         keep_rows=True,
@@ -1364,7 +1351,7 @@ def q_vocab_growth_curve(spark, sf_dir) -> DataFrame:
     (1.04/sqrt(2^14)) with the small-group absolute floor of 3."""
     from q_digest_spark.functions.text import norm_ws
     from q_digest_spark.operators.aggregate import grouped_sketch_rows
-    from q_digest_spark.sketches import HLL, hll_from_bytes
+    from q_digest_spark.sketches import HLL, from_bytes
 
     docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     tok_arr = F.split(norm_ws("text"), " ")
@@ -1377,9 +1364,9 @@ def q_vocab_growth_curve(spark, sf_dir) -> DataFrame:
         F.pmod(F.col("doc_id"), F.lit(10)).cast("int").alias("bucket"),
         F.explode(bigrams).alias("term"),
     )
-    rows = grouped_sketch_rows(toks, ["bucket"], "term", HLL, hll_from_bytes)
+    rows = grouped_sketch_rows(toks, ["bucket"], "term", HLL)
     sk_by_b = {
-        int(r["bucket"]): hll_from_bytes(bytes(r["sketch"]))
+        int(r["bucket"]): from_bytes(bytes(r["sketch"]))
         for r in rows.collect()
     }
     first = toks.groupBy("term").agg(F.min("bucket").alias("minb"))
@@ -1555,15 +1542,14 @@ def q_tdigest_p50_by_type_bound(spark, sf_dir) -> DataFrame:
         grouped_estimates,
         grouped_sketch_rows,
     )
-    from q_digest_spark.sketches import TDigest, tdigest_from_bytes
+    from q_digest_spark.sketches import TDigest
 
     df = _tbl(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    rows = grouped_sketch_rows(df, ["event_type"], "value", _p(TDigest, 200), tdigest_from_bytes)
+    rows = grouped_sketch_rows(df, ["event_type"], "value", _p(TDigest, 200))
     ests = grouped_estimates(
         rows,
         ["event_type"],
-        tdigest_from_bytes,
-        lambda sk: float(sk.quantiles([0.5])[0]),
+        estimator=lambda sk: float(sk.quantiles([0.5])[0]),
     )
     return _grouped_rank_bound_flags(
         spark, df, "event_type", "value", ests, p=0.5, bound=0.03
@@ -1658,17 +1644,13 @@ def q_events_p50_by_day(spark, sf_dir) -> DataFrame:
     (cents) per 1-day tumbling window over events.ts — epoch-aligned
     windows match DuckDB's date_trunc('day')."""
     from q_digest_spark.operators.aggregate import grouped_quantiles
-    from q_digest_spark.sketches import QDigest, qdigest_from_bytes
+    from q_digest_spark.sketches import QDigest, from_bytes
 
     df = _tbl(spark, sf_dir, "events").where(F.col("value").isNotNull())
     q = F.round(F.col("value") * 100).cast("long")
-    from q_digest_spark.sketches import universe_bits_for
-
-    mx = df.agg(F.max(q)).collect()[0][0]
-    bits = universe_bits_for(int(mx))
     win = df.withColumn("win_start", F.window("ts", "1 day")["start"])
     return grouped_quantiles(
-        win, ["win_start"], q, partial(QDigest, 0, bits), qdigest_from_bytes,
+        win, ["win_start"], q, partial(QDigest, 0, None), from_bytes,
         [0.5], ["p50_cents"],
     )
 
@@ -1679,17 +1661,13 @@ def q_weighted_median_price(spark, sf_dir) -> DataFrame:
     (the reference's insert takes an amount argument too,
     serial-implementation/src/qcore.c:224-252)."""
     from q_digest_spark.operators.aggregate import sketch_aggregate
-    from q_digest_spark.sketches import QDigest, qdigest_from_bytes
+    from q_digest_spark.sketches import QDigest
 
     df = _tbl(spark, sf_dir, "lineitem").select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("v"),
         F.col("l_quantity").cast("long").alias("w"),
     )
-    from q_digest_spark.sketches import universe_bits_for
-
-    mx = df.agg(F.max("v")).collect()[0][0]
-    bits = universe_bits_for(int(mx))
-    sk = sketch_aggregate(df, "v", partial(QDigest, 0, bits), qdigest_from_bytes, weight_col="w")
+    sk = sketch_aggregate(df, "v", partial(QDigest, 0, None), weight_col="w")
     return spark.createDataFrame(
         [(int(sk.percentile(0.5)), int(sk.n))], "median_cents long, total_weight long"
     )
@@ -1973,7 +1951,7 @@ def q_incremental_daily_p50(spark, sf_dir) -> DataFrame:
         merge_sketch_range,
         write_daily_sketches,
     )
-    from q_digest_spark.sketches import QDigest, qdigest_from_bytes
+    from q_digest_spark.sketches import QDigest
 
     df = _tbl(spark, sf_dir, "events").where(F.col("value").isNotNull())
     q = F.round(F.col("value") * 100).cast("long")
@@ -1985,10 +1963,10 @@ def q_incremental_daily_p50(spark, sf_dir) -> DataFrame:
     atexit.register(shutil.rmtree, d, True)
     path = d + "/daily"
     write_daily_sketches(
-        df, "ts", q, partial(QDigest, 0, bits), qdigest_from_bytes, path
+        df, "ts", q, partial(QDigest, 0, bits), path
     )
     sk = merge_sketch_range(
-        spark, path, qdigest_from_bytes, "2024-01-06", "2024-01-15"
+        spark, path, "2024-01-06", "2024-01-15"
     )
     return spark.createDataFrame(
         [(int(sk.percentile(0.5)), int(sk.n))], "p50_cents long, n long"
@@ -2010,19 +1988,19 @@ def q_sliding_distinct_users(spark, sf_dir) -> DataFrame:
         sliding_window_rows,
         write_daily_sketches,
     )
-    from q_digest_spark.sketches import HLL, hll_from_bytes
+    from q_digest_spark.sketches import HLL
 
     df = _tbl(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     d = tempfile.mkdtemp(prefix="qds_sliding_")
     atexit.register(shutil.rmtree, d, True)
     path = d + "/daily_hll"
-    write_daily_sketches(df, "ts", "user_id", HLL, hll_from_bytes, path)
-    wins = sliding_window_rows(spark, path, hll_from_bytes, window_days=3)
+    write_daily_sketches(df, "ts", "user_id", HLL, path)
+    wins = sliding_window_rows(spark, path, window_days=3)
     from q_digest_spark.operators.aggregate import grouped_estimates
 
     # distributed bound flags: windows decode in-executor, flag is a
     # JVM column over a keyed join against the exact windowed count
-    ests = grouped_estimates(wins, ["win_end"], hll_from_bytes)
+    ests = grouped_estimates(wins, ["win_end"])
     e = df.select(F.to_date("ts").alias("d"), "user_id")
     ends = e.select(F.col("d").alias("win_end")).distinct()
     exact = (
@@ -2068,16 +2046,16 @@ def q_sliding_cms_event_freq(spark, sf_dir) -> DataFrame:
         sliding_window_rows,
         write_daily_sketches,
     )
-    from q_digest_spark.sketches import CountMin, countmin_from_bytes
+    from q_digest_spark.sketches import CountMin, from_bytes
 
     df = _tbl(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     d = tempfile.mkdtemp(prefix="qds_slidcms_")
     atexit.register(shutil.rmtree, d, True)
     path = d + "/daily_cms"
     write_daily_sketches(
-        df, "ts", "event_type", _p(CountMin, 5, 16384), countmin_from_bytes, path
+        df, "ts", "event_type", _p(CountMin, 5, 16384), path
     )
-    wins = sliding_window_rows(spark, path, countmin_from_bytes, window_days=3)
+    wins = sliding_window_rows(spark, path, window_days=3)
     # bounded driver payload: the distinct event-type probe set (5)
     types = sorted(
         r["event_type"] for r in df.select("event_type").distinct().collect()
@@ -2091,7 +2069,7 @@ def q_sliding_cms_event_freq(spark, sf_dir) -> DataFrame:
                 continue
             outs = []
             for we, buf in zip(pdf["win_end"], pdf["sketch"]):
-                sk = countmin_from_bytes(bytes(buf))
+                sk = from_bytes(bytes(buf))
                 ests = sk.estimate(np.array(types, dtype=object))
                 outs.append(
                     pd.DataFrame(
@@ -2134,7 +2112,7 @@ def q_weighted_p50_by_returnflag(spark, sf_dir) -> DataFrame:
         grouped_estimates,
         grouped_sketch_rows,
     )
-    from q_digest_spark.sketches import QDigest, qdigest_from_bytes
+    from q_digest_spark.sketches import QDigest
 
     df = _tbl(spark, sf_dir, "lineitem").select(
         "l_returnflag",
@@ -2146,14 +2124,13 @@ def q_weighted_p50_by_returnflag(spark, sf_dir) -> DataFrame:
     mx = df.agg(F.max("v")).collect()[0][0]
     bits = universe_bits_for(int(mx))
     rows = grouped_sketch_rows(
-        df, ["l_returnflag"], "v", partial(QDigest, 0, bits), qdigest_from_bytes,
+        df, ["l_returnflag"], "v", partial(QDigest, 0, bits),
         weight_col="w",
     )
     return grouped_estimates(
         rows,
         ["l_returnflag"],
-        qdigest_from_bytes,
-        lambda sk: int(sk.percentile(0.5)),
+        estimator=lambda sk: int(sk.percentile(0.5)),
         out_name="median_cents",
         out_type="long",
         keep_rows=True,
@@ -2181,17 +2158,17 @@ def q_hll_distinct_users_by_day(spark, sf_dir) -> DataFrame:
         grouped_estimates,
         grouped_sketch_rows,
     )
-    from q_digest_spark.sketches import HLL, hll_from_bytes
+    from q_digest_spark.sketches import HLL
 
     df = _tbl(spark, sf_dir, "events").withColumn(
         "day", F.date_trunc("day", F.col("ts"))
     )
 
-    rows = grouped_sketch_rows(df, ["day", "event_type"], "user_id", HLL, hll_from_bytes)
+    rows = grouped_sketch_rows(df, ["day", "event_type"], "user_id", HLL)
     # distributed bound flags: decode estimates in-executor, join to
     # the exact aggregate on the group keys, flag in the JVM — no
     # O(groups) driver dict zip (scale-shape per r03 verdict)
-    ests = grouped_estimates(rows, ["day", "event_type"], hll_from_bytes)
+    ests = grouped_estimates(rows, ["day", "event_type"])
     exact = df.groupBy("day", "event_type").agg(
         F.countDistinct("user_id").alias("exact_distinct")
     )
@@ -2228,10 +2205,7 @@ def q_superspreader_users(spark, sf_dir) -> DataFrame:
         grouped_estimates,
         grouped_sketch_rows,
     )
-    from q_digest_spark.operators.quantiles import (
-        HashedTheta,
-        hashed_theta_from_bytes,
-    )
+    from q_digest_spark.operators.quantiles import HashedTheta
 
     df = _tbl(spark, sf_dir, "events").select(
         "user_id",
@@ -2239,13 +2213,12 @@ def q_superspreader_users(spark, sf_dir) -> DataFrame:
         F.xxhash64(F.to_date("ts").cast("string")).alias("dayh"),
     )
     rows = grouped_sketch_rows(
-        df, ["user_id"], "dayh", _partial(HashedTheta, 4096), hashed_theta_from_bytes
+        df, ["user_id"], "dayh", _partial(HashedTheta, 4096)
     )
     ests = grouped_estimates(
         rows,
         ["user_id"],
-        hashed_theta_from_bytes,
-        estimator=lambda sk: sk.sketch.estimate(),
+        estimator=lambda sk: sk.estimate(),
     )
     top = ests.orderBy(F.col("est").desc(), F.col("user_id").asc()).limit(10)
     exact = (
@@ -2268,7 +2241,7 @@ def q_qdigest_merge_by_lang_equals_global(spark, sf_dir) -> DataFrame:
     the oracle is the global exact-quantile SQL."""
     from q_digest_spark.operators.aggregate import grouped_sketch_rows
     from q_digest_spark.operators.quantiles import quantile_df
-    from q_digest_spark.sketches import QDigest, qdigest_from_bytes
+    from q_digest_spark.sketches import QDigest, from_bytes
 
     df = _docs(spark, sf_dir)
     from q_digest_spark.sketches import universe_bits_for
@@ -2277,11 +2250,10 @@ def q_qdigest_merge_by_lang_equals_global(spark, sf_dir) -> DataFrame:
     bits = universe_bits_for(int(mx))
     rows = grouped_sketch_rows(
         df, ["lang"], F.col("n_chars").cast("long"), partial(QDigest, 0, bits),
-        qdigest_from_bytes,
     ).collect()
     merged = None
     for r in rows:
-        cur = qdigest_from_bytes(bytes(r["sketch"]))
+        cur = from_bytes(bytes(r["sketch"]))
         merged = cur if merged is None else merged.merge(cur)
     return quantile_df(spark, merged, PS_DEFAULT, "long")
 
@@ -2292,15 +2264,15 @@ def q_hll_intersection_halves(spark, sf_dir) -> DataFrame:
     three HLLs (|A| + |B| - |A ∪ B|, union = lossless register max).
     Returns the exact intersection plus a bound flag sized to the
     compounded absolute errors of the three estimates."""
-    from q_digest_spark.sketches import HLL, hll_from_bytes
+    from q_digest_spark.sketches import HLL
     from q_digest_spark.operators.aggregate import sketch_aggregate
 
     df = _tbl(spark, sf_dir, "events")
     cut = F.lit("2024-01-16 00:00:00").cast("timestamp")
     a_df = df.where(F.col("ts") < cut).select("user_id")
     b_df = df.where(F.col("ts") >= cut).select("user_id")
-    ha = sketch_aggregate(a_df, "user_id", HLL, hll_from_bytes)
-    hb = sketch_aggregate(b_df, "user_id", HLL, hll_from_bytes)
+    ha = sketch_aggregate(a_df, "user_id", HLL)
+    hb = sketch_aggregate(b_df, "user_id", HLL)
     hu = HLL.from_bytes(ha.to_bytes()).merge(hb)
     est_a, est_b, est_u = ha.estimate(), hb.estimate(), hu.estimate()
     est_i = est_a + est_b - est_u
@@ -2453,14 +2425,14 @@ def q_rollup_distinct_docs(spark, sf_dir) -> DataFrame:
         grouped_estimates,
         rollup_sketch_rows,
     )
-    from q_digest_spark.sketches import HLL, hll_from_bytes
+    from q_digest_spark.sketches import HLL
 
     df = _docs(spark, sf_dir)
-    rolled = rollup_sketch_rows(df, ["lang", "source"], "doc_id", HLL, hll_from_bytes)
+    rolled = rollup_sketch_rows(df, ["lang", "source"], "doc_id", HLL)
     # distributed shape: sketches decode in-executor, flags come from a
     # null-safe keyed join against Spark's own rollup (level
     # disambiguates grouping-set NULLs from genuine NULL keys)
-    ests = grouped_estimates(rolled, ["lang", "source", "level"], hll_from_bytes)
+    ests = grouped_estimates(rolled, ["lang", "source", "level"])
     exact = df.rollup("lang", "source").agg(
         F.countDistinct("doc_id").alias("d"),
         (F.lit(2) - F.grouping("lang") - F.grouping("source"))
@@ -2504,14 +2476,14 @@ def q_cube_distinct_docs(spark, sf_dir) -> DataFrame:
         cube_sketch_rows,
         grouped_estimates,
     )
-    from q_digest_spark.sketches import HLL, hll_from_bytes
+    from q_digest_spark.sketches import HLL
 
     df = _docs(spark, sf_dir)
-    cubed = cube_sketch_rows(df, ["lang", "source"], "doc_id", HLL, hll_from_bytes)
+    cubed = cube_sketch_rows(df, ["lang", "source"], "doc_id", HLL)
     # join by (lang, source, LEVEL), null-safe: a genuine NULL key
     # value in the data would otherwise collide with a rolled-up NULL
     # marker and rows from different grouping sets would cross-match
-    ests = grouped_estimates(cubed, ["lang", "source", "level"], hll_from_bytes)
+    ests = grouped_estimates(cubed, ["lang", "source", "level"])
     exact = df.cube("lang", "source").agg(
         F.countDistinct("doc_id").alias("d"),
         F.grouping("lang").cast("int").alias("g_lang"),
@@ -3343,11 +3315,7 @@ def q_streaming_stateful_p50(spark, sf_dir) -> DataFrame:
     import uuid
 
     from pyspark.sql import Window
-    from q_digest_spark.sketches import (
-        QDigest,
-        qdigest_from_bytes,
-        universe_bits_for,
-    )
+    from q_digest_spark.sketches import QDigest, universe_bits_for
     from q_digest_spark.streaming.stateful import grouped_streaming_quantiles
 
     _ensure_importable(spark)
@@ -3366,7 +3334,6 @@ def q_streaming_stateful_p50(spark, sf_dir) -> DataFrame:
     )
     out = grouped_streaming_quantiles(
         stream, "event_type", "cents", partial(QDigest, 0, bits),
-        qdigest_from_bytes,
     )
     name = "qds_ssp_" + uuid.uuid4().hex[:8]
     q = (
@@ -3591,11 +3558,7 @@ def q_resumable_p50_n_chars(spark, sf_dir) -> DataFrame:
     from q_digest_spark.operators.checkpoint import (
         checkpointed_sketch_aggregate,
     )
-    from q_digest_spark.sketches import (
-        QDigest,
-        qdigest_from_bytes,
-        universe_bits_for,
-    )
+    from q_digest_spark.sketches import QDigest, universe_bits_for
 
     docs = _docs(spark, sf_dir).select(F.col("n_chars").cast("long").alias("v"))
     base = tempfile.mkdtemp(prefix="qds_resume_")
@@ -3613,12 +3576,12 @@ def q_resumable_p50_n_chars(spark, sf_dir) -> DataFrame:
         # run 1 "dies" after the first half of the splits
         first_half = src.where(F.input_file_name().isin(files[: len(files) // 2]))
         checkpointed_sketch_aggregate(
-            spark, first_half, "v", fac, qdigest_from_bytes,
+            spark, first_half, "v", fac,
             f"{base}/state", job_id="resume_demo",
         )
         # run 2 resumes: only the missing splits are re-scanned
         sk, m = checkpointed_sketch_aggregate(
-            spark, src, "v", fac, qdigest_from_bytes,
+            spark, src, "v", fac,
             f"{base}/state", job_id="resume_demo",
         )
         p50 = int(sk.quantiles([0.5])[0])
@@ -3716,11 +3679,7 @@ def q_mad_outliers_by_flag(spark, sf_dir) -> DataFrame:
     an integer, so no float enters any flag and the SQL oracle
     reproduces every count exactly."""
     from q_digest_spark.operators.aggregate import grouped_quantiles
-    from q_digest_spark.sketches import (
-        QDigest,
-        qdigest_from_bytes,
-        universe_bits_for,
-    )
+    from q_digest_spark.sketches import QDigest, from_bytes, universe_bits_for
 
     li = _tbl(spark, sf_dir, "lineitem").where(
         F.col("l_extendedprice").isNotNull()
@@ -3732,14 +3691,14 @@ def q_mad_outliers_by_flag(spark, sf_dir) -> DataFrame:
     fac = partial(QDigest, 0, universe_bits_for(int(mx)))
 
     med = grouped_quantiles(
-        li, ["l_returnflag"], "v", fac, qdigest_from_bytes, [0.5], ["med"]
+        li, ["l_returnflag"], "v", fac, from_bytes, [0.5], ["med"]
     )
     with_med = li.join(F.broadcast(med), "l_returnflag")
     dev = with_med.select(
         "l_returnflag", F.abs(F.col("v") - F.col("med")).alias("d")
     )
     mad = grouped_quantiles(
-        dev, ["l_returnflag"], "d", fac, qdigest_from_bytes, [0.5], ["mad"]
+        dev, ["l_returnflag"], "d", fac, from_bytes, [0.5], ["mad"]
     )
     return (
         with_med.join(F.broadcast(mad), "l_returnflag")
@@ -3768,10 +3727,8 @@ def q_theta_retention_overlap(spark, sf_dir) -> DataFrame:
     the pair's union scale, floor 3); the oracle is the exact
     overlap."""
     from q_digest_spark.operators.aggregate import grouped_sketch_rows
-    from q_digest_spark.operators.quantiles import (
-        HashedTheta,
-        hashed_theta_from_bytes,
-    )
+    from q_digest_spark.operators.quantiles import HashedTheta
+    from q_digest_spark.sketches import from_bytes
     from q_digest_spark.sketches.theta import ThetaSketch
 
     kk = 4096
@@ -3781,9 +3738,9 @@ def q_theta_retention_overlap(spark, sf_dir) -> DataFrame:
 
     rows = grouped_sketch_rows(
         ev, ["day"], F.xxhash64("user_id"),
-        partial(HashedTheta, kk), hashed_theta_from_bytes,
+        partial(HashedTheta, kk),
     ).collect()
-    by_day = {r["day"]: hashed_theta_from_bytes(bytes(r["sketch"])).sketch for r in rows}
+    by_day = {r["day"]: from_bytes(bytes(r["sketch"])) for r in rows}
     d0 = min(by_day)
 
     # exact overlaps, distributed (the oracle side of the flag)
@@ -4046,10 +4003,8 @@ def q_lang_vocab_jaccard(spark, sf_dir) -> DataFrame:
     error (3.2/sqrt(k-1) of the pair's union scale, floor 3) against
     exact overlaps; the oracle reproduces the exact side."""
     from q_digest_spark.operators.aggregate import grouped_sketch_rows
-    from q_digest_spark.operators.quantiles import (
-        HashedTheta,
-        hashed_theta_from_bytes,
-    )
+    from q_digest_spark.operators.quantiles import HashedTheta
+    from q_digest_spark.sketches import from_bytes
     from q_digest_spark.sketches.theta import ThetaSketch
 
     from q_digest_spark.functions.text import norm_ws
@@ -4063,9 +4018,9 @@ def q_lang_vocab_jaccard(spark, sf_dir) -> DataFrame:
     )
     rows = grouped_sketch_rows(
         toks, ["lang"], F.xxhash64("term"),
-        partial(HashedTheta, kk), hashed_theta_from_bytes,
+        partial(HashedTheta, kk),
     ).collect()
-    sk = {r["lang"]: hashed_theta_from_bytes(bytes(r["sketch"])).sketch for r in rows}
+    sk = {r["lang"]: from_bytes(bytes(r["sketch"])) for r in rows}
     langs = sorted(sk)
 
     # exact pairwise overlaps, distributed: one (lang, term) distinct
@@ -4344,7 +4299,6 @@ def q_decayed_heavy_users(spark, sf_dir) -> DataFrame:
 
     from q_digest_spark.operators.aggregate import sketch_aggregate
     from q_digest_spark.operators.decay import decayed_scores, decayed_weight
-    from q_digest_spark.sketches import misragries_from_bytes
     from q_digest_spark.sketches.misragries import MisraGries
 
     ev = _tbl(spark, sf_dir, "events").where(
@@ -4356,7 +4310,7 @@ def q_decayed_heavy_users(spark, sf_dir) -> DataFrame:
         decayed_weight("ts", F.col("__ref"), 7, 28).alias("c"),
     )
     mg = sketch_aggregate(
-        weighted, "v", _partial(MisraGries, 256), misragries_from_bytes,
+        weighted, "v", _partial(MisraGries, 256),
         weight_col="c",
     )
     top = sorted(mg.items().items(), key=lambda kv: (-kv[1], int(kv[0])))[:10]
@@ -4414,11 +4368,7 @@ def q_qdigest_p50_by_nation(spark, sf_dir) -> DataFrame:
     (n_name, cents) projection, so the quantile pass adds one grouped
     partial-aggregate on top of the join, never a per-nation sort."""
     from q_digest_spark.operators.aggregate import grouped_quantiles
-    from q_digest_spark.sketches import (
-        QDigest,
-        qdigest_from_bytes,
-        universe_bits_for,
-    )
+    from q_digest_spark.sketches import QDigest, from_bytes
 
     o = _tbl(spark, sf_dir, "orders")
     c = _tbl(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -4431,14 +4381,12 @@ def q_qdigest_p50_by_nation(spark, sf_dir) -> DataFrame:
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
     )
-    mx = joined.agg(F.max("cents")).collect()[0][0]
-    bits = universe_bits_for(int(mx))
     return grouped_quantiles(
         joined,
         ["n_name"],
         F.col("cents"),
-        partial(QDigest, 0, bits),
-        qdigest_from_bytes,
+        partial(QDigest, 0, None),
+        from_bytes,
         [0.5],
         ["p50_cents"],
     )
@@ -4949,11 +4897,7 @@ def q_funnel_time_to_convert(spark, sf_dir) -> DataFrame:
     the ceil(n/2)-rank median convention every p50 query here pins."""
     from q_digest_spark.operators.aggregate import grouped_quantiles
     from q_digest_spark.operators.events import funnel_conversion_latencies
-    from q_digest_spark.sketches import (
-        QDigest,
-        qdigest_from_bytes,
-        universe_bits_for,
-    )
+    from q_digest_spark.sketches import QDigest, from_bytes, universe_bits_for
 
     ev = _tbl(spark, sf_dir, "events")
     lat = funnel_conversion_latencies(
@@ -4974,7 +4918,7 @@ def q_funnel_time_to_convert(spark, sf_dir) -> DataFrame:
             ["g"],
             F.col("latency_us"),
             partial(QDigest, 0, bits),
-            qdigest_from_bytes,
+            from_bytes,
             [0.5],
             ["p50_latency_us"],
         ).collect()[0]["p50_latency_us"]
@@ -5580,15 +5524,14 @@ def q_gk_group_p99_bound(spark, sf_dir) -> DataFrame:
         grouped_estimates,
         grouped_sketch_rows,
     )
-    from q_digest_spark.sketches import gk_from_bytes
     from q_digest_spark.sketches.gk import GK
 
     df = _tbl(spark, sf_dir, "events").select(
         "event_type", F.col("value").cast("double").alias("v")
     ).where(F.col("v").isNotNull() & F.col("event_type").isNotNull())
-    rows = grouped_sketch_rows(df, ["event_type"], "v", GK, gk_from_bytes)
+    rows = grouped_sketch_rows(df, ["event_type"], "v", GK)
     ests = grouped_estimates(
-        rows, ["event_type"], gk_from_bytes, _gk_p99_decode,
+        rows, ["event_type"], estimator=_gk_p99_decode,
         out_type="array<double>",
     ).select(
         "event_type",
@@ -5802,7 +5745,7 @@ def q_iblt_user_reconciliation(spark, sf_dir) -> DataFrame:
     on the driver, certified complete by the emptied table. Output
     must equal the SQL symmetric difference row for row."""
     from q_digest_spark.operators.aggregate import sketch_aggregate
-    from q_digest_spark.sketches.iblt import IBLT, iblt_from_bytes
+    from q_digest_spark.sketches.iblt import IBLT
 
     from functools import partial as _partial
 
@@ -5816,8 +5759,8 @@ def q_iblt_user_reconciliation(spark, sf_dir) -> DataFrame:
     # hard-fail on a bigger fixture instead of degrading gracefully.
     # Each retry is two cheap one-pass rebuilds.
     for m in (4096, 16384, 65536, 262144):
-        sk_f = sketch_aggregate(first, "user_id", _partial(IBLT, m), iblt_from_bytes)
-        sk_l = sketch_aggregate(last, "user_id", _partial(IBLT, m), iblt_from_bytes)
+        sk_f = sketch_aggregate(first, "user_id", _partial(IBLT, m))
+        sk_l = sketch_aggregate(last, "user_id", _partial(IBLT, m))
         pos, neg, complete = sk_f.subtract(sk_l).peel()
         if complete:
             break
@@ -6735,11 +6678,6 @@ def q_quantile_bound_matrix(spark, sf_dir) -> DataFrame:
         KLL,
         QDigest,
         TDigest,
-        ddsketch_from_bytes,
-        gk_from_bytes,
-        kll_from_bytes,
-        qdigest_from_bytes,
-        tdigest_from_bytes,
         universe_bits_for,
     )
     from q_digest_spark.sketches.ddsketch import DDSketch
@@ -6755,11 +6693,11 @@ def q_quantile_bound_matrix(spark, sf_dir) -> DataFrame:
     sks = multi_sketch_aggregate(
         df,
         {
-            "qdigest": SketchSpec("v", partial(QDigest, 128, bits), qdigest_from_bytes),
-            "kll": SketchSpec(dbl, partial(KLL, 200), kll_from_bytes),
-            "tdigest": SketchSpec(dbl, partial(TDigest, 200), tdigest_from_bytes),
-            "ddsketch": SketchSpec(dbl, partial(DDSketch, 0.01), ddsketch_from_bytes),
-            "gk": SketchSpec(dbl, partial(GK, 1024), gk_from_bytes),
+            "qdigest": SketchSpec("v", partial(QDigest, 128, bits)),
+            "kll": SketchSpec(dbl, partial(KLL, 200)),
+            "tdigest": SketchSpec(dbl, partial(TDigest, 200)),
+            "ddsketch": SketchSpec(dbl, partial(DDSketch, 0.01)),
+            "gk": SketchSpec(dbl, partial(GK, 1024)),
         },
     )
     n = sks["qdigest"].n
@@ -9016,13 +8954,6 @@ def q_frequency_sketch_matrix(spark, sf_dir) -> DataFrame:
         SketchSpec,
         multi_sketch_aggregate,
     )
-    from q_digest_spark.sketches import (
-        countmin_from_bytes,
-        cucountmin_from_bytes,
-        lossycounting_from_bytes,
-        misragries_from_bytes,
-        spacesaving_from_bytes,
-    )
     from q_digest_spark.sketches.countmin import CountMin
     from q_digest_spark.sketches.cucountmin import CUCountMin
     from q_digest_spark.sketches.lossycounting import LossyCounting
@@ -9037,11 +8968,11 @@ def q_frequency_sketch_matrix(spark, sf_dir) -> DataFrame:
     sks = multi_sketch_aggregate(
         toks,
         {
-            "misragries": SketchSpec("tok", partial(MisraGries, K), misragries_from_bytes),
-            "spacesaving": SketchSpec("tok", partial(SpaceSaving, 256), spacesaving_from_bytes),
-            "lossy": SketchSpec("tok", partial(LossyCounting, 0.001), lossycounting_from_bytes),
-            "cms": SketchSpec("tok", partial(CountMin, 5, 8192), countmin_from_bytes),
-            "cu_cms": SketchSpec("tok", partial(CUCountMin, 5, 8192), cucountmin_from_bytes),
+            "misragries": SketchSpec("tok", partial(MisraGries, K)),
+            "spacesaving": SketchSpec("tok", partial(SpaceSaving, 256)),
+            "lossy": SketchSpec("tok", partial(LossyCounting, 0.001)),
+            "cms": SketchSpec("tok", partial(CountMin, 5, 8192)),
+            "cu_cms": SketchSpec("tok", partial(CUCountMin, 5, 8192)),
         },
     )
     heavy = guaranteed_heavy(toks, "tok", K).collect()  # <= K rows
@@ -9199,7 +9130,6 @@ def q_mg_heavy_tokens_by_lang(spark, sf_dir) -> DataFrame:
         grouped_items,
         grouped_sketch_rows,
     )
-    from q_digest_spark.sketches import misragries_from_bytes
     from q_digest_spark.sketches.misragries import MisraGries
 
     K = 32
@@ -9211,7 +9141,7 @@ def q_mg_heavy_tokens_by_lang(spark, sf_dir) -> DataFrame:
     ).where(F.col("tok") != "")
 
     rows = grouped_sketch_rows(
-        toks, ["lang"], "tok", partial(MisraGries, K), misragries_from_bytes
+        toks, ["lang"], "tok", partial(MisraGries, K)
     )
 
     import pandas as _pd
@@ -9226,7 +9156,7 @@ def q_mg_heavy_tokens_by_lang(spark, sf_dir) -> DataFrame:
         )
 
     items = grouped_items(
-        rows, ["lang"], misragries_from_bytes, mg_items,
+        rows, ["lang"], mg_items,
         "token string, est long, err long",
     )
 
@@ -9641,10 +9571,12 @@ def q_cuckoo_deleted_membership(spark, sf_dir) -> DataFrame:
     exact member arithmetic and the literal-true invariant."""
     from q_digest_spark.operators.membership import cuckoo_probe_column
     from q_digest_spark.operators.quantiles import cuckoo_of
+    from q_digest_spark.sketches.cuckoo import buckets_for
 
     orders = _tbl(spark, sf_dir, "orders")
     members = orders.select(F.col("o_custkey").alias("key")).distinct()
-    ck = cuckoo_of(members, "key", m_buckets=1 << 14)
+    # sized from the member count: a fixed size overflows as sf grows
+    ck = cuckoo_of(members, "key", m_buckets=buckets_for(members.count()))
     top = (
         orders.groupBy("o_custkey")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -9940,7 +9872,7 @@ def q_l0_support_sample(spark, sf_dir) -> DataFrame:
     1-row count), and its net weight must be exactly +1. The oracle
     grades the exact support size and the literal-true invariants."""
     from q_digest_spark.operators.aggregate import sketch_aggregate
-    from q_digest_spark.sketches import L0Sampler, l0sampler_from_bytes
+    from q_digest_spark.sketches import L0Sampler
 
     ev = _tbl(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
@@ -9960,7 +9892,7 @@ def q_l0_support_sample(spark, sf_dir) -> DataFrame:
         deletes.withColumn("w", F.lit(-1))
     )
     sk = sketch_aggregate(
-        stream, "key", L0Sampler, l0sampler_from_bytes, weight_col="w"
+        stream, "key", L0Sampler, weight_col="w"
     )
     res = sk.sample() if sk is not None else None
     support = clicks.join(errors, "key", "left_anti")

@@ -18,12 +18,7 @@ from .sketches import (
     CountMin,
     QDigest,
     TDigest,
-    bloom_from_bytes,
-    countmin_from_bytes,
-    hll_from_bytes,
-    kll_from_bytes,
-    qdigest_from_bytes,
-    tdigest_from_bytes,
+    from_bytes,
     universe_bits_for,
 )
 
@@ -36,11 +31,6 @@ __all__ = [
     "CountMin",
     "QDigest",
     "TDigest",
-    "bloom_from_bytes",
-    "countmin_from_bytes",
-    "hll_from_bytes",
-    "kll_from_bytes",
-    "qdigest_from_bytes",
-    "tdigest_from_bytes",
+    "from_bytes",
     "universe_bits_for",
 ]

@@ -62,6 +62,8 @@ import pandas as pd
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, functions as F
 
+from ..sketches import from_bytes
+
 SketchFactory = Callable[[], object]
 
 PARTIAL_SCHEMA = "part_id long, name string, sketch binary, rows long"
@@ -71,11 +73,12 @@ log = logging.getLogger(__name__)
 
 class SketchSpec(NamedTuple):
     """One sketch of an aggregation: its input (column name or Column
-    expression), an empty-sketch factory, the bytes decoder, and an
-    optional weight column that turns rows into (value, weight) pairs
-    fed to ``update_batch(values, weights)`` — how a JVM precount
-    (``df.groupBy(v).count()``, weight ``count``) hands Python a bounded
-    histogram instead of raw rows.
+    expression), an empty-sketch factory, the decoder of the folded
+    result (``sketches.from_bytes`` unless a caller wants its own
+    wrapper class back), and an optional weight column that turns rows
+    into (value, weight) pairs fed to ``update_batch(values,
+    weights)`` — how a JVM precount (``df.groupBy(v).count()``, weight
+    ``count``) hands Python a bounded histogram instead of raw rows.
 
     Null inputs are skipped, but ``F.xxhash64(c)`` of a NULL is 42, not
     NULL: filter NULL rows (``df.where(c.isNotNull())``) before a spec
@@ -85,7 +88,7 @@ class SketchSpec(NamedTuple):
 
     col: object
     factory: SketchFactory
-    deserialize: Callable[[bytes], object]
+    deserialize: Callable[[bytes], object] = from_bytes
     weight_col: object = None
 
 
@@ -172,8 +175,8 @@ def partial_sketches(
     return sdf.mapInPandas(build, schema)
 
 
-def _fold(bufs: Iterable, deserialize):
-    """The one sketch fold: deserialize and merge, in the given order."""
+def _fold(bufs: Iterable, deserialize=from_bytes):
+    """The one sketch fold: decode and merge, in the given order."""
     sk = None
     for buf in bufs:
         cur = deserialize(bytes(buf))
@@ -181,14 +184,8 @@ def _fold(bufs: Iterable, deserialize):
     return sk
 
 
-def _decoder(deserialize, name):
-    """``deserialize`` is one decoder for every name, or a mapping
-    name -> decoder."""
-    return deserialize[name] if isinstance(deserialize, Mapping) else deserialize
-
-
 def _merge_group(
-    keys: Sequence[str], deserialize, order: Sequence[str] = ("part_id",), finish=None
+    keys: Sequence[str], order: Sequence[str] = ("part_id",), finish=None, deserialize=from_bytes
 ):
     """applyInPandas body of every sketch merge (tree levels, grouped
     rows, grouped quantiles, rollup/cube levels, sliding windows): one
@@ -202,8 +199,7 @@ def _merge_group(
         by = [c for c in order if c in pdf.columns]
         if by:
             pdf = pdf.sort_values(by, kind="stable")
-        dec = _decoder(deserialize, pdf["name"].iloc[0] if "name" in pdf.columns else None)
-        sk = _fold(pdf["sketch"], dec)
+        sk = _fold(pdf["sketch"], deserialize)
         out = {k: [pdf[k].iloc[0]] for k in keys}
         if finish is None:
             out["sketch"] = [sk.to_bytes()]
@@ -215,12 +211,12 @@ def _merge_group(
     return merge_group
 
 
-def tree_merge(partials: DataFrame, deserialize, fanout: int = 32) -> DataFrame:
+def tree_merge(partials: DataFrame, fanout: int = 32) -> DataFrame:
     """Shuffle partial rows into ``fanout`` groups per name by
     ``part_id % fanout`` and merge each group in one task
     (applyInPandas). Output: <= fanout rows per name."""
     return partials.groupBy("name", F.pmod("part_id", F.lit(fanout))).applyInPandas(
-        _merge_group(["part_id", "name"], deserialize), PARTIAL_SCHEMA
+        _merge_group(["part_id", "name"]), PARTIAL_SCHEMA
     )
 
 
@@ -266,7 +262,7 @@ def partition_bound(df: DataFrame) -> int | None:
 
 
 def fold_partials(
-    df: DataFrame, build: Callable[[DataFrame], DataFrame], deserialize, fanout: int = 32
+    df: DataFrame, build: Callable[[DataFrame], DataFrame], fanout: int = 32
 ) -> dict[str, tuple[object, int]]:
     """The ungrouped core: ``build`` maps ``df`` narrowly to
     ``partial_sketches``-shaped rows, which merge into ``{name: (sketch,
@@ -294,11 +290,11 @@ def fold_partials(
         if fanout >= df.sparkSession.sparkContext.defaultParallelism:
             partials, path = build(df.coalesce(fanout)), "coalesced driver fold"
         else:
-            partials, path = tree_merge(partials, deserialize, fanout), "tree merge"
+            partials, path = tree_merge(partials, fanout), "tree merge"
     pdf = partials.toPandas().sort_values(["name", "part_id"], kind="stable")
     log.debug("fold_partials: %s, partition bound %s, fanout %d, %d partials", path, bound, fanout, len(pdf))
     return {
-        name: (_fold(g["sketch"], _decoder(deserialize, name)), int(g["rows"].sum()))
+        name: (_fold(g["sketch"]), int(g["rows"].sum()))
         for name, g in pdf.groupby("name", sort=False)
     }
 
@@ -307,22 +303,24 @@ def aggregate_sketches(
     df: DataFrame, specs: Mapping[str, SketchSpec], fanout: int = 32
 ) -> dict[str, tuple[object, int]]:
     """``{name: (merged sketch, rows)}`` of every spec from one pass
-    over ``df``; a spec whose input is all null is absent."""
-    return fold_partials(
-        df, lambda d: partial_sketches(d, specs), {n: s.deserialize for n, s in specs.items()}, fanout
-    )
+    over ``df``; a spec whose input is all null is absent. A spec with
+    its own decoder gets the folded bytes read back through it."""
+    out = fold_partials(df, lambda d: partial_sketches(d, specs), fanout)
+    for n, (sk, rows) in out.items():
+        if specs[n].deserialize is not from_bytes:
+            out[n] = (specs[n].deserialize(sk.to_bytes()), rows)
+    return out
 
 
 def sketch_aggregate(
     df: DataFrame,
     col,
     factory: SketchFactory,
-    deserialize,
     fanout: int = 32,
     weight_col=None,
 ):
     """One sketch of ``col``, merged on the driver; None on empty input."""
-    out = aggregate_sketches(df, {"v": SketchSpec(col, factory, deserialize, weight_col)}, fanout)
+    out = aggregate_sketches(df, {"v": SketchSpec(col, factory, weight_col=weight_col)}, fanout)
     return out["v"][0] if out else None
 
 
@@ -331,7 +329,6 @@ def grouped_sketch_rows(
     keys: Sequence[str],
     col,
     factory: SketchFactory,
-    deserialize,
     *,
     weight_col=None,
 ) -> DataFrame:
@@ -351,16 +348,14 @@ def grouped_sketch_rows(
     Returns a DataFrame ``keys..., sketch binary, rows long``.
     """
     keys = list(keys)
-    partials = partial_sketches(df, {"v": SketchSpec(col, factory, deserialize, weight_col)}, keys)
-    return partials.groupBy(*keys).applyInPandas(
-        _merge_group(keys, deserialize), _rows_schema(partials.schema, keys)
-    )
+    partials = partial_sketches(df, {"v": SketchSpec(col, factory, weight_col=weight_col)}, keys)
+    return partials.groupBy(*keys).applyInPandas(_merge_group(keys), _rows_schema(partials.schema, keys))
 
 
 def grouped_estimates(
     rows_df: DataFrame,
     keys: Sequence[str],
-    deserialize,
+    deserialize=from_bytes,
     estimator=None,
     *,
     out_name: str = "est",
@@ -374,7 +369,7 @@ def grouped_estimates(
     instead of zipping two driver dicts; the flag then costs one tiny
     keyed join however many groups exist).
 
-    ``estimator`` maps a deserialized sketch to a scalar (default:
+    ``estimator`` maps a decoded sketch to a scalar (default:
     ``.estimate()``). ``keep_rows`` passes the per-group ``rows``
     count through."""
     keys = list(keys)
@@ -399,7 +394,6 @@ def grouped_estimates(
 def grouped_items(
     rows_df: DataFrame,
     keys: Sequence[str],
-    deserialize,
     items_fn,
     item_schema: str,
 ) -> DataFrame:
@@ -408,7 +402,7 @@ def grouped_items(
     the shape a per-group frequent-items summary needs (each group's
     Misra-Gries/Space-Saving tracked set becomes (keys..., token, est,
     err) rows) without collecting any group table. ``items_fn`` maps a
-    deserialized sketch to a pandas DataFrame matching ``item_schema``
+    decoded sketch to a pandas DataFrame matching ``item_schema``
     (column names and order); the group-key columns are replicated
     onto every emitted row. Output size is bounded by
     groups x summary-capacity, never by the data."""
@@ -418,7 +412,7 @@ def grouped_items(
     def decode(batches: Iterable[pd.DataFrame]):
         for pdf in batches:
             for _, row in pdf.iterrows():  # <= one row per group/batch
-                items = items_fn(deserialize(bytes(row["sketch"])))
+                items = items_fn(from_bytes(bytes(row["sketch"])))
                 if items is None or not len(items):
                     continue
                 for k in reversed(keys):
@@ -443,14 +437,14 @@ def grouped_quantiles(
     per p."""
     keys = list(keys)
     out_names = list(out_names) if out_names else [f"p{int(p * 100)}" for p in ps]
-    partials = partial_sketches(df, {"v": SketchSpec(col, factory, deserialize)}, keys)
+    partials = partial_sketches(df, {"v": SketchSpec(col, factory)}, keys)
     out_schema = _rows_schema(partials.schema, keys, ", ".join(f"`{n}` long" for n in out_names))
 
     def finish(sk):
         return dict(zip(out_names, sk.quantiles(ps)))
 
     return partials.groupBy(*keys).applyInPandas(
-        _merge_group(keys, deserialize, finish=finish), out_schema
+        _merge_group(keys, finish=finish, deserialize=deserialize), out_schema
     )
 
 
@@ -459,7 +453,6 @@ def cube_sketch_rows(
     keys: Sequence[str],
     col,
     factory: SketchFactory,
-    deserialize,
 ) -> DataFrame:
     """Sketch-native CUBE: one sketch row for EVERY subset of ``keys``
     (all 2^n grouping sets) from ONE scan over the data — the finest
@@ -480,7 +473,7 @@ def cube_sketch_rows(
     from ._spill import spill_parquet
 
     finest = spill_parquet(
-        grouped_sketch_rows(df, keys, col, factory, deserialize), "qds_cube_"
+        grouped_sketch_rows(df, keys, col, factory), "qds_cube_"
     )
     outs = []
     for n in range(len(keys), -1, -1):
@@ -490,7 +483,7 @@ def cube_sketch_rows(
             else:
                 rolled = [k for k in keys if k not in subset]
                 merged = finest.groupBy(*subset).applyInPandas(
-                    _merge_group(subset, deserialize, rolled), _rows_schema(finest.schema, subset)
+                    _merge_group(subset, rolled), _rows_schema(finest.schema, subset)
                 )
             padded = merged.withColumn("level", F.lit(len(subset)))
             for k in keys:
@@ -508,7 +501,7 @@ def rollup_sketch_rows(
     keys: Sequence[str],
     col,
     factory: SketchFactory,
-    deserialize,
+    deserialize=from_bytes,
 ) -> DataFrame:
     """Sketch-native ROLLUP: one sketch row for every prefix level of
     ``keys`` — (k1..kn), (k1..kn-1), ..., (k1), () — where the finest
@@ -530,14 +523,14 @@ def rollup_sketch_rows(
     from ._spill import spill_parquet
 
     finest = spill_parquet(
-        grouped_sketch_rows(df, keys, col, factory, deserialize), "qds_rollup_"
+        grouped_sketch_rows(df, keys, col, factory), "qds_rollup_"
     )
     levels = [finest.withColumn("level", F.lit(len(keys)))]
     current = finest
     for n in range(len(keys) - 1, -1, -1):
         level_keys = keys[:n]
         coarser = current.groupBy(*level_keys).applyInPandas(
-            _merge_group(level_keys, deserialize, keys[n:n + 1]),
+            _merge_group(level_keys, keys[n:n + 1], deserialize=deserialize),
             _rows_schema(finest.schema, level_keys),
         )
         current = coarser

@@ -82,7 +82,6 @@ def checkpointed_sketch_aggregate(
     df: DataFrame,
     col,
     factory,
-    deserialize,
     state_dir: str,
     job_id: str | None = None,
 ):
@@ -129,7 +128,7 @@ def checkpointed_sketch_aggregate(
         .sort_values("file", kind="stable")
     )
     metrics["rows_aggregated"] = int(pdf["rows"].sum())
-    return _fold(pdf["sketch"], deserialize), metrics
+    return _fold(pdf["sketch"]), metrics
 
 
 def lineage_report(spark: SparkSession, state_dir: str, job_id: str) -> DataFrame:

@@ -45,7 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .aggregate import PARTIAL_SCHEMA, _as_col, fold_partials
-from .quantiles import HashedCMS, hashed_cms_from_bytes
+from .quantiles import HashedCMS
 
 _CAND_MAGIC = b"CND1"
 
@@ -78,10 +78,6 @@ class Candidates:
         if buf[:4] != _CAND_MAGIC:
             raise ValueError("bad Candidates buffer")
         return Candidates(pickle.loads(buf[4:]))
-
-
-def candidates_from_bytes(buf: bytes) -> Candidates:
-    return Candidates.from_bytes(buf)
 
 
 def _top_k(df: DataFrame, col, k: int, candidates_per_partition: int,
@@ -118,13 +114,11 @@ def _top_k(df: DataFrame, col, k: int, candidates_per_partition: int,
             c.alias("key"),
         ).mapInPandas(build, PARTIAL_SCHEMA)
 
-    merged = fold_partials(
-        df, partials, {"cms": hashed_cms_from_bytes, "cand": candidates_from_bytes}, fanout
-    )
+    merged = fold_partials(df, partials, fanout)
     if not merged:
         return pd.DataFrame({"key_hash": [], "key": [], "est_cnt": []})
     cand = merged["cand"][0].top(m)
-    est = merged["cms"][0].sketch.estimate_hashes(cand["h"].to_numpy(np.int64).view(np.uint64))
+    est = merged["cms"][0].estimate_hashes(cand["h"].to_numpy(np.int64).view(np.uint64))
     out = cand.assign(key_hash=cand["h"], est_cnt=est.astype(np.int64))
     return out.sort_values(["est_cnt", "key_hash"], ascending=[False, True]).head(k)
 

@@ -27,7 +27,6 @@ def write_daily_sketches(
     ts_col: str,
     col,
     factory,
-    deserialize,
     path: str,
     mode: str = "overwrite",
 ) -> None:
@@ -38,7 +37,7 @@ def write_daily_sketches(
     without it Spark's static overwrite would silently delete every
     previously stored day first, breaking the incremental contract."""
     rows = grouped_sketch_rows(
-        df.withColumn("day", F.to_date(ts_col)), ["day"], col, factory, deserialize
+        df.withColumn("day", F.to_date(ts_col)), ["day"], col, factory
     )
     (
         rows.write.mode(mode)
@@ -51,7 +50,6 @@ def write_daily_sketches(
 def merge_sketch_range(
     spark: SparkSession,
     path: str,
-    deserialize,
     day_lo: str | None = None,
     day_hi: str | None = None,
 ):
@@ -67,13 +65,12 @@ def merge_sketch_range(
     if day_hi is not None:
         rows = rows.where(F.col("day") <= F.lit(day_hi).cast("date"))
     pdf = rows.select("day", "sketch").toPandas().sort_values("day", kind="stable")
-    return _fold(pdf["sketch"], deserialize)
+    return _fold(pdf["sketch"])
 
 
 def sliding_window_rows(
     spark: SparkSession,
     path: str,
-    deserialize,
     window_days: int,
 ) -> DataFrame:
     """Trailing-window queries over the stored daily sketch table —
@@ -100,5 +97,5 @@ def sliding_window_rows(
     ends = rows.select(F.col("day").alias("win_end")).distinct()
     contrib = contrib.join(F.broadcast(ends), "win_end")
     return contrib.groupBy("win_end").applyInPandas(
-        _merge_group(["win_end"], deserialize, ["day"]), "win_end date, sketch binary, rows long"
+        _merge_group(["win_end"], ["day"]), "win_end date, sketch binary, rows long"
     )

@@ -19,7 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from q_digest_spark.operators.aggregate import sketch_aggregate
-from q_digest_spark.sketches import fd_from_bytes
 from q_digest_spark.sketches.fd import FrequentDirections
 
 
@@ -31,7 +30,7 @@ def fd_of(df: DataFrame, col: str, ell: int = 32, fanout: int = 32) -> FrequentD
 
     res = sketch_aggregate(
         df.where(F.col(col).isNotNull()), col,
-        partial(FrequentDirections, ell), fd_from_bytes, fanout,
+        partial(FrequentDirections, ell), fanout,
     )
     return res
 

@@ -19,14 +19,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..sketches import Bloom, bloom_from_bytes
+from ..sketches import Bloom, from_bytes
 
 
-def _probe_column(df: DataFrame, col, buf: bytes, decode, flag_name: str) -> DataFrame:
+def _probe_column(df: DataFrame, col, filt, flag_name: str) -> DataFrame:
     """The one probe body: hash `col` JVM-side with xxhash64 (as the
-    ``*_of`` builders do), decode the filter bytes once per task with
-    the filter's module-level decoder (pickled by reference) and add
-    ``flag_name`` = ``contains_hashes`` per Arrow batch."""
+    ``*_of`` builders do), ship the filter's bytes in the closure,
+    decode them once per task and add ``flag_name`` =
+    ``contains_hashes`` per Arrow batch."""
+    buf = filt.to_bytes()
     c = F.col(col) if isinstance(col, str) else col
     hdf = df.withColumn("__h", F.xxhash64(c))
     out_schema = ", ".join(
@@ -34,7 +35,7 @@ def _probe_column(df: DataFrame, col, buf: bytes, decode, flag_name: str) -> Dat
     ) + f", `{flag_name}` boolean"
 
     def probe(batches: Iterable[pd.DataFrame]):
-        fl = decode(buf)
+        fl = from_bytes(buf)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -49,7 +50,7 @@ def _probe_column(df: DataFrame, col, buf: bytes, decode, flag_name: str) -> Dat
 def bloom_probe_column(df: DataFrame, col, bloom: Bloom, flag_name: str = "is_member") -> DataFrame:
     """Adds a boolean column: does `col` (hashed JVM-side with
     xxhash64, matching bloom_of) hit the filter?"""
-    return _probe_column(df, col, bloom.to_bytes(), bloom_from_bytes, flag_name)
+    return _probe_column(df, col, bloom, flag_name)
 
 
 def bloom_filter_rows(
@@ -73,9 +74,7 @@ def counting_bloom_probe_column(
     under multiset discipline). Same shipping model: serialized
     filter in the closure, JVM xxhash64 prehash, vectorized probe per
     Arrow batch."""
-    from ..sketches import counting_bloom_from_bytes
-
-    return _probe_column(df, col, cbf.to_bytes(), counting_bloom_from_bytes, flag_name)
+    return _probe_column(df, col, cbf, flag_name)
 
 
 def referential_orphans(
@@ -144,6 +143,4 @@ def cuckoo_probe_column(
     xxhash64, matching cuckoo_of) hit the cuckoo filter? Same
     map-side contract as bloom_probe_column — the filter ships in the
     closure and is probed vectorized per Arrow batch."""
-    from ..sketches import cuckoo_from_bytes
-
-    return _probe_column(df, col, ck.to_bytes(), cuckoo_from_bytes, flag_name)
+    return _probe_column(df, col, ck, flag_name)

@@ -31,7 +31,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DecimalType, StructField, StructType
 
-from ..sketches import moments_from_bytes
+from ..sketches import from_bytes
 from ..sketches.moments import Moments
 from .aggregate import grouped_sketch_rows
 
@@ -54,11 +54,11 @@ def zscore_outlier_flags(
     c = F.col(col) if isinstance(col, str) else col
     rows = grouped_sketch_rows(
         df.select(*group_cols, c.cast("long").alias(value_name)),
-        group_cols, value_name, Moments, moments_from_bytes,
+        group_cols, value_name, Moments,
     ).collect()
     stats = []
     for r in rows:
-        sk = moments_from_bytes(bytes(r["sketch"]))
+        sk = from_bytes(bytes(r["sketch"]))
         stats.append(
             tuple(r[g] for g in group_cols)
             + (Decimal(sk.n), Decimal(int(sk.s1)), Decimal(int(sk.s2)))

@@ -2,10 +2,10 @@
 
 The data-quality sweep every ingestion pipeline runs (row counts, null
 rates, distinct cardinalities, value quantiles) — expressed as ONE
-multi_sketch_aggregate pass, so profiling N columns of a 100 TB table
+fused ``aggregate_sketches`` pass, so profiling N columns of a 100 TB table
 costs one scan, not N. Distinct counts come from HLL, numeric
-quantiles from KLL; non-null counts fall out of the sketches' own n
-(every consumed value is counted exactly).
+quantiles from KLL; non-null counts are the fold's exact ``rows``
+(every consumed value is counted).
 """
 
 from __future__ import annotations
@@ -14,53 +14,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from .multi import SketchSpec, multi_sketch_aggregate
-
-
-class CountingHLL:
-    """HLL plus an exact consumed-value counter (HLL lacks n);
-    module-level for cloudpickle-by-reference."""
-
-    def __init__(self, p: int = 14):
-        from ..sketches import HLL
-
-        self.h = HLL(p)
-        self.n = 0
-
-    def update_batch(self, values):
-        import numpy as np
-
-        arr = np.asarray(values)
-        self.h.update_batch(arr)
-        self.n += len(arr)
-
-    def merge(self, other):
-        self.h.merge(other.h)
-        self.n += other.n
-        return self
-
-    def estimate(self) -> float:
-        return self.h.estimate()
-
-    def to_bytes(self) -> bytes:
-        import struct
-
-        return struct.pack("<q", self.n) + self.h.to_bytes()
-
-    @staticmethod
-    def from_bytes(buf: bytes) -> "CountingHLL":
-        import struct
-
-        from ..sketches import HLL
-
-        a = CountingHLL.__new__(CountingHLL)
-        (a.n,) = struct.unpack_from("<q", buf, 0)
-        a.h = HLL.from_bytes(buf[8:])
-        return a
-
-
-def counting_hll_from_bytes(buf: bytes) -> CountingHLL:
-    return CountingHLL.from_bytes(buf)
+from .aggregate import SketchSpec, aggregate_sketches
 
 
 def profile_columns(
@@ -76,26 +30,23 @@ def profile_columns(
     profile a never-null key column for the total)."""
     from functools import partial
 
-    from ..sketches import KLL, kll_from_bytes
+    from ..sketches import HLL, KLL
 
     specs = {}
     for c in distinct_cols:
-        specs[f"hll::{c}"] = SketchSpec(c, partial(CountingHLL, 14), counting_hll_from_bytes)
+        specs[f"hll::{c}"] = SketchSpec(c, partial(HLL, 14))
     for c in numeric_cols:
-        specs[f"kll::{c}"] = SketchSpec(
-            F.col(c).cast("double"), partial(KLL, 200), kll_from_bytes
-        )
-    out = multi_sketch_aggregate(df, specs, fanout=fanout)
+        specs[f"kll::{c}"] = SketchSpec(F.col(c).cast("double"), partial(KLL, 200))
     prof: dict = {}
-    for name, sk in out.items():
+    for name, (sk, rows) in aggregate_sketches(df, specs, fanout).items():
         kind, col = name.split("::", 1)
         entry = prof.setdefault(col, {})
         if kind == "hll":
-            entry["n_nonnull"] = int(sk.n)
+            entry["n_nonnull"] = rows
             entry["distinct_est"] = float(sk.estimate())
         else:
             entry["p50"], entry["p95"] = (float(v) for v in sk.quantiles([0.5, 0.95]))
-            entry.setdefault("n_nonnull", int(sk.n))
+            entry.setdefault("n_nonnull", rows)
     return prof
 
 

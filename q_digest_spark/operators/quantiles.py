@@ -31,8 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..sketches import (HLL, KLL, Bloom, CountMin, CuckooFilter, QDigest, TDigest,
-                        gk_from_bytes, kll_from_bytes, qdigest_from_bytes,
-                        tdigest_from_bytes, universe_bits_for)
+                        from_bytes, universe_bits_for)
 from ..sketches.ams import AMS
 from ..sketches.cbloom import CountingBloom
 from ..sketches.theta import ThetaSketch
@@ -65,11 +64,10 @@ def qdigest_of(
     keeps it near the paper's 3k-node space bound (merged partials
     only compress at 6k nodes). Every row goes to Python: for a huge
     input over a narrow universe, a JVM precount is
-    ``sketch_aggregate(df.groupBy(v).count(), v, factory, qdigest_from_bytes,
-    weight_col="count")``.
+    ``sketch_aggregate(df.groupBy(v).count(), v, factory, weight_col="count")``.
     """
     c = _col(col).cast("long")
-    sk = sketch_aggregate(df, c, partial(QDigest, k, universe_bits), qdigest_from_bytes, fanout)
+    sk = sketch_aggregate(df, c, partial(QDigest, k, universe_bits), fanout)
     if sk is not None:
         sk.compress()
     return sk
@@ -100,7 +98,7 @@ def qdigest_signed_of(
 
 
 def kll_of(df: DataFrame, col, k: int = 200, fanout: int = 32) -> KLL:
-    return sketch_aggregate(df, _col(col).cast("double"), partial(KLL, k), kll_from_bytes, fanout)
+    return sketch_aggregate(df, _col(col).cast("double"), partial(KLL, k), fanout)
 
 
 def req_of(df: DataFrame, col, k: int = 64, fanout: int = 32):
@@ -108,10 +106,9 @@ def req_of(df: DataFrame, col, k: int = 64, fanout: int = 32):
     a numeric column — same partial/tree-merge contract as kll_of.
     Use for tail quantiles (p99/p999/p9999): its rank error scales
     with (n - rank) instead of n."""
-    from ..sketches import req_from_bytes
     from ..sketches.req import REQ
 
-    return sketch_aggregate(df, _col(col).cast("double"), partial(REQ, k), req_from_bytes, fanout)
+    return sketch_aggregate(df, _col(col).cast("double"), partial(REQ, k), fanout)
 
 
 def gk_of(df: DataFrame, col, b: int = 2048, fanout: int = 32):
@@ -121,20 +118,19 @@ def gk_of(df: DataFrame, col, b: int = 2048, fanout: int = 32):
     probabilistic one."""
     from ..sketches.gk import GK
 
-    return sketch_aggregate(df, _col(col).cast("double"), partial(GK, b), gk_from_bytes, fanout)
+    return sketch_aggregate(df, _col(col).cast("double"), partial(GK, b), fanout)
 
 
 def tdigest_of(df: DataFrame, col, delta: int = 200, fanout: int = 32) -> TDigest:
-    return sketch_aggregate(
-        df, _col(col).cast("double"), partial(TDigest, delta), tdigest_from_bytes, fanout
-    )
+    return sketch_aggregate(df, _col(col).cast("double"), partial(TDigest, delta), fanout)
 
 
 class _Prehashed:
     """Sketch UDAF adapter for a hash sketch fed JVM-side xxhash64
     int64 values: ``update_batch`` hands the hashes (and any weights)
     to the inner sketch's batch-of-hashes method, and the adapter
-    serializes as the inner sketch. Subclasses are module-level in the
+    serializes as the inner sketch, so ``from_bytes`` of its bytes is
+    the inner sketch. Subclasses are module-level in the
     shipped package, so closures pickle them by reference."""
 
     inner: type  # the wrapped sketch class
@@ -205,6 +201,7 @@ class HashedTheta(_Prehashed):
     inner = ThetaSketch
 
 
+# Decoders that return the adapter, kept for the benchmark's specs.
 def hashed_hll_from_bytes(buf: bytes) -> HashedHLL:
     return HashedHLL.from_bytes(buf)
 
@@ -213,40 +210,21 @@ def hashed_cms_from_bytes(buf: bytes) -> HashedCMS:
     return HashedCMS.from_bytes(buf)
 
 
-def hashed_ams_from_bytes(buf: bytes) -> HashedAMS:
-    return HashedAMS.from_bytes(buf)
-
-
 def hashed_bloom_from_bytes(buf: bytes) -> HashedBloom:
     return HashedBloom.from_bytes(buf)
 
 
-def hashed_cuckoo_from_bytes(buf: bytes) -> HashedCuckoo:
-    return HashedCuckoo.from_bytes(buf)
-
-
-def hashed_counting_bloom_from_bytes(buf: bytes) -> HashedCountingBloom:
-    return HashedCountingBloom.from_bytes(buf)
-
-
-def hashed_theta_from_bytes(buf: bytes) -> HashedTheta:
-    return HashedTheta.from_bytes(buf)
-
-
-def _hashed_of(df: DataFrame, col, factory, deserialize, fanout: int, weight_col=None):
+def _hashed_of(df: DataFrame, col, factory, fanout: int, weight_col=None):
     """The one body of the hashed ``*_of`` helpers: xxhash64 ``col``
     JVM-side, aggregate ``factory``'s ``_Prehashed`` adapter and return
-    its inner sketch; None on empty or all-null input. NULL rows are
+    the folded sketch, which decodes as the inner class; None on empty
+    or all-null input. NULL rows are
     filtered out first: ``xxhash64(NULL)`` is the seed, 42, which would
     count every null as one key, and a nullable hash column reaches
     pandas as float64 in any Arrow batch holding a NULL, rounding every
     hash in that batch."""
     c = _col(col)
-    res = sketch_aggregate(
-        df.where(c.isNotNull()), F.xxhash64(c), factory, deserialize, fanout,
-        weight_col=weight_col,
-    )
-    return res.sketch if res is not None else None
+    return sketch_aggregate(df.where(c.isNotNull()), F.xxhash64(c), factory, fanout, weight_col=weight_col)
 
 
 def theta_of(df: DataFrame, col, k: int = 4096, fanout: int = 32):
@@ -254,15 +232,15 @@ def theta_of(df: DataFrame, col, k: int = 4096, fanout: int = 32):
     returns the ThetaSketch — feed pairs of these to the set-algebra
     estimators (intersection/difference), which HLL cannot answer
     without compounding inclusion-exclusion errors."""
-    return _hashed_of(df, col, partial(HashedTheta, k), hashed_theta_from_bytes, fanout)
+    return _hashed_of(df, col, partial(HashedTheta, k), fanout)
 
 
 def hll_of(df: DataFrame, col, p: int = 14, fanout: int = 32) -> HLL:
-    return _hashed_of(df, col, partial(HashedHLL, p), hashed_hll_from_bytes, fanout)
+    return _hashed_of(df, col, partial(HashedHLL, p), fanout)
 
 
 def countmin_of(df: DataFrame, col, depth: int = 5, width: int = 8192, fanout: int = 32) -> CountMin:
-    return _hashed_of(df, col, partial(HashedCMS, depth, width), hashed_cms_from_bytes, fanout)
+    return _hashed_of(df, col, partial(HashedCMS, depth, width), fanout)
 
 
 def ams_of(
@@ -281,13 +259,11 @@ def ams_of(
     frequencies. ``weight_col`` carries signed multiplicities —
     delete streams are rows with weight -1 (turnstile model), same
     contract as counting_bloom_of."""
-    return _hashed_of(
-        df, col, partial(HashedAMS, depth, width), hashed_ams_from_bytes, fanout, weight_col
-    )
+    return _hashed_of(df, col, partial(HashedAMS, depth, width), fanout, weight_col)
 
 
 def bloom_of(df: DataFrame, col, m_bits: int = 1 << 22, k: int = 7, fanout: int = 32) -> Bloom:
-    return _hashed_of(df, col, partial(HashedBloom, m_bits, k), hashed_bloom_from_bytes, fanout)
+    return _hashed_of(df, col, partial(HashedBloom, m_bits, k), fanout)
 
 
 def cuckoo_of(
@@ -310,7 +286,7 @@ def cuckoo_of(
     stored once however often it occurs, and ``n`` counts distinct
     keys; one ``remove_hashes`` of a key removes it."""
     keys = df.select(_col(col).alias("__k")).distinct()
-    return _hashed_of(keys, "__k", partial(HashedCuckoo, m_buckets), hashed_cuckoo_from_bytes, fanout)
+    return _hashed_of(keys, "__k", partial(HashedCuckoo, m_buckets), fanout)
 
 
 def counting_bloom_of(
@@ -331,10 +307,7 @@ def counting_bloom_of(
     every key whose net multiplicity is positive, provided deletes
     never exceed prior inserts per key (multiset discipline, the
     standard counting-Bloom contract)."""
-    return _hashed_of(
-        df, col, partial(HashedCountingBloom, m_slots, k), hashed_counting_bloom_from_bytes,
-        fanout, weight_col,
-    )
+    return _hashed_of(df, col, partial(HashedCountingBloom, m_slots, k), fanout, weight_col)
 
 
 def misragries_of(df: DataFrame, col, k: int = 256, fanout: int = 32):
@@ -344,11 +317,9 @@ def misragries_of(df: DataFrame, col, k: int = 256, fanout: int = 32):
     the full key set anywhere. Where the column's cardinality is
     modest, a JVM ``groupBy(col).count()`` fed to ``sketch_aggregate``
     with ``weight_col=`` collapses duplicates before any Python runs."""
-    from q_digest_spark.sketches import misragries_from_bytes
     from q_digest_spark.sketches.misragries import MisraGries
 
-    return sketch_aggregate(df, col, partial(MisraGries, k),
-                            misragries_from_bytes, fanout)
+    return sketch_aggregate(df, col, partial(MisraGries, k), fanout)
 
 
 def quantile_df(spark, sketch, ps: Sequence[float], value_type: str = "long") -> DataFrame:
@@ -540,13 +511,9 @@ def ddsketch_of(df: DataFrame, col, alpha: float = 0.01,
                 max_bins: int = 2048, fanout: int = 32):
     """Relative-error quantile sketch of a non-negative column
     (sketches/ddsketch.py): |q̂ - q| <= alpha*q, lossless merge."""
-    from q_digest_spark.sketches import ddsketch_from_bytes
     from q_digest_spark.sketches.ddsketch import DDSketch
 
-    return sketch_aggregate(
-        df, _col(col).cast("double"), partial(DDSketch, alpha, max_bins),
-        ddsketch_from_bytes, fanout
-    )
+    return sketch_aggregate(df, _col(col).cast("double"), partial(DDSketch, alpha, max_bins), fanout)
 
 
 def percentile_transform(
@@ -590,7 +557,6 @@ def percentile_transform(
     rows = grouped_sketch_rows(
         df.select(*group_cols, c.cast("long").alias("__v")),
         group_cols, "__v", partial(QDigest, k, universe_bits),
-        qdigest_from_bytes,
     ).collect()
     models = {
         tuple(r[g] for g in group_cols): bytes(r["sketch"]) for r in rows
@@ -618,7 +584,7 @@ def percentile_transform(
                     buf = models.get(kt)
                     if buf is None:
                         continue
-                    sk = cache[kt] = qdigest_from_bytes(buf)
+                    sk = cache[kt] = from_bytes(buf)
                 idx = g.index
                 ok = g[vcol].notna()
                 if ok.any():

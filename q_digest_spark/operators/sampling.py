@@ -386,13 +386,11 @@ def varopt_of(df: DataFrame, key_col, weight_col, k: int = 64, fanout: int = 32)
     k-row sample under merges."""
     from functools import partial as _partial
 
-    from ..sketches import varopt_from_bytes
     from ..sketches.varopt import VarOpt
 
     from .aggregate import sketch_aggregate
 
     c = F.col(key_col) if isinstance(key_col, str) else key_col
     return sketch_aggregate(
-        df, c.cast("long"), _partial(VarOpt, k), varopt_from_bytes,
-        fanout, weight_col=weight_col,
+        df, c.cast("long"), _partial(VarOpt, k), fanout, weight_col=weight_col,
     )

@@ -1,3 +1,6 @@
+import struct
+from importlib import import_module
+
 from .bloom import Bloom, optimal_params
 from .countmin import CountMin
 from .cuckoo import CuckooFilter
@@ -10,53 +13,59 @@ from .varopt import VarOpt
 from .l0sampler import L0Sampler
 from .tdigest import TDigest
 
-# Plain module-level deserializers: bound classmethods don't survive
-# cloudpickle (their __func__ is serialized by value and drags in the
-# module-level struct.Struct); these functions pickle by reference.
+# Every wire format starts with a 4-byte magic; this table names the
+# module (relative to this package) and class that read it. Modules
+# import on first use, so a decode never loads the families it skips.
+_FORMATS = {
+    b"QDG1": (".qdigest", "QDigest"),
+    b"KLL1": (".kll", "KLL"),
+    b"REQ1": (".req", "REQ"),
+    b"GKS1": (".gk", "GK"),
+    b"TDG1": (".tdigest", "TDigest"),
+    b"DDS1": (".ddsketch", "DDSketch"),
+    b"MOM1": (".moments", "Moments"),
+    b"HLL1": (".hll", "HLL"),
+    b"THT1": (".theta", "ThetaSketch"),
+    b"CMS1": (".countmin", "CountMin"),
+    b"CUS1": (".cucountmin", "CUCountMin"),
+    b"AMS1": (".ams", "AMS"),
+    b"BLM1": (".bloom", "Bloom"),
+    b"CBF1": (".cbloom", "CountingBloom"),
+    b"CKF1": (".cuckoo", "CuckooFilter"),
+    b"MGS1": (".misragries", "MisraGries"),
+    b"SSV1": (".spacesaving", "SpaceSaving"),
+    b"LCS1": (".lossycounting", "LossyCounting"),
+    b"VOP1": (".varopt", "VarOpt"),
+    b"L0S1": (".l0sampler", "L0Sampler"),
+    b"FDS1": (".fd", "FrequentDirections"),
+    b"DGM1": (".dgim", "DGIM"),
+    b"IBL1": (".iblt", "IBLT"),
+    b"CND1": ("..operators.heavy_hitters", "Candidates"),
+}
 
 
+def from_bytes(buf: bytes):
+    """Decode any sketch's ``to_bytes()`` by its magic; ValueError on
+    an unknown magic or a buffer too short for its header.
+
+    A plain module-level function, so Spark closures that call it
+    pickle it by reference: a bound classmethod such as
+    ``QDigest.from_bytes`` pickles its ``__func__`` by value, dragging
+    in the module-level ``struct.Struct``, which cloudpickle rejects."""
+    magic = bytes(buf[:4])
+    if magic not in _FORMATS:
+        raise ValueError(f"unknown sketch format: magic {magic!r} ({len(buf)} bytes)")
+    module, name = _FORMATS[magic]
+    try:
+        return getattr(import_module(module, __name__), name).from_bytes(buf)
+    except struct.error as e:
+        raise ValueError(f"truncated {magic!r} sketch: {len(buf)} bytes ({e})") from None
+
+
+# Kept for the benchmark, which passes it to the entry points that
+# still take a decoder.
 def qdigest_from_bytes(buf: bytes) -> QDigest:
     return QDigest.from_bytes(buf)
-
-
-def kll_from_bytes(buf: bytes) -> KLL:
-    return KLL.from_bytes(buf)
-
-
-def gk_from_bytes(buf: bytes) -> GK:
-    return GK.from_bytes(buf)
-
-
-def req_from_bytes(buf: bytes) -> REQ:
-    return REQ.from_bytes(buf)
-
-
-def varopt_from_bytes(buf: bytes) -> VarOpt:
-    return VarOpt.from_bytes(buf)
-
-
-def l0sampler_from_bytes(buf: bytes) -> L0Sampler:
-    return L0Sampler.from_bytes(buf)
-
-
-def tdigest_from_bytes(buf: bytes) -> TDigest:
-    return TDigest.from_bytes(buf)
-
-
-def hll_from_bytes(buf: bytes) -> HLL:
-    return HLL.from_bytes(buf)
-
-
-def countmin_from_bytes(buf: bytes) -> CountMin:
-    return CountMin.from_bytes(buf)
-
-
-def bloom_from_bytes(buf: bytes) -> Bloom:
-    return Bloom.from_bytes(buf)
-
-
-def cuckoo_from_bytes(buf: bytes) -> CuckooFilter:
-    return CuckooFilter.from_bytes(buf)
 
 
 __all__ = [
@@ -66,66 +75,7 @@ __all__ = [
     "KLL",
     "QDigest",
     "TDigest",
+    "from_bytes",
     "optimal_params",
     "universe_bits_for",
 ]
-
-
-def theta_from_bytes(buf: bytes):
-    from .theta import ThetaSketch
-
-    return ThetaSketch.from_bytes(buf)
-
-
-def misragries_from_bytes(buf: bytes):
-    from .misragries import MisraGries
-
-    return MisraGries.from_bytes(buf)
-
-
-def cucountmin_from_bytes(buf: bytes):
-    from .cucountmin import CUCountMin
-
-    return CUCountMin.from_bytes(buf)
-
-
-def spacesaving_from_bytes(buf: bytes):
-    from .spacesaving import SpaceSaving
-
-    return SpaceSaving.from_bytes(buf)
-
-
-def lossycounting_from_bytes(buf: bytes):
-    from .lossycounting import LossyCounting
-
-    return LossyCounting.from_bytes(buf)
-
-
-def ddsketch_from_bytes(buf: bytes):
-    from .ddsketch import DDSketch
-
-    return DDSketch.from_bytes(buf)
-
-
-def moments_from_bytes(buf: bytes):
-    from .moments import Moments
-
-    return Moments.from_bytes(buf)
-
-
-def ams_from_bytes(buf: bytes):
-    from .ams import AMS
-
-    return AMS.from_bytes(buf)
-
-
-def fd_from_bytes(buf: bytes):
-    from .fd import FrequentDirections
-
-    return FrequentDirections.from_bytes(buf)
-
-
-def counting_bloom_from_bytes(buf: bytes):
-    from .cbloom import CountingBloom
-
-    return CountingBloom.from_bytes(buf)

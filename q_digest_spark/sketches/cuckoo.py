@@ -67,6 +67,13 @@ _STASH_CAP = 128
 _MAX_KICK_ROUNDS = 500
 
 
+def buckets_for(n_keys: int) -> int:
+    """The power-of-two bucket count that holds ``n_keys`` distinct keys
+    at a load of at most 0.9 (``n_keys / (4 * m)``), and at least 8."""
+    need = max(8, -(-10 * int(n_keys) // (9 * _SLOTS)))
+    return 1 << (need - 1).bit_length()
+
+
 class CuckooFilter:
     __slots__ = ("m", "n", "storage", "fill", "stash", "_coin")
 

@@ -159,8 +159,3 @@ class DGIM:
         sk.ts = [int(x) for x in flat[:n]]
         sk.size = [int(x) for x in flat[n:]]
         return sk
-
-
-def dgim_from_bytes(raw: bytes) -> DGIM:
-    """Module-level wrapper (safe to close over in Spark tasks)."""
-    return DGIM.from_bytes(raw)

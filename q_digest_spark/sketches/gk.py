@@ -250,8 +250,3 @@ class GK:
         if m:
             sk._levels = [_Summary(vals, rmin, rmax, n)]
         return sk
-
-
-def gk_from_bytes(raw: bytes) -> GK:
-    """Module-level wrapper (safe to close over in Spark tasks)."""
-    return GK.from_bytes(raw)

@@ -183,8 +183,3 @@ class IBLT:
         off += 8 * m
         sk.check_sum = np.frombuffer(raw, np.uint64, m, off).copy()
         return sk
-
-
-def iblt_from_bytes(raw: bytes) -> IBLT:
-    """Module-level wrapper (safe to close over in Spark tasks)."""
-    return IBLT.from_bytes(raw)

@@ -265,15 +265,7 @@ class QDigest:
     def percentile(self, p: float) -> int:
         """Smallest node upper bound whose cumulative post-order count
         reaches rank max(1, ceil(p*n)) (qcore.c:379-384)."""
-        if self.n == 0:
-            raise ValueError("empty sketch")
-        rank = max(1, int(np.ceil(p * self.n)))
-        rank = min(rank, self.n)
-        ub, cnt = self._postorder()
-        cum = np.cumsum(cnt)
-        i = int(np.searchsorted(cum, rank, side="left"))
-        i = min(i, len(ub) - 1)
-        return int(ub[i])
+        return self.quantiles([p])[0]
 
     def quantiles(self, ps) -> list[int]:
         if self.n == 0:

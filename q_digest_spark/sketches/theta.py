@@ -111,7 +111,7 @@ class ThetaSketch:
 
     @staticmethod
     def union_estimate(a: "ThetaSketch", b: "ThetaSketch") -> float:
-        u = theta_from_bytes(a.to_bytes())  # copy, don't mutate inputs
+        u = ThetaSketch.from_bytes(a.to_bytes())  # copy, don't mutate inputs
         u.merge(b)
         return u.estimate()
 
@@ -139,7 +139,3 @@ class ThetaSketch:
             f"ThetaSketch(k={self.k}, retained={len(self.values)}, "
             f"theta={self._theta_frac():.6f}, est={self.estimate():.1f})"
         )
-
-
-def theta_from_bytes(buf: bytes) -> ThetaSketch:
-    return ThetaSketch.from_bytes(buf)

@@ -22,6 +22,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from ..operators.aggregate import SketchSpec, aggregate_sketches
+from ..sketches import from_bytes
 
 
 class StreamingSketch:
@@ -29,13 +30,13 @@ class StreamingSketch:
 
     Usage::
 
-        acc = StreamingSketch(factory, deserialize)
+        acc = StreamingSketch(factory)
         q = acc.attach(stream_df, "value")   # starts the query
         ... q.processUntilAvailable() / awaitTermination ...
         acc.sketch  # the running merged sketch
     """
 
-    def __init__(self, factory: Callable[[], object], deserialize):
+    def __init__(self, factory: Callable[[], object], deserialize=from_bytes):
         self.factory = factory
         self.deserialize = deserialize
         self.sketch = None

@@ -32,6 +32,8 @@ from typing import Iterable, Tuple
 import pandas as pd
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sketches import from_bytes
+
 OUTPUT_SCHEMA = "key string, n long, p50 double, p95 double, p99 double"
 MG_OUTPUT_SCHEMA = "key string, item string, est long, n long"
 STATE_SCHEMA = "sketch binary, n long"
@@ -39,7 +41,7 @@ STATE_SCHEMA = "sketch binary, n long"
 
 def _keyed_state(
     stream_df, key_col: str, value_col: str, value_type: str,
-    factory, deserialize, emit, output_schema: str,
+    factory, emit, output_schema: str,
 ):
     """The one keyed-state stream: (key, v) rows grouped by key through
     ``applyInPandasWithState`` in update mode. Each micro-batch decodes
@@ -53,7 +55,7 @@ def _keyed_state(
     ) -> Iterable[pd.DataFrame]:
         if state.exists:
             buf, n = state.get
-            sk = deserialize(bytes(buf))
+            sk = from_bytes(bytes(buf))
         else:
             sk, n = factory(), 0
         for pdf in batches:
@@ -91,20 +93,19 @@ def _quantile_row(key, sk, n) -> pd.DataFrame:
 
 
 def grouped_streaming_quantiles(
-    stream_df, key_col: str, value_col: str, factory, deserialize
+    stream_df, key_col: str, value_col: str, factory
 ):
     """stream_df -> streaming DataFrame of per-key running quantiles.
 
     Usage::
 
         out = grouped_streaming_quantiles(stream, "lang",
-                                          "text_len", factory, deser)
+                                          "text_len", factory)
         q = out.writeStream.format("memory").queryName("t") \
                .outputMode("update").start()
     """
     return _keyed_state(
-        stream_df, key_col, value_col, "long", factory, deserialize,
-        _quantile_row, OUTPUT_SCHEMA,
+        stream_df, key_col, value_col, "long", factory, _quantile_row, OUTPUT_SCHEMA,
     )
 
 
@@ -130,10 +131,8 @@ def grouped_streaming_heavy(stream_df, key_col: str, value_col: str, k: int = 25
     arbitrary batching: stored count <= true count <= stored +
     n/(k+1), so every item with true count > n/(k+1) is in the final
     candidate set regardless of how the stream was chopped."""
-    from ..sketches import misragries_from_bytes
     from ..sketches.misragries import MisraGries
 
     return _keyed_state(
-        stream_df, key_col, value_col, "string", partial(MisraGries, k),
-        misragries_from_bytes, _heavy_rows, MG_OUTPUT_SCHEMA,
+        stream_df, key_col, value_col, "string", partial(MisraGries, k), _heavy_rows, MG_OUTPUT_SCHEMA,
     )

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Pre-commit gate for the graded query surface (VERDICT r04 task 8).
 #
-# Runs three cheap structural guards:
+# Runs four cheap structural guards:
 #   1. scripts/replay_driver.py --check-manifest  — Spark-side row
 #      count + result sha256 of EVERY queries() entry at sf0.01
 #      against tests/replay_manifest.json (no DuckDB; ~minutes).
@@ -9,6 +9,8 @@
 #      the input_hint per-row invariant and the bounded-collect gate.
 #   3. tests/test_surface.py — every package def has a caller outside
 #      tests/ (static AST scan, no Spark, ~2 s).
+#   4. tests/test_wire_bytes.py — pinned sketch wire bytes, decoded
+#      through sketches.from_bytes (no Spark, ~3 s).
 #
 # Install:  ln -sf ../../scripts/precommit.sh .git/hooks/pre-commit
 # Skip (for docs-only commits):  git commit --no-verify
@@ -17,15 +19,18 @@ set -euo pipefail
 # scripts/ so the repo-root cd works when invoked as a hook.
 cd "$(dirname "$(readlink -f "$0")")/.."
 
-echo "[precommit] 1/3 replay manifest check (Spark-only, sf0.01)"
+echo "[precommit] 1/4 replay manifest check (Spark-only, sf0.01)"
 python scripts/replay_driver.py --check-manifest
 
-echo "[precommit] 2/3 golden text hashes + entry-shape audits"
+echo "[precommit] 2/4 golden text hashes + entry-shape audits"
 python -m pytest -x -q \
     tests/test_text_and_webpages.py::test_extract_text_golden_hashes \
     tests/test_entry_shapes.py
 
-echo "[precommit] 3/3 package surface reachability (static, no Spark)"
+echo "[precommit] 3/4 package surface reachability (static, no Spark)"
 python -m pytest -q tests/test_surface.py
+
+echo "[precommit] 4/4 pinned wire bytes (no Spark)"
+python -m pytest -q tests/test_wire_bytes.py
 
 echo "[precommit] OK"

@@ -68,13 +68,8 @@ def main() -> None:
     from q_digest_spark.operators.checkpoint import checkpointed_sketch_aggregate
     from q_digest_spark.operators.heavy_hitters import cms_topk_with_keys
     from q_digest_spark.operators.multi import SketchSpec, multi_sketch_aggregate
-    from q_digest_spark.operators.quantiles import (
-        HashedBloom,
-        HashedHLL,
-        hashed_bloom_from_bytes,
-        hashed_hll_from_bytes,
-    )
-    from q_digest_spark.sketches import QDigest, qdigest_from_bytes
+    from q_digest_spark.operators.quantiles import HashedBloom, HashedHLL
+    from q_digest_spark.sketches import QDigest, from_bytes
     from q_digest_spark.sources.webpages import generate_webpages
 
     if args.generate and not os.path.exists(args.pages):
@@ -118,7 +113,6 @@ def main() -> None:
                 pages,
                 F.length("text").cast("long"),
                 partial(QDigest, 256, 20),
-                qdigest_from_bytes,
                 args.state_dir,
                 job_id=args.job_id,
             ),
@@ -131,19 +125,9 @@ def main() -> None:
             lambda: multi_sketch_aggregate(
                 pages,
                 {
-                    "len_q": SketchSpec(
-                        F.length("text").cast("long"),
-                        partial(QDigest, 256, 20),
-                        qdigest_from_bytes,
-                    ),
-                    "urls": SketchSpec(
-                        F.xxhash64("url"), partial(HashedHLL, 14), hashed_hll_from_bytes
-                    ),
-                    "url_bloom": SketchSpec(
-                        F.xxhash64("url"),
-                        partial(HashedBloom, 1 << 22, 7),
-                        hashed_bloom_from_bytes,
-                    ),
+                    "len_q": SketchSpec(F.length("text").cast("long"), partial(QDigest, 256, 20)),
+                    "urls": SketchSpec(F.xxhash64("url"), partial(HashedHLL, 14)),
+                    "url_bloom": SketchSpec(F.xxhash64("url"), partial(HashedBloom, 1 << 22, 7)),
                 },
                 fanout=cores,
             ),
@@ -162,19 +146,13 @@ def main() -> None:
             lambda: multi_sketch_aggregate(
                 pages,
                 {
-                    "urls": SketchSpec(
-                        F.xxhash64("url"), partial(HashedHLL, 14), hashed_hll_from_bytes
-                    ),
-                    "url_bloom": SketchSpec(
-                        F.xxhash64("url"),
-                        partial(HashedBloom, 1 << 22, 7),
-                        hashed_bloom_from_bytes,
-                    ),
+                    "urls": SketchSpec(F.xxhash64("url"), partial(HashedHLL, 14)),
+                    "url_bloom": SketchSpec(F.xxhash64("url"), partial(HashedBloom, 1 << 22, 7)),
                 },
                 fanout=cores,
             ),
         )
-    report["distinct_urls"] = int(round(out["urls"].sketch.estimate()))
+    report["distinct_urls"] = int(round(out["urls"].estimate()))
 
     # 3. per-lang token-count medians (grouped, map-side partials)
     per_lang = stage(
@@ -184,7 +162,7 @@ def main() -> None:
             ["lang"],
             token_count("text"),
             partial(QDigest, 256, 14),
-            qdigest_from_bytes,
+            from_bytes,
             [0.5],
             ["p50_tokens"],
         ).collect(),

@@ -37,7 +37,7 @@ def test_checkpoint_and_resume(spark, tmpdir):
 
     state = os.path.join(tmpdir, "state")
     sk1, m1 = checkpointed_sketch_aggregate(
-        spark, df, "v", _factory, qdigest_from_bytes, state, job_id="job1"
+        spark, df, "v", _factory, state, job_id="job1"
     )
     assert m1["n_files_built"] == m1["n_files_total"] > 0
     assert m1["n_files_resumed"] == 0
@@ -45,7 +45,7 @@ def test_checkpoint_and_resume(spark, tmpdir):
 
     # resume: nothing left to build, identical result
     sk2, m2 = checkpointed_sketch_aggregate(
-        spark, df, "v", _factory, qdigest_from_bytes, state, job_id="job1"
+        spark, df, "v", _factory, state, job_id="job1"
     )
     assert m2["n_files_built"] == 0
     assert m2["n_files_resumed"] == m1["n_files_total"]
@@ -63,7 +63,7 @@ def test_checkpoint_and_resume(spark, tmpdir):
     shutil.move(tmp_out, part_path)
 
     sk3, m3 = checkpointed_sketch_aggregate(
-        spark, df, "v", _factory, qdigest_from_bytes, state, job_id="job1"
+        spark, df, "v", _factory, state, job_id="job1"
     )
     assert m3["n_files_resumed"] == len(survivors)
     assert m3["n_files_built"] == m1["n_files_total"] - len(survivors)
@@ -128,7 +128,7 @@ def test_incremental_daily_sketches_prune_and_requery(spark, sf_test, tmp_path):
     )
     q = F.round(F.col("value") * 100).cast("long")
     path = str(tmp_path / "daily")
-    write_daily_sketches(events, "ts", q, partial(QDigest, 0, 20), qdigest_from_bytes, path)
+    write_daily_sketches(events, "ts", q, partial(QDigest, 0, 20), path)
 
     lo, hi = "2024-01-03", "2024-01-07"
     pruned = (
@@ -139,7 +139,7 @@ def test_incremental_daily_sketches_prune_and_requery(spark, sf_test, tmp_path):
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "day" in plan
 
-    sk = merge_sketch_range(spark, path, qdigest_from_bytes, lo, hi)
+    sk = merge_sketch_range(spark, path, lo, hi)
     exact = (
         events.where(F.to_date("ts").between(F.lit(lo).cast("date"), F.lit(hi).cast("date")))
         .select(q.alias("v"))
@@ -169,8 +169,8 @@ def test_incremental_day_rewrite_preserves_other_days(spark, sf_test, tmp_path):
     ev = spark.read.parquet(f"{sf_test}/events.parquet").where(F.col("value").isNotNull())
     q = F.round(F.col("value") * 100).cast("long")
     path = str(tmp_path / "daily")
-    write_daily_sketches(ev, "ts", q, partial(QDigest, 0, 20), qdigest_from_bytes, path)
-    n_all = merge_sketch_range(spark, path, qdigest_from_bytes).n
+    write_daily_sketches(ev, "ts", q, partial(QDigest, 0, 20), path)
+    n_all = merge_sketch_range(spark, path).n
     day2 = ev.where(F.to_date("ts") == F.lit("2024-01-02").cast("date"))
-    write_daily_sketches(day2, "ts", q, partial(QDigest, 0, 20), qdigest_from_bytes, path)
-    assert merge_sketch_range(spark, path, qdigest_from_bytes).n == n_all
+    write_daily_sketches(day2, "ts", q, partial(QDigest, 0, 20), path)
+    assert merge_sketch_range(spark, path).n == n_all

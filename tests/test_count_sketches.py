@@ -3,7 +3,7 @@
 import numpy as np
 import pandas as pd
 
-from q_digest_spark.sketches import HLL, Bloom, CountMin
+from q_digest_spark.sketches import HLL, Bloom, CountMin, from_bytes
 from q_digest_spark.sketches.hashing import hash_i64
 
 
@@ -146,12 +146,11 @@ def test_counting_bloom_signed_merge_any_order():
         part(range(300, 450), -1),
     ]
     ref = None
-    from q_digest_spark.sketches import counting_bloom_from_bytes
 
     for perm in itertools.permutations(range(4)):
         sk = None
         for i in perm:
-            cur = counting_bloom_from_bytes(parts[i])
+            cur = from_bytes(parts[i])
             sk = cur if sk is None else sk.merge(cur)
         if ref is None:
             ref = sk.counts.copy()

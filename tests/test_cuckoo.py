@@ -4,7 +4,7 @@ stash discipline, serialization."""
 import numpy as np
 import pytest
 
-from q_digest_spark.sketches import CuckooFilter, cuckoo_from_bytes
+from q_digest_spark.sketches import CuckooFilter, from_bytes
 
 
 def test_no_false_negatives_and_fpr():
@@ -89,7 +89,7 @@ def test_roundtrip_bytes():
     rng = np.random.default_rng(1)
     ck = CuckooFilter(1 << 12)
     ck.update_batch(rng.choice(100_000, 5_000, replace=False).astype(np.int64))
-    ck2 = cuckoo_from_bytes(ck.to_bytes())
+    ck2 = from_bytes(ck.to_bytes())
     assert ck2.n == ck.n and ck2.m == ck.m
     probes = np.arange(0, 200_000, dtype=np.int64)
     assert (ck2.contains(probes) == ck.contains(probes)).all()
@@ -195,3 +195,23 @@ def test_delete_batch_is_atomic():
     assert ck.n == len(present)
     ck.remove_batch(present[:50])
     assert ck.n == len(present) - 50
+
+
+def test_cuckoo_of_sized_from_member_count(spark):
+    """``buckets_for`` sizes the filter from its key count: 70,000
+    distinct keys, more than the 4 << 14 slots of a fixed 1 << 14
+    buckets (which overflow), all hit after the distributed build."""
+    from pyspark.sql import functions as F
+
+    from q_digest_spark.operators.quantiles import cuckoo_of
+    from q_digest_spark.sketches.cuckoo import buckets_for
+
+    n = 70_000
+    df = spark.range(0, n, 1, 4).select((F.col("id") * 7919).alias("key"))
+    h = df.select(F.xxhash64("key").alias("h")).toPandas()["h"].to_numpy(np.int64).view(np.uint64)
+    with pytest.raises(RuntimeError):
+        CuckooFilter(1 << 14).add_hashes(h)
+    m = buckets_for(n)
+    assert n > 4 << 14 and n <= 0.9 * 4 * m
+    ck = cuckoo_of(df, "key", m_buckets=m)
+    assert ck.n == n and ck.contains_hashes(h).all()

@@ -163,14 +163,13 @@ def test_moments_of_matches_local(spark, sf_test):
     from pyspark.sql import functions as F
 
     from q_digest_spark.operators.aggregate import sketch_aggregate
-    from q_digest_spark.sketches import moments_from_bytes
     from q_digest_spark.sketches.moments import Moments
 
     df = spark.read.parquet(f"{sf_test}/documents.parquet").select(
         F.col("n_chars").alias("v")
     )
     sk = sketch_aggregate(
-        df, F.col("v").cast("long"), partial(Moments, True), moments_from_bytes
+        df, F.col("v").cast("long"), partial(Moments, True)
     )
     vals = [r["v"] for r in df.collect()]
     assert sk.n == len(vals)

@@ -7,7 +7,8 @@ import numpy as np
 import pytest
 
 from q_digest_spark.operators.allocation import hamilton_apportionment
-from q_digest_spark.sketches.dgim import DGIM, dgim_from_bytes
+from q_digest_spark.sketches import from_bytes
+from q_digest_spark.sketches.dgim import DGIM
 
 
 # ---------------------------------------------------------------- DGIM
@@ -51,7 +52,7 @@ def test_estimate_empty_and_roundtrip():
     sk = DGIM.from_sorted_ts([])
     assert sk.estimate(100, 50) == 0
     sk = DGIM.from_sorted_ts([1, 2, 3])
-    rt = dgim_from_bytes(sk.to_bytes())
+    rt = from_bytes(sk.to_bytes())
     assert (rt.ts, rt.size, rt.r) == (sk.ts, sk.size, sk.r)
     assert sk.estimate(0, 10) == 0  # everything newer than t_now
 

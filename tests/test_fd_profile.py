@@ -50,3 +50,26 @@ def test_nulls_excluded_and_composite_lhs(spark):
     ).collect()[0]
     assert out["n_rows"] == 3  # two rows dropped for nulls
     assert out["n_lhs"] == 2 and out["holds"]
+
+
+def test_profile_columns_counts_non_null_rows(spark):
+    """``n_nonnull`` is the fold's exact row count (NULLs skipped), and
+    each distinct estimate is within 3 sigma of the exact count."""
+    from pyspark.sql import functions as F
+
+    from q_digest_spark.operators.profile import profile_columns
+
+    df = spark.range(0, 20_000, 1, 4).select(
+        F.when(F.col("id") % 7 == 0, None).otherwise(F.col("id") % 5_000).alias("a"),
+        F.when(F.col("id") % 3 == 0, None).otherwise((F.col("id") % 900).cast("string")).alias("s"),
+    )
+    prof = profile_columns(df, ["a", "s"], ["a"])
+    exact = df.agg(
+        *[F.count(c).alias(f"n_{c}") for c in "as"],
+        *[F.countDistinct(c).alias(f"d_{c}") for c in "as"],
+    ).collect()[0]
+    sigma = 1.04 / 2**7  # HLL(14) relative standard error
+    for c in "as":
+        assert prof[c]["n_nonnull"] == exact[f"n_{c}"] < 20_000, c
+        assert abs(prof[c]["distinct_est"] - exact[f"d_{c}"]) <= 3 * sigma * exact[f"d_{c}"], c
+    assert 0 <= prof["a"]["p50"] <= prof["a"]["p95"] < 5_000

@@ -195,7 +195,7 @@ def test_grouped_items_mg_matches_driver_side(spark, sf_test):
         grouped_items,
         grouped_sketch_rows,
     )
-    from q_digest_spark.sketches import misragries_from_bytes
+    from q_digest_spark.sketches import from_bytes
     from q_digest_spark.sketches.misragries import MisraGries
     from functools import partial
 
@@ -206,7 +206,7 @@ def test_grouped_items_mg_matches_driver_side(spark, sf_test):
         "lang", F.explode(F.split(F.col("text"), " ")).alias("tok")
     ).where(F.col("tok") != "")
     rows = grouped_sketch_rows(
-        toks, ["lang"], "tok", partial(MisraGries, 16), misragries_from_bytes
+        toks, ["lang"], "tok", partial(MisraGries, 16)
     ).cache()
     try:
         def mg_items(sk):
@@ -220,13 +220,13 @@ def test_grouped_items_mg_matches_driver_side(spark, sf_test):
         got = {
             (r["lang"], r["token"]): r["est"]
             for r in grouped_items(
-                rows, ["lang"], misragries_from_bytes, mg_items,
+                rows, ["lang"], mg_items,
                 "token string, est long",
             ).collect()
         }
         want = {}
         for r in rows.collect():
-            sk = misragries_from_bytes(bytes(r["sketch"]))
+            sk = from_bytes(bytes(r["sketch"]))
             for t, c in sk.items().items():
                 want[(r["lang"], t)] = int(c)
         assert got == want and len(got) > 0

@@ -7,7 +7,8 @@ import random
 import numpy as np
 import pytest
 
-from q_digest_spark.sketches.gk import GK, gk_from_bytes
+from q_digest_spark.sketches import from_bytes
+from q_digest_spark.sketches.gk import GK
 
 
 def true_rank_interval(data: np.ndarray, v: float) -> tuple[int, int]:
@@ -48,7 +49,7 @@ def test_observed_error_le_certified_after_random_merges():
     for p in parts:
         g = GK(b=128)
         g.update_batch(p)
-        sks.append(gk_from_bytes(g.to_bytes()))  # round-trip every partial
+        sks.append(from_bytes(g.to_bytes()))  # round-trip every partial
     random.shuffle(sks)
     while len(sks) > 1:  # random pairwise merge order
         a, b = sks.pop(), sks.pop()
@@ -82,5 +83,5 @@ def test_empty_and_nan():
     sk = GK(b=32)
     sk.update_batch([float("nan")])
     assert sk.n == 0 and np.isnan(sk.quantile(0.5))
-    rt = gk_from_bytes(sk.to_bytes())
+    rt = from_bytes(sk.to_bytes())
     assert rt.n == 0

@@ -5,7 +5,8 @@ serialization, and deletion-as-negative-weight."""
 import numpy as np
 import pytest
 
-from q_digest_spark.sketches.iblt import IBLT, iblt_from_bytes
+from q_digest_spark.sketches import from_bytes
+from q_digest_spark.sketches.iblt import IBLT
 
 
 def build(keys, m=1024, parts=1):
@@ -16,7 +17,7 @@ def build(keys, m=1024, parts=1):
     for i in range(parts):
         sk = IBLT(m)
         sk.update_batch(keys[i::parts])
-        partials.append(iblt_from_bytes(sk.to_bytes()))
+        partials.append(from_bytes(sk.to_bytes()))
     out = partials[0]
     for p in partials[1:]:
         out = out.merge(p)

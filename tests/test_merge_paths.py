@@ -29,7 +29,7 @@ from q_digest_spark.operators.quantiles import (
     hashed_cms_from_bytes,
     hashed_hll_from_bytes,
 )
-from q_digest_spark.sketches import KLL, QDigest, kll_from_bytes, qdigest_from_bytes
+from q_digest_spark.sketches import KLL, QDigest, qdigest_from_bytes
 
 N = 40_000
 PARTS = 8
@@ -70,7 +70,7 @@ def _specs():
     return {
         "qd": SketchSpec("v", partial(QDigest, 64, BITS), qdigest_from_bytes),
         "qdw": SketchSpec("v", partial(QDigest, 64, BITS), qdigest_from_bytes, "w"),
-        "kll": SketchSpec("x", partial(KLL, 200), kll_from_bytes),
+        "kll": SketchSpec("x", partial(KLL, 200)),
         "hll": SketchSpec(F.xxhash64("v"), partial(HashedHLL, 12), hashed_hll_from_bytes),
         "cms": SketchSpec(F.xxhash64("v"), partial(HashedCMS, 4, 2048), hashed_cms_from_bytes),
         "bloom": SketchSpec(F.xxhash64("v"), partial(HashedBloom, 1 << 16, 5), hashed_bloom_from_bytes),
@@ -132,11 +132,11 @@ def test_sketch_aggregate_both_paths_weighted(spark, data):
         before = _jobs(spark)
         res = {
             "qdw": sketch_aggregate(
-                df, "v", partial(QDigest, 64, BITS), qdigest_from_bytes, fanout, weight_col="w"
+                df, "v", partial(QDigest, 64, BITS), fanout, weight_col="w"
             ),
-            "kll": sketch_aggregate(df, "x", partial(KLL, 200), kll_from_bytes, fanout),
+            "kll": sketch_aggregate(df, "x", partial(KLL, 200), fanout),
             "hll": sketch_aggregate(
-                df, F.xxhash64("v"), partial(HashedHLL, 12), hashed_hll_from_bytes, fanout
+                df, F.xxhash64("v"), partial(HashedHLL, 12), fanout
             ),
         }
         if fanout == PARTS:
@@ -165,7 +165,7 @@ def test_coalesced_driver_fold(spark, data, wide, caplog):
     _within_bounds(folded, pdf)
     _within_bounds(tree, pdf)
     before = _jobs(spark)
-    qdw = sketch_aggregate(wide, "v", partial(QDigest, 64, BITS), qdigest_from_bytes, PARTS, weight_col="w")
+    qdw = sketch_aggregate(wide, "v", partial(QDigest, 64, BITS), PARTS, weight_col="w")
     assert _jobs(spark) - before == 1
     assert qdw.n == int(pdf["w"].sum())
     _within_bounds({"qdw": qdw}, pdf)
@@ -177,7 +177,7 @@ def test_driver_fold_is_deterministic(spark, data, wide):
     df, _ = data
     for frame, fanout in ((df, PARTS), (df, 2), (wide, PARTS)):
         a, b = (
-            sketch_aggregate(frame, "v", partial(QDigest, 32, BITS), qdigest_from_bytes, fanout).to_bytes()
+            sketch_aggregate(frame, "v", partial(QDigest, 32, BITS), fanout).to_bytes()
             for _ in range(2)
         )
         assert a == b, fanout
@@ -194,9 +194,9 @@ from q_digest_spark.operators.aggregate import (
     cube_sketch_rows, grouped_sketch_rows, rollup_sketch_rows, sketch_aggregate,
 )
 from q_digest_spark.operators.heavy_hitters import cms_topk_with_keys
-from q_digest_spark.operators.quantiles import HashedHLL, hashed_hll_from_bytes
+from q_digest_spark.operators.quantiles import HashedHLL
 from q_digest_spark.plans.session import get_spark
-from q_digest_spark.sketches import QDigest, qdigest_from_bytes
+from q_digest_spark.sketches import QDigest
 
 paths = []
 handler = logging.Handler()
@@ -231,19 +231,17 @@ out = {}
 for fanout in (2, 1):
     for fail in (False, True):
         src = flaky(fail)
-        qd = sketch_aggregate(src, "v", partial(QDigest, 32, 16), qdigest_from_bytes, fanout)
-        hll = sketch_aggregate(
-            src, F.xxhash64("v"), partial(HashedHLL, 12), hashed_hll_from_bytes, fanout
-        )
+        qd = sketch_aggregate(src, "v", partial(QDigest, 32, 16), fanout)
+        hll = sketch_aggregate(src, F.xxhash64("v"), partial(HashedHLL, 12), fanout)
         top = [list(r) for r in cms_topk_with_keys(src, "k", k=5, fanout=fanout).collect()]
         out[f"{fanout}-{fail}"] = [qd.to_bytes().hex(), hll.to_bytes().hex(), qd.n, top]
 for fail in (False, True):
-    rows = grouped_sketch_rows(flaky(fail), ["k"], "v", partial(QDigest, 32, 16), qdigest_from_bytes)
+    rows = grouped_sketch_rows(flaky(fail), ["k"], "v", partial(QDigest, 32, 16))
     out[f"grouped-{fail}"] = sorted(
         [r["k"], bytes(r["sketch"]).hex(), r["rows"]] for r in rows.collect()
     )
     for name, multi in (("rollup", rollup_sketch_rows), ("cube", cube_sketch_rows)):
-        rows = multi(flaky(fail), ["k", "j"], "v", partial(QDigest, 32, 16), qdigest_from_bytes)
+        rows = multi(flaky(fail), ["k", "j"], "v", partial(QDigest, 32, 16))
         out[f"{name}-{fail}"] = sorted(
             (json.dumps([r["k"], r["j"], r["level"]]), bytes(r["sketch"]).hex(), r["rows"])
             for r in rows.collect()
@@ -287,8 +285,8 @@ def test_retry_is_deterministic():
         assert sum(r[2] for r in out[f"{name}-True"]) == n_levels * 6000, name
 
 
-def _grouped(df, keys, col, factory, deserialize):
-    rows = grouped_sketch_rows(df, keys, col, factory, deserialize).collect()
+def _grouped(df, keys, col, factory):
+    rows = grouped_sketch_rows(df, keys, col, factory).collect()
     return {r[keys[0]]: (bytes(r["sketch"]), r["rows"]) for r in rows}
 
 
@@ -296,11 +294,11 @@ def test_grouped_hll_matches_per_key_aggregate(spark, data):
     """A grouped HLL row is byte-identical to an ungrouped aggregate of
     that key's rows (HLL state is an element-wise max)."""
     df, pdf = data
-    got = _grouped(df, ["k"], F.xxhash64("v"), partial(HashedHLL, 12), hashed_hll_from_bytes)
+    got = _grouped(df, ["k"], F.xxhash64("v"), partial(HashedHLL, 12))
     assert sorted(got) == sorted(pdf["k"].unique())
     for k, (buf, rows) in got.items():
         alone = sketch_aggregate(
-            df.where(F.col("k") == int(k)), F.xxhash64("v"), partial(HashedHLL, 12), hashed_hll_from_bytes
+            df.where(F.col("k") == int(k)), F.xxhash64("v"), partial(HashedHLL, 12)
         )
         assert buf == alone.to_bytes(), k
         assert rows == int((pdf["k"] == k).sum())
@@ -311,7 +309,7 @@ def test_grouped_qdigest_deterministic_and_within_bound(spark, data):
     bytes, and every key's quantiles are within eps*n of its exact
     ranks."""
     df, pdf = data
-    args = (df, ["k"], "v", partial(QDigest, 256, BITS), qdigest_from_bytes)
+    args = (df, ["k"], "v", partial(QDigest, 256, BITS))
     got = _grouped(*args)
     assert got == _grouped(*args)
     for k, (buf, rows) in got.items():
@@ -327,9 +325,9 @@ def test_grouped_key_named_v(spark, data):
     builder ("v"); only the partial-row columns are reserved."""
     df, pdf = data
     keyed = df.select(F.col("k").alias("v"), F.col("v").alias("x"))
-    got = _grouped(keyed, ["v"], "x", partial(QDigest, 32, BITS), qdigest_from_bytes)
+    got = _grouped(keyed, ["v"], "x", partial(QDigest, 32, BITS))
     assert {k: rows for k, (_, rows) in got.items()} == pdf["k"].value_counts().to_dict()
     with pytest.raises(ValueError, match="name"):
         grouped_sketch_rows(
-            df.withColumnRenamed("k", "name"), ["name"], "v", partial(QDigest, 32, BITS), qdigest_from_bytes
+            df.withColumnRenamed("k", "name"), ["name"], "v", partial(QDigest, 32, BITS)
         )

@@ -103,7 +103,6 @@ def test_bad_inputs():
 def test_distributed_pipeline_matches_local(spark, sf_test):
     from q_digest_spark.operators.aggregate import sketch_aggregate
     from q_digest_spark.operators.quantiles import misragries_of
-    from q_digest_spark.sketches import misragries_from_bytes
 
     docs = spark.read.parquet(f"{sf_test}/documents.parquet")
     toks = docs.select(
@@ -122,7 +121,7 @@ def test_distributed_pipeline_matches_local(spark, sf_test):
     # a JVM precount fed as weights agrees at the guarantee level (and
     # here exactly, since the sf0.01 vocab fits in k)
     hist = toks.groupBy("tok").agg(F.count("*").alias("c"))
-    mg2 = sketch_aggregate(hist, "tok", partial(MisraGries, 64), misragries_from_bytes, weight_col="c")
+    mg2 = sketch_aggregate(hist, "tok", partial(MisraGries, 64), weight_col="c")
     assert mg2.items() == mg.items() and mg2.n == mg.n
 
 

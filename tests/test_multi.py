@@ -86,7 +86,7 @@ def test_grouped_weighted_null_weights_dropped(spark):
         "k string, v long, w long",
     ).repartition(2)
     rows = grouped_sketch_rows(
-        df, ["k"], "v", partial(QDigest, 0, 4), qdigest_from_bytes, weight_col="w"
+        df, ["k"], "v", partial(QDigest, 0, 4), weight_col="w"
     ).collect()
     got = {r["k"]: r for r in rows}
     assert got["a"]["rows"] == 10  # two valid pairs x weight 5

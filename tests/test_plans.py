@@ -53,11 +53,10 @@ def test_two_level_merge_shuffles_only_sketch_rows(spark, sf_test):
     partial-build (i.e., it shuffles sketch rows, not input rows):
     the plan has exactly one shuffle and its child contains the UDF."""
     from q_digest_spark.operators.aggregate import tree_merge
-    from q_digest_spark.sketches import qdigest_from_bytes
 
     docs = spark.read.parquet(f"{sf_test}/documents.parquet")
     partials = _n_chars_partials(docs)
-    merged = tree_merge(partials, qdigest_from_bytes, fanout=8)
+    merged = tree_merge(partials, fanout=8)
     plan = _plan_of(merged)
     n_exchanges = plan.count("Exchange")
     assert n_exchanges <= 2, f"too many shuffles in sketch pipeline:\n{plan}"
@@ -273,10 +272,7 @@ def test_counting_bloom_pipeline_shuffles_only_sketch_rows(spark, sf_test):
     """The signed insert/delete union must aggregate with ONE exchange
     above the partial build — raw keys never shuffle."""
     from q_digest_spark.operators.aggregate import tree_merge
-    from q_digest_spark.operators.quantiles import (
-        HashedCountingBloom,
-        hashed_counting_bloom_from_bytes,
-    )
+    from q_digest_spark.operators.quantiles import HashedCountingBloom
 
     orders = spark.read.parquet(f"{sf_test}/orders.parquet")
     ins = orders.select(F.xxhash64("o_custkey").alias("key"), F.lit(1).alias("w"))
@@ -287,7 +283,7 @@ def test_counting_bloom_pipeline_shuffles_only_sketch_rows(spark, sf_test):
         ins.unionByName(dels),
         {"v": SketchSpec("key", lambda: HashedCountingBloom(1 << 12, 5), None, "w")},
     )
-    merged = tree_merge(partials, hashed_counting_bloom_from_bytes, fanout=8)
+    merged = tree_merge(partials, fanout=8)
     plan = _plan_of(merged)
     assert plan.count("Exchange") <= 2, plan
     assert "MapInPandas" in plan or "mapInPandas" in plan

@@ -11,6 +11,7 @@ from q_digest_spark.sketches import (
     CountMin,
     QDigest,
     TDigest,
+    from_bytes,
     universe_bits_for,
 )
 
@@ -159,7 +160,6 @@ def test_counting_bloom_no_false_negatives_after_deletes(keys, data):
     order — every remaining key must still hit."""
     import numpy as np
 
-    from q_digest_spark.sketches import counting_bloom_from_bytes
     from q_digest_spark.sketches.cbloom import CountingBloom
 
     uniq = sorted(set(keys))
@@ -185,7 +185,7 @@ def test_counting_bloom_no_false_negatives_after_deletes(keys, data):
     order = data.draw(st.permutations(range(3)))
     sk = None
     for i in order:
-        cur = counting_bloom_from_bytes(parts[i])
+        cur = from_bytes(parts[i])
         sk = cur if sk is None else sk.merge(cur)
     assert (sk.counts >= 0).all()
     if survivors:

@@ -202,7 +202,7 @@ def test_percentile_transform_runs_no_max_job(spark):
     out = percentile_transform(df, ["g"], "v", k=0)
     transform_jobs = _jobs(spark) - before
     before = _jobs(spark)
-    rows = grouped_sketch_rows(df, ["g"], "v", partial(QDigest, 0, None), qdigest_from_bytes).collect()
+    rows = grouped_sketch_rows(df, ["g"], "v", partial(QDigest, 0, None)).collect()
     assert transform_jobs == _jobs(spark) - before
     pdf = out.toPandas()
     for g, grp in pdf.groupby("g"):

@@ -5,13 +5,13 @@ is element-wise max, so merge order cannot matter)."""
 from pyspark.sql import functions as F
 
 from q_digest_spark.operators.aggregate import grouped_sketch_rows, rollup_sketch_rows
-from q_digest_spark.sketches import HLL, hll_from_bytes
+from q_digest_spark.sketches import HLL, from_bytes
 
 
 def test_rollup_levels_match_direct_builds(spark, sf_test):
     df = spark.read.parquet(f"{sf_test}/documents.parquet")
     rolled = rollup_sketch_rows(
-        df, ["lang", "source"], "doc_id", HLL, hll_from_bytes
+        df, ["lang", "source"], "doc_id", HLL
     ).collect()
     by_level = {}
     for r in rolled:
@@ -21,7 +21,7 @@ def test_rollup_levels_match_direct_builds(spark, sf_test):
     direct2 = {
         (r["lang"], r["source"]): r
         for r in grouped_sketch_rows(
-            df, ["lang", "source"], "doc_id", HLL, hll_from_bytes
+            df, ["lang", "source"], "doc_id", HLL
         ).collect()
     }
     assert set(by_level[2]) == set(direct2)
@@ -29,7 +29,7 @@ def test_rollup_levels_match_direct_builds(spark, sf_test):
     # level 1 (source rolled up): bytes identical to a direct per-lang build
     direct1 = {
         r["lang"]: bytes(r["sketch"])
-        for r in grouped_sketch_rows(df, ["lang"], "doc_id", HLL, hll_from_bytes).collect()
+        for r in grouped_sketch_rows(df, ["lang"], "doc_id", HLL).collect()
     }
     got1 = {k[0]: bytes(r["sketch"]) for k, r in by_level[1].items()}
     assert got1 == direct1
@@ -38,7 +38,7 @@ def test_rollup_levels_match_direct_builds(spark, sf_test):
     assert len(by_level[0]) == 1
     total = next(iter(by_level[0].values()))
     exact = df.select(F.countDistinct("doc_id")).collect()[0][0]
-    est = hll_from_bytes(bytes(total["sketch"])).estimate()
+    est = from_bytes(bytes(total["sketch"])).estimate()
     assert abs(est - exact) <= 3 * 1.04 / (16384**0.5) * max(exact, 1)
     assert total["rows"] == df.where(F.col("doc_id").isNotNull()).count()
 
@@ -51,7 +51,7 @@ def test_cube_grouping_sets_match_direct_builds(spark, sf_test):
 
     df = spark.read.parquet(f"{sf_test}/documents.parquet")
     cubed = cube_sketch_rows(
-        df, ["lang", "source"], "doc_id", HLL, hll_from_bytes
+        df, ["lang", "source"], "doc_id", HLL
     ).collect()
     by_set = {}
     for r in cubed:
@@ -62,7 +62,7 @@ def test_cube_grouping_sets_match_direct_builds(spark, sf_test):
     direct = {
         (r["lang"], r["source"]): bytes(r["sketch"])
         for r in grouped_sketch_rows(
-            df, ["lang", "source"], "doc_id", HLL, hll_from_bytes
+            df, ["lang", "source"], "doc_id", HLL
         ).collect()
     }
     assert by_set[(False, False)] == direct
@@ -71,7 +71,7 @@ def test_cube_grouping_sets_match_direct_builds(spark, sf_test):
     for key, sig in (("lang", (False, True)), ("source", (True, False))):
         d = {
             r[key]: bytes(r["sketch"])
-            for r in grouped_sketch_rows(df, [key], "doc_id", HLL, hll_from_bytes).collect()
+            for r in grouped_sketch_rows(df, [key], "doc_id", HLL).collect()
         }
         got = {
             (k[0] if key == "lang" else k[1]): buf for k, buf in by_set[sig].items()
@@ -82,5 +82,5 @@ def test_cube_grouping_sets_match_direct_builds(spark, sf_test):
     assert len(by_set[(True, True)]) == 1
     total = next(iter(by_set[(True, True)].values()))
     exact = df.select(F.countDistinct("doc_id")).collect()[0][0]
-    est = hll_from_bytes(total).estimate()
+    est = from_bytes(total).estimate()
     assert abs(est - exact) <= 3 * 1.04 / (16384**0.5) * max(exact, 1)

@@ -74,7 +74,7 @@ def test_grouped_pipeline_is_skew_proof(spark):
     )
     df = hot.unionByName(cold)
     rows = grouped_sketch_rows(
-        df, ["domain"], "v", lambda: QDigest(0, 10), qdigest_from_bytes
+        df, ["domain"], "v", lambda: QDigest(0, 10)
     )
     # count partial rows BEFORE the merge by reusing the stage-1 logic:
     # 21 keys x <=16 input partitions is the hard ceiling

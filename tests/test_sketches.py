@@ -14,7 +14,7 @@ import itertools
 import numpy as np
 import pytest
 
-from q_digest_spark.sketches import KLL, QDigest, TDigest, universe_bits_for
+from q_digest_spark.sketches import KLL, QDigest, TDigest, from_bytes, universe_bits_for
 
 N = 50_000
 K = 20  # reference parameter (test.c:211-213)
@@ -212,7 +212,7 @@ def test_theta_exact_below_k_and_bounded_above():
 
 
 def test_theta_merge_is_order_free_and_bit_identical():
-    from q_digest_spark.sketches.theta import ThetaSketch, theta_from_bytes
+    from q_digest_spark.sketches.theta import ThetaSketch
 
     import numpy as np
 
@@ -234,8 +234,8 @@ def test_theta_merge_is_order_free_and_bit_identical():
         assert build(perm) == ref  # set-valued state: bit-identical
 
     # round-trip
-    sk = theta_from_bytes(ref)
-    assert theta_from_bytes(sk.to_bytes()).to_bytes() == ref
+    sk = from_bytes(ref)
+    assert from_bytes(sk.to_bytes()).to_bytes() == ref
 
 
 def test_theta_set_algebra_accuracy():

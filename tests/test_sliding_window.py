@@ -12,7 +12,7 @@ from q_digest_spark.operators.incremental import (
     sliding_window_rows,
     write_daily_sketches,
 )
-from q_digest_spark.sketches import HLL, hll_from_bytes
+from q_digest_spark.sketches import HLL, from_bytes
 
 
 @pytest.fixture(scope="module")
@@ -21,7 +21,7 @@ def daily_path(spark, sf_test, tmp_path_factory):
     df = spark.read.parquet(f"{sf_test}/events.parquet").where(
         F.col("ts").isNotNull()
     )
-    write_daily_sketches(df, "ts", "user_id", HLL, hll_from_bytes, path)
+    write_daily_sketches(df, "ts", "user_id", HLL, path)
     return path
 
 
@@ -29,7 +29,7 @@ def test_windows_match_direct_range_merges(spark, daily_path):
     wins = {
         r["win_end"]: bytes(r["sketch"])
         for r in sliding_window_rows(
-            spark, daily_path, hll_from_bytes, window_days=3
+            spark, daily_path, window_days=3
         ).collect()
     }
     days = sorted(
@@ -39,12 +39,12 @@ def test_windows_match_direct_range_merges(spark, daily_path):
     for end in days:
         lo = (end - datetime.timedelta(days=2)).isoformat()
         direct = merge_sketch_range(
-            spark, daily_path, hll_from_bytes, lo, end.isoformat()
+            spark, daily_path, lo, end.isoformat()
         )
         # HLL state is element-wise max: merge order is irrelevant and
         # the distributed window merge is bit-identical to the direct one
         assert (
-            hll_from_bytes(wins[end]).estimate() == direct.estimate()
+            from_bytes(wins[end]).estimate() == direct.estimate()
         ), end
 
 
@@ -54,7 +54,7 @@ def test_window_rows_counts(spark, daily_path):
         for r in spark.read.parquet(daily_path).select("day", "rows").collect()
     }
     wins = sliding_window_rows(
-        spark, daily_path, hll_from_bytes, window_days=3
+        spark, daily_path, window_days=3
     ).collect()
     for r in wins:
         expect = sum(
@@ -68,13 +68,13 @@ def test_window_of_one_day_equals_daily(spark, daily_path):
     wins = {
         r["win_end"]: bytes(r["sketch"])
         for r in sliding_window_rows(
-            spark, daily_path, hll_from_bytes, window_days=1
+            spark, daily_path, window_days=1
         ).collect()
     }
     for r in spark.read.parquet(daily_path).collect():
         assert (
-            hll_from_bytes(wins[r["day"]]).estimate()
-            == hll_from_bytes(bytes(r["sketch"])).estimate()
+            from_bytes(wins[r["day"]]).estimate()
+            == from_bytes(bytes(r["sketch"])).estimate()
         )
 
 
@@ -103,9 +103,9 @@ def test_sliding_qdigest_exact_mode_windowed_median(spark, tmp_path):
 
     path = str(tmp_path / "daily_qd")
     write_daily_sketches(
-        sdf, "ts", "v", partial(QDigest, 0, 13), qdigest_from_bytes, path
+        sdf, "ts", "v", partial(QDigest, 0, 13), path
     )
-    wins = sliding_window_rows(spark, path, qdigest_from_bytes, window_days=3)
+    wins = sliding_window_rows(spark, path, window_days=3)
 
     by_day = {}
     for ts, v in rows:
@@ -125,13 +125,13 @@ def test_sliding_qdigest_exact_mode_windowed_median(spark, tmp_path):
     # the same bytes and a window equals the direct merge of its days
     cpath = str(tmp_path / "daily_qd_k8")
     write_daily_sketches(
-        sdf, "ts", "v", partial(QDigest, 8, 13), qdigest_from_bytes, cpath
+        sdf, "ts", "v", partial(QDigest, 8, 13), cpath
     )
     a, b = (
         {
             r["win_end"]: bytes(r["sketch"])
             for r in sliding_window_rows(
-                spark, cpath, qdigest_from_bytes, window_days=3
+                spark, cpath, window_days=3
             ).collect()
         }
         for _ in range(2)
@@ -140,7 +140,7 @@ def test_sliding_qdigest_exact_mode_windowed_median(spark, tmp_path):
     for end in days:
         lo = (end - datetime.timedelta(days=2)).isoformat()
         direct = [
-            merge_sketch_range(spark, cpath, qdigest_from_bytes, lo, end.isoformat())
+            merge_sketch_range(spark, cpath, lo, end.isoformat())
             for _ in range(2)
         ]
         assert direct[0].to_bytes() == direct[1].to_bytes() == a[end], end

@@ -10,7 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from q_digest_spark.sketches import QDigest, qdigest_from_bytes
+from q_digest_spark.sketches import QDigest
 from q_digest_spark.streaming.stateful import grouped_streaming_quantiles
 
 
@@ -34,7 +34,7 @@ def test_stateful_per_key_quantiles(spark):
 
         stream = spark.readStream.schema("k string, v long").parquet(src + "/*")
         out = grouped_streaming_quantiles(
-            stream, "k", "v", partial(QDigest, 0, 13), qdigest_from_bytes
+            stream, "k", "v", partial(QDigest, 0, 13)
         )
         q = (
             out.writeStream.format("memory")

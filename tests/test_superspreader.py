@@ -22,20 +22,17 @@ def test_estimate_ranked_topk_matches_exact(spark):
         grouped_estimates,
         grouped_sketch_rows,
     )
-    from q_digest_spark.operators.quantiles import (
-        HashedTheta,
-        hashed_theta_from_bytes,
-    )
+    from q_digest_spark.operators.quantiles import HashedTheta
 
     df = spark.createDataFrame(_rows(), "user_id long, tag string").select(
         "user_id", F.xxhash64("tag").alias("h"), "tag"
     )
     rows = grouped_sketch_rows(
-        df, ["user_id"], "h", partial(HashedTheta, 4096), hashed_theta_from_bytes
+        df, ["user_id"], "h", partial(HashedTheta, 4096)
     )
     ests = grouped_estimates(
-        rows, ["user_id"], hashed_theta_from_bytes,
-        estimator=lambda sk: sk.sketch.estimate(),
+        rows, ["user_id"],
+        estimator=lambda sk: sk.estimate(),
     )
     got = (
         ests.orderBy(F.col("est").desc(), F.col("user_id").asc())

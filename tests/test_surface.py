@@ -20,8 +20,6 @@ ALLOWED = {
     "exact_jaccard": "exact reference the MinHash tests compare against",
     "exact_weighted_jaccard": "exact reference the ICWS tests compare against",
     "lineage_report": "read side of the checkpoint lineage",
-    "ams_from_bytes": "module-level decoder of the AMS sketch, still in use",
-    "dgim_from_bytes": "module-level decoder of the DGIM sketch, still in use",
     "iceberg_available": "capability probe of the native Iceberg writer (README)",
     "write_pages_iceberg": "native Iceberg writer, taken where the runtime jar exists",
     "write_pages_partitioned": "Parquet emulation of the Iceberg layout (README); write_pages_iceberg's error names it",

@@ -1,36 +1,47 @@
 """Pinned wire bytes: sha256 of ``to_bytes()`` for seeded KLL, REQ,
 Q-Digest (16- and 32-bit universes), t-digest, Count-Min,
 conservative-update Count-Min, AMS, HLL and Bloom sketches, each built
-from two seeded halves, merged, and round-tripped through its
-module-level decoder. The sketches persist in checkpoint files and
-daily tables, so a refactor of their shared bodies must not move a
-byte."""
+from two seeded halves, merged, and round-tripped through
+``sketches.from_bytes``, which picks the class by the wire magic. The
+sketches persist in checkpoint files and daily tables, so a refactor
+of their shared bodies must not move a byte. ``from_bytes`` must also
+read back one small sketch of every registered format, and reject an
+unknown magic or a short buffer."""
 
 import hashlib
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark import cloudpickle
 
 from q_digest_spark.sketches import (
+    GK,
     HLL,
     KLL,
     REQ,
     Bloom,
     CountMin,
+    CuckooFilter,
+    L0Sampler,
     QDigest,
     TDigest,
-    ams_from_bytes,
-    bloom_from_bytes,
-    countmin_from_bytes,
-    cucountmin_from_bytes,
-    hll_from_bytes,
-    kll_from_bytes,
-    qdigest_from_bytes,
-    req_from_bytes,
-    tdigest_from_bytes,
+    VarOpt,
+    _FORMATS,
+    from_bytes,
 )
 from q_digest_spark.sketches.ams import AMS
+from q_digest_spark.sketches.cbloom import CountingBloom
 from q_digest_spark.sketches.cucountmin import CUCountMin
+from q_digest_spark.sketches.ddsketch import DDSketch
+from q_digest_spark.sketches.dgim import DGIM
+from q_digest_spark.sketches.fd import FrequentDirections
+from q_digest_spark.sketches.iblt import IBLT
+from q_digest_spark.sketches.lossycounting import LossyCounting
+from q_digest_spark.sketches.misragries import MisraGries
+from q_digest_spark.sketches.moments import Moments
+from q_digest_spark.sketches.spacesaving import SpaceSaving
+from q_digest_spark.sketches.theta import ThetaSketch
 
 
 def _values(seed):
@@ -90,16 +101,16 @@ def _bloom(seed):
 
 
 CASES = {
-    "kll": (_quantile(lambda: KLL(64)), kll_from_bytes),
-    "req": (_quantile(lambda: REQ(16)), req_from_bytes),
-    "cms": (_table(lambda: CountMin(4, 1024)), countmin_from_bytes),
-    "cucms": (_table(lambda: CUCountMin(4, 1024)), cucountmin_from_bytes),
-    "ams": (_table(lambda: AMS(5, 1024)), ams_from_bytes),
-    "hll": (_hll, hll_from_bytes),
-    "qdigest16": (_qdigest(16), qdigest_from_bytes),
-    "qdigest32": (_qdigest(32), qdigest_from_bytes),
-    "tdigest": (_quantile(lambda: TDigest(100)), tdigest_from_bytes),
-    "bloom": (_bloom, bloom_from_bytes),
+    "kll": _quantile(lambda: KLL(64)),
+    "req": _quantile(lambda: REQ(16)),
+    "cms": _table(lambda: CountMin(4, 1024)),
+    "cucms": _table(lambda: CUCountMin(4, 1024)),
+    "ams": _table(lambda: AMS(5, 1024)),
+    "hll": _hll,
+    "qdigest16": _qdigest(16),
+    "qdigest32": _qdigest(32),
+    "tdigest": _quantile(lambda: TDigest(100)),
+    "bloom": _bloom,
 }
 
 PINS = {
@@ -152,11 +163,86 @@ def _sha(sk):
 
 @pytest.mark.parametrize("name", sorted(CASES))
 def test_wire_bytes_pinned(name):
-    build, decode = CASES[name]
+    build = CASES[name]
     a, b = build(1), build(2)
     built = _sha(a)
-    merged = decode(a.to_bytes()).merge(decode(b.to_bytes()))
+    merged = from_bytes(a.to_bytes()).merge(from_bytes(b.to_bytes()))
     assert _sha(a.merge(b)) == _sha(merged)
-    again = decode(merged.to_bytes())
+    again = from_bytes(merged.to_bytes())
     assert type(again) is type(a) and again.to_bytes() == merged.to_bytes()
     assert (built, _sha(merged)) == PINS[name]
+
+
+_INTS = np.random.default_rng(3).integers(0, 1_000, 500)
+
+
+def _fed(sk, *batch):
+    sk.update_batch(*batch)
+    return sk
+
+
+def _candidates():
+    from q_digest_spark.operators.heavy_hitters import Candidates
+
+    keys = np.unique(_INTS)[:8]
+    return Candidates(pd.DataFrame({"h": keys, "cnt": keys + 1, "key": keys.astype(str)}))
+
+
+SMALL = {
+    b"QDG1": lambda: _fed(QDigest(16, 10), _INTS),
+    b"KLL1": lambda: _fed(KLL(32), _INTS.astype(float)),
+    b"REQ1": lambda: _fed(REQ(8), _INTS.astype(float)),
+    b"GKS1": lambda: _fed(GK(64), _INTS.astype(float)),
+    b"TDG1": lambda: _fed(TDigest(50), _INTS.astype(float)),
+    b"DDS1": lambda: _fed(DDSketch(0.05), _INTS.astype(float)),
+    b"MOM1": lambda: _fed(Moments(), _INTS),
+    b"HLL1": lambda: _fed(HLL(8), _INTS),
+    b"THT1": lambda: _fed(ThetaSketch(64), _INTS),
+    b"CMS1": lambda: _fed(CountMin(3, 64), _INTS),
+    b"CUS1": lambda: _fed(CUCountMin(3, 64), _INTS),
+    b"AMS1": lambda: _fed(AMS(3, 64), _INTS),
+    b"BLM1": lambda: _fed(Bloom(1 << 12, 3), _INTS),
+    b"CBF1": lambda: _fed(CountingBloom(1 << 10, 3), _INTS),
+    b"CKF1": lambda: _fed(CuckooFilter(256), np.unique(_INTS)),
+    b"MGS1": lambda: _fed(MisraGries(16), _INTS.astype(str)),
+    b"SSV1": lambda: _fed(SpaceSaving(16), _INTS.astype(str)),
+    b"LCS1": lambda: _fed(LossyCounting(0.01), _INTS.astype(str)),
+    b"VOP1": lambda: _fed(VarOpt(16), _INTS, _INTS + 1.0),
+    b"L0S1": lambda: _fed(L0Sampler(), _INTS),
+    b"FDS1": lambda: _fed(FrequentDirections(4), np.random.default_rng(4).normal(size=(50, 6))),
+    b"DGM1": lambda: DGIM.from_sorted_ts(np.sort(_INTS)),
+    b"IBL1": lambda: _fed(IBLT(64), np.unique(_INTS)[:20]),
+    b"CND1": _candidates,
+}
+
+
+def test_every_format_has_a_case():
+    assert set(SMALL) == set(_FORMATS)
+
+
+@pytest.mark.parametrize("magic", sorted(_FORMATS), ids=bytes.decode)
+def test_from_bytes_reads_every_format(magic):
+    """The magic alone picks the class: same class, same bytes back."""
+    sk = SMALL[magic]()
+    buf = sk.to_bytes()
+    assert buf[:4] == magic
+    again = from_bytes(buf)
+    assert type(again) is type(sk)
+    if magic == b"CND1":  # a pickled frame: the table round-trips, its pickle need not
+        pd.testing.assert_frame_equal(again.table, sk.table)
+    else:
+        assert again.to_bytes() == buf
+
+
+def test_from_bytes_rejects_unknown_and_truncated_buffers():
+    with pytest.raises(ValueError, match="XXXX"):
+        from_bytes(b"XXXX" + bytes(40))
+    with pytest.raises(ValueError, match="QDG"):
+        from_bytes(b"QDG")
+    with pytest.raises(ValueError, match="QDG1"):
+        from_bytes(b"QDG1")
+
+
+def test_from_bytes_pickles_by_reference():
+    """Spark closures ship the decoder by name, not by value."""
+    assert len(cloudpickle.dumps(from_bytes)) < 200
