@@ -2119,12 +2119,8 @@ def q_weighted_p50_by_returnflag(spark, sf_dir) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("v"),
         F.col("l_quantity").cast("long").alias("w"),
     )
-    from q_digest_spark.sketches import universe_bits_for
-
-    mx = df.agg(F.max("v")).collect()[0][0]
-    bits = universe_bits_for(int(mx))
     rows = grouped_sketch_rows(
-        df, ["l_returnflag"], "v", partial(QDigest, 0, bits),
+        df, ["l_returnflag"], "v", partial(QDigest, 0, None),
         weight_col="w",
     )
     return grouped_estimates(
@@ -3679,7 +3675,7 @@ def q_mad_outliers_by_flag(spark, sf_dir) -> DataFrame:
     an integer, so no float enters any flag and the SQL oracle
     reproduces every count exactly."""
     from q_digest_spark.operators.aggregate import grouped_quantiles
-    from q_digest_spark.sketches import QDigest, from_bytes, universe_bits_for
+    from q_digest_spark.sketches import QDigest, from_bytes
 
     li = _tbl(spark, sf_dir, "lineitem").where(
         F.col("l_extendedprice").isNotNull()
@@ -3687,8 +3683,7 @@ def q_mad_outliers_by_flag(spark, sf_dir) -> DataFrame:
         "l_returnflag",
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("v"),
     )
-    mx = li.agg(F.max("v")).collect()[0][0]
-    fac = partial(QDigest, 0, universe_bits_for(int(mx)))
+    fac = partial(QDigest, 0, None)
 
     med = grouped_quantiles(
         li, ["l_returnflag"], "v", fac, from_bytes, [0.5], ["med"]

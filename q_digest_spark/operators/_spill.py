@@ -12,9 +12,7 @@ Spill location (cluster-correctness): Spark's writers run on
 EXECUTORS, so the spill directory must be visible to every node. The
 default driver-local tempdir is correct ONLY in local mode; on a
 real cluster set ``spark.qds.spill.dir`` (any Hadoop-FS URI — hdfs://,
-s3a://, a shared mount) or pass ``spill_dir`` explicitly, and the
-same code runs unchanged. Resolution order: explicit ``spill_dir``
-arg > ``spark.qds.spill.dir`` conf > local tempdir (atexit-removed).
+s3a://, a shared mount), and the same code runs unchanged.
 
 ``cleanup_spill`` lets iterative callers (operators/graph.py) delete
 a spill as soon as a later round supersedes it instead of holding
@@ -31,29 +29,24 @@ import uuid
 from pyspark.sql import DataFrame
 
 
-def spill_parquet(df: DataFrame, prefix: str, spill_dir: str | None = None) -> DataFrame:
+def spill_parquet(df: DataFrame, prefix: str) -> DataFrame:
     """Write ``df`` to parquet NOW and return a fresh reader over it.
     Eager: the upstream job runs at call time. The reader carries the
     spill path in ``._qds_spill_dir`` for cleanup_spill.
 
     Every call gets its own ``{prefix}{uuid}`` directory — under the
-    explicit ``spill_dir``, the conf dir, or a fresh tempdir — so
+    ``spark.qds.spill.dir`` conf dir or in a fresh tempdir — so
     iterative callers can never overwrite a path an in-flight plan
     still reads (Spark's 'cannot overwrite a path being read from').
-    Callers passing ``spill_dir`` own that parent's lifecycle;
-    conf-dir spills are deleted best-effort at interpreter exit (a
-    long-running service should pass ``spill_dir`` and manage it)."""
+    Either way the spill is deleted best-effort at interpreter exit."""
     spark = df.sparkSession
-    if spill_dir is None:
-        conf_dir = spark.conf.get("spark.qds.spill.dir", None)
-        if conf_dir:
-            d = f"{conf_dir.rstrip('/')}/{prefix}{uuid.uuid4().hex[:12]}"
-            atexit.register(_rm_fs_dir_quiet, spark, d)
-        else:
-            d = tempfile.mkdtemp(prefix=prefix)
-            atexit.register(shutil.rmtree, d, True)
+    conf_dir = spark.conf.get("spark.qds.spill.dir", None)
+    if conf_dir:
+        d = f"{conf_dir.rstrip('/')}/{prefix}{uuid.uuid4().hex[:12]}"
+        atexit.register(_rm_fs_dir_quiet, spark, d)
     else:
-        d = f"{spill_dir.rstrip('/')}/{prefix}{uuid.uuid4().hex[:12]}"
+        d = tempfile.mkdtemp(prefix=prefix)
+        atexit.register(shutil.rmtree, d, True)
     path = f"{d}/data.parquet"
     df.write.mode("overwrite").parquet(path)
     out = spark.read.parquet(path)

@@ -42,10 +42,13 @@ tuple), so the shuffle carries O(#partitions * #keys) sketch rows
 instead of the raw data — the skew story for Zipf-distributed keys (a
 hot key costs one row per partition, not one row per input record).
 One shuffle by key then merges each group with ``_merge_group``.
+ROLLUP and CUBE (``_grouping_sets``) explode those rows to every
+grouping set and merge each set in one more shuffle, all in one lazy
+plan.
 
 There is one fold, ``_fold``, and every merge feeds it in a fixed
 order: partials in ``part_id`` order (driver fold, tree levels,
-grouped rows), rollup/cube levels by the keys they roll up, daily
+grouped rows), rollup/cube grouping sets by their original keys, daily
 sketch rows in day order, checkpointed partials in file order. So the
 result does not depend on shuffle or collect order. Merge is
 associative and commutative up to compression order (asserted within
@@ -55,6 +58,7 @@ eps in tests), which is what makes the tree shape irrelevant.
 from __future__ import annotations
 
 import logging
+from itertools import combinations
 from math import prod
 from typing import Callable, Iterable, Mapping, NamedTuple, Sequence
 
@@ -188,7 +192,7 @@ def _merge_group(
     keys: Sequence[str], order: Sequence[str] = ("part_id",), finish=None, deserialize=from_bytes
 ):
     """applyInPandas body of every sketch merge (tree levels, grouped
-    rows, grouped quantiles, rollup/cube levels, sliding windows): one
+    rows, grouped quantiles, rollup/cube grouping sets, sliding windows): one
     output row with the group's ``keys``, then its merged sketch and
     summed rows, or with ``finish`` the ``{column: value}`` that
     ``finish(sketch)`` returns. Rows fold sorted by the ``order``
@@ -448,52 +452,60 @@ def grouped_quantiles(
     )
 
 
+def _grouping_sets(
+    df: DataFrame,
+    keys: Sequence[str],
+    col,
+    factory: SketchFactory,
+    sets: Iterable[Sequence[int]],
+    deserialize=from_bytes,
+) -> DataFrame:
+    """One sketch row per grouping set, each set the positions of the
+    ``keys`` it keeps. The finest rows are built once
+    (``grouped_sketch_rows``); one ``explode`` copies each to every set,
+    as a ``gid`` bitmask of its kept keys with its rolled-up keys NULL
+    and its original keys in hidden columns; one shuffle by
+    ``(gid, keys...)`` then merges each group, folding its rows in the
+    order of those original keys. Lazy: no Spark job runs until the
+    result is read. Grouping by ``gid`` keeps a genuine NULL key apart
+    from a rolled-up one.
+
+    Output: ``keys..., level int, sketch binary, rows long``, with
+    level = the number of keys kept."""
+    keys = list(keys)
+    finest = grouped_sketch_rows(df, keys, col, factory)
+    hidden = [f"__key{i}" for i in range(len(keys))]
+    gid = F.col("__gid")
+    gids = F.array(*(F.lit(sum(1 << i for i in s)) for s in sets))
+    copies = finest.withColumn("__gid", F.explode(gids)).withColumns({
+        **{h: F.col(k) for k, h in zip(keys, hidden)},
+        **{k: F.when(gid.bitwiseAND(1 << i) != 0, F.col(k)) for i, k in enumerate(keys)},
+        "level": F.bit_count(gid),
+    })
+    return copies.groupBy("__gid", *keys).applyInPandas(
+        _merge_group([*keys, "level"], hidden, deserialize=deserialize),
+        _rows_schema(finest.schema, keys, "level int, sketch binary, rows long"),
+    )
+
+
 def cube_sketch_rows(
     df: DataFrame,
     keys: Sequence[str],
     col,
     factory: SketchFactory,
 ) -> DataFrame:
-    """Sketch-native CUBE: one sketch row for EVERY subset of ``keys``
-    (all 2^n grouping sets) from ONE scan over the data — the finest
-    (all-keys) rows are built once and eagerly spilled to parquet
-    (operators/_spill.py, atexit-cleaned) so the 2^n merge branches
-    reuse the materialized rows instead of re-executing the base scan;
-    every other grouping set is a tiny merge of those rows grouped on
-    its key subset. SQL CUBE re-aggregates the base data once per
-    grouping set; here the base data is read once, full stop.
+    """Sketch-native CUBE: one sketch row for every subset of ``keys``
+    (all 2^n grouping sets), each merged from the finest (all-keys)
+    sketch rows, so the data is scanned once; SQL CUBE re-aggregates
+    the base rows per grouping set. Lazy, like ``_grouping_sets``.
 
     Rolled-up key columns are NULL (SQL CUBE convention); ``level`` =
-    number of keys retained — same-size subsets are disambiguated by
-    WHICH columns are NULL. Output: ``keys..., level int,
-    sketch binary, rows long``."""
-    from itertools import combinations
-
-    keys = list(keys)
-    from ._spill import spill_parquet
-
-    finest = spill_parquet(
-        grouped_sketch_rows(df, keys, col, factory), "qds_cube_"
-    )
-    outs = []
-    for n in range(len(keys), -1, -1):
-        for subset in map(list, combinations(keys, n)):
-            if n == len(keys):
-                merged = finest
-            else:
-                rolled = [k for k in keys if k not in subset]
-                merged = finest.groupBy(*subset).applyInPandas(
-                    _merge_group(subset, rolled), _rows_schema(finest.schema, subset)
-                )
-            padded = merged.withColumn("level", F.lit(len(subset)))
-            for k in keys:
-                if k not in subset:
-                    padded = padded.withColumn(k, F.lit(None).cast(finest.schema[k].dataType))
-            outs.append(padded.select(*keys, "level", "sketch", "rows"))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    number of keys retained, and same-size subsets are told apart by
+    WHICH columns are NULL. Output: ``keys..., level int, sketch
+    binary, rows long``."""
+    n = len(keys)
+    sets = [s for size in range(n, -1, -1) for s in combinations(range(n), size)]
+    return _grouping_sets(df, keys, col, factory, sets)
 
 
 def rollup_sketch_rows(
@@ -503,42 +515,16 @@ def rollup_sketch_rows(
     factory: SketchFactory,
     deserialize=from_bytes,
 ) -> DataFrame:
-    """Sketch-native ROLLUP: one sketch row for every prefix level of
-    ``keys`` — (k1..kn), (k1..kn-1), ..., (k1), () — where the finest
-    level comes from ONE pass over the data and every coarser level is
-    produced by MERGING the next-finer level's sketch rows (sketches
-    are mergeable, so the raw data is scanned exactly once; SQL ROLLUP
-    re-aggregates the base rows per level). The finest rows (one tiny
-    sketch row per group) are eagerly spilled to parquet so the union
-    branches and coarser merges reuse the materialized rows instead of
-    re-executing the base scan once per level (a lazy persist could
-    never be unpersisted, and localCheckpoint registers a persisted
-    RDD for the session).
+    """Sketch-native ROLLUP: one sketch row for every prefix of
+    ``keys`` — (k1..kn), (k1..kn-1), ..., (k1), () — each merged from
+    the finest sketch rows, so the data is scanned once; SQL ROLLUP
+    re-aggregates the base rows per level. A ROLLUP row is the CUBE
+    row of the same grouping set. Lazy, like ``_grouping_sets``.
 
     Rolled-up key columns are NULL, like SQL ROLLUP. Output:
     ``keys..., level int, sketch binary, rows long`` with level = the
     number of grouping keys retained.
     """
-    keys = list(keys)
-    from ._spill import spill_parquet
-
-    finest = spill_parquet(
-        grouped_sketch_rows(df, keys, col, factory), "qds_rollup_"
-    )
-    levels = [finest.withColumn("level", F.lit(len(keys)))]
-    current = finest
-    for n in range(len(keys) - 1, -1, -1):
-        level_keys = keys[:n]
-        coarser = current.groupBy(*level_keys).applyInPandas(
-            _merge_group(level_keys, keys[n:n + 1], deserialize=deserialize),
-            _rows_schema(finest.schema, level_keys),
-        )
-        current = coarser
-        padded = coarser.withColumn("level", F.lit(n))
-        for k in keys[n:]:
-            padded = padded.withColumn(k, F.lit(None).cast(finest.schema[k].dataType))
-        levels.append(padded.select(*keys, "level", "sketch", "rows"))
-    out = levels[0].select(*keys, "level", "sketch", "rows")
-    for l in levels[1:]:
-        out = out.unionByName(l)
-    return out
+    n = len(keys)
+    sets = [range(size) for size in range(n, -1, -1)]
+    return _grouping_sets(df, keys, col, factory, sets, deserialize)

@@ -183,7 +183,6 @@ def minhash_near_dups(
     n_perm: int = 128,
     bands: int | None = None,
     shingle_k: int = 5,
-    spill_dir: str | None = None,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """End-to-end near-dup pairs with exact-Jaccard verification:
@@ -245,11 +244,11 @@ def minhash_near_dups(
     # itself register a persisted RDD). A durable spill is also the
     # 100 TB-shape answer: candidates survive executor loss without
     # recomputing signatures over the corpus. The candidate job runs
-    # even if the returned verify plan is never executed. Temp spills
-    # are removed at interpreter exit; pass `spill_dir` to own them.
+    # even if the returned verify plan is never executed. Spills are
+    # removed at interpreter exit (operators/_spill.py).
     from ._spill import spill_parquet
 
-    survivors = spill_parquet(pref, "qds_minhash_cands_", spill_dir)
+    survivors = spill_parquet(pref, "qds_minhash_cands_")
     sigs.unpersist()
     docs = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     joined = (

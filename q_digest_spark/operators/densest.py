@@ -42,7 +42,6 @@ def densest_subgraph_rounds(
     v: str = "v",
     eps_tenths: int = 1,
     max_rounds: int = 64,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """One row per peel round: ``(round, n_nodes, n_edges,
     density_ppm, is_best)`` — round 0 is the full graph; ``is_best``
@@ -67,7 +66,7 @@ def densest_subgraph_rounds(
         .select(F.least("s", "t").alias("u"), F.greatest("s", "t").alias("v"))
         .distinct()
     )
-    e = spill_parquet(e, "qds_dsg_edges_", spill_dir)
+    e = spill_parquet(e, "qds_dsg_edges_")
     rounds: list[tuple[int, int, int]] = []  # (round, V, E)
     thr = 2 * (10 + eps_tenths)
     for rnd in range(max_rounds):
@@ -77,7 +76,6 @@ def densest_subgraph_rounds(
             .groupBy("node")
             .agg(F.count(F.lit(1)).cast("long").alias("deg")),
             "qds_dsg_deg_",
-            spill_dir,
         )
         counts = deg.agg(
             F.count(F.lit(1)).alias("nv"), F.sum("deg").alias("degsum")
@@ -96,7 +94,6 @@ def densest_subgraph_rounds(
             e.join(alive.withColumnRenamed("node", "u"), "u", "leftsemi")
             .join(alive.withColumnRenamed("node", "v"), "v", "leftsemi"),
             "qds_dsg_edges_",
-            spill_dir,
         )
         cleanup_spill(e)
         cleanup_spill(deg)

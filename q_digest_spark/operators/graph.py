@@ -39,7 +39,6 @@ def connected_components(
     src: str = "a",
     dst: str = "b",
     max_iter: int = 25,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; the
     component id is the minimum node id of the component.
@@ -66,7 +65,6 @@ def connected_components(
         )
         .distinct(),
         "qds_cc_edges_",
-        spill_dir,
     )
     labels = sym.select(F.col("a").alias("node")).distinct().withColumn(
         "lbl", F.col("node")
@@ -82,7 +80,6 @@ def connected_components(
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("lbl").alias("lbl")),
             "qds_cc_nm_",
-            spill_dir,
         )
         # 2. pointer jump: lbl''(v) = lbl'(lbl'(v)) — contracts chains
         #    geometrically (the label table doubles as the pointer map)
@@ -96,7 +93,7 @@ def connected_components(
             )
             .select(F.col("node"), F.col("lbl2").alias("lbl"))
         )
-        new_labels = spill_parquet(jumped, "qds_cc_labels_", spill_dir)
+        new_labels = spill_parquet(jumped, "qds_cc_labels_")
         cleanup_spill(nm)  # consumed by the new_labels write just above
         changed = (
             new_labels.alias("n")
@@ -108,7 +105,7 @@ def connected_components(
         # label spill — drop it now instead of at interpreter exit
         # (a long driver session would otherwise hold one dir/round;
         # every spill sits in its own {prefix}{uuid} subdir, so this
-        # is safe with an explicit spill_dir too)
+        # is safe under a shared ``spark.qds.spill.dir`` too)
         cleanup_spill(labels)
         labels = new_labels
         if changed == 0:
@@ -142,7 +139,6 @@ def pagerank(
     dst: str = "dst",
     iters: int = 3,
     damping: float = 0.85,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """(node, pr) after ``iters`` synchronous power iterations of
     PageRank over a directed multigraph (parallel edges each carry
@@ -173,13 +169,12 @@ def pagerank(
         F.col(src).cast("string").alias("src"),
         F.col(dst).cast("string").alias("dst"),
     ).where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    e = spill_parquet(e, "qds_pr_edges_", spill_dir)
+    e = spill_parquet(e, "qds_pr_edges_")
     nodes = spill_parquet(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct(),
         "qds_pr_nodes_",
-        spill_dir,
     )
     n = nodes.count()
     if n == 0:
@@ -192,7 +187,6 @@ def pagerank(
         spill_parquet(
             e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")),
             "qds_pr_outdeg_",
-            spill_dir,
         )
         if iters > 0
         else None
@@ -215,7 +209,6 @@ def pagerank(
                 ).alias("pr"),
             ),
             "qds_pr_iter_",
-            spill_dir,
         )
         cleanup_spill(pr)
         pr = new_pr
@@ -378,7 +371,6 @@ def kcore(
     u: str = "u",
     v: str = "v",
     k: int = 4,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """(node, core_degree): the nodes of the k-core — the maximal
     subgraph where every node keeps degree >= k — with their degree
@@ -412,7 +404,7 @@ def kcore(
         )
         .distinct()
     )
-    e = spill_parquet(e, "qds_kcore_edges_", spill_dir)
+    e = spill_parquet(e, "qds_kcore_edges_")
     while True:
         # spill the degree table once per round: the removed-count and
         # the alive filter read the same materialization instead of
@@ -423,7 +415,6 @@ def kcore(
             .groupBy("node")
             .agg(F.count(F.lit(1)).cast("long").alias("core_degree")),
             "qds_kcore_deg_",
-            spill_dir,
         )
         removed = deg.where(F.col("core_degree") < k).count()
         if removed == 0:
@@ -436,7 +427,6 @@ def kcore(
             e.join(alive.withColumnRenamed("node", "u"), "u", "leftsemi")
             .join(alive.withColumnRenamed("node", "v"), "v", "leftsemi"),
             "qds_kcore_edges_",
-            spill_dir,
         )
         cleanup_spill(e)
         cleanup_spill(deg)
@@ -450,7 +440,6 @@ def bfs_levels(
     v: str = "v",
     seed_col: str = "node",
     max_levels: int = 6,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """(node, level): breadth-first distance from a SEED SET over an
     undirected graph, for every node within ``max_levels`` hops
@@ -493,7 +482,6 @@ def bfs_levels(
         .union(adj.select(F.col("t").alias("s"), F.col("s").alias("t")))
         .distinct(),
         "qds_bfs_adj_",
-        spill_dir,
     )
     frontier = spill_parquet(
         seeds.select(F.col(seed_col).cast("string").alias("node"))
@@ -501,7 +489,6 @@ def bfs_levels(
         .distinct()
         .select("node", F.lit(0).cast("long").alias("level")),
         "qds_bfs_frontier_",
-        spill_dir,
     )
     visited = frontier
     for lvl in range(1, max_levels + 1):
@@ -514,7 +501,6 @@ def bfs_levels(
             .join(visited.select("node"), "node", "leftanti")
             .select("node", F.lit(lvl).cast("long").alias("level")),
             "qds_bfs_frontier_",
-            spill_dir,
         )
         if frontier is not visited:
             cleanup_spill(frontier)
@@ -523,7 +509,7 @@ def bfs_levels(
             cleanup_spill(nxt)
             break
         visited2 = spill_parquet(
-            visited.union(nxt), "qds_bfs_visited_", spill_dir
+            visited.union(nxt), "qds_bfs_visited_"
         )
         cleanup_spill(visited)
         visited = visited2
@@ -723,7 +709,6 @@ def ktruss(
     src: str = "a",
     dst: str = "b",
     k: int = 4,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """(u, v, support): the k-truss — the maximal subgraph where
     every edge sits in >= k-2 triangles (Cohen, NSA tech report 2008;
@@ -749,7 +734,7 @@ def ktruss(
         )
         .distinct()
     )
-    e = spill_parquet(e, "qds_ktruss_edges_", spill_dir)
+    e = spill_parquet(e, "qds_ktruss_edges_")
     need = k - 2
     while True:
         supp = spill_parquet(
@@ -761,7 +746,6 @@ def ktruss(
                 .alias("support"),
             ),
             "qds_ktruss_supp_",
-            spill_dir,
         )
         removed = supp.where(F.col("support") < need).count()
         if removed == 0:
@@ -770,7 +754,6 @@ def ktruss(
         e2 = spill_parquet(
             supp.where(F.col("support") >= need).select("u", "v"),
             "qds_ktruss_edges_",
-            spill_dir,
         )
         cleanup_spill(e)
         cleanup_spill(supp)

@@ -37,11 +37,11 @@ the Zipf-skewed domains fixture (multi-partition), and exhaustively
 
 from __future__ import annotations
 
-import pickle
 from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from .aggregate import PARTIAL_SCHEMA, _as_col, fold_partials
@@ -54,7 +54,8 @@ class Candidates:
     """Exact counts of a candidate key set: a frame (h = the key's
     int64 hash, cnt, key). Merge sums the counts of shared hashes, so
     folding every partition's top-m gives each key's lower bound.
-    Wire format: magic + pickled frame (keys of any Spark type)."""
+    Wire format: magic + the frame as an Arrow IPC stream (keys of any
+    Spark type), so decoding stored bytes runs no pickle."""
 
     def __init__(self, table: pd.DataFrame):
         self.table = table
@@ -71,13 +72,21 @@ class Candidates:
         return self.table.sort_values(["cnt", "h"], ascending=[False, True]).head(m)
 
     def to_bytes(self) -> bytes:
-        return _CAND_MAGIC + pickle.dumps(self.table, protocol=5)
+        # no pandas metadata: the bytes do not depend on the pandas version
+        table = pa.Table.from_pandas(self.table, preserve_index=False).replace_schema_metadata()
+        sink = pa.BufferOutputStream()
+        with pa.ipc.new_stream(sink, table.schema) as w:
+            w.write_table(table)
+        return _CAND_MAGIC + sink.getvalue().to_pybytes()
 
     @staticmethod
     def from_bytes(buf: bytes) -> "Candidates":
         if buf[:4] != _CAND_MAGIC:
             raise ValueError("bad Candidates buffer")
-        return Candidates(pickle.loads(buf[4:]))
+        try:
+            return Candidates(pa.ipc.open_stream(buf[4:]).read_pandas())
+        except (pa.ArrowException, OSError) as e:
+            raise ValueError(f"bad Candidates buffer: {e}") from None
 
 
 def _top_k(df: DataFrame, col, k: int, candidates_per_partition: int,

@@ -228,10 +228,30 @@ def test_from_bytes_reads_every_format(magic):
     assert buf[:4] == magic
     again = from_bytes(buf)
     assert type(again) is type(sk)
-    if magic == b"CND1":  # a pickled frame: the table round-trips, its pickle need not
-        pd.testing.assert_frame_equal(again.table, sk.table)
-    else:
-        assert again.to_bytes() == buf
+    assert again.to_bytes() == buf
+
+
+@pytest.mark.parametrize(
+    "keys", [["a", None, "c"], [7, -1, 1 << 40], [None, None, None]], ids=["str", "int", "null"]
+)
+def test_candidates_round_trip_keys(keys):
+    """``CND1`` carries its frame as an Arrow IPC stream: string,
+    integer and NULL keys come back as they went in."""
+    from q_digest_spark.operators.heavy_hitters import Candidates
+
+    table = pd.DataFrame({"h": np.arange(3, dtype=np.int64), "cnt": np.int64([5, 1, 2]), "key": keys})
+    again = from_bytes(Candidates(table).to_bytes())
+    pd.testing.assert_frame_equal(again.table, table)
+
+
+def test_candidates_rejects_a_pickle_body():
+    """Decoding stored bytes never unpickles: a ``CND1`` buffer whose
+    body is a pickle is not an Arrow stream, so it raises."""
+    import pickle
+
+    table = pd.DataFrame({"h": [1], "cnt": [1], "key": ["a"]})
+    with pytest.raises(ValueError, match="Candidates"):
+        from_bytes(b"CND1" + pickle.dumps(table, protocol=5))
 
 
 def test_from_bytes_rejects_unknown_and_truncated_buffers():
