@@ -1308,18 +1308,17 @@ def q_sliding_p50_cents(spark, sf_dir) -> DataFrame:
         sliding_window_rows,
         write_daily_sketches,
     )
-    from q_digest_spark.sketches import QDigest, universe_bits_for
+    from q_digest_spark.sketches import QDigest
 
     df = _tbl(spark, sf_dir, "events").where(
         F.col("ts").isNotNull() & F.col("value").isNotNull()
     )
     q = F.round(F.col("value") * 100).cast("long")
-    bits = universe_bits_for(int(df.agg(F.max(q)).collect()[0][0]))
     d = tempfile.mkdtemp(prefix="qds_slidp50_")
     atexit.register(shutil.rmtree, d, True)
     path = d + "/daily_qd"
     write_daily_sketches(
-        df, "ts", q, partial(QDigest, 0, bits), path
+        df, "ts", q, partial(QDigest, 0, None), path
     )
     wins = sliding_window_rows(spark, path, window_days=3)
     # windows decode in-executor (grouped_estimates) — nothing but the
@@ -1955,15 +1954,11 @@ def q_incremental_daily_p50(spark, sf_dir) -> DataFrame:
 
     df = _tbl(spark, sf_dir, "events").where(F.col("value").isNotNull())
     q = F.round(F.col("value") * 100).cast("long")
-    from q_digest_spark.sketches import universe_bits_for
-
-    mx = df.agg(F.max(q)).collect()[0][0]
-    bits = universe_bits_for(int(mx))
     d = tempfile.mkdtemp(prefix="qds_daily_")
     atexit.register(shutil.rmtree, d, True)
     path = d + "/daily"
     write_daily_sketches(
-        df, "ts", q, partial(QDigest, 0, bits), path
+        df, "ts", q, partial(QDigest, 0, None), path
     )
     sk = merge_sketch_range(
         spark, path, "2024-01-06", "2024-01-15"
@@ -2240,12 +2235,8 @@ def q_qdigest_merge_by_lang_equals_global(spark, sf_dir) -> DataFrame:
     from q_digest_spark.sketches import QDigest, from_bytes
 
     df = _docs(spark, sf_dir)
-    from q_digest_spark.sketches import universe_bits_for
-
-    mx = df.agg(F.max("n_chars")).collect()[0][0]
-    bits = universe_bits_for(int(mx))
     rows = grouped_sketch_rows(
-        df, ["lang"], F.col("n_chars").cast("long"), partial(QDigest, 0, bits),
+        df, ["lang"], F.col("n_chars").cast("long"), partial(QDigest, 0, None),
     ).collect()
     merged = None
     for r in rows:

@@ -27,9 +27,12 @@ mergeable-UDAF contract as every family here (reference merge
 semantics: qcore.c:254-306).
 
 Shared body: the counter table, ``update_batch``, shape-checked merge,
-``<4sBBIq>`` wire format (magic ``AMS1``) and repr are countmin.py's
-private ``_CounterTable``; this module holds the signed update and the
-F2, inner-product and point queries.
+wire format (magic ``AMS1``) and repr are countmin.py's private
+``_CounterTable``; this module holds the signed update and the F2,
+inner-product and point queries. The wire body is countmin.py's
+version 2: the signed table dense or sparse (non-zero cells only),
+whichever is smaller, at the narrowest integer dtype that holds its
+minimum and maximum; version-1 (dense int64) buffers still decode.
 """
 
 from __future__ import annotations

@@ -39,10 +39,11 @@ Merge = elementwise add (associative, commutative) — the same
 mergeable-UDAF contract as every sketch here (reference parity:
 qcore.c:254-306 merge discipline, re-expressed for counter tables).
 
-Shared body: the counter table, merge, ``<4sBBIq>`` wire format
-(magic ``CUS1``), row-hash family and min-of-rows queries come from
-countmin.py's private bases; this module holds only the conservative
-``update_hashes``.
+Shared body: the counter table, merge, wire format (magic ``CUS1``;
+countmin.py's version 2, a dense-or-sparse body at the narrowest
+integer dtype, version 1 still read), row-hash family and min-of-rows
+queries come from countmin.py's private bases; this module holds only
+the conservative ``update_hashes``.
 """
 
 from __future__ import annotations

@@ -11,8 +11,10 @@
 #      job at call time; plans only).
 #   3. tests/test_surface.py — every package def has a caller outside
 #      tests/ (static AST scan, no Spark, ~2 s).
-#   4. tests/test_wire_bytes.py — pinned sketch wire bytes, decoded
-#      through sketches.from_bytes (no Spark, ~3 s).
+#   4. tests/test_wire_bytes.py — pinned sketch wire bytes (the
+#      version-2 pins of the counter tables among them), the version-1
+#      counter-table decode fixtures and the sparse-size guard, all
+#      decoded through sketches.from_bytes (no Spark, ~3 s).
 #
 # Install:  ln -sf ../../scripts/precommit.sh .git/hooks/pre-commit
 # Skip (for docs-only commits):  git commit --no-verify
@@ -33,7 +35,7 @@ python -m pytest -x -q \
 echo "[precommit] 3/4 package surface reachability (static, no Spark)"
 python -m pytest -q tests/test_surface.py
 
-echo "[precommit] 4/4 pinned wire bytes (no Spark)"
+echo "[precommit] 4/4 pinned wire bytes, v1 decode fixtures, sparse-size guard (no Spark)"
 python -m pytest -q tests/test_wire_bytes.py
 
 echo "[precommit] OK"

@@ -6,9 +6,17 @@ from two seeded halves, merged, and round-tripped through
 sketches persist in checkpoint files and daily tables, so a refactor
 of their shared bodies must not move a byte. ``from_bytes`` must also
 read back one small sketch of every registered format, and reject an
-unknown magic or a short buffer."""
+unknown magic or a short buffer.
+
+The counter tables (Count-Min, CU Count-Min, AMS) write version 2, a
+dense-or-sparse body at the narrowest integer dtype. Their version-1
+bytes (dense int64) stay pinned in ``V1_PINS``: the tests rebuild that
+layout with ``struct`` and check both its hash and that ``from_bytes``
+still reads it, so tables stored before version 2 keep decoding. A
+malformed version-2 buffer must raise ``ValueError``."""
 
 import hashlib
+import struct
 
 import numpy as np
 import pandas as pd
@@ -100,6 +108,13 @@ def _bloom(seed):
     return sk
 
 
+def _cms_sparse(seed):
+    """A table a few keys fill, so the body takes the sparse layout."""
+    sk = CountMin(5, 16384)
+    sk.update_batch(_keys(seed)[:200])
+    return sk
+
+
 CASES = {
     "kll": _quantile(lambda: KLL(64)),
     "req": _quantile(lambda: REQ(16)),
@@ -111,24 +126,30 @@ CASES = {
     "qdigest32": _qdigest(32),
     "tdigest": _quantile(lambda: TDigest(100)),
     "bloom": _bloom,
+    "cms_sparse": _cms_sparse,
 }
 
+# Counter tables write version 2; their version-1 hashes are V1_PINS.
 PINS = {
     "ams": (
-        "a7bfb0237700d6043118bea083ed61a1149afda2925a7a120cdf5f053c22df87",
-        "473487962e48fff218c6b98364656ea35a24f4f7ee65cf41d466f56beb927063",
+        "78ad58ea2465623858d245d1e0b19110a294da73f2cda67d2593bcad0a134b6b",
+        "26c8ae042af04151530f7dd1cc7567906fdcb0f976f7dee31dc65c1858545662",
     ),
     "bloom": (
         "714774c8d104b0da2dbecd3e86399c105a9e14d3ed74f8491cc3ff26bfeb95ad",
         "05190a408398119d0c92614656cc34af31278e00755539d8c1bb45980786bbdf",
     ),
     "cms": (
-        "1f834ffdf1ed5897d3e871bee8787d971b9c035152acbb49de792c8bafad9a7d",
-        "53baed24a75d659a2d14511ec5094abf6e62e3ac82aeb43ee438235862336dda",
+        "162ae7b22cf0dd312b4d91b90fb41d5454e1d27ec6a1e500a000289936de7cfa",
+        "f8742e4148b93d25375a5d6c90327ef459ed74f56f22897037303ede791957cb",
+    ),
+    "cms_sparse": (
+        "bbc99f238a4b5c1d4296a365f2854e7da796f069931ac69f70708e2e297e1c06",
+        "3e9c00f99e094bd4ee5209f567b7bca055036c2ad6b106060b4cffc8823ce4bb",
     ),
     "cucms": (
-        "c0c3f85a48933ee5e47cb984e5574157061cd1c38bb603c31714b207678e08c8",
-        "4ad39ed200aba3a7e2c2dc21aa511f3b35dbee6623596e23c060caa52fef7ef8",
+        "f2ddf5d7c1c36400bbc70a52a96df0dab6fb4f7a548b3bd5db20b33e674f45fa",
+        "31ad31484142a914af0f7f9c4b1513f9c63fbac8293d2a6227949be93774ab53",
     ),
     "hll": (
         "1bbdcd8d27a7ae725dffb1e0b3943a0128af821386e83c937f236d2ce8328209",
@@ -156,6 +177,22 @@ PINS = {
     ),
 }
 
+# The version-1 counter-table bytes (dense int64 table), built and merged.
+V1_PINS = {
+    "ams": (
+        "a7bfb0237700d6043118bea083ed61a1149afda2925a7a120cdf5f053c22df87",
+        "473487962e48fff218c6b98364656ea35a24f4f7ee65cf41d466f56beb927063",
+    ),
+    "cms": (
+        "1f834ffdf1ed5897d3e871bee8787d971b9c035152acbb49de792c8bafad9a7d",
+        "53baed24a75d659a2d14511ec5094abf6e62e3ac82aeb43ee438235862336dda",
+    ),
+    "cucms": (
+        "c0c3f85a48933ee5e47cb984e5574157061cd1c38bb603c31714b207678e08c8",
+        "4ad39ed200aba3a7e2c2dc21aa511f3b35dbee6623596e23c060caa52fef7ef8",
+    ),
+}
+
 
 def _sha(sk):
     return hashlib.sha256(sk.to_bytes()).hexdigest()
@@ -171,6 +208,116 @@ def test_wire_bytes_pinned(name):
     again = from_bytes(merged.to_bytes())
     assert type(again) is type(a) and again.to_bytes() == merged.to_bytes()
     assert (built, _sha(merged)) == PINS[name]
+
+
+def _v1(sk) -> bytes:
+    """The version-1 counter-table layout: header, then the dense
+    row-major int64 table."""
+    return struct.pack("<4sBBIq", sk.MAGIC, 1, sk.depth, sk.width, sk.n) + sk.table.tobytes()
+
+
+@pytest.mark.parametrize("name", sorted(V1_PINS))
+def test_counter_tables_read_version_1(name):
+    """The rebuilt version-1 bytes hash to the pins the format had
+    before version 2, and ``from_bytes`` reads them back to the same
+    int64 table."""
+    a, b = CASES[name](1), CASES[name](2)
+    merged = from_bytes(a.to_bytes()).merge(from_bytes(b.to_bytes()))
+    sks = (a, merged)
+    bufs = [_v1(sk) for sk in sks]
+    assert tuple(hashlib.sha256(buf).hexdigest() for buf in bufs) == V1_PINS[name]
+    for sk, buf in zip(sks, bufs):
+        again = from_bytes(buf)
+        assert type(again) is type(sk)
+        assert (again.depth, again.width, again.n) == (sk.depth, sk.width, sk.n)
+        assert again.table.dtype == np.int64
+        np.testing.assert_array_equal(again.table, sk.table)
+        assert again.to_bytes() == sk.to_bytes()
+
+
+def _partial(seed, n=3000):
+    sk = CountMin(5, 16384)
+    sk.update_batch(np.random.default_rng(seed).zipf(1.3, n))
+    return sk
+
+
+def test_sparse_table_ships_a_fraction_of_its_dense_size():
+    sk = _partial(1)
+    assert np.count_nonzero(sk.table) <= 0.05 * sk.table.size
+    buf = sk.to_bytes()
+    assert buf[18] == 1  # sparse layout
+    assert len(buf) < sk.table.nbytes / 8  # the dense int64 table
+    np.testing.assert_array_equal(from_bytes(buf).table, sk.table)
+
+
+def test_full_table_takes_the_dense_layout():
+    sk = CountMin(3, 64)
+    sk.update_batch(np.arange(50_000))
+    assert np.count_nonzero(sk.table) == sk.table.size
+    buf = sk.to_bytes()
+    assert buf[18] == 0  # dense layout
+    assert len(buf) == 18 + 2 + sk.table.size * 2  # uint16 counters
+    np.testing.assert_array_equal(from_bytes(buf).table, sk.table)
+
+
+@pytest.mark.parametrize("cls", [CountMin, CUCountMin, AMS])
+def test_empty_table_round_trips(cls):
+    sk = cls(4, 256)
+    again = from_bytes(sk.to_bytes())
+    assert type(again) is cls and again.n == 0
+    assert again.table.shape == (4, 256) and again.table.dtype == np.int64
+    assert not again.table.any()
+
+
+def test_merge_order_gives_equal_bytes():
+    parts = [_partial(seed) for seed in range(4)]
+    bufs = set()
+    for order in ([0, 1, 2, 3], [3, 1, 0, 2], [2, 3, 1, 0]):
+        acc = from_bytes(parts[order[0]].to_bytes())
+        for i in order[1:]:
+            acc.merge(from_bytes(parts[i].to_bytes()))
+        bufs.add(acc.to_bytes())
+    assert len(bufs) == 1
+
+
+def _sparse_buf():
+    sk = CountMin(2, 8)
+    sk.table[0, 3], sk.table[1, 5] = 7, 9
+    sk.n = 16
+    buf = sk.to_bytes()
+    assert buf[18:20] == bytes([1, 0])  # sparse, uint8
+    return buf
+
+
+def _patch(buf, offset, raw):
+    return buf[:offset] + raw + buf[offset + len(raw):]
+
+
+_HEAD, _NNZ_AT = 18, 20  # sizes/offsets of the version-2 layout
+MALFORMED = {
+    "version": lambda b: _patch(b, 4, bytes([3])),
+    "layout": lambda b: _patch(b, _HEAD, bytes([2])),
+    "dtype": lambda b: _patch(b, _HEAD + 1, bytes([7])),
+    "truncated": lambda b: b[:-1],
+    "no_body": lambda b: b[:_HEAD + 1],
+    "trailing": lambda b: b + bytes(1),
+    "index_past_table": lambda b: _patch(b, _NNZ_AT + 8, struct.pack("<I", 16)),
+    "index_not_increasing": lambda b: _patch(b, _NNZ_AT + 4, struct.pack("<II", 5, 3)),
+    "index_repeated": lambda b: _patch(b, _NNZ_AT + 4, struct.pack("<II", 3, 3)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(MALFORMED))
+def test_malformed_version_2_raises_value_error(case):
+    buf = MALFORMED[case](_sparse_buf())
+    with pytest.raises(ValueError, match="CountMin|CMS1"):
+        from_bytes(buf)
+
+
+def test_sparse_buf_is_well_formed():
+    """The fixture the malformed cases patch decodes as written."""
+    sk = from_bytes(_sparse_buf())
+    assert sk.table[0, 3] == 7 and sk.table[1, 5] == 9 and sk.table.sum() == 16
 
 
 _INTS = np.random.default_rng(3).integers(0, 1_000, 500)
